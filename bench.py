@@ -220,13 +220,6 @@ def run_headline(sf_dir: str, cpus: str) -> tuple[dict, dict]:
     for name in headline:
         _add(name, lambda name=name: _materialize(qfns[name](spark, sf_dir)))
 
-    # BM25 with NO materialized segment text: per-row term counts summed by
-    # window (tf/dl are additive over members) — the shuffle carries a few
-    # longs per (row, window) instead of the window's text
-    from podcast_audio_feature_extraction_spark.operators.search import bm25_topk_fused
-
-    _add("search_bm25_fused", lambda: _materialize(bm25_topk_fused(t, "click error purchase", k=100)))
-
     # the 88-column functional grid: exact vs sketch percentiles,
     # INTERLEAVED (round-4 record had the sketch losing to exact, but the
     # two blocks ran minutes apart — a phase during either block flips

@@ -12,7 +12,7 @@ Subpackages
                    transcripts, nested ASR JSON, multimodal binary columns).
 - ``operators``  : relational/windowed operators (sessionize, rolling
                    functionals, as-of join, segments, rerank, dedup, ANN,
-                   skew salting, checkpoint/resume).
+                   checkpoint/resume).
 - ``functions``  : column expressions + vectorized pandas UDFs (text
                    analysis, hash embeddings, mood metrics).
 - ``plans``      : end-to-end pipelines (feature backfill flagship).
@@ -50,7 +50,6 @@ _API = {
     "simhash_pairs": "operators.dedup",
     "ngram_jaccard_pairs": "operators.dedup",
     "dedup_clusters": "operators.dedup",
-    "dedup_clusters_star": "operators.dedup",
     "brute_force_topk": "operators.similarity",
     "lsh_topk": "operators.similarity",
     "ivf_topk": "operators.similarity",
@@ -61,8 +60,6 @@ _API = {
     "pq_topk": "operators.similarity",
     "ivf_pq_topk": "operators.similarity",
     "embedding_near_dup_pairs": "operators.similarity",
-    "skew_guarded_agg": "operators.skew",
-    "salted_collect_sorted": "operators.skew",
     "split_col": "operators.sampling",
     "stratified_sample": "operators.sampling",
     "decontaminate_exact": "operators.sampling",

@@ -6,20 +6,14 @@ backfill merge: no feature at (conv_id, ts) may ever read a later ts.
 Analog of the reference's precompute-then-lookup
 (/root/reference/src/search/search.py:311-353).
 
-Spark has no native DataFrame as-of join; three plan-expressible strategies:
+Spark has no native DataFrame as-of join; two plan-expressible strategies:
 
 1. **union-trick** (default): tag sides, unionByName, then
    ``last(value, ignorenulls=True) OVER (PARTITION BY key ORDER BY ts, side)``
    and keep left rows. ONE shuffle + one sort — the same data motion as a
    sort-merge join, with AQE skew handling applicable. Best general choice.
 
-2. **cogrouped merge_asof**: ``left.groupBy(key).cogroup(right.groupBy(key))
-   .applyInPandas(pd.merge_asof ...)``. Two shuffles + Arrow transfer, but
-   each conversation is merged by pandas' O(n+m) galloping merge — wins when
-   per-key logic grows (e.g. tolerance windows). Used for heavy keys after
-   salt-split.
-
-3. **compact two-phase** (:func:`asof_join_compact`): union-trick over the
+2. **compact two-phase** (:func:`asof_join_compact`): union-trick over the
    narrow keys only, then a hash join resolving the winning right-row id to
    its wide values — the choice when feature vectors dominate sort traffic.
 
@@ -139,58 +133,6 @@ def asof_join_union(
     return out.drop(*drop)
 
 
-def asof_join_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | list[str] = "conv_id",
-    ts_col: str = "ts",
-    value_cols: list[str] | None = None,
-    inclusive: bool = True,
-    tolerance_s: float | None = None,
-) -> DataFrame:
-    """As-of join via cogrouped ``pd.merge_asof`` (strategy 2)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    tol = pd.Timedelta(seconds=tolerance_s) if tolerance_s is not None else None
-
-    keys = _as_list(on)
-    value_cols = value_cols or [c for c in right.columns if c not in keys + [ts_col]]
-    right_sel = right.select(*keys, ts_col, *value_cols)
-
-    out_fields = list(left.schema.fields) + [
-        T.StructField(c, right_sel.schema[c].dataType, True) for c in value_cols
-    ]
-    out_schema = T.StructType(out_fields)
-    left_cols = list(left.columns)
-
-    def merge(ldf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
-        if ldf.empty:
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        ldf = ldf.sort_values(ts_col, kind="mergesort")
-        if rdf.empty:
-            for c in value_cols:
-                ldf[c] = None
-            return ldf[[f.name for f in out_fields]]
-        rdf = rdf.sort_values(ts_col, kind="mergesort")
-        merged = pd.merge_asof(
-            ldf,
-            rdf[[ts_col] + value_cols],
-            on=ts_col,
-            allow_exact_matches=inclusive,
-            tolerance=tol,
-            suffixes=("", "__r"),
-        )
-        return merged[[f.name for f in out_fields]]
-
-    return (
-        left.groupBy(*keys)
-        .cogroup(right_sel.groupBy(*keys))
-        .applyInPandas(merge, schema=out_schema)
-        .select(*left_cols, *value_cols)
-    )
-
-
 def asof_join_compact(
     left: DataFrame,
     right: DataFrame,
@@ -203,7 +145,7 @@ def asof_join_compact(
     tolerance_s: float | None = None,
     validate_unique: bool = False,
 ) -> DataFrame:
-    """Two-phase as-of for WIDE right rows (strategy 3, generalized from
+    """Two-phase as-of for WIDE right rows (strategy 2, generalized from
     plans/backfill.py): phase 1 runs the union-trick over only the keys +
     ts + ``right_key_cols`` (a unique right-row identifier, e.g. turn_idx),
     so the sort never moves the wide value columns; phase 2 resolves the
@@ -292,13 +234,4 @@ def asof_join(
             right_key_cols=right_tie_cols, inclusive=inclusive, left_tie_cols=left_tie_cols,
             tolerance_s=tolerance_s,
         )
-    if strategy == "cogroup":
-        if right_tie_cols or left_tie_cols:
-            # pd.merge_asof is ts-only; silently dropping the caller's tie
-            # semantics would change which row wins at duplicate timestamps
-            raise ValueError(
-                "tie columns are not supported by the cogroup strategy "
-                "(pd.merge_asof matches on ts only) — use strategy='union'"
-            )
-        return asof_join_cogroup(left, right, on, ts_col, value_cols, inclusive, tolerance_s)
     raise ValueError(f"unknown as-of strategy: {strategy!r}")

@@ -194,11 +194,6 @@ def minhash_lsh_pairs_sql(
     """
 
 
-def hash60_col(tok: Column) -> Column:
-    """Portable 60-bit token hash: first 15 md5 hex chars as integer."""
-    return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
-
-
 def simhash_table(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 60) -> DataFrame:
     """SimHash fingerprint per row: bit j set iff the majority of token
     hashes have bit j set (strictly more set than unset).
@@ -370,104 +365,6 @@ def dedup_clusters(
         F.col("node").alias(id_col),
         F.col("label").alias("cluster_id"),
         (F.col("node") == F.col("label")).cast("int").alias("is_keeper"),
-    )
-
-
-def dedup_clusters_star(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iters: int = 25,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction — the O(log^2 n)-round form for graphs where min-label
-    propagation's O(diameter) rounds would be the bottleneck (billion-node
-    near-dup graphs with DEEP chains; near-dup clusters are usually
-    shallow, so :func:`dedup_clusters` stays the default).
-
-    Each round is two shuffled aggregations + joins over the edge list:
-
-    - large-star: every node links its LARGER neighbors to the minimum of
-      its neighborhood (+self) — long tails hook onto local minima;
-    - small-star: every node links its smaller-or-equal neighbors (+
-      itself) to that minimum — stars flatten.
-
-    The edge set converges to one star per component rooted at the
-    component minimum (Kiveris et al., "Connected Components in MapReduce
-    and Beyond" — public algorithm). Output matches
-    :func:`dedup_clusters` exactly: (doc_id, cluster_id, is_keeper) for
-    every doc, cluster_id = component min.
-    """
-
-    def _sym(edges: DataFrame) -> DataFrame:
-        return (
-            edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-
-    e = _sym(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    ).localCheckpoint()
-    # seed with the initial checkpoint so round 1 frees it — it is the
-    # full symmetrized edge set, the largest RDD in the job
-    prev_ckpt = e
-    n_edges = e.count()
-    converged = n_edges == 0  # no edges: all singletons
-    for _ in range(max_iters if not converged else 0):
-        # LARGE-STAR: m(u) = min(N(u) + {u}); for v in N(u), v > u: (v, m)
-        mins = (
-            e.groupBy("src")
-            .agg(F.min("dst").alias("__mn"))
-            .select("src", F.least(F.col("__mn"), F.col("src")).alias("m"))
-        )
-        ls = (
-            e.join(mins, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        )
-        e1 = _sym(ls)
-        # SMALL-STAR on the larger->smaller orientation: per u, m = min of
-        # its smaller neighbors; link those neighbors AND u itself to m
-        d = e1.filter(F.col("src") > F.col("dst"))
-        mins2 = d.groupBy("src").agg(F.min("dst").alias("m"))
-        joined = d.join(mins2, "src")
-        ss = (
-            joined.filter(F.col("dst") != F.col("m"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .unionByName(joined.select("src", F.col("m").alias("dst")))
-        )
-        new_e = _sym(ss).localCheckpoint()
-        # EXACT fixpoint check (a digest could collide and silently emit
-        # wrong clusters): counts first (cheap, usually differs while
-        # contracting), then set difference — both sides are distinct'd,
-        # so equal counts + empty except <=> equal edge sets. The except
-        # runs against the still-live previous checkpoint.
-        new_n = new_e.count()
-        same = new_n == n_edges and new_e.exceptAll(e).limit(1).count() == 0
-        if prev_ckpt is not None:
-            _free_local_checkpoint(prev_ckpt)
-        prev_ckpt, e = new_e, new_e
-        n_edges = new_n
-        if same:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"dedup_clusters_star did not converge within max_iters={max_iters}"
-        )
-    # star form: every non-root points directly at its component min
-    roots = e.filter(F.col("src") > F.col("dst")).groupBy(F.col("src").alias("node")).agg(
-        F.min("dst").alias("root")
-    )
-    nodes = docs.select(F.col(id_col).alias("node")).distinct()
-    return (
-        nodes.join(roots, "node", "left")
-        .select(
-            F.col("node").alias(id_col),
-            F.coalesce(F.col("root"), F.col("node")).alias("cluster_id"),
-            (F.col("root").isNull()).cast("int").alias("is_keeper"),
-        )
     )
 
 

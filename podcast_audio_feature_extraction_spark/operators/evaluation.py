@@ -23,15 +23,6 @@ def argmax_match_count(scores: Column, target_idx: int, slice_start: int, slice_
     return F.sum(is_match.cast("int")).cast("int")
 
 
-def argmax_match_sql(scores_expr: str, target_idx: int, slice_start: int, slice_len: int) -> str:
-    """DuckDB twin (1-based list slicing)."""
-    lo, hi = slice_start + 1, slice_start + slice_len
-    return (
-        f"CAST(sum(CAST({scores_expr}[{target_idx + 1}] = "
-        f"list_max({scores_expr}[{lo}:{hi}]) AS INT)) AS INT)"
-    )
-
-
 def ranking_metrics(
     results: DataFrame,
     qrels: DataFrame,

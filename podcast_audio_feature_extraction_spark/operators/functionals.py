@@ -166,10 +166,10 @@ def _exact_pct_col(sorted_col, q):
     ``lower*(1-frac) + higher*frac``, and the value returned DIRECTLY when
     both neighbors are equal (Spark's counts-based implementation lands on
     one unique key there; re-blending equal values perturbs the last ulp:
-    0.1*(1-f) + 0.1*f != 0.1 exactly). ``q`` may be a float literal or a
+    0.1*(1-f) + 0.1*f != 0.1 exactly). ``q`` may be a numeric literal or a
     Column (e.g. a higher-order-function lambda variable)."""
     arr = F.col(sorted_col) if isinstance(sorted_col, str) else sorted_col
-    qc = F.lit(q) if isinstance(q, float) else q
+    qc = F.lit(float(q)) if isinstance(q, (int, float)) else q
     n = F.size(arr)
     pos = qc * (n - F.lit(1)).cast("double")
     lo = F.floor(pos).cast("int")

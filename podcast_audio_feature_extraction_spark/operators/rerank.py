@@ -202,24 +202,3 @@ def rerank_moods_sql(
             f"UNION ALL SELECT '{mood}' AS mood, * FROM fb_{mood}"
         )
     return "".join(ctes) + " " + " UNION ALL ".join(selects)
-
-
-def rerank_mood_sql(scores_sql: str, mood: str, num: int = 10) -> str:
-    """DuckDB twin of :func:`rerank_mood` (embed after a WITH clause)."""
-    pred = mood_predicate_sql(mood)
-    return f"""
-        , scores AS ({scores_sql}),
-        accepted AS (
-            SELECT seg_id, rerank_score, 0 AS pri,
-                   CAST(row_number() OVER (ORDER BY rerank_score DESC, seg_id ASC) AS INT) AS rk
-            FROM scores WHERE {pred} AND rerank_score > 0
-            QUALIFY rk <= {num}
-        ),
-        fallback AS (
-            SELECT seg_id, rerank_score, 1 AS pri,
-                   CAST(row_number() OVER (ORDER BY rerank_score DESC, seg_id ASC) AS INT) AS rk
-            FROM scores
-            QUALIFY rk <= {num} - (SELECT count(*) FROM accepted)
-        )
-        SELECT * FROM accepted UNION ALL SELECT * FROM fallback
-    """

@@ -177,27 +177,30 @@ def run_resumable(
         # per-bucket row counts ride along as observed metrics of the write
         # job itself — recomputing them with a separate groupBy/collect
         # (round-1 design) re-executed the whole transform, a 2x compute
-        # tax on every checkpointed batch
+        # tax on every checkpointed batch. The observation sits ABOVE the
+        # shuffle: when every bucket of the batch is empty, AQE replaces
+        # the empty shuffle's subtree, and an observation below it would
+        # vanish (Observation.get then fails instead of reporting None).
+        # Sorting by bucket first meets the partitioned writer's required
+        # ordering, so the writer adds no second sort.
         obs = Observation(f"resume-batch-{i}")
-        out = out.observe(
-            obs,
-            *[F.sum((F.col("bucket") == b).cast("long")).alias(f"b{b}") for b in batch],
+        out = (
+            out.repartition(len(batch), "bucket")
+            .sortWithinPartitions("bucket", key_col)
+            .observe(obs, *[F.sum((F.col("bucket") == b).cast("long")).alias(f"b{b}") for b in batch])
         )
         # land data first, then commit the manifest — a crash between the
         # two re-runs the batch (idempotent: partition dirs are overwritten)
         (
-            out.repartition(len(batch), "bucket")
-            .sortWithinPartitions(key_col)
-            .write.partitionBy("bucket")
+            out.write.partitionBy("bucket")
             .mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(out_dir)
         )
         dt = time.perf_counter() - t0
         metrics = obs.get
-        counts = {b: int(metrics[f"b{b}"] or 0) for b in batch}
         for b in batch:
-            n = int(counts.get(b, 0))
+            n = int(metrics[f"b{b}"] or 0)  # None: the whole batch was empty
             manifest["buckets"][str(b)] = {
                 "rows": n,
                 "run_id": run["run_id"],

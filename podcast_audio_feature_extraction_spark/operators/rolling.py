@@ -67,13 +67,14 @@ def turn_features(
     # (verified), but the whole-partition frame is a DIFFERENT window
     # spec and planned its own Window operator — one extra full pass
     # over every sorted partition (r6; plan: 3 Window ops -> 2 here).
+    # ignorenulls keeps that identity if a NULL ts ever sorts first.
     run = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ctx = base.select(
         "*",
         F.lag("role").over(order).alias("prev_role"),
         F.lead("role").over(order).alias("next_role"),
         F.lag(ts_micros(ts_col)).over(order).alias("__prev_us"),
-        F.first(ts_micros(ts_col)).over(run).alias("__conv_t0_us"),
+        F.first(ts_micros(ts_col), ignorenulls=True).over(run).alias("__conv_t0_us"),
     ).select(
         "*",
         F.when(F.col("prev_role").isNull(), F.lit(1))

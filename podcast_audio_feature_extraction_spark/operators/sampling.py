@@ -103,33 +103,6 @@ def stratified_sample_sql(
     """
 
 
-def stratified_sample_approx(
-    df: DataFrame,
-    group_col: str = "source",
-    n_per_group: int = 5,
-    id_col: str = "doc_id",
-    salt: str = "sample",
-) -> DataFrame:
-    """Skew-safe variant: instead of ranking inside the group (exact n but
-    one task sorts the whole group — a straggler when one group dominates
-    100 TB), keep rows whose hash bucket falls under n/|group|. One
-    group-size aggregate broadcast back, then a pure filter: no per-group
-    sort, expected (not exact) n per group."""
-    h = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(salt), F.lit(":"), F.col(id_col).cast("string"))), 1, 8), 16, 10
-        ).cast("long")
-        % F.lit(SPLIT_BUCKETS)
-    )
-    sizes = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("__gn"))
-    cut = F.ceil(F.lit(n_per_group * SPLIT_BUCKETS) / F.col("__gn"))
-    return (
-        df.join(F.broadcast(sizes), group_col)
-        .filter(h < cut)
-        .drop("__gn")
-    )
-
-
 def decontaminate_exact(
     corpus: DataFrame, benchmark: DataFrame, text_col: str = "text"
 ) -> DataFrame:

@@ -55,12 +55,11 @@ def build_segments(
         # sorts ONCE (total order => result identical to the unsalted
         # plan). n_turns re-sums partial counts; speakers merges partial
         # role sets. Costs one extra (small: partials only) shuffle — use
-        # when detect_heavy_keys says the corpus has viral conversations.
-        from podcast_audio_feature_extraction_spark.operators.skew import with_salt
-
+        # when the corpus has viral conversations. The salt hashes
+        # turn_idx, so re-runs are reproducible (unlike rand()).
+        salt = F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(skew_salts)).cast("int")
         partial = (
-            with_salt(df, n_salts=skew_salts, tie_col="turn_idx")
-            .groupBy(F.col(conv_col), win.alias("win"), F.col("salt"))
+            df.groupBy(F.col(conv_col), win.alias("win"), salt.alias("salt"))
             .agg(
                 F.collect_list(
                     F.struct(F.col(ts_col).alias("ts"), F.col("turn_idx"), F.col("text"))

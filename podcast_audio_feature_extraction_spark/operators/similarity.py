@@ -404,27 +404,6 @@ def fit_pq_codebooks_local(
     return _fit_pq_books(x, m_sub, k_codes, iters, seed)
 
 
-def fit_residual_pq_codebooks(
-    emb: DataFrame,
-    centroids,
-    m_sub: int = 8,
-    k_codes: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_rows: int = 20_000,
-    iters: int = 8,
-    seed: int = 42,
-):
-    """Spark-sample twin of :func:`fit_residual_pq_codebooks_local` (same
-    ordered-limit sample => bit-identical codebooks)."""
-    import numpy as np
-
-    pdf = emb.select(id_col, vec_col).orderBy(id_col).limit(sample_rows).toPandas()
-    x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    r, _ = _residualize(x, centroids)
-    return _fit_pq_books(r, m_sub, k_codes, iters, seed)
-
-
 def fit_residual_pq_codebooks_local(
     parquet_path: str,
     centroids,

@@ -56,37 +56,28 @@ def backfill_features(
     uses per-turn paired-tie semantics (a feature from the same second but
     a later turn is never read — zero leakage at turn granularity).
     Feature provenance columns are renamed so they never collide.
+    ``strategy`` is ``"union"`` or ``"compact"`` (see operators/asof.py).
     """
     right = (
         feature_table.withColumnRenamed("turn_idx", "feat_turn_idx")
         .withColumnRenamed("session_id", "feat_session_id")
     )
-    paired = strategy in ("union", "compact") and "turn_idx" in frame.columns
-    if strategy == "compact":
-        # two-phase as-of (generic asof_join_compact): the union-trick sort
-        # touches only narrow key rows — the wide functionals/embedding
-        # arrays move exactly once through the resolving hash join.
-        return asof_join(
-            frame,
-            right,
-            on="conv_id",
-            ts_col="ts",
-            value_cols=["feat_session_id", "functionals", "embedding"],
-            inclusive=inclusive,
-            strategy="compact",
-            right_tie_cols=["feat_turn_idx"],
-            left_tie_cols=["turn_idx"] if paired else None,
-        )
+    value_cols = ["feat_session_id", "functionals", "embedding"]
+    if strategy != "compact":
+        # compact (two-phase as-of, asof_join_compact) carries feat_turn_idx
+        # through its narrow union-trick sort as the right-row id; the wide
+        # functionals/embedding arrays move once through the resolving join
+        value_cols = ["feat_turn_idx", *value_cols]
     return asof_join(
         frame,
         right,
         on="conv_id",
         ts_col="ts",
-        value_cols=["feat_turn_idx", "feat_session_id", "functionals", "embedding"],
+        value_cols=value_cols,
         inclusive=inclusive,
         strategy=strategy,
-        right_tie_cols=["feat_turn_idx"] if strategy == "union" else None,
-        left_tie_cols=["turn_idx"] if paired else None,
+        right_tie_cols=["feat_turn_idx"],
+        left_tie_cols=["turn_idx"] if "turn_idx" in frame.columns else None,
     )
 
 

@@ -42,6 +42,7 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from podcast_audio_feature_extraction_spark.operators.resume import (
@@ -63,6 +64,22 @@ def _bucket_pred(buckets: list[int], n_buckets: int):
     conv_bucket_col expression the table layout uses — for the small log
     side, where there is no conv_bucket directory to prune)."""
     return conv_bucket_col(n_buckets).isin(buckets)
+
+
+def _read_base(spark: SparkSession, base_path: str, buckets: list[int], schema) -> DataFrame:
+    """The base transcript's ``buckets`` partitions, or an empty frame of
+    ``schema`` on bootstrap — no base written yet: the path is missing, or
+    holds no parquet file to infer a schema from. Every other read failure
+    (a corrupt footer, an IO or permission error) propagates: reading such
+    a base as empty would let the caller overwrite the touched buckets
+    with log-only rows and lose the base's rows for good."""
+    try:
+        base = spark.read.parquet(base_path)
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        return spark.createDataFrame([], schema)
+    return base.filter(F.col("conv_bucket").isin(buckets)).drop("conv_bucket")
 
 
 def _merged_snapshot(base: DataFrame, log: DataFrame) -> DataFrame:
@@ -116,17 +133,7 @@ def _rebuild_batch(
     buckets = touched_buckets(batch_stored, n_buckets)
     if not buckets:
         return 0
-    try:
-        base = (
-            spark.read.parquet(base_path)
-            .filter(F.col("conv_bucket").isin(buckets))
-            .drop("conv_bucket")
-        )
-    except Exception:
-        # fresh pipeline: no base table written yet (write_conv_partitioned
-        # bootstrap hasn't run) — treat as empty; the batch schema IS the
-        # transcript schema, so the merge degenerates to log-only
-        base = spark.createDataFrame([], batch_stored.schema)
+    base = _read_base(spark, base_path, buckets, batch_stored.schema)
     log = spark.read.parquet(log_path).filter(_bucket_pred(buckets, n_buckets))
     rebuilt = build_feature_table(_merged_snapshot(base, log), **feature_kwargs).select(*FEATURE_COLS)
     commit_rebuilt_partitions(
@@ -231,16 +238,8 @@ def compact_transcript_log(spark: SparkSession, base_path: str, log_path: str, n
     if n_rows == 0:
         return 0
     buckets = touched_buckets(log, n_buckets)
-    try:
-        base = (
-            spark.read.parquet(base_path)
-            .filter(F.col("conv_bucket").isin(buckets))
-            .drop("conv_bucket")
-        )
-    except Exception:
-        # fresh pipeline: compaction CREATES the base from the log alone
-        # (same bootstrap rule as _rebuild_batch)
-        base = spark.createDataFrame([], log.drop("batch").schema)
+    # fresh pipeline: compaction CREATES the base from the log alone
+    base = _read_base(spark, base_path, buckets, log.drop("batch").schema)
     merged = _merged_snapshot(base, log).withColumn("conv_bucket", conv_bucket_col(n_buckets))
     commit_rebuilt_partitions(merged, base_path)
     failed = []

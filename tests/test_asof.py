@@ -29,7 +29,7 @@ def asof_data(spark):
     return lpdf, rpdf, lsdf, rsdf
 
 
-@pytest.mark.parametrize("strategy", ["union", "cogroup"])
+@pytest.mark.parametrize("strategy", ["union"])
 @pytest.mark.parametrize("inclusive", [True, False])
 def test_asof_matches_merge_asof(spark, asof_data, strategy, inclusive):
     lpdf, rpdf, lsdf, rsdf = asof_data
@@ -37,7 +37,7 @@ def test_asof_matches_merge_asof(spark, asof_data, strategy, inclusive):
         asof_join(
             lsdf, rsdf, on="conv_id", ts_col="ts",
             value_cols=["feat"], inclusive=inclusive, strategy=strategy,
-            right_tie_cols=["ridx"] if strategy == "union" else None,
+            right_tie_cols=["ridx"],
         )
         .toPandas()
         .sort_values(["conv_id", "ts"], kind="mergesort")
@@ -68,7 +68,7 @@ def test_asof_no_temporal_leakage(spark, asof_data):
     assert (both_nan | (b == f)).all()
 
 
-@pytest.mark.parametrize("strategy", ["union", "cogroup", "compact"])
+@pytest.mark.parametrize("strategy", ["union", "compact"])
 def test_asof_tolerance_matches_merge_asof(spark, asof_data, strategy):
     """Stale matches (older than tolerance) are nulled, like
     pd.merge_asof(tolerance=...). The compact (wide-vector) strategy now
@@ -79,7 +79,7 @@ def test_asof_tolerance_matches_merge_asof(spark, asof_data, strategy):
     got = (
         asof_join(
             lsdf, rsdf, value_cols=["feat"], strategy=strategy, tolerance_s=tol,
-            right_tie_cols=None if strategy == "cogroup" else ["ridx"],
+            right_tie_cols=["ridx"],
         )
         .toPandas()
         .sort_values(["conv_id", "ts"], kind="mergesort")
@@ -105,7 +105,7 @@ def test_asof_tolerance_matches_merge_asof(spark, asof_data, strategy):
     assert np.isnan(w).any()  # tolerance actually nulled something
 
 
-@pytest.mark.parametrize("strategy", ["union", "cogroup"])
+@pytest.mark.parametrize("strategy", ["union"])
 def test_asof_null_value_on_newest_right_row_wins(spark, strategy):
     """A NULL value column on the newest matching right row must surface as
     NULL (pd.merge_asof semantics) — not silently fall back to a stale
@@ -158,7 +158,7 @@ def test_asof_rejects_non_integral_tie_column(spark, asof_data):
         asof_join(lsdf, bad, value_cols=["feat"], right_tie_cols=["ridx"])
 
 
-@pytest.mark.parametrize("strategy", ["union", "cogroup"])
+@pytest.mark.parametrize("strategy", ["union"])
 def test_asof_composite_key(spark, strategy):
     """Multi-column as-of keys: matches never cross either key column."""
     lpdf = pd.DataFrame(
@@ -191,15 +191,9 @@ def test_asof_composite_key(spark, strategy):
     assert list(got["feat"]) == [1.0, 1.0, 2.0]  # t1 rows never see t2's feature
 
 
-def test_asof_cogroup_rejects_tie_columns(spark, asof_data):
-    _, _, lsdf, rsdf = asof_data
-    with pytest.raises(ValueError, match="tie columns"):
-        asof_join(lsdf, rsdf, value_cols=["feat"], strategy="cogroup", right_tie_cols=["ridx"])
-
-
 @pytest.mark.parametrize("inclusive", [True, False])
 def test_asof_compact_matches_union(spark, asof_data, inclusive):
-    """Strategy 3 (narrow sort + wide hash resolve) must produce exactly
+    """Strategy 2 (narrow sort + wide hash resolve) must produce exactly
     the union-trick's rows, including no-match lefts staying NULL."""
     lpdf, rpdf, lsdf, rsdf = asof_data
     kw = dict(on="conv_id", ts_col="ts", value_cols=["feat"], inclusive=inclusive,

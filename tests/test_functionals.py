@@ -215,7 +215,7 @@ def test_exact_pct_matches_builtin_percentile(spark):
     F.percentile (the previous implementation, which the DuckDB
     quantile_cont twins were verified against) — including the
     duplicate-neighbor case where re-blending equal values perturbs the
-    last ulp, and tiny/empty-ish groups."""
+    last ulp, and tiny/empty-ish groups — and int literals q=0 / q=1."""
     import numpy as np
     import pyspark.sql.functions as F
 
@@ -235,9 +235,9 @@ def test_exact_pct_matches_builtin_percentile(spark):
     rows += [("gdup", 3.0)] * 4
     sdf = spark.createDataFrame(rows, "g string, v double")
 
-    qs = (0.2, 0.5, 0.8)
+    qs = (0, 0.2, 0.5, 0.8, 1)
     agg = sdf.groupBy("g").agg(
-        F.percentile(F.col("v"), F.array(*[F.lit(q) for q in qs])).alias("builtin"),
+        F.percentile(F.col("v"), F.array(*[F.lit(float(q)) for q in qs])).alias("builtin"),
         F.sort_array(F.collect_list(F.col("v"))).alias("__sorted"),
     )
     out = agg.select(

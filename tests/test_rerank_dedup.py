@@ -260,40 +260,6 @@ def test_dedup_clusters_frees_previous_round_checkpoints(spark):
     assert n_after - n_before <= 4, (n_before, n_after)
 
 
-def test_dedup_clusters_star_matches_min_label(spark):
-    """Star-contraction CC (O(log^2 n) rounds) must produce exactly the
-    min-label result on paths, random graphs, and singletons."""
-    import numpy as np
-
-    from podcast_audio_feature_extraction_spark.operators.dedup import (
-        dedup_clusters,
-        dedup_clusters_star,
-    )
-
-    rng = np.random.default_rng(17)
-    # 40 nodes: a 15-node path (deep chain), a random cluster, singletons
-    edges = [(i, i + 1) for i in range(14)]
-    blob = list(range(20, 30))
-    for _ in range(12):
-        a, b = rng.choice(blob, size=2, replace=False)
-        edges.append((int(min(a, b)), int(max(a, b))))
-    docs = spark.createDataFrame(pd.DataFrame({"doc_id": list(range(40))}))
-    pairs = spark.createDataFrame(
-        pd.DataFrame({"doc_a": [a for a, _ in edges], "doc_b": [b for _, b in edges], "jaccard": 1.0})
-    )
-    cols = ["doc_id", "cluster_id", "is_keeper"]
-    want = dedup_clusters(docs, pairs).select(cols).toPandas().sort_values("doc_id").reset_index(drop=True)
-    got = (
-        dedup_clusters_star(docs, pairs)
-        .select(cols).toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
-    # empty-pairs (all singletons) path
-    empty = spark.createDataFrame(pd.DataFrame({"doc_a": [], "doc_b": []}), "doc_a long, doc_b long")
-    singles = dedup_clusters_star(docs, empty).toPandas()
-    assert (singles["is_keeper"] == 1).all() and (singles["cluster_id"] == singles["doc_id"]).all()
-
-
 def test_pair_dedup_reuse_table_matches_pure_plan(spark):
     """The stored-table (localCheckpoint) self-join form must produce
     exactly the pure-plan results for both minhash and simhash pairs."""

@@ -4,11 +4,6 @@ import os
 import pyspark.sql.functions as F
 
 from podcast_audio_feature_extraction_spark.operators.resume import load_manifest, run_resumable
-from podcast_audio_feature_extraction_spark.operators.skew import (
-    detect_heavy_keys,
-    salted_agg,
-    repartition_range_sorted,
-)
 from podcast_audio_feature_extraction_spark.plans.backfill import build_feature_table
 
 
@@ -55,53 +50,21 @@ def test_noop_rerun_computes_nothing(spark, transcripts_sdf, tmp_path):
     assert run2["rows_out"] == 0
 
 
-def test_salted_agg_matches_plain(spark, transcripts_sdf):
-    plain = (
-        transcripts_sdf.groupBy("conv_id")
-        .agg(
-            F.count("text").alias("n"),
-            F.min("turn_idx").alias("mn"),
-            F.max("turn_idx").alias("mx"),
-            F.sum(F.length("text")).alias("chars"),
-        )
-        .toPandas()
-        .sort_values("conv_id")
-        .reset_index(drop=True)
-    )
-    salted = (
-        salted_agg(
-            transcripts_sdf,
-            "conv_id",
-            {"n": ("count", "text"), "mn": ("min", "turn_idx"), "mx": ("max", "turn_idx"),
-             "chars": ("sum", F.length("text"))},
-            n_salts=4,
-        )
-        .toPandas()
-        .sort_values("conv_id")
-        .reset_index(drop=True)
-    )
-    for c in ("n", "mn", "mx", "chars"):
-        assert (plain[c].to_numpy() == salted[c].to_numpy()).all(), c
-
-
-def test_detect_heavy_keys(spark, transcripts_sdf):
-    heavy = detect_heavy_keys(transcripts_sdf, min_rows=100).toPandas()
-    counts = transcripts_sdf.groupBy("conv_id").count().toPandas()
-    assert set(heavy["conv_id"]) == set(counts[counts["count"] >= 100]["conv_id"])
-
-
-def test_repartition_range_sorted_is_sorted(spark, transcripts_sdf):
-    rp = repartition_range_sorted(transcripts_sdf, num_partitions=4)
-
-    def check_sorted(it):
-        prev = None
-        for row in it:
-            key = (row["conv_id"], row["ts"])
-            assert prev is None or key >= prev
-            prev = key
-        return iter([])
-
-    rp.rdd.mapPartitions(lambda it: check_sorted(it)).count()
+def test_resume_commits_empty_batches(spark, transcripts_sdf, tmp_path):
+    """One conversation over 4 buckets in batches of 1 leaves 3 batches with
+    no rows: they commit with rows 0, and a rerun computes nothing. The
+    source is read from parquet, as the backfill job reads it."""
+    src = str(tmp_path / "src")
+    transcripts_sdf.filter(F.col("conv_id") == transcripts_sdf.first()["conv_id"]).write.parquet(src)
+    one = spark.read.parquet(src)
+    out = str(tmp_path / "sparse")
+    run = run_resumable(_transform, one, out, n_buckets=4, batch_size=1)
+    assert sorted(run["computed_buckets"]) == [0, 1, 2, 3]
+    assert run["rows_out"] == one.count()
+    rows = sorted(v["rows"] for v in load_manifest(out)["buckets"].values())
+    assert rows == [0, 0, 0, one.count()]
+    rerun = run_resumable(_transform, one, out, n_buckets=4, batch_size=1)
+    assert rerun["computed_buckets"] == [] and rerun["rows_out"] == 0
 
 
 def test_resume_executes_transform_once_per_batch(spark, transcripts_sdf, tmp_path):
@@ -201,45 +164,6 @@ def _zipf_frame(spark):
     return spark.createDataFrame(
         pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "ts"])
     )
-
-
-def test_skew_guarded_agg_matches_plain(spark):
-    from podcast_audio_feature_extraction_spark.operators.skew import skew_guarded_agg
-
-    df = _zipf_frame(spark).withColumn("v", F.col("turn_idx").cast("double"))
-    aggs = {"n": ("count", "v"), "s": ("sum", "v"), "lo": ("min", "v"), "hi": ("max", "v")}
-    guarded = (
-        skew_guarded_agg(df, "conv_id", aggs, heavy_min_rows=100, n_salts=4)
-        .toPandas().sort_values("conv_id").reset_index(drop=True)
-    )
-    plain = (
-        df.groupBy("conv_id")
-        .agg(F.count("v").alias("n"), F.sum("v").alias("s"), F.min("v").alias("lo"), F.max("v").alias("hi"))
-        .toPandas().sort_values("conv_id").reset_index(drop=True)
-    )
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(guarded[plain.columns], plain, check_dtype=False)
-
-
-def test_salted_collect_sorted_matches_unsalted(spark):
-    from podcast_audio_feature_extraction_spark.operators.skew import salted_collect_sorted
-
-    df = _zipf_frame(spark)
-    got = (
-        salted_collect_sorted(df, "conv_id", ["turn_idx", "text"], out_col="items", n_salts=4)
-        .select("conv_id", F.col("items").cast("string").alias("items"))
-        .toPandas().sort_values("conv_id").reset_index(drop=True)
-    )
-    want = (
-        df.groupBy("conv_id")
-        .agg(F.sort_array(F.collect_list(F.struct("turn_idx", "text"))).alias("items"))
-        .select("conv_id", F.col("items").cast("string").alias("items"))
-        .toPandas().sort_values("conv_id").reset_index(drop=True)
-    )
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(got, want)
 
 
 def test_build_segments_salted_matches_unsalted(spark):

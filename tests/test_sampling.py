@@ -79,23 +79,3 @@ def test_quantize_roundtrip_error_bounded(spark):
     errs = F.zip_with(deq, F.col("embedding"), lambda a, b: F.abs(a - b))
     worst = df.select(F.max(F.array_max(errs)).alias("w")).first()["w"]
     assert worst <= (2.0 / 255) / 2 + 1e-12  # half a quantization step
-
-
-def test_stratified_sample_approx_expected_counts(spark):
-    pdf = pd.DataFrame(
-        {
-            "doc_id": range(2000),
-            "source": [f"s{i % 2}" for i in range(2000)],  # 1000 per group
-            "text": ["x"] * 2000,
-        }
-    )
-    from podcast_audio_feature_extraction_spark.operators.sampling import stratified_sample_approx
-
-    df = spark.createDataFrame(pdf)
-    got = stratified_sample_approx(df, n_per_group=50).toPandas()
-    per = got.groupby("source")["doc_id"].count()
-    # expected 50 per group; hash-threshold gives a binomial spread
-    assert ((per > 25) & (per < 90)).all()
-    # deterministic
-    again = stratified_sample_approx(df, n_per_group=50).toPandas()
-    assert set(got["doc_id"]) == set(again["doc_id"])

@@ -3,7 +3,6 @@ row-group pruning; bucketed tables -> shuffle-free co-located joins)."""
 
 import pyspark.sql.functions as F
 
-from podcast_audio_feature_extraction_spark.operators.skew import repartition_range_sorted
 from podcast_audio_feature_extraction_spark.plans.backfill import build_feature_table
 
 
@@ -11,7 +10,11 @@ def test_ts_range_filter_is_pushed_to_parquet(spark, transcripts_sdf, tmp_path):
     """S7: a ts-range predicate on a (conv_id, ts)-sorted layout reaches the
     parquet scan as a pushed filter (row-group skipping at scale)."""
     path = str(tmp_path / "sorted_feats")
-    repartition_range_sorted(transcripts_sdf, num_partitions=4).write.parquet(path)
+    (
+        transcripts_sdf.repartitionByRange(4, "conv_id", "ts")
+        .sortWithinPartitions("conv_id", "ts")
+        .write.parquet(path)
+    )
     df = spark.read.parquet(path).filter(
         (F.col("ts") >= "2024-02-01") & (F.col("ts") < "2024-02-02") & (F.col("conv_id") == "conv_000003")
     )

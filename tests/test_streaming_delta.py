@@ -5,9 +5,12 @@ row-identical to a full rebuild of the current snapshot at every point,
 re-delivered batches must be no-ops, and log compaction must not change
 results."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 
 from podcast_audio_feature_extraction_spark.plans.backfill import (
     build_feature_table,
@@ -243,3 +246,51 @@ def test_merged_snapshot_dirty_same_batch_tie_is_deterministic(spark):
         for _ in range(3)
     }
     assert winners == {"aardvark"}  # ascending struct order, stable across runs
+
+
+@pytest.mark.parametrize("corrupt_only", [False, True])
+def test_compaction_corrupt_base_raises_and_keeps_log(spark, transcripts_pdf, tmp_path, corrupt_only):
+    """A base that exists but cannot be read is not "no base yet": the
+    compaction must raise and keep the log, instead of overwriting the
+    touched buckets with log-only rows and deleting the log. With
+    ``corrupt_only`` the garbage file is the base's only file, so Spark
+    meets it while inferring the schema; otherwise it may meet it only
+    in the merge job."""
+    import glob
+    import shutil
+
+    from podcast_audio_feature_extraction_spark.plans.backfill import touched_buckets
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+
+    pdf, paths = _mk_base(spark, transcripts_pdf, tmp_path)
+    (batch,) = _delta_batches(pdf, n_batches=1)
+    bdf = spark.createDataFrame(batch, schema=TRANSCRIPT_SCHEMA)
+    bdf.write.parquet(f"{paths['log']}/batch=0")
+    bucket_dir = f"{paths['base']}/conv_bucket={touched_buckets(bdf, N_BUCKETS)[0]}"
+    if corrupt_only:
+        shutil.rmtree(paths["base"])
+        os.makedirs(bucket_dir)
+    with open(f"{bucket_dir}/part-00000-corrupt.snappy.parquet", "wb") as f:
+        f.write(b"not a parquet file")
+    base_files = sorted(glob.glob(paths["base"] + "/conv_bucket=*/*.parquet"))
+
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        compact_transcript_log(spark, paths["base"], paths["log"], n_buckets=N_BUCKETS)
+    assert glob.glob(paths["log"] + "/batch=*") == [f"{paths['log']}/batch=0"]
+    assert sorted(glob.glob(paths["base"] + "/conv_bucket=*/*.parquet")) == base_files
+
+
+def test_rebuild_bootstraps_from_missing_base(spark, transcripts_pdf, tmp_path):
+    """No base written yet (a fresh pipeline): the rebuild reads the base
+    as empty and builds the touched buckets from the log alone."""
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+    from podcast_audio_feature_extraction_spark.streaming.delta import _rebuild_batch
+
+    (batch,) = _delta_batches(transcripts_pdf.assign(val=1.0), n_batches=1)
+    bdf = spark.createDataFrame(batch, schema=TRANSCRIPT_SCHEMA)
+    log, features = str(tmp_path / "log"), str(tmp_path / "features")
+    bdf.write.parquet(f"{log}/batch=0")
+    n = _rebuild_batch(spark, spark.read.parquet(f"{log}/batch=0"), str(tmp_path / "base"), log, features, N_BUCKETS)
+    assert n >= 1
+    want = _canon(build_feature_table(bdf))
+    pd.testing.assert_frame_equal(_canon(spark.read.parquet(features).drop("conv_bucket")), want)
