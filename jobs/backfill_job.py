@@ -13,6 +13,12 @@ checkpoint manifest — rerunning after a failure resumes from the last
 committed bucket. Metrics (rows, wall_s, turns/sec per bucket and per run)
 are written into the manifest alongside the data, the local stand-in for
 Iceberg snapshot properties.
+
+The output is the engine's one table layout (``conv_bucket={b}``
+partitions, ``n_buckets`` pinned in ``_manifest.json``): it is the
+``features_path`` of ``streaming.delta.stream_incremental_feature_build``
+as-is, which then keeps it current (run the stream with the same
+``--n-buckets``; another count is refused).
 """
 
 from __future__ import annotations
@@ -45,7 +51,7 @@ def main(argv: list[str] | None = None) -> int:
 
     def transform(df):
         return build_feature_table(
-            df.drop("bucket"), gap_s=args.gap_seconds, k=args.window_k,
+            df, gap_s=args.gap_seconds, k=args.window_k,
             embed_dim=args.embed_dim, val_col=val_col,
         )
 

@@ -4,13 +4,18 @@
 Re-expresses the reference's skip-if-output-exists incremental recompute
 (/root/reference/src/features/FeatureExtractor.py:67-90) and its
 failed-URI retry list (/root/reference/src/search/index.py:125-160) as
-bucket-level checkpointing:
+bucket-level checkpointing over the engine's one table layout:
 
-- work is hash-bucketed by conv_id (``pmod(xxhash64(conv_id), n_buckets)``);
+- work is bucketed by conv_id (:func:`bucket_col`, ``crc32(conv_id) %
+  n_buckets``) into hive partitions ``conv_bucket={b}`` — the layout the
+  partitioned delta rebuild and the streaming loop maintain
+  (``plans.backfill``, ``streaming.delta``), so a backfill's output is
+  their feature table as-is;
 - a JSON manifest records completed buckets with lineage (input/output row
   counts, wall seconds, throughput) — the local stand-in for Iceberg
   snapshot metadata (no Iceberg runtime jars in this sandbox; the commit
-  unit and resume semantics are identical);
+  unit and resume semantics are identical) — and pins ``n_buckets``
+  (:func:`pin_n_buckets`), which every writer of the layout checks;
 - resume = anti-join of the bucket work-list against the manifest: only
   missing buckets are recomputed, exactly-once per bucket (data land +
   manifest append happen per completed batch; a crash mid-batch re-runs
@@ -19,8 +24,8 @@ bucket-level checkpointing:
 Scale note: each batch is ONE Spark job over ``filter(bucket IN batch)``
 — a full scan per batch, so ``batch_size`` trades checkpoint granularity
 against scan count (ceil(n_buckets/batch_size) scans worst case). On a
-real cluster the input would be bucket-partitioned Iceberg so the filter
-prunes files and each batch scans only its own data.
+real cluster the input would itself be stored in the conv_bucket layout
+so the filter prunes directories and each batch scans only its own data.
 """
 
 from __future__ import annotations
@@ -37,7 +42,6 @@ MANIFEST_NAME = "_manifest.json"
 def write_features(
     df: DataFrame,
     path: str,
-    key_col: str = "conv_id",
     order_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     codec: str = "zstd",
     mode: str = "overwrite",
@@ -50,7 +54,12 @@ def write_features(
 
 
 def bucket_col(key_col: str, n_buckets: int):
-    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+    """The table layout's bucket of a row: crc32 of the utf-8 key, mod
+    ``n_buckets`` (Spark's crc32 is a non-negative bigint, so the remainder
+    is a valid bucket). crc32 is the same polynomial in Spark and Python's
+    zlib, so the driver can compute a delta's touched buckets without a
+    Spark job (``plans.backfill.touched_buckets``; parity test-pinned)."""
+    return (F.crc32(F.col(key_col).cast("string")) % n_buckets).cast("int")
 
 
 def load_manifest(out_dir: str) -> dict:
@@ -69,92 +78,43 @@ def _commit_manifest(out_dir: str, manifest: dict) -> None:
     os.replace(tmp, path)  # atomic on POSIX
 
 
-def compact_buckets(
-    spark,
-    out_dir: str,
-    key_col: str = "conv_id",
-    files_per_bucket: int = 1,
-) -> dict:
-    """Small-file compaction for a resumable table: rewrite each completed
-    bucket's directory down to ``files_per_bucket`` sorted files. Long
-    incremental runs accrete one file per batch per bucket; scans then pay
-    per-file open/footer costs. Row counts are re-verified against the
-    manifest before the swap and the manifest records the compaction —
-    data content is untouched (same rows, same sort order contract).
-    """
-    import shutil
-
-    manifest = load_manifest(out_dir)
-    stats = {"compacted": [], "skipped": [], "repaired": [], "rows": 0}
-    # crash repair: a previous compaction interrupted between the two
-    # renames leaves bucket=N.old (data intact) without bucket=N — restore
-    # it; an .old WITH a live bucket is a completed swap's leftover.
-    for name in list(os.listdir(out_dir)):
-        if name.endswith(".old"):
-            old, live = os.path.join(out_dir, name), os.path.join(out_dir, name[: -len(".old")])
-            if os.path.isdir(live):
-                shutil.rmtree(old)
-            else:
-                os.rename(old, live)
-                stats["repaired"].append(name[: -len(".old")])
-        elif name.endswith(".compact.tmp"):
-            shutil.rmtree(os.path.join(out_dir, name), ignore_errors=True)
-    for b, meta in sorted(manifest["buckets"].items(), key=lambda kv: int(kv[0])):
-        bdir = os.path.join(out_dir, f"bucket={b}")
-        if not os.path.isdir(bdir):
-            stats["skipped"].append(int(b))
-            continue
-        n_files = len([f for f in os.listdir(bdir) if f.endswith(".parquet")])
-        if n_files <= files_per_bucket:
-            stats["skipped"].append(int(b))
-            continue
-        df = spark.read.parquet(bdir)
-        tmp = bdir + ".compact.tmp"
-        df.coalesce(files_per_bucket).sortWithinPartitions(key_col).write.mode("overwrite").parquet(tmp)
-        n_new = spark.read.parquet(tmp).count()
-        if n_new != meta["rows"]:  # refuse to swap on any row-count drift
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(f"bucket {b}: compacted rows {n_new} != manifest {meta['rows']}")
-        # two-rename swap: a crash anywhere leaves the data recoverable
-        # (either bdir or bdir.old exists), never silently lost — the
-        # repair pass above restores an interrupted swap on the next run
-        old = bdir + ".old"
-        os.rename(bdir, old)
-        os.rename(tmp, bdir)
-        shutil.rmtree(old)
-        meta["compacted_at"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        stats["compacted"].append(int(b))
-        stats["rows"] += n_new
-    _commit_manifest(out_dir, manifest)
-    return stats
+def pin_n_buckets(manifest: dict, path: str, n_buckets: int) -> dict:
+    """Return ``manifest`` with ``n_buckets`` pinned; raise if the table at
+    ``path`` is already pinned to another count. The bucket count is part
+    of a layout table's identity: another modulus assigns conversations to
+    other buckets, so a rebuild would read the wrong base rows and a
+    dynamic overwrite would leave the old layout's rows beside the new
+    ones. Every writer of the layout pins before it writes and records the
+    pin with its manifest commit."""
+    pinned = manifest.get("n_buckets")
+    if pinned is not None and pinned != n_buckets:
+        raise ValueError(
+            f"manifest at {path} was written with n_buckets={pinned}; "
+            f"got n_buckets={n_buckets} — use a fresh path to rebucket"
+        )
+    manifest["n_buckets"] = n_buckets
+    return manifest
 
 
 def run_resumable(
     transform,
     source: DataFrame,
     out_dir: str,
-    key_col: str = "conv_id",
     n_buckets: int = 16,
     batch_size: int = 4,
     run_id: str | None = None,
 ) -> dict:
     """Execute ``transform(df) -> df`` bucket-by-bucket with resume.
 
-    Returns the run's metrics dict (also appended to the manifest).
-    Output layout: ``{out_dir}/bucket={b}/part-*.parquet`` + manifest.
+    ``transform`` gets the source rows of a batch of conv_id buckets and
+    returns rows that keep ``conv_id``. Output layout:
+    ``{out_dir}/conv_bucket={b}/part-*.parquet`` + the manifest — the
+    table ``streaming.delta.stream_incremental_feature_build`` maintains
+    as its ``features_path``. Returns the run's metrics dict (also
+    appended to the manifest).
     """
     os.makedirs(out_dir, exist_ok=True)
-    manifest = load_manifest(out_dir)
-    # the bucketing scheme is part of the table's identity: resuming with a
-    # different modulus would assign conversations to different buckets and
-    # silently mix two layouts
-    pinned = manifest.get("n_buckets")
-    if pinned is not None and pinned != n_buckets:
-        raise ValueError(
-            f"manifest at {out_dir} was written with n_buckets={pinned}; "
-            f"got n_buckets={n_buckets} — use a fresh out_dir to rebucket"
-        )
-    manifest["n_buckets"] = n_buckets
+    manifest = pin_n_buckets(load_manifest(out_dir), out_dir, n_buckets)
     done = set(int(b) for b in manifest["buckets"])
     todo = [b for b in range(n_buckets) if b not in done]
     run = {
@@ -167,13 +127,11 @@ def run_resumable(
     }
     from pyspark.sql import Observation
 
-    src = source.withColumn("bucket", bucket_col(key_col, n_buckets))
+    bucket = bucket_col("conv_id", n_buckets)
     for i in range(0, len(todo), batch_size):
         batch = todo[i : i + batch_size]
         t0 = time.perf_counter()
-        out = transform(src.filter(F.col("bucket").isin(batch)))
-        if "bucket" not in out.columns:
-            out = out.withColumn("bucket", bucket_col(key_col, n_buckets))
+        out = transform(source.filter(bucket.isin(batch))).withColumn("conv_bucket", bucket)
         # per-bucket row counts ride along as observed metrics of the write
         # job itself — recomputing them with a separate groupBy/collect
         # (round-1 design) re-executed the whole transform, a 2x compute
@@ -185,14 +143,14 @@ def run_resumable(
         # ordering, so the writer adds no second sort.
         obs = Observation(f"resume-batch-{i}")
         out = (
-            out.repartition(len(batch), "bucket")
-            .sortWithinPartitions("bucket", key_col)
-            .observe(obs, *[F.sum((F.col("bucket") == b).cast("long")).alias(f"b{b}") for b in batch])
+            out.repartition(len(batch), "conv_bucket")
+            .sortWithinPartitions("conv_bucket", "conv_id")
+            .observe(obs, *[F.sum((F.col("conv_bucket") == b).cast("long")).alias(f"b{b}") for b in batch])
         )
         # land data first, then commit the manifest — a crash between the
         # two re-runs the batch (idempotent: partition dirs are overwritten)
         (
-            out.write.partitionBy("bucket")
+            out.write.partitionBy("conv_bucket")
             .mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(out_dir)

@@ -22,6 +22,12 @@ from pyspark.sql import DataFrame
 
 from podcast_audio_feature_extraction_spark.functions.embedding import with_embedding
 from podcast_audio_feature_extraction_spark.operators.asof import asof_join
+from podcast_audio_feature_extraction_spark.operators.resume import (
+    _commit_manifest,
+    bucket_col,
+    load_manifest,
+    pin_n_buckets,
+)
 from podcast_audio_feature_extraction_spark.operators.rolling import assemble_functionals, turn_features
 from podcast_audio_feature_extraction_spark.operators.sessionize import sessionize
 
@@ -177,13 +183,8 @@ N_CONV_BUCKETS = 512
 
 
 def conv_bucket_col(n_buckets: int = N_CONV_BUCKETS):
-    """Deterministic conversation -> partition bucket (crc32 of the utf-8
-    conv_id, mod ``n_buckets``). crc32 is the same polynomial in Spark and
-    Python's zlib, so the driver side can compute a delta's touched-bucket
-    list without a Spark job (test-pinned)."""
-    from pyspark.sql import functions as F
-
-    return (F.crc32(F.col("conv_id").cast("string")) % n_buckets).cast("int")
+    """The ``conv_bucket`` partition value of a conv_id-keyed row."""
+    return bucket_col("conv_id", n_buckets)
 
 
 def write_conv_partitioned(
@@ -193,7 +194,8 @@ def write_conv_partitioned(
     the production layout for incremental rebuilds: a delta touching c
     conversations rewrites at most c partitions and the rebuild scan
     reads only those directories (partition pruning, no file row-group
-    even opened for untouched buckets).
+    even opened for untouched buckets). ``n_buckets`` is pinned in the
+    table's manifest; a table pinned to another count is refused.
 
     Granularity trade: corpus_bytes / n_buckets is the rewrite
     amplification unit (a touched bucket is rebuilt whole). Pick
@@ -202,6 +204,7 @@ def write_conv_partitioned(
     8192 buckets = ~12 GB/bucket). repartition by bucket first so each
     bucket is written by one task (one file per bucket, not
     tasks x buckets tiny files)."""
+    pin_n_buckets(load_manifest(path), path, n_buckets)
     (
         df.withColumn("conv_bucket", conv_bucket_col(n_buckets))
         .repartition("conv_bucket")
@@ -209,6 +212,8 @@ def write_conv_partitioned(
         .mode(mode)
         .parquet(path)
     )
+    # an overwrite replaced the old manifest along with the data
+    _commit_manifest(path, pin_n_buckets(load_manifest(path), path, n_buckets))
 
 
 def touched_buckets(new_turns: DataFrame, n_buckets: int = N_CONV_BUCKETS, max_collect: int = 100_000) -> list[int]:
@@ -283,20 +288,17 @@ def commit_rebuilt_partitions(rebuilt: DataFrame, features_path: str) -> None:
     partitions present in ``rebuilt``; every other partition's files are
     untouched (no read, no rewrite) — this is why the incremental path's
     cost tracks the touched fraction instead of the kept-side
-    materialization floor (build_feature_table_incremental's docstring)."""
-    spark = rebuilt.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        (
-            rebuilt.repartition("conv_bucket")
-            .write.partitionBy("conv_bucket")
-            .mode("overwrite")
-            .parquet(features_path)
-        )
-    finally:
-        spark.conf.set(key, prev)
+    materialization floor (build_feature_table_incremental's docstring).
+    The overwrite mode is a per-write option, never the session conf: a
+    concurrent writer restoring a session-wide ``static`` mid-write would
+    turn this commit into a delete of every partition."""
+    (
+        rebuilt.repartition("conv_bucket")
+        .write.partitionBy("conv_bucket")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(features_path)
+    )
 
 
 def flagship(transcripts: DataFrame, gap_s: float = 1800.0, k: int = 5, strategy: str = "union") -> DataFrame:

@@ -3,16 +3,21 @@ drives the partitioned delta-rebuild loop end to end.
 
 Composition of the two production pieces this engine already has:
 
-- the conv_bucket-partitioned storage layout + partition-pruned delta
-  rebuild (``plans.backfill.delta_rebuild_partitioned`` /
-  ``commit_rebuilt_partitions``), and
+- the engine's one table layout — hive partitions ``conv_bucket={b}``
+  with ``b = crc32(conv_id) % n_buckets`` (``operators.resume.bucket_col``)
+  and ``n_buckets`` pinned in the table's ``_manifest.json`` — with its
+  partition-pruned rebuild and dynamic-overwrite commit
+  (``plans.backfill.commit_rebuilt_partitions``), and
 - the exactly-once foreachBatch idempotence pattern
   (``streaming.sink.write_stream_checkpointed``).
 
 Storage is a two-table LSM-style shape, chosen so every write is
 IDEMPOTENT without a transactional table format:
 
-- ``base``  — the compacted transcript, hive-partitioned by conv_bucket;
+- ``base``  — the compacted transcript in the layout
+  (``plans.backfill.write_conv_partitioned``);
+- ``features`` — the feature table in the same layout: the output
+  directory of ``jobs/backfill_job.py`` (``run_resumable``) as-is;
 - ``log``   — per-batch append directories ``batch=<id>/`` (overwriting
   the same directory on a re-delivered micro-batch converges to the same
   bytes, so the append needs no two-phase commit);
@@ -48,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from podcast_audio_feature_extraction_spark.operators.resume import (
     _commit_manifest,
     load_manifest,
+    pin_n_buckets,
 )
 from podcast_audio_feature_extraction_spark.plans.backfill import (
     FEATURE_COLS,
@@ -57,13 +63,6 @@ from podcast_audio_feature_extraction_spark.plans.backfill import (
     conv_bucket_col,
     touched_buckets,
 )
-
-
-def _bucket_pred(buckets: list[int], n_buckets: int):
-    """Touched-bucket membership as an expression over conv_id (the SAME
-    conv_bucket_col expression the table layout uses — for the small log
-    side, where there is no conv_bucket directory to prune)."""
-    return conv_bucket_col(n_buckets).isin(buckets)
 
 
 def _read_base(spark: SparkSession, base_path: str, buckets: list[int], schema) -> DataFrame:
@@ -134,7 +133,9 @@ def _rebuild_batch(
     if not buckets:
         return 0
     base = _read_base(spark, base_path, buckets, batch_stored.schema)
-    log = spark.read.parquet(log_path).filter(_bucket_pred(buckets, n_buckets))
+    # the log side has no conv_bucket directory to prune: the same layout
+    # expression, evaluated per row
+    log = spark.read.parquet(log_path).filter(conv_bucket_col(n_buckets).isin(buckets))
     rebuilt = build_feature_table(_merged_snapshot(base, log), **feature_kwargs).select(*FEATURE_COLS)
     commit_rebuilt_partitions(
         rebuilt.withColumn("conv_bucket", conv_bucket_col(n_buckets)), features_path
@@ -164,16 +165,21 @@ def stream_incremental_feature_build(
     earlier step is idempotent on its own (module docstring).
 
     ``base_path`` is normally bootstrapped with
-    :func:`write_conv_partitioned` before the stream starts; a missing or
+    :func:`write_conv_partitioned` and ``features_path`` with
+    ``jobs/backfill_job.py`` before the stream starts; a missing or
     not-yet-written base is treated as empty (the first batches build
-    features from the log alone).
+    features from the log alone). Either table pinned to a bucket count
+    other than ``n_buckets`` raises ``ValueError`` here.
     """
+    # refuse a layout pinned to another bucket count before anything runs
+    for path in (base_path, features_path):
+        pin_n_buckets(load_manifest(path), path, n_buckets)
     os.makedirs(log_path, exist_ok=True)
     os.makedirs(features_path, exist_ok=True)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        manifest = load_manifest(features_path)
+        manifest = pin_n_buckets(load_manifest(features_path), features_path, n_buckets)
         done = manifest.setdefault("delta_batches", {})
         if str(batch_id) in done:
             return  # clean re-delivery: committed end-to-end already
@@ -225,6 +231,7 @@ def compact_transcript_log(spark: SparkSession, base_path: str, log_path: str, n
     import glob
     import shutil
 
+    manifest = pin_n_buckets(load_manifest(base_path), base_path, n_buckets)
     if not glob.glob(os.path.join(log_path, "batch=*")):
         return 0
     # NULL conv_id touches nothing (same rule as touched_buckets and the
@@ -242,6 +249,7 @@ def compact_transcript_log(spark: SparkSession, base_path: str, log_path: str, n
     base = _read_base(spark, base_path, buckets, log.drop("batch").schema)
     merged = _merged_snapshot(base, log).withColumn("conv_bucket", conv_bucket_col(n_buckets))
     commit_rebuilt_partitions(merged, base_path)
+    _commit_manifest(base_path, manifest)
     failed = []
     for d in glob.glob(os.path.join(log_path, "batch=*")):
         try:

@@ -8,7 +8,7 @@ from podcast_audio_feature_extraction_spark.plans.backfill import build_feature_
 
 
 def _transform(df):
-    return build_feature_table(df.drop("bucket"), gap_s=1800.0, k=3, val_col=None)
+    return build_feature_table(df, gap_s=1800.0, k=3, val_col=None)
 
 
 def test_resume_skips_completed_buckets(spark, transcripts_sdf, tmp_path):
@@ -31,7 +31,7 @@ def test_resume_skips_completed_buckets(spark, transcripts_sdf, tmp_path):
     assert sorted(run2["resumed_buckets"]) == [0, 1]
 
     # final table identical to a fresh single-shot run
-    got = spark.read.parquet(out).drop("bucket")
+    got = spark.read.parquet(out).drop("conv_bucket")
     fresh = _transform(transcripts_sdf)
     assert got.count() == fresh.count()
     key_sum = lambda df: df.agg(F.sum(F.crc32(F.concat_ws("|", "conv_id", "turn_idx"))).alias("s")).first()["s"]
@@ -107,49 +107,24 @@ def test_write_features_zstd_sorted(spark, transcripts_sdf, tmp_path):
     assert key == sorted(key)
 
 
-def test_compact_buckets_preserves_rows(spark, transcripts_sdf, tmp_path):
+def test_resume_writes_the_conv_bucket_layout(spark, transcripts_sdf, tmp_path):
+    """run_resumable writes the one table layout: conv_bucket=N partitions
+    bucketed by conv_bucket_col, n_buckets pinned, and a different count
+    refused on resume."""
     import glob
-    from podcast_audio_feature_extraction_spark.operators.resume import compact_buckets
 
-    import os
-    import shutil
+    import pytest
 
-    out = str(tmp_path / "compactable")
-    run_resumable(lambda df: df, transcripts_sdf, out, n_buckets=2, batch_size=1)
-    # fragment each bucket into several files (what many small incremental
-    # batches would leave behind) without changing its rows
-    for b in (0, 1):
-        bdir = f"{out}/bucket={b}"
-        frag = spark.read.parquet(bdir).repartition(4)
-        frag.write.mode("overwrite").parquet(bdir + ".tmp")
-        shutil.rmtree(bdir)
-        os.replace(bdir + ".tmp", bdir)
-    # snapshot BEFORE compaction (materialized: the rewrite invalidates
-    # any DataFrame still holding the old file listing)
-    a = spark.read.parquet(out).orderBy("conv_id", "turn_idx").toPandas()
-    files_before = len(glob.glob(out + "/bucket=*/*.parquet"))
-    stats = compact_buckets(spark, out, files_per_bucket=1)
-    files_after = len(glob.glob(out + "/bucket=*/*.parquet"))
-    assert files_after == 2 and files_before > files_after
-    assert sorted(stats["compacted"]) == [0, 1]
-    b = spark.read.parquet(out).orderBy("conv_id", "turn_idx").toPandas()
-    assert len(a) == len(b)
-    assert (a["conv_id"].to_numpy() == b["conv_id"].to_numpy()).all()
-    assert (a["turn_idx"].to_numpy() == b["turn_idx"].to_numpy()).all()
+    from podcast_audio_feature_extraction_spark.plans.backfill import conv_bucket_col
 
-
-def test_compact_buckets_repairs_interrupted_swap(spark, transcripts_sdf, tmp_path):
-    import os
-    from podcast_audio_feature_extraction_spark.operators.resume import compact_buckets
-
-    out = str(tmp_path / "repairable")
-    run_resumable(lambda df: df, transcripts_sdf, out, n_buckets=2, batch_size=2)
-    rows = spark.read.parquet(out).count()
-    # simulate a crash between the two renames: bucket=0 moved aside, not replaced
-    os.rename(f"{out}/bucket=0", f"{out}/bucket=0.old")
-    stats = compact_buckets(spark, out, files_per_bucket=1)
-    assert stats["repaired"] == ["bucket=0"]
-    assert spark.read.parquet(out).count() == rows  # nothing lost
+    out = str(tmp_path / "layout")
+    run_resumable(_transform, transcripts_sdf, out, n_buckets=4, batch_size=4)
+    assert glob.glob(out + "/conv_bucket=*") and not glob.glob(out + "/bucket=*")
+    stored = spark.read.parquet(out)
+    assert stored.filter(F.col("conv_bucket") != conv_bucket_col(4)).count() == 0
+    assert load_manifest(out)["n_buckets"] == 4
+    with pytest.raises(ValueError, match="n_buckets=4"):
+        run_resumable(_transform, transcripts_sdf, out, n_buckets=8, batch_size=4)
 
 
 def _zipf_frame(spark):

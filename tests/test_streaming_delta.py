@@ -68,33 +68,48 @@ def _delta_batches(pdf, n_batches=2):
     return batches
 
 
-def test_stream_delta_build_end_to_end(spark, transcripts_pdf, tmp_path):
+def _stage_incoming(spark, paths, batches):
+    """Stage the incoming stream as one file per micro-batch."""
     from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
-
-    pdf, paths = _mk_base(spark, transcripts_pdf, tmp_path)
-    batches = _delta_batches(pdf)
-
-    # stage the incoming stream as one file per micro-batch
-    import os
 
     os.makedirs(paths["incoming"])
     for i, b in enumerate(batches):
         spark.createDataFrame(b, schema=TRANSCRIPT_SCHEMA).coalesce(1).write.parquet(
             f"{paths['incoming']}/f{i}"
         )
+
+
+def _run_stream(spark, paths, n_buckets=N_BUCKETS):
+    """Drain the staged incoming files through the delta stream (one
+    micro-batch per file) and wait for the query to finish."""
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(paths["incoming"] + "/*")
     )
     q = stream_incremental_feature_build(
-        stream, paths["base"], paths["log"], paths["features"], paths["ckpt"],
-        n_buckets=N_BUCKETS,
+        stream, paths["base"], paths["log"], paths["features"], paths["ckpt"], n_buckets=n_buckets,
     )
     q.awaitTermination()
 
+
+def _want_features(spark, pdf, batches):
+    """Features of a full rebuild over the current snapshot base ∪ batches."""
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+
     snapshot_pdf = pd.concat([pdf] + batches, ignore_index=True)
-    want = _canon(build_feature_table(spark.createDataFrame(snapshot_pdf, schema=TRANSCRIPT_SCHEMA)))
+    return _canon(build_feature_table(spark.createDataFrame(snapshot_pdf, schema=TRANSCRIPT_SCHEMA)))
+
+
+def test_stream_delta_build_end_to_end(spark, transcripts_pdf, tmp_path):
+    pdf, paths = _mk_base(spark, transcripts_pdf, tmp_path)
+    batches = _delta_batches(pdf)
+    _stage_incoming(spark, paths, batches)
+    _run_stream(spark, paths)
+
+    want = _want_features(spark, pdf, batches)
     got = _canon(spark.read.parquet(paths["features"]))
     pd.testing.assert_frame_equal(got, want)
 
@@ -112,10 +127,175 @@ def test_stream_delta_build_end_to_end(spark, transcripts_pdf, tmp_path):
 
     assert glob.glob(paths["log"] + "/batch=*") == []
     base_now = _canon_transcript(spark.read.parquet(paths["base"]).drop("conv_bucket"))
-    assert len(base_now) == len(snapshot_pdf)
+    assert len(base_now) == len(pdf) + n_folded
     # and a post-compaction rebuild still matches
     got2 = _canon(spark.read.parquet(paths["features"]))
     pd.testing.assert_frame_equal(got2, want)
+
+
+def test_backfill_job_output_is_the_stream_feature_table(spark, transcripts_pdf, tmp_path):
+    """One table directory end to end: jobs/backfill_job.py writes the
+    features, write_conv_partitioned the base, two micro-batches go
+    through the delta stream, then compaction — the final feature table
+    equals a full rebuild over base ∪ batches, and no other layout
+    (``bucket=N``) is ever written."""
+    import glob
+    import importlib.util
+
+    from podcast_audio_feature_extraction_spark.operators.resume import load_manifest
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+
+    n_buckets = 8
+    pdf = transcripts_pdf.assign(val=np.round(np.random.default_rng(5).uniform(0, 100, len(transcripts_pdf)), 2))
+    paths = {k: str(tmp_path / k) for k in ("src", "base", "log", "features", "ckpt", "incoming")}
+    base_sdf = spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA)
+    base_sdf.write.parquet(paths["src"])
+    write_conv_partitioned(base_sdf, paths["base"], n_buckets=n_buckets)
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location("backfill_job", os.path.join(root, "jobs", "backfill_job.py"))
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    assert job.main([
+        "--input", paths["src"], "--output", paths["features"], "--master", "local[4]",
+        "--n-buckets", str(n_buckets), "--batch-size", "4",
+    ]) == 0
+    assert load_manifest(paths["features"])["n_buckets"] == n_buckets
+
+    batches = _delta_batches(pdf)
+    _stage_incoming(spark, paths, batches)
+    _run_stream(spark, paths, n_buckets=n_buckets)
+    assert compact_transcript_log(spark, paths["base"], paths["log"], n_buckets=n_buckets) == sum(map(len, batches))
+
+    pd.testing.assert_frame_equal(_canon(spark.read.parquet(paths["features"])), _want_features(spark, pdf, batches))
+    assert not glob.glob(str(tmp_path / "*" / "bucket=*"))
+    manifest = load_manifest(paths["features"])
+    assert len(manifest["buckets"]) == n_buckets and len(manifest["delta_batches"]) == len(batches)
+
+
+def test_bucket_count_mismatch_is_refused(spark, transcripts_pdf, tmp_path):
+    """A layout table pinned to n_buckets=16 refuses every writer that
+    brings another count — the stream, compaction, a re-bootstrap and the
+    resumable backfill — before it writes anything. Unrefused, a rebuild
+    would read the wrong base rows and the dynamic overwrite would leave
+    old-layout rows beside the new ones (conversations twice)."""
+    import glob
+
+    from podcast_audio_feature_extraction_spark.operators.resume import run_resumable
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+
+    pdf, paths = _mk_base(spark, transcripts_pdf, tmp_path)
+    batches = _delta_batches(pdf, n_batches=1)
+    _stage_incoming(spark, paths, batches)
+    spark.createDataFrame(batches[0], schema=TRANSCRIPT_SCHEMA).write.parquet(f"{paths['log']}/batch=0")
+    before = _canon(spark.read.parquet(paths["features"]))
+
+    with pytest.raises(ValueError, match="n_buckets=16"):
+        _run_stream(spark, paths, n_buckets=8)
+    with pytest.raises(ValueError, match="n_buckets=16"):
+        compact_transcript_log(spark, paths["base"], paths["log"], n_buckets=8)
+    with pytest.raises(ValueError, match="n_buckets=16"):
+        write_conv_partitioned(spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA), paths["base"], n_buckets=8)
+    with pytest.raises(ValueError, match="n_buckets=16"):
+        run_resumable(build_feature_table, spark.read.parquet(paths["base"]), paths["features"], n_buckets=8)
+
+    assert glob.glob(paths["log"] + "/batch=*") == [f"{paths['log']}/batch=0"]
+    assert not os.path.exists(paths["ckpt"])
+    pd.testing.assert_frame_equal(_canon(spark.read.parquet(paths["features"])), before)
+    assert len(_canon_transcript(spark.read.parquet(paths["base"]))) == len(pdf)
+
+
+def _fail_once(real):
+    """``real`` wrapped to raise on its first call only (fault injection)."""
+    calls = []
+
+    def wrapper(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 1:
+            raise OSError("injected fault")
+        return real(*args, **kwargs)
+
+    return wrapper
+
+
+def test_resume_crash_before_manifest_commit_converges(spark, transcripts_sdf, tmp_path, monkeypatch):
+    """Fault injection in run_resumable: the first batch's data lands,
+    then its manifest commit fails. The re-run recomputes that batch
+    (dynamic overwrite of its partitions) and ends in the state of a
+    clean run: same rows, same per-bucket manifest record."""
+    from podcast_audio_feature_extraction_spark.operators import resume
+
+    def transform(df):
+        return build_feature_table(df, val_col=None)
+
+    clean, out = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    resume.run_resumable(transform, transcripts_sdf, clean, n_buckets=4, batch_size=2)
+    monkeypatch.setattr(resume, "_commit_manifest", _fail_once(resume._commit_manifest))
+    with pytest.raises(OSError, match="injected fault"):
+        resume.run_resumable(transform, transcripts_sdf, out, n_buckets=4, batch_size=2)
+    assert spark.read.parquet(out).count() > 0  # the first batch had landed
+    rerun = resume.run_resumable(transform, transcripts_sdf, out, n_buckets=4, batch_size=2)
+
+    assert sorted(rerun["computed_buckets"]) == [0, 1, 2, 3]
+    pd.testing.assert_frame_equal(_canon(spark.read.parquet(out)), _canon(spark.read.parquet(clean)))
+    rows = lambda path: {b: v["rows"] for b, v in resume.load_manifest(path)["buckets"].items()}
+    assert rows(out) == rows(clean)
+
+
+@pytest.mark.parametrize("boundary", ["after_log_write", "before_manifest_commit"])
+def test_stream_crash_at_step_boundary_converges(spark, transcripts_pdf, tmp_path, monkeypatch, boundary):
+    """Fault injection in the stream sink: the first micro-batch raises
+    once — after its log write (the rebuild never runs) or after its
+    feature commit (the manifest commit fails). The query dies; a restart
+    on the same checkpoint re-delivers the batch and ends in the state of
+    a clean run: features equal to a full rebuild, every batch recorded
+    once, every log row stored once."""
+    from podcast_audio_feature_extraction_spark.operators.resume import load_manifest
+    from podcast_audio_feature_extraction_spark.streaming import delta
+
+    pdf, paths = _mk_base(spark, transcripts_pdf, tmp_path)
+    batches = _delta_batches(pdf)
+    _stage_incoming(spark, paths, batches)
+    name = "_rebuild_batch" if boundary == "after_log_write" else "_commit_manifest"
+    monkeypatch.setattr(delta, name, _fail_once(getattr(delta, name)))
+
+    with pytest.raises(Exception, match="injected fault"):
+        _run_stream(spark, paths)
+    assert os.path.isdir(f"{paths['log']}/batch=0")
+    assert "0" not in load_manifest(paths["features"]).get("delta_batches", {})
+    _run_stream(spark, paths)
+
+    pd.testing.assert_frame_equal(_canon(spark.read.parquet(paths["features"])), _want_features(spark, pdf, batches))
+    assert sorted(load_manifest(paths["features"])["delta_batches"]) == ["0", "1"]
+    log = _canon_transcript(spark.read.parquet(paths["log"]))
+    assert len(log) == sum(map(len, batches)) and not log.duplicated().any()
+
+
+def test_compaction_failed_log_delete_converges(spark, transcripts_pdf, tmp_path, monkeypatch):
+    """Fault injection in compaction: one log directory's delete fails.
+    The compaction still succeeds (the surviving batch is deduped by the
+    merge); the next compaction clears it, and base ends key-identical to
+    a clean compaction's."""
+    import glob
+    import shutil
+
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+
+    pdf, paths = _mk_base(spark, transcripts_pdf, tmp_path)
+    batches = _delta_batches(pdf)
+    for i, b in enumerate(batches):
+        spark.createDataFrame(b, schema=TRANSCRIPT_SCHEMA).write.parquet(f"{paths['log']}/batch={i}")
+    monkeypatch.setattr(shutil, "rmtree", _fail_once(shutil.rmtree))
+
+    assert compact_transcript_log(spark, paths["base"], paths["log"], n_buckets=N_BUCKETS) == sum(map(len, batches))
+    (survivor,) = glob.glob(paths["log"] + "/batch=*")
+    n_survivor = len(batches[int(survivor.rsplit("=", 1)[1])])
+    assert compact_transcript_log(spark, paths["base"], paths["log"], n_buckets=N_BUCKETS) == n_survivor
+    assert glob.glob(paths["log"] + "/batch=*") == []
+
+    base = _canon_transcript(spark.read.parquet(paths["base"]))
+    want = _canon_transcript(spark.createDataFrame(pd.concat([pdf] + batches, ignore_index=True), schema=TRANSCRIPT_SCHEMA))
+    pd.testing.assert_frame_equal(base, want)
 
 
 def _canon_transcript(df):

@@ -18,3 +18,23 @@ def test_every_test_module_imports():
         except Exception as e:
             broken[path.name] = f"{type(e).__name__}: {e}"
     assert not broken, f"test modules that do not import: {broken}"
+
+
+def test_benchmark_package_imports_resolve():
+    """Every name perfbench imports from the package must exist: the
+    benchmark is not part of the test suite, so a deleted or renamed name
+    would break it while the suite stays green."""
+    import ast
+
+    root = Path(__file__).resolve().parent.parent
+    missing = []
+    for path in sorted((root / "perfbench").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
+                "podcast_audio_feature_extraction_spark"
+            ):
+                module = importlib.import_module(node.module)
+                missing += [
+                    f"{path.name}: {node.module}.{a.name}" for a in node.names if not hasattr(module, a.name)
+                ]
+    assert not missing, f"perfbench imports names the package lacks: {missing}"
