@@ -749,9 +749,7 @@ def run_flagship_only(sf_dir: str, cpus: str) -> dict:
 
     def asof_pass() -> float:
         t0 = time.perf_counter()
-        if not watchdog.run(
-            "asof", lambda: _materialize(backfill_features(frame, feats, strategy="union"))
-        ):
+        if not watchdog.run("asof", lambda: _materialize(backfill_features(frame, feats))):
             sys.exit(3)
         return time.perf_counter() - t0
 

@@ -78,7 +78,6 @@ _API = {
     "touched_buckets": "plans.backfill",
     "stream_incremental_feature_build": "streaming.delta",
     "compact_transcript_log": "streaming.delta",
-    "enrich_stream_with_features": "streaming.enrich",
     "stateful_asof_enrich": "streaming.stateful",
 }
 

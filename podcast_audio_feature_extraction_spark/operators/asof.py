@@ -6,20 +6,19 @@ backfill merge: no feature at (conv_id, ts) may ever read a later ts.
 Analog of the reference's precompute-then-lookup
 (/root/reference/src/search/search.py:311-353).
 
-Spark has no native DataFrame as-of join; two plan-expressible strategies:
-
-1. **union-trick** (default): tag sides, unionByName, then
-   ``last(value, ignorenulls=True) OVER (PARTITION BY key ORDER BY ts, side)``
-   and keep left rows. ONE shuffle + one sort — the same data motion as a
-   sort-merge join, with AQE skew handling applicable. Best general choice.
-
-2. **compact two-phase** (:func:`asof_join_compact`): union-trick over the
-   narrow keys only, then a hash join resolving the winning right-row id to
-   its wide values — the choice when feature vectors dominate sort traffic.
+Spark has no native DataFrame as-of join; the engine expresses it with the
+union trick: tag sides, unionByName, then
+``last(value, ignorenulls=True) OVER (PARTITION BY key ORDER BY ts, side)``
+and keep left rows. ONE shuffle + one sort — the same data motion as a
+sort-merge join, with AQE skew handling applicable.
 
 Tie semantics: ``inclusive=True`` means a right row AT ts is visible
 (`<=`, matches ``pd.merge_asof(allow_exact_matches=True)`` and DuckDB
 ``ASOF JOIN ... ON l.ts >= r.ts``).
+
+NULL ts (DuckDB ASOF semantics, where ``l.ts >= NULL`` is never true): a
+right row with a NULL ts matches no left row, and a left row with a NULL
+ts gets NULL values.
 """
 
 from __future__ import annotations
@@ -47,18 +46,23 @@ def _validate_tie_cols(df: DataFrame, tie_cols: list[str]) -> None:
             )
 
 
-def asof_join_union(
+def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str | list[str] = "conv_id",
     ts_col: str = "ts",
     value_cols: list[str] | None = None,
-    right_tie_cols: list[str] | None = None,
     inclusive: bool = True,
+    right_tie_cols: list[str] | None = None,
     left_tie_cols: list[str] | None = None,
     tolerance_s: float | None = None,
 ) -> DataFrame:
-    """As-of join via the union trick (strategy 1).
+    """Attach to each left row the ``value_cols`` of the latest right row
+    at or before (``inclusive``) / strictly before its ts, per key.
+
+    The value columns land on the left row under their own names, so a
+    left column with the same name would be overwritten: that raises
+    ``ValueError`` instead.
 
     ``tolerance_s``: matches older than this many seconds are nulled out
     (pd.merge_asof ``tolerance`` semantics) — a stale feature is worse
@@ -78,6 +82,12 @@ def asof_join_union(
     """
     keys = _as_list(on)
     value_cols = value_cols or [c for c in right.columns if c not in keys + [ts_col]]
+    collide = sorted(set(left.columns) & set(value_cols))
+    if collide:
+        raise ValueError(
+            f"as-of value columns {collide} are also left columns and would overwrite them; "
+            "rename them on one side first"
+        )
     right_tie_cols = right_tie_cols or []
     paired = left_tie_cols is not None
     if paired and len(left_tie_cols) != len(right_tie_cols):
@@ -97,7 +107,10 @@ def asof_join_union(
     payload = [F.col(c).alias(c) for c in value_cols]
     if tolerance_s is not None:
         payload.append(F.unix_micros(F.col(ts_col).cast("timestamp")).alias("__rts"))
-    tagged_r = right.select(
+    # a NULL-ts right row matches nothing; a NULL-ts left row sorts first
+    # in its key (ascending NULLS FIRST), ahead of every remaining right
+    # row, so it reads NULL values
+    tagged_r = right.filter(F.col(ts_col).isNotNull()).select(
         *keys,
         F.col(ts_col).alias("__ts"),
         F.lit(r_side).alias("__side"),
@@ -131,107 +144,3 @@ def asof_join_union(
         out = out.withColumn(c, F.col(f"__rp.{c}"))
     drop = ["__ts", "__side", "__rp"] + [f"__tie{i}" for i in range(len(right_tie_cols))]
     return out.drop(*drop)
-
-
-def asof_join_compact(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | list[str] = "conv_id",
-    ts_col: str = "ts",
-    value_cols: list[str] | None = None,
-    right_key_cols: list[str] | None = None,
-    inclusive: bool = True,
-    left_tie_cols: list[str] | None = None,
-    tolerance_s: float | None = None,
-    validate_unique: bool = False,
-) -> DataFrame:
-    """Two-phase as-of for WIDE right rows (strategy 2, generalized from
-    plans/backfill.py): phase 1 runs the union-trick over only the keys +
-    ts + ``right_key_cols`` (a unique right-row identifier, e.g. turn_idx),
-    so the sort never moves the wide value columns; phase 2 resolves the
-    winning right key to its values with a hash join that moves each wide
-    row exactly once and never sorts it. The right plan when value columns
-    (feature vectors, embeddings) dominate sort memory traffic.
-
-    ``right_key_cols`` must uniquely identify right rows within a key
-    group; they also serve as the tie order at duplicate timestamps.
-    Violating that invariant silently FANS OUT left rows in the phase-2
-    hash join — pass ``validate_unique=True`` to pay one aggregate over
-    the right side and fail loudly instead (recommended whenever the right
-    table isn't produced by a dedup/groupBy you control).
-
-    ``tolerance_s`` carries through phase 1 (the narrow union already
-    nulls out stale matches, so their key columns join to nothing and the
-    wide values come back NULL — identical semantics to the union
-    strategy at no extra cost).
-    """
-    keys = _as_list(on)
-    if not right_key_cols:
-        raise ValueError("asof_join_compact requires right_key_cols (a unique right-row id)")
-    value_cols = value_cols or [
-        c for c in right.columns if c not in keys + [ts_col] + list(right_key_cols)
-    ]
-    if validate_unique:
-        dup = (
-            right.groupBy(*keys, *right_key_cols)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                f"asof_join_compact: right rows are not unique per ({keys} + {list(right_key_cols)}) — "
-                "the phase-2 resolving join would duplicate left rows; dedup the right side "
-                "or choose key columns that identify one row"
-            )
-    narrow = right.select(*keys, ts_col, *right_key_cols)
-    matched = asof_join_union(
-        left,
-        narrow,
-        on=on,
-        ts_col=ts_col,
-        value_cols=list(right_key_cols),
-        right_tie_cols=list(right_key_cols),
-        inclusive=inclusive,
-        left_tie_cols=left_tie_cols,
-        tolerance_s=tolerance_s,
-    )
-    wide = right.select(
-        *[F.col(k).alias(f"__r_{k}") for k in keys],
-        *[F.col(k).alias(f"__r_{k}") for k in right_key_cols],
-        *value_cols,
-    )
-    cond = None
-    for k in list(keys) + list(right_key_cols):
-        c = matched[k] == wide[f"__r_{k}"]
-        cond = c if cond is None else (cond & c)
-    return matched.join(wide, cond, "left").drop(
-        *[f"__r_{k}" for k in list(keys) + list(right_key_cols)]
-    )
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | list[str] = "conv_id",
-    ts_col: str = "ts",
-    value_cols: list[str] | None = None,
-    inclusive: bool = True,
-    strategy: str = "union",
-    right_tie_cols: list[str] | None = None,
-    left_tie_cols: list[str] | None = None,
-    tolerance_s: float | None = None,
-) -> DataFrame:
-    """Dispatch between the physical as-of strategies."""
-    if strategy == "union":
-        return asof_join_union(
-            left, right, on, ts_col, value_cols, right_tie_cols, inclusive, left_tie_cols, tolerance_s
-        )
-    if strategy == "compact":
-        return asof_join_compact(
-            left, right, on, ts_col, value_cols,
-            right_key_cols=right_tie_cols, inclusive=inclusive, left_tie_cols=left_tie_cols,
-            tolerance_s=tolerance_s,
-        )
-    raise ValueError(f"unknown as-of strategy: {strategy!r}")

@@ -49,12 +49,7 @@ def build_feature_table(
     return df.select(*FEATURE_COLS)
 
 
-def backfill_features(
-    frame: DataFrame,
-    feature_table: DataFrame,
-    strategy: str = "union",
-    inclusive: bool = True,
-) -> DataFrame:
+def backfill_features(frame: DataFrame, feature_table: DataFrame) -> DataFrame:
     """Attach the latest feature vector at or before each frame row's
     (ts, turn_idx).
 
@@ -62,26 +57,17 @@ def backfill_features(
     uses per-turn paired-tie semantics (a feature from the same second but
     a later turn is never read — zero leakage at turn granularity).
     Feature provenance columns are renamed so they never collide.
-    ``strategy`` is ``"union"`` or ``"compact"`` (see operators/asof.py).
     """
     right = (
         feature_table.withColumnRenamed("turn_idx", "feat_turn_idx")
         .withColumnRenamed("session_id", "feat_session_id")
     )
-    value_cols = ["feat_session_id", "functionals", "embedding"]
-    if strategy != "compact":
-        # compact (two-phase as-of, asof_join_compact) carries feat_turn_idx
-        # through its narrow union-trick sort as the right-row id; the wide
-        # functionals/embedding arrays move once through the resolving join
-        value_cols = ["feat_turn_idx", *value_cols]
     return asof_join(
         frame,
         right,
         on="conv_id",
         ts_col="ts",
-        value_cols=value_cols,
-        inclusive=inclusive,
-        strategy=strategy,
+        value_cols=["feat_turn_idx", "feat_session_id", "functionals", "embedding"],
         right_tie_cols=["feat_turn_idx"],
         left_tie_cols=["turn_idx"] if "turn_idx" in frame.columns else None,
     )
@@ -301,16 +287,13 @@ def commit_rebuilt_partitions(rebuilt: DataFrame, features_path: str) -> None:
     )
 
 
-def flagship(transcripts: DataFrame, gap_s: float = 1800.0, k: int = 5, strategy: str = "union") -> DataFrame:
+def flagship(transcripts: DataFrame, gap_s: float = 1800.0, k: int = 5) -> DataFrame:
     """End-to-end single-plan form: build features then backfill them onto
     the turns frame itself (every turn gets the feature vector visible at
-    its own ts).
-
-    strategy="union" keeps one plan with no recomputation. The "compact"
-    strategy references the feature table twice, so it belongs with a
-    STORED feature table (the production precompute-then-lookup shape,
-    search.py:324-353) where the second reference is a column-pruned scan
-    — see bench.py's two-phase flagship."""
+    its own ts). The feature table is referenced once, so the plan has no
+    recomputation. The production shape stores the feature table first
+    (``jobs/backfill_job.py``) and runs ``backfill_features`` over the
+    stored table, as ``bench.py --flagship-only`` times it."""
     feats = build_feature_table(transcripts, gap_s=gap_s, k=k)
     frame = transcripts.select("conv_id", "turn_idx", "role", "text", "ts")
-    return backfill_features(frame, feats, strategy=strategy)
+    return backfill_features(frame, feats)

@@ -1,15 +1,18 @@
 """Continuous incremental feature maintenance: a stream of new turns
 drives the partitioned delta-rebuild loop end to end.
 
-Composition of the two production pieces this engine already has:
+It composes two pieces:
 
 - the engine's one table layout — hive partitions ``conv_bucket={b}``
   with ``b = crc32(conv_id) % n_buckets`` (``operators.resume.bucket_col``)
   and ``n_buckets`` pinned in the table's ``_manifest.json`` — with its
   partition-pruned rebuild and dynamic-overwrite commit
   (``plans.backfill.commit_rebuilt_partitions``), and
-- the exactly-once foreachBatch idempotence pattern
-  (``streaming.sink.write_stream_checkpointed``).
+- the exactly-once foreachBatch idempotence pattern: Structured
+  Streaming may re-deliver a micro-batch with the same batchId after a
+  failure, so the sink records committed batchIds in the feature table's
+  ``_manifest.json`` (``delta_batches``) and skips re-delivered ones. This
+  is the engine's one exactly-once streaming sink.
 
 Storage is a two-table LSM-style shape, chosen so every write is
 IDEMPOTENT without a transactional table format:

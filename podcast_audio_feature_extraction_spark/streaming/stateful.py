@@ -85,7 +85,7 @@ ASOF_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
         T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("ts", T.TimestampType(), False),
+        T.StructField("ts", T.TimestampType(), True),
         T.StructField("feat_turn_idx", T.IntegerType(), True),
         T.StructField("functionals", T.ArrayType(T.DoubleType()), True),
     ]
@@ -146,23 +146,33 @@ def _make_asof_fold(inclusive: bool, tolerance_s: float | None, ttl_ms: int | No
             turn_idx = pdf["turn_idx"].to_numpy()
             ts_vals = pdf["ts"].to_numpy()
             funcs = pdf["functionals"].tolist()
-            if last_us is not None and (int(us[0]), int(turn_idx[0])) < (last_us, last_idx):
-                raise ValueError(
-                    f"stateful_asof_enrich: ordering contract violated for conv_id="
-                    f"{conv_id!r} — batch starts at (ts_us={int(us[0])}, "
-                    f"turn_idx={int(turn_idx[0])}) but (ts_us={last_us}, "
-                    f"turn_idx={last_idx}) was already processed; a late row would "
-                    "silently produce leaky/missing enrichments. Fix the source "
-                    "partitioning (it must deliver per-conv rows in (ts, turn_idx) "
-                    "order across micro-batches)."
-                )
-            last_us, last_idx = int(us[-1]), int(turn_idx[-1])
+            # NULL ts sorts last: rows [n_known:] have no time, so (as in the
+            # batch as-of) a feature among them never enters state and a
+            # query among them reads NULL; neither moves the watermark
+            n_known = int(pdf["ts"].notna().sum())
+            if n_known:
+                if last_us is not None and (int(us[0]), int(turn_idx[0])) < (last_us, last_idx):
+                    raise ValueError(
+                        f"stateful_asof_enrich: ordering contract violated for conv_id="
+                        f"{conv_id!r} — batch starts at (ts_us={int(us[0])}, "
+                        f"turn_idx={int(turn_idx[0])}) but (ts_us={last_us}, "
+                        f"turn_idx={last_idx}) was already processed; a late row would "
+                        "silently produce leaky/missing enrichments. Fix the source "
+                        "partitioning (it must deliver per-conv rows in (ts, turn_idx) "
+                        "order across micro-batches)."
+                    )
+                last_us, last_idx = int(us[n_known - 1]), int(turn_idx[n_known - 1])
             rows: dict[str, list] = {k: [] for k in ("turn_idx", "ts", "feat_turn_idx", "functionals")}
             for i in range(len(pdf)):
                 if sides[i] == "f":
-                    feat_us, feat_idx, feats = int(us[i]), int(turn_idx[i]), funcs[i]
+                    if i < n_known:
+                        feat_us, feat_idx, feats = int(us[i]), int(turn_idx[i]), funcs[i]
                     continue
-                fresh = feat_us is not None and (tol_us is None or int(us[i]) - feat_us <= tol_us)
+                fresh = (
+                    i < n_known
+                    and feat_us is not None
+                    and (tol_us is None or int(us[i]) - feat_us <= tol_us)
+                )
                 rows["turn_idx"].append(int(turn_idx[i]))
                 rows["ts"].append(ts_vals[i])
                 rows["feat_turn_idx"].append(feat_idx if fresh else None)
@@ -193,13 +203,12 @@ def stateful_asof_enrich(
     tolerance_s: float | None = None,
     state_ttl_s: float | None = None,
 ) -> DataFrame:
-    """Low-latency streaming as-of (the sub-second sibling of the
-    micro-batch ``enrich_stream_with_features``): ONE co-partitioned
-    stream carries both feature rows (side='f': conv_id, turn_idx, ts,
-    functionals) and query/turn rows (side='q'); per conv_id the state
-    holds ONLY the newest feature (O(1), not per-row), and each query row
-    is emitted with the latest feature at-or-before its ts — the same
-    zero-leakage contract as the batch as-of, evaluated incrementally.
+    """The engine's streaming as-of: ONE co-partitioned stream carries
+    both feature rows (side='f': conv_id, turn_idx, ts, functionals) and
+    query/turn rows (side='q'); per conv_id the state holds ONLY the
+    newest feature (O(1), not per-row), and each query row is emitted
+    with the latest feature at-or-before its ts — the same zero-leakage
+    contract as the batch as-of, evaluated incrementally.
 
     Ordering contract: rows arrive in (ts, turn_idx) order per conv_id
     ACROSS micro-batches (time-partitioned source); intra-batch disorder
@@ -207,7 +216,9 @@ def stateful_asof_enrich(
     state tracks the last processed (ts, turn_idx) per key and a batch
     regressing below it raises instead of silently emitting leaky
     enrichments. ``tolerance_s`` nulls out stale features exactly like
-    the batch operators.
+    the batch operator. A NULL ts has the batch operator's meaning too: a
+    feature row without a ts never enters state, and a query row without
+    one is emitted with NULL features; neither moves the watermark.
 
     ``state_ttl_s`` bounds state over conversation cardinality: a key
     idle longer than the TTL (processing time) is evicted; a late revival

@@ -29,15 +29,13 @@ def asof_data(spark):
     return lpdf, rpdf, lsdf, rsdf
 
 
-@pytest.mark.parametrize("strategy", ["union"])
 @pytest.mark.parametrize("inclusive", [True, False])
-def test_asof_matches_merge_asof(spark, asof_data, strategy, inclusive):
+def test_asof_matches_merge_asof(spark, asof_data, inclusive):
     lpdf, rpdf, lsdf, rsdf = asof_data
     got = (
         asof_join(
             lsdf, rsdf, on="conv_id", ts_col="ts",
-            value_cols=["feat"], inclusive=inclusive, strategy=strategy,
-            right_tie_cols=["ridx"],
+            value_cols=["feat"], inclusive=inclusive, right_tie_cols=["ridx"],
         )
         .toPandas()
         .sort_values(["conv_id", "ts"], kind="mergesort")
@@ -52,34 +50,48 @@ def test_asof_matches_merge_asof(spark, asof_data, strategy, inclusive):
     assert (both_nan | (g == w)).all()
 
 
+def _feat_by_key_ts(pdf):
+    return pdf.sort_values(["conv_id", "ts"], kind="mergesort")["feat"].to_numpy(dtype=float)
+
+
+def _same_feats(a, b):
+    return bool(((np.isnan(a) & np.isnan(b)) | (a == b)).all())
+
+
 def test_asof_no_temporal_leakage(spark, asof_data):
-    """Right rows strictly after a left ts must never affect its value."""
+    """Right rows strictly after a left ts must never affect its value, and
+    neither may a right row of unknown (NULL) ts."""
     lpdf, rpdf, lsdf, rsdf = asof_data
-    base = asof_join(lsdf, rsdf, value_cols=["feat"], right_tie_cols=["ridx"]).toPandas()
+    base = _feat_by_key_ts(asof_join(lsdf, rsdf, value_cols=["feat"], right_tie_cols=["ridx"]).toPandas())
     # inject future right rows (after each key's max left ts)
     fut = rpdf.copy()
     fut["ts"] = fut["ts"] + pd.Timedelta(days=400)
     fut["feat"] = 9999.0
     rsdf2 = spark.createDataFrame(pd.concat([rpdf, fut], ignore_index=True))
     with_future = asof_join(lsdf, rsdf2, value_cols=["feat"], right_tie_cols=["ridx"]).toPandas()
-    b = base.sort_values(["conv_id", "ts"], kind="mergesort")["feat"].to_numpy(dtype=float)
-    f = with_future.sort_values(["conv_id", "ts"], kind="mergesort")["feat"].to_numpy(dtype=float)
-    both_nan = np.isnan(b) & np.isnan(f)
-    assert (both_nan | (b == f)).all()
+    assert _same_feats(base, _feat_by_key_ts(with_future))
+
+    # a NULL-ts right row per key matches no left row (DuckDB ASOF: l.ts >=
+    # NULL is never true; "lonely" has no other right row to hide it), and
+    # a NULL-ts left row reads NULL
+    unknown = pd.DataFrame(
+        {"conv_id": lpdf["conv_id"].unique(), "ts": pd.NaT, "feat": 99.0, "ridx": -1}
+    )
+    rsdf3 = spark.createDataFrame(pd.concat([rpdf, unknown], ignore_index=True), schema=rsdf.schema)
+    lsdf3 = lsdf.unionByName(spark.createDataFrame([("k0", None)], schema=lsdf.schema))
+    with_null = asof_join(lsdf3, rsdf3, value_cols=["feat"], right_tie_cols=["ridx"]).toPandas()
+    assert _same_feats(base, _feat_by_key_ts(with_null[with_null["ts"].notna()]))
+    assert with_null.loc[with_null["ts"].isna(), "feat"].isna().all()
 
 
-@pytest.mark.parametrize("strategy", ["union", "compact"])
-def test_asof_tolerance_matches_merge_asof(spark, asof_data, strategy):
+def test_asof_tolerance_matches_merge_asof(spark, asof_data):
     """Stale matches (older than tolerance) are nulled, like
-    pd.merge_asof(tolerance=...). The compact (wide-vector) strategy now
-    supports tolerance too — phase 1 nulls the stale key, phase 2 joins
-    to nothing (round-2 verdict item 5)."""
+    pd.merge_asof(tolerance=...)."""
     lpdf, rpdf, lsdf, rsdf = asof_data
     tol = 1000.0
     got = (
         asof_join(
-            lsdf, rsdf, value_cols=["feat"], strategy=strategy, tolerance_s=tol,
-            right_tie_cols=["ridx"],
+            lsdf, rsdf, value_cols=["feat"], tolerance_s=tol, right_tie_cols=["ridx"],
         )
         .toPandas()
         .sort_values(["conv_id", "ts"], kind="mergesort")
@@ -105,8 +117,7 @@ def test_asof_tolerance_matches_merge_asof(spark, asof_data, strategy):
     assert np.isnan(w).any()  # tolerance actually nulled something
 
 
-@pytest.mark.parametrize("strategy", ["union"])
-def test_asof_null_value_on_newest_right_row_wins(spark, strategy):
+def test_asof_null_value_on_newest_right_row_wins(spark):
     """A NULL value column on the newest matching right row must surface as
     NULL (pd.merge_asof semantics) — not silently fall back to a stale
     older right row's value (round-1 union-trick bug)."""
@@ -121,7 +132,7 @@ def test_asof_null_value_on_newest_right_row_wins(spark, strategy):
     )
     lsdf, rsdf = spark.createDataFrame(lpdf), spark.createDataFrame(rpdf)
     got = (
-        asof_join(lsdf, rsdf, value_cols=["feat", "other"], strategy=strategy)
+        asof_join(lsdf, rsdf, value_cols=["feat", "other"])
         .toPandas()
         .sort_values("ts")
         .reset_index(drop=True)
@@ -158,8 +169,7 @@ def test_asof_rejects_non_integral_tie_column(spark, asof_data):
         asof_join(lsdf, bad, value_cols=["feat"], right_tie_cols=["ridx"])
 
 
-@pytest.mark.parametrize("strategy", ["union"])
-def test_asof_composite_key(spark, strategy):
+def test_asof_composite_key(spark):
     """Multi-column as-of keys: matches never cross either key column."""
     lpdf = pd.DataFrame(
         {
@@ -182,7 +192,6 @@ def test_asof_composite_key(spark, strategy):
             spark.createDataFrame(rpdf),
             on=["tenant", "conv_id"],
             value_cols=["feat"],
-            strategy=strategy,
         )
         .toPandas()
         .sort_values(["tenant", "ts"])
@@ -191,57 +200,14 @@ def test_asof_composite_key(spark, strategy):
     assert list(got["feat"]) == [1.0, 1.0, 2.0]  # t1 rows never see t2's feature
 
 
-@pytest.mark.parametrize("inclusive", [True, False])
-def test_asof_compact_matches_union(spark, asof_data, inclusive):
-    """Strategy 2 (narrow sort + wide hash resolve) must produce exactly
-    the union-trick's rows, including no-match lefts staying NULL."""
-    lpdf, rpdf, lsdf, rsdf = asof_data
-    kw = dict(on="conv_id", ts_col="ts", value_cols=["feat"], inclusive=inclusive,
-              right_tie_cols=["ridx"])
-    u = asof_join(lsdf, rsdf, strategy="union", **kw).toPandas()
-    c = asof_join(lsdf, rsdf, strategy="compact", **kw).toPandas()
-    u = u.sort_values(["conv_id", "ts"], kind="mergesort").reset_index(drop=True)
-    c = c.sort_values(["conv_id", "ts"], kind="mergesort").reset_index(drop=True)
-    assert len(u) == len(c)
-    uf = u["feat"].astype(float).to_numpy()
-    cf = c["feat"].astype(float).to_numpy()
-    both_nan = np.isnan(uf) & np.isnan(cf)
-    assert (both_nan | (uf == cf)).all()
-
-
-def test_asof_compact_validate_unique_rejects_duplicate_right_keys(spark):
-    """validate_unique=True fails loudly when (keys + right_key_cols) do not
-    uniquely identify right rows — the silent alternative is left-row
-    fan-out in the phase-2 resolving hash join."""
-    from podcast_audio_feature_extraction_spark.operators.asof import asof_join_compact
-
-    l = spark.createDataFrame(
-        pd.DataFrame({"conv_id": ["a"], "ts": [pd.Timestamp(100, unit="s")]})
+def test_asof_rejects_value_column_colliding_with_left_column(spark):
+    """A left column named like a value column would be silently replaced
+    by the right row's value — the join refuses and names the column."""
+    lsdf = spark.createDataFrame(
+        pd.DataFrame({"conv_id": ["k"], "ts": pd.to_datetime([100], unit="s"), "feat": [-5.0]})
     )
-    r = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "conv_id": ["a", "a"],
-                "ts": [pd.Timestamp(50, unit="s")] * 2,
-                "ridx": [1, 1],  # duplicate right key
-                "feat": [1.0, 2.0],
-            }
-        )
+    rsdf = spark.createDataFrame(
+        pd.DataFrame({"conv_id": ["k"], "ts": pd.to_datetime([50], unit="s"), "feat": [1.0]})
     )
-    with pytest.raises(ValueError, match="not unique"):
-        asof_join_compact(l, r, value_cols=["feat"], right_key_cols=["ridx"], validate_unique=True)
-    # unique keys pass the same check
-    r_ok = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "conv_id": ["a", "a"],
-                "ts": [pd.Timestamp(50, unit="s")] * 2,
-                "ridx": [1, 2],
-                "feat": [1.0, 2.0],
-            }
-        )
-    )
-    out = asof_join_compact(
-        l, r_ok, value_cols=["feat"], right_key_cols=["ridx"], validate_unique=True
-    ).toPandas()
-    assert len(out) == 1 and out["feat"].iloc[0] == 2.0
+    with pytest.raises(ValueError, match=r"\['feat'\]"):
+        asof_join(lsdf, rsdf, value_cols=["feat"])

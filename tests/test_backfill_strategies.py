@@ -1,33 +1,7 @@
 import numpy as np
 import pyspark.sql.functions as F
 
-from podcast_audio_feature_extraction_spark.plans.backfill import backfill_features, build_feature_table
-
-
-def _norm(pdf):
-    pdf = pdf.sort_values(["conv_id", "turn_idx"], kind="mergesort").reset_index(drop=True)
-    return pdf
-
-
-def test_compact_strategy_matches_union(spark, transcripts_sdf, tmp_path):
-    feats = build_feature_table(transcripts_sdf, gap_s=1800.0, k=5, val_col=None)
-    # production shape: features stored, then read back
-    path = str(tmp_path / "feats")
-    feats.write.parquet(path)
-    stored = spark.read.parquet(path)
-    frame = transcripts_sdf.select("conv_id", "turn_idx", "role", "text", "ts")
-
-    u = _norm(backfill_features(frame, stored, strategy="union").toPandas())
-    c = _norm(backfill_features(frame, stored, strategy="compact").toPandas())
-    assert len(u) == len(c)
-    assert (u["feat_turn_idx"].to_numpy() == c["feat_turn_idx"].to_numpy()).all()
-    assert (u["feat_session_id"].to_numpy() == c["feat_session_id"].to_numpy()).all()
-    fu = np.stack([np.asarray(v) for v in u["functionals"]])
-    fc = np.stack([np.asarray(v) for v in c["functionals"]])
-    np.testing.assert_array_equal(fu, fc)
-    eu = np.stack([np.asarray(v) for v in u["embedding"]])
-    ec = np.stack([np.asarray(v) for v in c["embedding"]])
-    np.testing.assert_array_equal(eu, ec)
+from podcast_audio_feature_extraction_spark.plans.backfill import build_feature_table
 
 
 def test_incremental_feature_build_matches_full_rebuild(spark, transcripts_pdf):

@@ -233,6 +233,33 @@ def test_stateful_asof_ordering_violation_raises(spark, tmp_path):
         q.awaitTermination()
 
 
+class FakeState:
+    """GroupState stand-in for unit-testing a fold: ``update`` makes the
+    state exist for the next invocation."""
+
+    def __init__(self):
+        self.exists = False
+        self.hasTimedOut = False
+        self.removed = False
+        self.updated = None
+        self.timeout_ms = None
+
+    @property
+    def get(self):
+        assert self.exists, "get on non-existent state"
+        return self.updated
+
+    def remove(self):
+        self.removed = True
+
+    def update(self, v):
+        self.exists = True
+        self.updated = v
+
+    def setTimeoutDuration(self, ms):
+        self.timeout_ms = ms
+
+
 def test_stateful_asof_ttl_fold_branches():
     """The TTL fold branches, unit-tested against a fake GroupState (a
     ProcessingTimeTimeout query only terminates under a processing-time
@@ -243,27 +270,6 @@ def test_stateful_asof_ttl_fold_branches():
     import pandas as pd
 
     from podcast_audio_feature_extraction_spark.streaming.stateful import _make_asof_fold
-
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self.hasTimedOut = False
-            self.removed = False
-            self.updated = None
-            self.timeout_ms = None
-
-        @property
-        def get(self):
-            raise AssertionError("get on non-existent state")
-
-        def remove(self):
-            self.removed = True
-
-        def update(self, v):
-            self.updated = v
-
-        def setTimeoutDuration(self, ms):
-            self.timeout_ms = ms
 
     fold = _make_asof_fold(True, None, ttl_ms=60_000)
 
@@ -287,3 +293,43 @@ def test_stateful_asof_ttl_fold_branches():
     assert live.timeout_ms == 60_000
     # state carries (feat..., watermark) — 5 fields
     assert len(live.updated) == 5 and live.updated[3] == 130_000_000
+
+
+def test_stateful_asof_null_ts_never_enters_state():
+    """A feature row with a NULL ts never becomes the stored feature, and a
+    query row with a NULL ts reads NULL features without moving the
+    ordering watermark — the batch as-of's NULL-ts meaning, across two
+    micro-batches of the fold."""
+    import pandas as pd
+
+    from podcast_audio_feature_extraction_spark.streaming.stateful import _make_asof_fold
+
+    fold = _make_asof_fold(True, None)
+    state = FakeState()
+    b0 = pd.DataFrame(
+        {
+            "conv_id": ["c", "c", "c"],
+            "turn_idx": [0, 1, 2],
+            "ts": pd.to_datetime([None, 100, None], unit="s"),
+            "side": ["f", "f", "q"],
+            "functionals": [[99.0], [1.0], None],
+        }
+    )
+    out0 = pd.concat(list(fold(("c",), iter([b0]), state)), ignore_index=True)
+    assert list(out0["turn_idx"]) == [2]
+    assert out0.loc[0, "functionals"] is None and pd.isna(out0.loc[0, "feat_turn_idx"])
+    feat_us, feat_idx, feats, last_us, last_idx = state.updated
+    assert (feat_us, feat_idx, feats) == (100_000_000, 1, [1.0])
+    assert (last_us, last_idx) == (100_000_000, 1)
+
+    b1 = pd.DataFrame(
+        {
+            "conv_id": ["c"],
+            "turn_idx": [3],
+            "ts": pd.to_datetime([300], unit="s"),
+            "side": ["q"],
+            "functionals": [None],
+        }
+    )
+    out1 = pd.concat(list(fold(("c",), iter([b1]), state)), ignore_index=True)
+    assert list(out1["feat_turn_idx"]) == [1] and list(out1.loc[0, "functionals"]) == [1.0]

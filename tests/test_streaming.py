@@ -153,74 +153,3 @@ def test_dedup_stream_drops_duplicates(spark, transcripts_sdf, tmp_path):
     n_unique = transcripts_sdf.select("conv_id", "turn_idx").distinct().count()
     assert len(got) == n_unique
     assert not got.duplicated(subset=["conv_id", "turn_idx"]).any()
-
-
-def test_stream_sink_exactly_once_across_restarts(spark, transcripts_sdf, tmp_path):
-    from podcast_audio_feature_extraction_spark.operators.resume import load_manifest
-    from podcast_audio_feature_extraction_spark.streaming.sink import write_stream_checkpointed
-
-    src = str(tmp_path / "sink_in")
-    out = str(tmp_path / "sink_out")
-    ckpt = str(tmp_path / "sink_ckpt")
-    transcripts_sdf.repartition(4).write.mode("overwrite").parquet(src)
-
-    def run():
-        stream = read_transcript_stream(spark, src, max_files_per_trigger=2)
-        q = write_stream_checkpointed(stream, out, ckpt, transform=lambda df: df.withColumn("one", F.lit(1)))
-        q.awaitTermination()
-
-    run()
-    rows1 = spark.read.parquet(out).count()
-    m1 = load_manifest(out)
-    assert rows1 == transcripts_sdf.count()
-    assert sum(b["rows"] for b in m1["stream_batches"].values()) == rows1
-    # restart with the same checkpoint: no new data, no new batches
-    run()
-    assert spark.read.parquet(out).count() == rows1
-    assert load_manifest(out)["stream_batches"].keys() == m1["stream_batches"].keys()
-
-
-def test_stream_asof_enrichment_matches_batch_backfill(spark, transcripts_sdf, tmp_path):
-    """Micro-batch as-of enrichment of a turn stream against the stored
-    feature table == the batch backfill over the same rows (same operator,
-    same zero-leakage semantics), landed exactly once."""
-    import numpy as np
-    import pandas as pd
-
-    from podcast_audio_feature_extraction_spark.plans.backfill import (
-        backfill_features,
-        build_feature_table,
-    )
-    from podcast_audio_feature_extraction_spark.streaming.enrich import (
-        enrich_stream_with_features,
-    )
-
-    src = transcripts_sdf.withColumn("val", (F.col("turn_idx") * 2.5 + 3.0).cast("double"))
-    feats = build_feature_table(src).localCheckpoint()
-
-    in_path = str(tmp_path / "enrich_in")
-    src.repartition(4).write.mode("overwrite").parquet(in_path)
-    stream = read_transcript_stream(spark, in_path, max_files_per_trigger=2)
-
-    out_dir = str(tmp_path / "enrich_out")
-    q = enrich_stream_with_features(
-        stream, feats, out_dir, str(tmp_path / "enrich_ckpt"), query_name="enrich_test"
-    )
-    q.awaitTermination()
-
-    def canon(df):
-        return (
-            df.select(
-                "conv_id", "turn_idx", "feat_turn_idx", "feat_session_id",
-                F.col("functionals").cast("string").alias("functionals"),
-                F.col("embedding").cast("string").alias("embedding"),
-            )
-            .toPandas()
-            .sort_values(["conv_id", "turn_idx"], kind="mergesort")
-            .reset_index(drop=True)
-        )
-
-    got = canon(spark.read.parquet(f"{out_dir}/batch=*"))
-    want = canon(backfill_features(src, feats))
-    assert len(got) == len(want)
-    pd.testing.assert_frame_equal(got, want)
