@@ -21,14 +21,14 @@ IDEMPOTENT without a transactional table format:
   (``plans.backfill.write_conv_partitioned``);
 - ``features`` — the feature table in the same layout: the output
   directory of ``jobs/backfill_job.py`` (``run_resumable``) as-is;
-- ``log``   — per-batch append directories ``batch=<id>/`` (overwriting
-  the same directory on a re-delivered micro-batch converges to the same
-  bytes, so the append needs no two-phase commit);
-- a rebuild's input snapshot is base merged with log under a
-  LOG-WINS-PER-(conv_id, turn_idx) rule (``_merged_snapshot``), pruned
-  to the batch's touched buckets; the feature commit is a dynamic
-  partition overwrite (re-committing the same buckets with the same
-  content is idempotent).
+- ``log``   — per-batch directories ``batch=<id>/``, written once per
+  batch with its rows and touched buckets observed on the write (a
+  re-delivery overwrites them with the same bytes: no two-phase commit);
+- a rebuild reads base and log with the stream's schema, merges them
+  under a LOG-WINS-PER-(conv_id, turn_idx) rule (``_merged_snapshot``)
+  pruned to the touched buckets, and commits by dynamic partition
+  overwrite (idempotent); its plan shuffles on conv_id and conv_bucket
+  only, so a micro-batch runs 4 Spark jobs in all.
 
 A crash at ANY point — between the log write, the feature commit, the
 manifest commit, or mid-compaction — re-runs to the identical end
@@ -51,7 +51,7 @@ import os
 import time
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from podcast_audio_feature_extraction_spark.operators.resume import (
     _commit_manifest,
@@ -64,21 +64,21 @@ from podcast_audio_feature_extraction_spark.plans.backfill import (
     build_feature_table,
     commit_rebuilt_partitions,
     conv_bucket_col,
-    touched_buckets,
 )
 
 
-def _read_base(spark: SparkSession, base_path: str, buckets: list[int], schema) -> DataFrame:
-    """The base transcript's ``buckets`` partitions, or an empty frame of
-    ``schema`` on bootstrap — no base written yet: the path is missing, or
-    holds no parquet file to infer a schema from. Every other read failure
-    (a corrupt footer, an IO or permission error) propagates: reading such
-    a base as empty would let the caller overwrite the touched buckets
-    with log-only rows and lose the base's rows for good."""
+def _read_base(spark: SparkSession, base_path: str, buckets: list[int], schema: T.StructType) -> DataFrame:
+    """The base transcript's ``buckets`` partitions read with ``schema``,
+    or an empty frame on bootstrap: a missing path, or a directory with
+    no file yet. Every other read failure (a corrupt footer, an IO or
+    permission error) propagates: reading such a base as empty would let
+    the caller overwrite the touched buckets with log-only rows and lose
+    the base's rows for good."""
+    read_schema = T.StructType(list(schema.fields) + [T.StructField("conv_bucket", T.IntegerType())])
     try:
-        base = spark.read.parquet(base_path)
+        base = spark.read.schema(read_schema).parquet(base_path)
     except AnalysisException as e:
-        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+        if e.getCondition() != "PATH_NOT_FOUND":
             raise
         return spark.createDataFrame([], schema)
     return base.filter(F.col("conv_bucket").isin(buckets)).drop("conv_bucket")
@@ -111,8 +111,10 @@ def _merged_snapshot(base: DataFrame, log: DataFrame) -> DataFrame:
     w = Window.partitionBy("conv_id", "turn_idx").orderBy(
         F.asc("__src"), F.desc("__b"), F.asc(rest)
     )
+    # conv_id hashing serves this window and the feature build's after it
     return (
         b.unionByName(lg.select(*b.columns))
+        .repartition("conv_id")
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__src", "__b", "__rn")
@@ -121,24 +123,24 @@ def _merged_snapshot(base: DataFrame, log: DataFrame) -> DataFrame:
 
 def _rebuild_batch(
     spark: SparkSession,
-    batch_stored: DataFrame,
+    buckets: list[int],
+    schema: T.StructType,
     base_path: str,
     log_path: str,
     features_path: str,
     n_buckets: int,
     **feature_kwargs,
 ) -> int:
-    """Rebuild + commit every bucket the batch touches; returns the
-    touched-bucket count. Snapshot = base (partition-pruned) merged with
-    log (already includes this batch's directory) under the
+    """Rebuild + commit the touched ``buckets``; returns their count.
+    Snapshot = base (partition-pruned) merged with log (already includes
+    this batch's directory), both read with ``schema``, under the
     log-wins-per-key rule of :func:`_merged_snapshot`."""
-    buckets = touched_buckets(batch_stored, n_buckets)
     if not buckets:
         return 0
-    base = _read_base(spark, base_path, buckets, batch_stored.schema)
+    base = _read_base(spark, base_path, buckets, schema)
     # the log side has no conv_bucket directory to prune: the same layout
     # expression, evaluated per row
-    log = spark.read.parquet(log_path).filter(conv_bucket_col(n_buckets).isin(buckets))
+    log = spark.read.schema(schema).parquet(log_path).filter(conv_bucket_col(n_buckets).isin(buckets))
     rebuilt = build_feature_table(_merged_snapshot(base, log), **feature_kwargs).select(*FEATURE_COLS)
     commit_rebuilt_partitions(
         rebuilt.withColumn("conv_bucket", conv_bucket_col(n_buckets)), features_path
@@ -161,22 +163,37 @@ def stream_incremental_feature_build(
     feature table current as new turns arrive.
 
     Per micro-batch: (1) land the batch in its own overwrite-idempotent
-    ``log/batch=<id>`` directory, (2) rebuild ONLY the touched
-    conv_bucket partitions from base ∪ log, (3) dynamic-partition-
-    overwrite the feature table, (4) record the batch in the feature
-    manifest. Re-delivered batchIds short-circuit at (4)'s record; every
-    earlier step is idempotent on its own (module docstring).
+    ``log/batch=<id>`` directory, observing its rows and touched buckets,
+    (2) rebuild ONLY those conv_bucket partitions (at most ``n_buckets``
+    for a batch of any size; a NULL conv_id touches none) from base ∪
+    log, (3) dynamic-partition-overwrite the feature table, (4) record
+    the batch in the feature manifest. Re-delivered batchIds short-circuit
+    at (4)'s record; every earlier step is idempotent on its own.
 
     ``base_path`` is normally bootstrapped with
     :func:`write_conv_partitioned` and ``features_path`` with
     ``jobs/backfill_job.py`` before the stream starts; a missing or
     not-yet-written base is treated as empty (the first batches build
     features from the log alone). Either table pinned to a bucket count
-    other than ``n_buckets`` raises ``ValueError`` here.
+    other than ``n_buckets``, or a base whose columns differ from the
+    stream's, raises ``ValueError`` here.
     """
     # refuse a layout pinned to another bucket count before anything runs
     for path in (base_path, features_path):
         pin_n_buckets(load_manifest(path), path, n_buckets)
+    # every batch reads base with the stream's schema; parquet fills a
+    # column base lacks with NULL, so touched buckets would be rebuilt from
+    # other columns than untouched ones keep: refuse that base once, here
+    try:
+        base_schema = new_turns_stream.sparkSession.read.parquet(base_path).schema
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise  # only a missing or file-less base is "no base yet"
+    else:
+        fields = lambda s: {f.name: f.dataType for f in s.fields if f.name != "conv_bucket"}
+        want, got = fields(new_turns_stream.schema), fields(base_schema)
+        if bad := sorted(c for c in want.keys() | got.keys() if want.get(c) != got.get(c)):
+            raise ValueError(f"base at {base_path} and the stream differ in columns {bad}")
     os.makedirs(log_path, exist_ok=True)
     os.makedirs(features_path, exist_ok=True)
 
@@ -186,14 +203,17 @@ def stream_incremental_feature_build(
         done = manifest.setdefault("delta_batches", {})
         if str(batch_id) in done:
             return  # clean re-delivery: committed end-to-end already
-        bdir = os.path.join(log_path, f"batch={batch_id}")
-        batch_df.write.mode("overwrite").parquet(bdir)
-        batch_stored = spark.read.parquet(bdir)
+        obs = Observation()  # collect_set skips a NULL conv_id's NULL bucket
+        batch_df.observe(
+            obs, F.count(F.lit(1)).alias("rows"), F.collect_set(conv_bucket_col(n_buckets)).alias("buckets")
+        ).write.mode("overwrite").parquet(os.path.join(log_path, f"batch={batch_id}"))
+        seen = obs.get
         n_buckets_touched = _rebuild_batch(
-            spark, batch_stored, base_path, log_path, features_path, n_buckets, **feature_kwargs
+            spark, sorted(seen["buckets"]), batch_df.schema, base_path, log_path, features_path, n_buckets,
+            **feature_kwargs,
         )
         done[str(batch_id)] = {
-            "rows": int(batch_stored.count()),
+            "rows": seen["rows"],
             "buckets": n_buckets_touched,
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
@@ -237,17 +257,16 @@ def compact_transcript_log(spark: SparkSession, base_path: str, log_path: str, n
     manifest = pin_n_buckets(load_manifest(base_path), base_path, n_buckets)
     if not glob.glob(os.path.join(log_path, "batch=*")):
         return 0
-    # NULL conv_id touches nothing (same rule as touched_buckets and the
-    # rebuild's bucket predicate): folding NULL-keyed rows into base's
-    # __HIVE_DEFAULT_PARTITION__ via dynamic overwrite would REPLACE that
-    # partition without ever reading it. Out-of-contract rows
-    # (TRANSCRIPT_SCHEMA pins conv_id non-null) are dropped when their
-    # log directory is cleared, not merged.
+    # NULL conv_id touches nothing, as in the sink and the rebuild: folding
+    # NULL-keyed rows into base's __HIVE_DEFAULT_PARTITION__ would REPLACE
+    # that partition without reading it. Out-of-contract rows
+    # (TRANSCRIPT_SCHEMA pins conv_id non-null) are dropped with their log.
     log = spark.read.parquet(log_path).filter(F.col("conv_id").isNotNull())
-    n_rows = log.count()
-    if n_rows == 0:
+    # row count and touched buckets in one job of at most n_buckets rows
+    per_bucket = log.groupBy(conv_bucket_col(n_buckets).alias("b")).count().collect()
+    if not per_bucket:
         return 0
-    buckets = touched_buckets(log, n_buckets)
+    n_rows, buckets = sum(r["count"] for r in per_bucket), sorted(r["b"] for r in per_bucket)
     # fresh pipeline: compaction CREATES the base from the log alone
     base = _read_base(spark, base_path, buckets, log.drop("batch").schema)
     merged = _merged_snapshot(base, log).withColumn("conv_bucket", conv_bucket_col(n_buckets))

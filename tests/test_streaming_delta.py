@@ -79,13 +79,13 @@ def _stage_incoming(spark, paths, batches):
         )
 
 
-def _run_stream(spark, paths, n_buckets=N_BUCKETS):
+def _run_stream(spark, paths, n_buckets=N_BUCKETS, schema=None):
     """Drain the staged incoming files through the delta stream (one
-    micro-batch per file) and wait for the query to finish."""
+    micro-batch per file), wait for the query to finish and return it."""
     from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
 
     stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        spark.readStream.schema(schema or TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(paths["incoming"] + "/*")
     )
@@ -93,6 +93,7 @@ def _run_stream(spark, paths, n_buckets=N_BUCKETS):
         stream, paths["base"], paths["log"], paths["features"], paths["ckpt"], n_buckets=n_buckets,
     )
     q.awaitTermination()
+    return q
 
 
 def _want_features(spark, pdf, batches):
@@ -313,6 +314,7 @@ def test_stream_delta_redelivery_is_noop(spark, transcripts_pdf, tmp_path):
     converges to the same feature table."""
     from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
     from podcast_audio_feature_extraction_spark.operators.resume import load_manifest
+    from podcast_audio_feature_extraction_spark.plans.backfill import touched_buckets
     from podcast_audio_feature_extraction_spark.streaming.delta import _rebuild_batch
 
     pdf, paths = _mk_base(spark, transcripts_pdf, tmp_path)
@@ -321,18 +323,15 @@ def test_stream_delta_redelivery_is_noop(spark, transcripts_pdf, tmp_path):
 
     # first delivery via the raw steps (what the sink runs)
     bdir = f"{paths['log']}/batch=0"
+    buckets = touched_buckets(bdf, N_BUCKETS)
     bdf.write.mode("overwrite").parquet(bdir)
-    stored = spark.read.parquet(bdir)
-    _rebuild_batch(spark, stored, paths["base"], paths["log"], paths["features"], N_BUCKETS)
+    _rebuild_batch(spark, buckets, bdf.schema, paths["base"], paths["log"], paths["features"], N_BUCKETS)
     want = _canon(spark.read.parquet(paths["features"]))
 
     # crash-replay: the SAME batch lands + rebuilds again (no manifest
     # short-circuit — the worst case) — every step must be idempotent.
-    # Re-read after the overwrite exactly as the sink does (a pre-write
-    # handle would hold a stale file listing).
     bdf.write.mode("overwrite").parquet(bdir)
-    stored = spark.read.parquet(bdir)
-    _rebuild_batch(spark, stored, paths["base"], paths["log"], paths["features"], N_BUCKETS)
+    _rebuild_batch(spark, buckets, bdf.schema, paths["base"], paths["log"], paths["features"], N_BUCKETS)
     got = _canon(spark.read.parquet(paths["features"]))
     pd.testing.assert_frame_equal(got, want)
 
@@ -343,15 +342,16 @@ def test_compaction_crash_replay_does_not_double_count(spark, transcripts_pdf, t
     key merge must collapse them — a subsequent rebuild and a compaction
     re-run both converge to the same (non-duplicated) state."""
     from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+    from podcast_audio_feature_extraction_spark.plans.backfill import touched_buckets
     from podcast_audio_feature_extraction_spark.streaming.delta import _rebuild_batch
 
     pdf, paths = _mk_base(spark, transcripts_pdf, tmp_path)
     (batch,) = _delta_batches(pdf, n_batches=1)
     bdf = spark.createDataFrame(batch, schema=TRANSCRIPT_SCHEMA)
     bdir = f"{paths['log']}/batch=0"
+    buckets = touched_buckets(bdf, N_BUCKETS)
     bdf.write.mode("overwrite").parquet(bdir)
-    stored = spark.read.parquet(bdir)
-    _rebuild_batch(spark, stored, paths["base"], paths["log"], paths["features"], N_BUCKETS)
+    _rebuild_batch(spark, buckets, bdf.schema, paths["base"], paths["log"], paths["features"], N_BUCKETS)
     want = _canon(spark.read.parquet(paths["features"]))
     snapshot_rows = len(pdf) + len(batch)
 
@@ -362,8 +362,7 @@ def test_compaction_crash_replay_does_not_double_count(spark, transcripts_pdf, t
     bdf.write.mode("overwrite").parquet(bdir)
 
     # a rebuild over the duplicated state must not double-count
-    stored = spark.read.parquet(bdir)
-    _rebuild_batch(spark, stored, paths["base"], paths["log"], paths["features"], N_BUCKETS)
+    _rebuild_batch(spark, buckets, bdf.schema, paths["base"], paths["log"], paths["features"], N_BUCKETS)
     got = _canon(spark.read.parquet(paths["features"]))
     pd.testing.assert_frame_equal(got, want)
 
@@ -464,13 +463,117 @@ def test_rebuild_bootstraps_from_missing_base(spark, transcripts_pdf, tmp_path):
     """No base written yet (a fresh pipeline): the rebuild reads the base
     as empty and builds the touched buckets from the log alone."""
     from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+    from podcast_audio_feature_extraction_spark.plans.backfill import touched_buckets
     from podcast_audio_feature_extraction_spark.streaming.delta import _rebuild_batch
 
     (batch,) = _delta_batches(transcripts_pdf.assign(val=1.0), n_batches=1)
     bdf = spark.createDataFrame(batch, schema=TRANSCRIPT_SCHEMA)
     log, features = str(tmp_path / "log"), str(tmp_path / "features")
     bdf.write.parquet(f"{log}/batch=0")
-    n = _rebuild_batch(spark, spark.read.parquet(f"{log}/batch=0"), str(tmp_path / "base"), log, features, N_BUCKETS)
+    n = _rebuild_batch(
+        spark, touched_buckets(bdf, N_BUCKETS), bdf.schema, str(tmp_path / "base"), log, features, N_BUCKETS
+    )
     assert n >= 1
     want = _canon(build_feature_table(bdf))
     pd.testing.assert_frame_equal(_canon(spark.read.parquet(features).drop("conv_bucket")), want)
+
+
+def test_rebuild_bootstraps_from_empty_base_dir(spark, transcripts_pdf, tmp_path):
+    """A base directory that exists but holds no file yet reads as empty,
+    like a missing one: the touched buckets are built from the log alone."""
+    from podcast_audio_feature_extraction_spark.plans.backfill import touched_buckets
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+    from podcast_audio_feature_extraction_spark.streaming.delta import _rebuild_batch
+
+    (batch,) = _delta_batches(transcripts_pdf.assign(val=1.0), n_batches=1)
+    bdf = spark.createDataFrame(batch, schema=TRANSCRIPT_SCHEMA)
+    base, log, features = (str(tmp_path / k) for k in ("base", "log", "features"))
+    os.makedirs(base)
+    bdf.write.parquet(f"{log}/batch=0")
+    _rebuild_batch(spark, touched_buckets(bdf, N_BUCKETS), bdf.schema, base, log, features, N_BUCKETS)
+    pd.testing.assert_frame_equal(_canon(spark.read.parquet(features)), _canon(build_feature_table(bdf)))
+
+
+def test_stream_refuses_base_with_other_columns(spark, transcripts_pdf, tmp_path):
+    """The sink reads base with the stream's schema. A base written
+    without ``val`` under a stream that has it would read ``val`` as NULL
+    in touched buckets only, mixing functionals of two lengths in one
+    table: the stream refuses to start and writes nothing."""
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_VAL_SCHEMA
+
+    pdf, paths = _mk_base(spark, transcripts_pdf, tmp_path)
+    _stage_incoming(spark, paths, _delta_batches(pdf, n_batches=1))
+    before = _canon(spark.read.parquet(paths["features"]))
+
+    with pytest.raises(ValueError, match=r"\['val'\]"):
+        _run_stream(spark, paths, schema=TRANSCRIPT_VAL_SCHEMA)
+    assert not os.path.exists(paths["ckpt"]) and not os.path.exists(paths["log"])
+    pd.testing.assert_frame_equal(_canon(spark.read.parquet(paths["features"])), before)
+
+
+def test_stream_batch_runs_four_jobs(spark, transcripts_pdf, tmp_path):
+    """A micro-batch costs one job for the log write and three for the
+    rebuild and commit (two shuffle stages and the write). The write's
+    observed metrics carry the row count and the touched buckets, and no
+    read infers a schema."""
+    pdf, paths = _mk_base(spark, transcripts_pdf, tmp_path)
+    _stage_incoming(spark, paths, _delta_batches(pdf, n_batches=1))
+    q = _run_stream(spark, paths)
+
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) <= 4, sorted(jobs)
+
+
+def test_rebuild_plan_shuffles_on_conv_id_and_conv_bucket_only(spark, transcripts_pdf):
+    """The merge window, sessionize and rolling all run on the union's
+    conv_id hash partitioning; the commit adds the conv_bucket one."""
+    import re
+
+    from podcast_audio_feature_extraction_spark.plans.backfill import FEATURE_COLS, conv_bucket_col
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+    from podcast_audio_feature_extraction_spark.streaming.delta import _merged_snapshot
+
+    base = spark.createDataFrame(transcripts_pdf, schema=TRANSCRIPT_SCHEMA)
+    log = spark.createDataFrame(_delta_batches(transcripts_pdf)[0], schema=TRANSCRIPT_SCHEMA)
+    rebuilt = (
+        build_feature_table(_merged_snapshot(base, log.withColumn("batch", F.lit(0)))).select(*FEATURE_COLS)
+        .withColumn("conv_bucket", conv_bucket_col(N_BUCKETS))
+        .repartition("conv_bucket")
+    )
+    plan = rebuilt._jdf.queryExecution().executedPlan().toString()
+    keys = [re.sub(r"#\d+", "", k) for k in re.findall(r"Exchange hashpartitioning\((.*?), \d+\)", plan)]
+    assert len(re.findall(r"\bExchange ", plan)) == 2 and sorted(keys) == ["conv_bucket", "conv_id"], plan
+
+
+def test_stream_null_conv_id_row_counts_but_touches_nothing(spark, transcripts_pdf, tmp_path):
+    """A NULL conv_id in a micro-batch (out of contract) has a pinned
+    meaning: it counts in the manifest's rows, touches no bucket, leaves
+    the features equal to a full rebuild without it, and is dropped at
+    compaction."""
+    import glob
+
+    from pyspark.sql import types as T
+
+    from podcast_audio_feature_extraction_spark.operators.resume import load_manifest
+    from podcast_audio_feature_extraction_spark.plans.backfill import touched_buckets
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+
+    pdf, paths = _mk_base(spark, transcripts_pdf, tmp_path)
+    (batch,) = _delta_batches(pdf, n_batches=1)
+    orphan = batch.iloc[[0]].assign(conv_id=None, turn_idx=0)
+    nullable = T.StructType([T.StructField(f.name, f.dataType, True) for f in TRANSCRIPT_SCHEMA.fields])
+    os.makedirs(paths["incoming"])
+    spark.createDataFrame(pd.concat([batch, orphan]), schema=nullable).coalesce(1).write.parquet(
+        f"{paths['incoming']}/f0"
+    )
+    _run_stream(spark, paths)
+
+    (rec,) = load_manifest(paths["features"])["delta_batches"].values()
+    bdf = spark.createDataFrame(batch, schema=TRANSCRIPT_SCHEMA)
+    assert rec["rows"] == len(batch) + 1 and rec["buckets"] == len(touched_buckets(bdf, N_BUCKETS))
+    want = _want_features(spark, pdf, [batch])
+    pd.testing.assert_frame_equal(_canon(spark.read.parquet(paths["features"])), want)
+
+    assert compact_transcript_log(spark, paths["base"], paths["log"], n_buckets=N_BUCKETS) == len(batch)
+    assert spark.read.parquet(paths["base"]).filter(F.col("conv_id").isNull()).count() == 0
+    assert not glob.glob(paths["base"] + "/conv_bucket=__HIVE_DEFAULT_PARTITION__")
