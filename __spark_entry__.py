@@ -302,11 +302,9 @@ def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by content hash (training-data pipeline op)."""
     _utc(spark)
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        d.groupBy(F.md5(F.col("text")).alias("content_hash"))
-        .agg(F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
-    )
+    from podcast_audio_feature_extraction_spark.operators.dedup import exact_dedup
+
+    return exact_dedup(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def q_rerank_topical(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,14 +9,15 @@ a table of multi-turn conversation transcripts
 Subpackages
 -----------
 - ``sources``    : scans / generators (synthetic transcripts, events-derived
-                   transcripts, nested ASR JSON, multimodal binary columns).
+                   transcripts).
 - ``operators``  : relational/windowed operators (sessionize, rolling
                    functionals, as-of join, segments, rerank, dedup, ANN,
                    checkpoint/resume).
 - ``functions``  : column expressions + vectorized pandas UDFs (text
                    analysis, hash embeddings, mood metrics).
 - ``plans``      : end-to-end pipelines (feature backfill flagship).
-- ``streaming``  : Structured Streaming variants (session windows).
+- ``streaming``  : Structured Streaming variants (windowed functionals,
+                   the stateful as-of enrichment, the delta feature loop).
 - ``oracle``     : single-node numpy/pandas golden reimplementation used by
                    parity tests (the reference's own computational medium).
 """
@@ -53,7 +54,6 @@ _API = {
     "brute_force_topk": "operators.similarity",
     "lsh_topk": "operators.similarity",
     "ivf_topk": "operators.similarity",
-    "fit_pq_codebooks": "operators.similarity",
     "fit_pq_codebooks_local": "operators.similarity",
     "fit_residual_pq_codebooks_local": "operators.similarity",
     "pq_encode": "operators.similarity",
@@ -62,7 +62,6 @@ _API = {
     "embedding_near_dup_pairs": "operators.similarity",
     "split_col": "operators.sampling",
     "stratified_sample": "operators.sampling",
-    "decontaminate_exact": "operators.sampling",
     "contamination_pairs": "operators.sampling",
     "unigram_surprisal": "operators.lm",
     "run_resumable": "operators.resume",

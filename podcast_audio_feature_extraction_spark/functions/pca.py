@@ -1,16 +1,16 @@
-"""PCA-whitening post-processor (SURVEY.md §2.10 E6, §2.1 S13/S14, §2.5 W5/W6).
+"""PCA-whitening post-processor (SURVEY.md §2.10 E6, §2.5 W5).
 
-Analog of the reference's VGGish 3-stage pipeline
-(/root/reference/src/features/VGGishExtractor.py:34-128): embed ->
-post-process with a PCA whitener (a broadcast matrix multiply + clip) ->
-combine with a strided downsample
-(/root/reference/src/features/create_vggish_features.py:17-32: frames
-``[:6000:5]``).
+Analog of the post-process stage of the reference's VGGish pipeline
+(reference ``src/features/VGGishExtractor.py:34-128``): a PCA whitener
+(a matrix multiply + clip) over embeddings.
 
-Stage shape mirrors the reference: the whitening matrix is fitted ONCE on
-a bounded sample (driver-side numpy — the reference ships pretrained PCA
-params), then broadcast and applied executor-side in an Arrow-vectorized
-pandas UDF batch matmul.
+The whitening matrix is fitted ONCE on a bounded ordered sample of a
+parquet file (:func:`fit_pca_whitener_local`, driver-side numpy — the
+reference ships pretrained PCA params). Queries apply it as a pure-SQL
+fold with the params inlined as literals (:func:`whiten_component_col`,
+DuckDB twin :func:`whiten_component_sql`); the Arrow-vectorized
+pandas-UDF batch matmul (:func:`apply_pca_whitener`) is the tests'
+reference for it.
 """
 
 from __future__ import annotations
@@ -19,26 +19,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType, DoubleType
-from pyspark.sql.window import Window
 
-
-def fit_pca_whitener(df: DataFrame, vec_col: str = "embedding", sample_rows: int = 10_000, clip: float = 2.0):
-    """Fit mean + whitening matrix on a bounded sample (deterministic:
-    ordered limit over ALL non-vector columns — ordering by a single
-    non-unique column would leave orderBy+limit tie order up to the
-    partitioning and the fitted matrix could vary between runs)."""
-    id_cols = [c for c in df.columns if c != vec_col]
-    sample = df.select(vec_col, *id_cols).orderBy(*id_cols) if id_cols else df.select(vec_col)
-    pdf = sample.select(vec_col).limit(sample_rows).toPandas()
-    x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    mean = x.mean(axis=0)
-    cov = np.cov(x - mean, rowvar=False, ddof=0)
-    evals, evecs = np.linalg.eigh(cov)
-    # descending eigenvalue order, epsilon-regularized whitening
-    order = np.argsort(evals)[::-1]
-    evals, evecs = evals[order], evecs[:, order]
-    w = evecs @ np.diag(1.0 / np.sqrt(evals + 1e-8)) @ evecs.T
-    return {"mean": mean, "matrix": w, "clip": clip}
+from podcast_audio_feature_extraction_spark.operators.similarity import _ordered_sample
 
 
 def fit_pca_whitener_local(
@@ -48,22 +30,16 @@ def fit_pca_whitener_local(
     sample_rows: int = 10_000,
     clip: float = 2.0,
 ):
-    """Same whitener fit straight from a parquet file with DuckDB+numpy
-    (no Spark) — deterministic ordered-limit sample keyed on ``id_col``,
-    identical numpy math, so a Spark query and its DuckDB twin fitting
-    from the same file get bit-identical params (the
-    fit_ivf_centroids_local recipe applied to the whitener)."""
-    import duckdb
-
-    con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM '{parquet_path}' ORDER BY {id_col} LIMIT {sample_rows}"
-    ).fetchdf()
-    con.close()
-    x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    """Fit mean + whitening matrix on the file's ordered sample (the
+    ``_local`` fits' one sample, keyed on ``id_col``; DuckDB+numpy, no
+    Spark). The same file and arguments give bit-identical params on every
+    call, so a Spark query and its DuckDB twin fitting from the same file
+    inline the same literals."""
+    x = _ordered_sample(parquet_path, vec_col, id_col, sample_rows)
     mean = x.mean(axis=0)
     cov = np.cov(x - mean, rowvar=False, ddof=0)
     evals, evecs = np.linalg.eigh(cov)
+    # descending eigenvalue order, epsilon-regularized whitening
     order = np.argsort(evals)[::-1]
     evals, evecs = evals[order], evecs[:, order]
     w = evecs @ np.diag(1.0 / np.sqrt(evals + 1e-8)) @ evecs.T
@@ -75,9 +51,9 @@ def whiten_component_col(vec_col_name: str, params: dict, j: int) -> Column:
     row inlined as double literals): y_j = clip(fold_i (x_i - mean_i) *
     W[j,i]). The fold runs sequentially in ascending dimension order from
     a 0.0 init — bit-identical to the DuckDB twin's list_reduce (BLAS
-    matmul order would not be). Stays in whole-stage codegen; the
-    pandas-UDF batch-matmul path (:func:`apply_pca_whitener`) remains the
-    throughput form, this is its oracle-checkable twin."""
+    matmul order would not be). Stays in whole-stage codegen. This is the
+    form queries run; the pandas-UDF batch matmul
+    (:func:`apply_pca_whitener`) is its parity reference in the tests."""
     mean = params["mean"]
     w = params["matrix"][j]
     clip = float(params["clip"])
@@ -111,7 +87,10 @@ def whiten_component_sql(vec_expr: str, params: dict, j: int) -> str:
 
 def apply_pca_whitener(df: DataFrame, params: dict, vec_col: str = "embedding", out_col: str = "whitened") -> DataFrame:
     """Executor-side whitening: broadcast params, batch matmul per Arrow
-    batch, clip to [-clip, clip] (VGGishExtractor.py postprocess shape)."""
+    batch, clip to [-clip, clip] (VGGishExtractor.py postprocess shape).
+    No query runs it: it is the independent reference that
+    :func:`whiten_component_col` is checked against (a BLAS matmul, not
+    the sequential fold)."""
     spark = df.sparkSession
     b = spark.sparkContext.broadcast(
         {"mean": params["mean"].tolist(), "matrix": params["matrix"].tolist(), "clip": params["clip"]}
@@ -129,28 +108,3 @@ def apply_pca_whitener(df: DataFrame, params: dict, vec_col: str = "embedding", 
 
     return df.withColumn(out_col, whiten(F.col(vec_col)))
 
-
-def strided_downsample(
-    df: DataFrame,
-    every: int = 5,
-    max_idx: int = 6000,
-    key_col: str = "conv_id",
-    order_cols: tuple[str, ...] = ("ts", "turn_idx"),
-) -> DataFrame:
-    """W6: keep frames [:max_idx:every] per entity
-    (create_vggish_features.py:27)."""
-    w = Window.partitionBy(key_col).orderBy(*[F.col(c) for c in order_cols])
-    idx = F.row_number().over(w) - 1
-    return (
-        df.withColumn("frame_idx", idx.cast("int"))
-        .filter((F.col("frame_idx") % every == 0) & (F.col("frame_idx") < max_idx))
-    )
-
-
-def combine_embeddings(df: DataFrame, vec_col: str = "whitened", key_col: str = "conv_id") -> DataFrame:
-    """S14: per-entity ordered list of downsampled embeddings."""
-    ordered = F.sort_array(F.collect_list(F.struct(F.col("frame_idx"), F.col(vec_col).alias("v"))))
-    return df.groupBy(key_col).agg(
-        F.transform(ordered, lambda s: s["v"]).alias("embeddings"),
-        F.count(F.lit(1)).cast("int").alias("n_frames"),
-    )

@@ -57,8 +57,10 @@ def bucket_col(key_col: str, n_buckets: int):
     """The table layout's bucket of a row: crc32 of the utf-8 key, mod
     ``n_buckets`` (Spark's crc32 is a non-negative bigint, so the remainder
     is a valid bucket). crc32 is the same polynomial in Spark and Python's
-    zlib, so the driver can compute a delta's touched buckets without a
-    Spark job (``plans.backfill.touched_buckets``; parity test-pinned)."""
+    zlib, so the driver can bucket conv_ids it has collected
+    (``plans.backfill.touched_buckets`` collects a delta's distinct
+    conv_ids in one bounded Spark job, then buckets them with zlib;
+    parity test-pinned)."""
     return (F.crc32(F.col(key_col).cast("string")) % n_buckets).cast("int")
 
 

@@ -5,8 +5,6 @@ pipelines.
   by hashed id — the split survives reshuffles, re-runs and engine swaps
   (md5 is identical everywhere), unlike ``randomSplit`` which depends on
   partitioning. Pure projection: no shuffle, works at any scale.
-- ``decontaminate_exact``: drop corpus rows whose text hash appears in a
-  benchmark/holdout set (broadcast anti-join).
 - ``contamination_pairs``: near-duplicate contamination between a corpus
   and a benchmark via the same minhash-LSH banding as
   :func:`~..dedup.minhash_lsh_pairs`, but ACROSS two tables — candidates
@@ -101,17 +99,6 @@ def stratified_sample_sql(
             FROM {src}
         ) WHERE __rk <= {n_per_group}
     """
-
-
-def decontaminate_exact(
-    corpus: DataFrame, benchmark: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Corpus rows whose exact text does NOT appear in the benchmark
-    (broadcast anti-join on content hash)."""
-    bench_hashes = benchmark.select(F.md5(F.col(text_col)).alias("__h")).distinct()
-    return corpus.join(
-        F.broadcast(bench_hashes), F.md5(F.col(text_col)) == F.col("__h"), "left_anti"
-    )
 
 
 def contamination_pairs(

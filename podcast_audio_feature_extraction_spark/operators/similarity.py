@@ -163,9 +163,27 @@ def lsh_topk(
     return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
 
 
+def _ordered_sample(parquet_path: str, vec_col: str, id_col: str, sample_rows: int):
+    """The one sample every ``_local`` fit draws: the first ``sample_rows``
+    vectors of a parquet file in ``id_col`` order, read with DuckDB (no
+    Spark) and stacked into an (n, d) float64 matrix. An ordered limit on
+    a unique id is the same rows on every run, so a fit is a pure
+    function of the file — which is how a Spark query and its DuckDB twin
+    that fit from the same file inline the same literals."""
+    import duckdb
+    import numpy as np
+
+    with duckdb.connect() as con:
+        pdf = con.execute(
+            f"SELECT {id_col}, {vec_col} FROM '{parquet_path}' ORDER BY {id_col} LIMIT {sample_rows}"
+        ).fetchdf()
+    return np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+
+
 def _kmeans_core(x, n_centroids: int, iters: int, seed: int):
-    """Deterministic Lloyd k-means in float64 (shared by the Spark-sample
-    and parquet-local fit paths so both produce bit-identical centroids)."""
+    """Deterministic Lloyd k-means in float64: a seeded initial pick and a
+    fixed number of rounds (the IVF quantizer and every PQ subspace
+    codebook are fitted with it)."""
     import numpy as np
 
     rng = np.random.default_rng(seed)
@@ -180,25 +198,6 @@ def _kmeans_core(x, n_centroids: int, iters: int, seed: int):
     return centroids
 
 
-def fit_ivf_centroids(
-    emb: DataFrame,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_rows: int = 20_000,
-    iters: int = 8,
-    seed: int = 42,
-):
-    """Driver-side k-means on a deterministic ordered sample (the IVF
-    coarse quantizer; at 100 TB you fit on a 0.01% sample the same way —
-    centroid fitting is O(sample), never O(corpus))."""
-    import numpy as np
-
-    pdf = emb.select(id_col, vec_col).orderBy(id_col).limit(sample_rows).toPandas()
-    x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    return _kmeans_core(x, n_centroids, iters, seed)
-
-
 def fit_ivf_centroids_local(
     parquet_path: str,
     n_centroids: int = 16,
@@ -208,21 +207,14 @@ def fit_ivf_centroids_local(
     iters: int = 8,
     seed: int = 42,
 ):
-    """Same fit straight from a parquet file with DuckDB+numpy (no Spark).
-
-    The sample is the same ordered limit as :func:`fit_ivf_centroids`, so
-    both paths yield bit-identical centroids — this is how the DuckDB twin
-    of the IVF query gets the quantizer as plain literals (assignment and
-    probe are then ordinary SQL)."""
-    import duckdb
-    import numpy as np
-
-    con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM '{parquet_path}' ORDER BY {id_col} LIMIT {sample_rows}"
-    ).fetchdf()
-    con.close()
-    x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    """The IVF coarse quantizer: k-means on the file's ordered sample
+    (:func:`_ordered_sample`; DuckDB+numpy, no Spark). Fitting is
+    O(sample), never O(corpus) — at 100 TB you fit on a 0.01% sample the
+    same way. The same file and arguments give bit-identical centroids on
+    every call, which is how the IVF query and its DuckDB twin share the
+    quantizer as plain literals (assignment and probe are then ordinary
+    SQL)."""
+    x = _ordered_sample(parquet_path, vec_col, id_col, sample_rows)
     return _kmeans_core(x, n_centroids, iters, seed)
 
 
@@ -349,8 +341,8 @@ def _residualize(x, centroids):
     return x - cent[assign], assign
 
 
-def fit_pq_codebooks(
-    emb: DataFrame,
+def fit_pq_codebooks_local(
+    parquet_path: str,
     m_sub: int = 8,
     k_codes: int = 16,
     vec_col: str = "embedding",
@@ -362,45 +354,16 @@ def fit_pq_codebooks(
     """Product-quantization codebooks (Jégou et al., IEEE TPAMI 2011 —
     public method): split the d-dim space into ``m_sub`` contiguous
     subspaces and fit an independent k-means codebook (``k_codes``
-    centroids) per subspace on a bounded DETERMINISTIC sample (ordered
-    limit — same O(sample) driver-side fit pattern as the IVF quantizer).
+    centroids) per subspace on the file's ordered sample
+    (:func:`_ordered_sample`; DuckDB+numpy, no Spark).
 
     Returns an (m_sub, k_codes, d/m_sub) numpy array. A 64-dim float64
     vector encodes to m_sub small ints — with 8x16 that is 8 nibbles vs
     512 bytes, the memory step that makes billion-vector ANN fit in RAM.
-    """
-    import numpy as np
-
-    pdf = emb.select(id_col, vec_col).orderBy(id_col).limit(sample_rows).toPandas()
-    x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    return _fit_pq_books(x, m_sub, k_codes, iters, seed)
-
-
-def fit_pq_codebooks_local(
-    parquet_path: str,
-    m_sub: int = 8,
-    k_codes: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_rows: int = 20_000,
-    iters: int = 8,
-    seed: int = 42,
-):
-    """Same PQ codebook fit straight from a parquet file with DuckDB+numpy
-    (no Spark) — the ordered-limit sample matches :func:`fit_pq_codebooks`
-    exactly, so both paths yield bit-identical codebooks. This is how the
-    DuckDB twin of the PQ query gets the codebooks as plain literals
-    (encode + ADC scoring are then ordinary SQL) — the same recipe as
-    :func:`fit_ivf_centroids_local`."""
-    import duckdb
-    import numpy as np
-
-    con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM '{parquet_path}' ORDER BY {id_col} LIMIT {sample_rows}"
-    ).fetchdf()
-    con.close()
-    x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    The same file and arguments give bit-identical codebooks on every
+    call, which is how the PQ query and its DuckDB twin share them as
+    plain literals (encode + ADC scoring are then ordinary SQL)."""
+    x = _ordered_sample(parquet_path, vec_col, id_col, sample_rows)
     return _fit_pq_books(x, m_sub, k_codes, iters, seed)
 
 
@@ -419,18 +382,10 @@ def fit_residual_pq_codebooks_local(
     Jégou et al. 2011 §IV): codebooks are fitted on x - nearest_centroid
     instead of x, so the k_codes centroids per subspace model the
     within-cell distribution rather than the global one — sharper
-    quantization at the same code budget. Same DuckDB+numpy ordered-limit
-    sample contract as :func:`fit_pq_codebooks_local` (bit-identical
-    literals for the SQL twin)."""
-    import duckdb
-    import numpy as np
-
-    con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM '{parquet_path}' ORDER BY {id_col} LIMIT {sample_rows}"
-    ).fetchdf()
-    con.close()
-    x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    quantization at the same code budget. Same ordered sample and the same
+    determinism as :func:`fit_pq_codebooks_local` (bit-identical literals
+    for the SQL twin)."""
+    x = _ordered_sample(parquet_path, vec_col, id_col, sample_rows)
     r, _ = _residualize(x, centroids)
     return _fit_pq_books(r, m_sub, k_codes, iters, seed)
 

@@ -258,9 +258,13 @@ def delta_rebuild_partitioned(
 
     NULL-keyed delta rows touch nothing: a NULL conv_id belongs to no
     conversation (:func:`touched_buckets` drops them — the same semantics
-    as the In-predicate/semi-join forms, where NULL matches no key)."""
+    as the In-predicate/semi-join forms, where NULL matches no key).
+
+    A stored transcript pinned to another ``n_buckets`` is refused before
+    any read: its partitions hold other conversations' rows."""
     from pyspark.sql import functions as F
 
+    pin_n_buckets(load_manifest(transcript_path), transcript_path, n_buckets)
     buckets = touched_buckets(new_turns, n_buckets)
     src = spark.read.parquet(transcript_path).filter(F.col("conv_bucket").isin(buckets))
     rebuilt = build_feature_table(

@@ -27,74 +27,3 @@ TRANSCRIPT_SCHEMA = T.StructType(
 TRANSCRIPT_VAL_SCHEMA = T.StructType(
     list(TRANSCRIPT_SCHEMA.fields) + [T.StructField("val", T.DoubleType(), True)]
 )
-
-# Feature/backfill table (analog of the reference's time-indexed feature
-# tables, /root/reference/src/features/OpenSmileExtractor.py:47-54).
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("session_id", T.IntegerType(), True),
-        T.StructField("functionals", T.ArrayType(T.DoubleType()), True),
-        T.StructField("embedding", T.ArrayType(T.DoubleType()), True),
-    ]
-)
-
-# Nested ASR-JSON schema (Google Speech-to-Text shape the reference loads at
-# /root/reference/src/data.py:50-54); declared explicitly so Spark never
-# runs schema inference over petabytes of JSON.
-ASR_JSON_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "results",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField(
-                            "alternatives",
-                            T.ArrayType(
-                                T.StructType(
-                                    [
-                                        T.StructField("transcript", T.StringType()),
-                                        T.StructField("confidence", T.DoubleType()),
-                                        T.StructField(
-                                            "words",
-                                            T.ArrayType(
-                                                T.StructType(
-                                                    [
-                                                        T.StructField("startTime", T.StringType()),
-                                                        T.StructField("endTime", T.StringType()),
-                                                        T.StructField("word", T.StringType()),
-                                                        T.StructField("speakerTag", T.IntegerType()),
-                                                    ]
-                                                )
-                                            ),
-                                        ),
-                                    ]
-                                )
-                            ),
-                        )
-                    ]
-                )
-            ),
-        )
-    ]
-)
-
-# Multimodal payload table: media as opaque binary + typed metadata
-# (image/audio decode itself is stubbed in this container — see
-# sources/multimodal.py).
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("conv_id", T.StringType(), True),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("duration_s", T.DoubleType(), True),
-    ]
-)

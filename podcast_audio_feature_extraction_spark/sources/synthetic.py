@@ -90,14 +90,6 @@ def generate_transcripts(
     return df
 
 
-def transcripts_df(spark, **kwargs):
-    """Spark DataFrame form of :func:`generate_transcripts`."""
-    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
-
-    pdf = generate_transcripts(**kwargs)
-    return spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA)
-
-
 def with_future_rows(pdf: pd.DataFrame, seed: int = 7, frac: float = 0.1) -> pd.DataFrame:
     """Append 'future' rows after each conversation's max ts.
 

@@ -3,16 +3,11 @@
 The reference is batch-only; the engine adds the streaming path for the
 same semantics:
 
-- sliding segment windows (W1) -> windowed streaming aggregation with a
-  watermark bounding state;
-- gap sessions -> ``F.session_window`` (gap-merge) with watermark-driven
-  session finalization.
-
-Batch/stream parity note: ``session_window`` merges rows whose
-[ts, ts+gap) windows OVERLAP, i.e. a new session starts when the gap is
->= gap_s; the batch ``sessionize`` (lag+cumsum) splits when the gap is
-strictly > gap_s. ``session_window_bounds`` is provided in both modes so
-tests can pin the shared semantics on identical input.
+- the transcript as a file stream (:func:`read_transcript_stream`; the
+  input perfbench's delta workload feeds to ``streaming.delta``);
+- sliding segment windows (W1) -> windowed streaming functionals with a
+  watermark bounding state (:func:`sliding_window_functionals_stream`,
+  the ``stream_functionals`` bench row).
 """
 
 from __future__ import annotations
@@ -30,47 +25,6 @@ def read_transcript_stream(spark: SparkSession, path: str, max_files_per_trigger
         spark.readStream.schema(TRANSCRIPT_VAL_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(path)
-    )
-
-
-def session_window_bounds(
-    df: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str | None = "2 hours",
-    conv_col: str = "conv_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-(conv, session-window) aggregates; works on both batch and
-    streaming DataFrames (watermark applies only to streams)."""
-    src = df
-    if watermark is not None and df.isStreaming:
-        src = df.withWatermark(ts_col, watermark)
-    return (
-        src.groupBy(F.col(conv_col), F.session_window(F.col(ts_col), gap).alias("sw"))
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.min(ts_col).alias("first_ts"),
-            F.max(ts_col).alias("last_ts"),
-        )
-        .select(conv_col, F.col("sw.start").alias("session_start"), F.col("sw.end").alias("session_end"),
-                "n_turns", "first_ts", "last_ts")
-    )
-
-
-def sliding_window_counts_stream(
-    df: DataFrame,
-    length: str = "120 seconds",
-    hop: str = "60 seconds",
-    watermark: str = "10 minutes",
-    conv_col: str = "conv_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming variant of the W1 segment aggregation with bounded state."""
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(F.col(conv_col), F.window(F.col(ts_col), length, hop).alias("win"))
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(conv_col, F.col("win.start").alias("win_start"), "n_turns")
     )
 
 
@@ -110,22 +64,6 @@ def sliding_window_functionals_stream(
             "val_max",
         )
     )
-
-
-def dedup_stream(
-    df: DataFrame,
-    keys: list[str] | None = None,
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup with bounded state: duplicates arriving within
-    the watermark horizon are dropped; state for older keys is evicted.
-    The streaming twin of exact_dedup's at-most-once-per-content guarantee
-    (for a content-keyed stream pass ``keys=[md5(text)]`` upstream)."""
-    keys = keys or ["conv_id", "turn_idx"]
-    if df.isStreaming:
-        return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-    return df.dropDuplicates(keys)
 
 
 def run_stream_to_memory(stream_df: DataFrame, query_name: str, spark: SparkSession) -> DataFrame:

@@ -1,11 +1,10 @@
 """Custom stateful streaming operator (SURVEY.md §2.9 engine extension).
 
-Incremental sessionization + running per-conversation features via
-``applyInPandasWithState``: the state for each conv_id carries
-(last_ts_us, session_id, turns_so_far, tokens_so_far), so each micro-batch
-extends sessions and running counts exactly where the previous batch left
-off — the streaming twin of the batch ``sessionize`` + running-aggregate
-pass, with O(1) state per conversation (NOT per turn).
+The streaming as-of enrichment via ``applyInPandasWithState``
+(:func:`stateful_asof_enrich`): one tagged feature+query stream, and per
+conv_id the state holds only the newest feature row and the last
+processed (ts, turn_idx) — O(1) state per conversation (NOT per turn),
+the streaming twin of the batch ``asof_join``.
 
 Ordering contract: turns must arrive in (ts, turn_idx) order per conv_id
 across micro-batches (i.e. the upstream source is time-partitioned, the
@@ -21,65 +20,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("session_id", T.IntegerType(), False),
-        T.StructField("turns_so_far", T.LongType(), False),
-        T.StructField("tokens_so_far", T.LongType(), False),
-    ]
-)
-
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_ts_us", T.LongType()),
-        T.StructField("session_id", T.IntegerType()),
-        T.StructField("turns_so_far", T.LongType()),
-        T.StructField("tokens_so_far", T.LongType()),
-    ]
-)
-
-
-def _make_fold(gap_s: float):
-    gap_us = int(gap_s * 1_000_000)
-
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (conv_id,) = key
-        if state.exists:
-            last_us, session_id, turns, tokens = state.get
-        else:
-            last_us, session_id, turns, tokens = None, 0, 0, 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "turn_idx"], kind="mergesort")
-            us = pdf["ts"].astype("int64").to_numpy() // 1000
-            n_tok = pdf["text"].fillna("").map(lambda s: len(s.split())).to_numpy()
-            out_sess, out_turns, out_tokens = [], [], []
-            for i in range(len(pdf)):
-                if last_us is not None and us[i] - last_us > gap_us:
-                    session_id += 1
-                last_us = int(us[i])
-                turns += 1
-                tokens += int(n_tok[i])
-                out_sess.append(session_id)
-                out_turns.append(turns)
-                out_tokens.append(tokens)
-            yield pd.DataFrame(
-                {
-                    "conv_id": conv_id,
-                    "turn_idx": pdf["turn_idx"].to_numpy(),
-                    "ts": pdf["ts"].to_numpy(),
-                    "session_id": out_sess,
-                    "turns_so_far": out_turns,
-                    "tokens_so_far": out_tokens,
-                }
-            )
-        state.update((last_us, session_id, turns, tokens))
-
-    return fold
-
 
 ASOF_OUTPUT_SCHEMA = T.StructType(
     [
@@ -245,22 +185,3 @@ def stateful_asof_enrich(
         )
     )
 
-
-def running_session_features(
-    transcripts: DataFrame,
-    gap_s: float = 1800.0,
-) -> DataFrame:
-    """Apply the stateful fold; works on a streaming DataFrame (state kept
-    by the streaming engine) and, for parity testing, on a batch one
-    (single fold pass)."""
-    return (
-        transcripts.select("conv_id", "turn_idx", "ts", "text")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _make_fold(gap_s),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )

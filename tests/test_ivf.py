@@ -3,16 +3,18 @@ import pyspark.sql.functions as F
 
 from podcast_audio_feature_extraction_spark.operators.similarity import (
     brute_force_topk,
-    fit_ivf_centroids,
+    fit_ivf_centroids_local,
     ivf_topk,
 )
 
+EMB_PATH = "/root/testdata/sf0.01/embeddings.parquet"
+
 
 def test_ivf_recall_vs_bruteforce(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    emb = spark.read.parquet(EMB_PATH)
     queries = emb.filter(F.col("vec_id") < 10)
     exact = brute_force_topk(emb, queries, k=10).toPandas()
-    cents = fit_ivf_centroids(emb, n_centroids=16, iters=8)
+    cents = fit_ivf_centroids_local(EMB_PATH, n_centroids=16, iters=8)
     approx = ivf_topk(emb, queries, cents, k=10, nprobe=4).toPandas()
 
     recall_num, recall_den = 0, 0
@@ -28,22 +30,21 @@ def test_ivf_recall_vs_bruteforce(spark):
 
 
 def test_ivf_deterministic(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    c1 = fit_ivf_centroids(emb, n_centroids=8, iters=4)
-    c2 = fit_ivf_centroids(emb, n_centroids=8, iters=4)
+    c1 = fit_ivf_centroids_local(EMB_PATH, n_centroids=8, iters=4)
+    c2 = fit_ivf_centroids_local(EMB_PATH, n_centroids=8, iters=4)
     import numpy as np
 
     np.testing.assert_array_equal(c1, c2)
 
 
-def test_pq_adc_recall_and_self_consistency(spark):
+def test_pq_adc_recall_and_self_consistency(spark, tmp_path):
     """PQ encode + ADC top-k: a corpus vector queried against the corpus
     must rank vectors sharing its PQ cells first, and recall@10 vs exact
     L2 must be high on clustered data (PQ's operating regime)."""
     import numpy as np
 
     from podcast_audio_feature_extraction_spark.operators.similarity import (
-        fit_pq_codebooks,
+        fit_pq_codebooks_local,
         pq_encode,
         pq_topk,
     )
@@ -54,8 +55,10 @@ def test_pq_adc_recall_and_self_consistency(spark):
     pts = np.concatenate([c + rng.standard_normal((50, 16)) * 0.4 for c in centers])
     pdf = pd.DataFrame({"vec_id": range(len(pts)), "embedding": [p.tolist() for p in pts]})
     emb = spark.createDataFrame(pdf)
+    path = str(tmp_path / "emb.parquet")
+    pdf.to_parquet(path)
 
-    books = fit_pq_codebooks(emb, m_sub=8, k_codes=32, sample_rows=1000, iters=10)
+    books = fit_pq_codebooks_local(path, m_sub=8, k_codes=32, sample_rows=1000, iters=10)
     assert books.shape == (8, 32, 2)
     codes = pq_encode(emb, books).localCheckpoint()
     # codes are within range and deterministic
@@ -82,15 +85,14 @@ def test_pq_adc_recall_and_self_consistency(spark):
         assert all(c // 50 == q_id // 50 for c in grp["c_id"]), q_id
 
 
-def test_ivf_pq_subset_of_probed_buckets_and_adc_consistent(spark):
+def test_ivf_pq_subset_of_probed_buckets_and_adc_consistent(spark, tmp_path):
     """IVF-PQ candidates come only from probed centroid buckets, and the
     JVM-side ADC sum must equal the pandas pq_topk ADC on the shared
     candidate set (same LUT arithmetic, two implementations)."""
     import numpy as np
 
     from podcast_audio_feature_extraction_spark.operators.similarity import (
-        fit_ivf_centroids,
-        fit_pq_codebooks,
+        fit_pq_codebooks_local,
         ivf_pq_topk,
         pq_encode,
         pq_topk,
@@ -99,11 +101,12 @@ def test_ivf_pq_subset_of_probed_buckets_and_adc_consistent(spark):
     rng = np.random.default_rng(31)
     centers = rng.standard_normal((6, 16)) * 5
     pts = np.concatenate([c + rng.standard_normal((40, 16)) * 0.4 for c in centers])
-    emb = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(len(pts)), "embedding": [p.tolist() for p in pts]})
-    )
-    cents = fit_ivf_centroids(emb, n_centroids=6, sample_rows=1000, iters=10)
-    books = fit_pq_codebooks(emb, m_sub=8, k_codes=32, sample_rows=1000, iters=10)
+    pdf = pd.DataFrame({"vec_id": range(len(pts)), "embedding": [p.tolist() for p in pts]})
+    emb = spark.createDataFrame(pdf)
+    path = str(tmp_path / "emb.parquet")
+    pdf.to_parquet(path)
+    cents = fit_ivf_centroids_local(path, n_centroids=6, sample_rows=1000, iters=10)
+    books = fit_pq_codebooks_local(path, m_sub=8, k_codes=32, sample_rows=1000, iters=10)
     queries = emb.filter(F.col("vec_id").isin([0, 100, 239]))
 
     got = ivf_pq_topk(emb, queries, cents, books, k=5, nprobe=1).toPandas()
@@ -120,7 +123,7 @@ def test_ivf_pq_subset_of_probed_buckets_and_adc_consistent(spark):
     assert all(c // 40 == q // 40 for q, c in zip(got["q_id"], got["c_id"]))
 
 
-def test_pq_encode_and_adc_match_independent_numpy(spark):
+def test_pq_encode_and_adc_match_independent_numpy(spark, tmp_path):
     """pq_encode codes and pq_topk ADC distances vs an INDEPENDENT numpy
     reimplementation (einsum/broadcast math, i.e. a different summation
     order than the engine's sequential per-dim fold) — agreement to 1e-9
@@ -128,7 +131,7 @@ def test_pq_encode_and_adc_match_independent_numpy(spark):
     import numpy as np
 
     from podcast_audio_feature_extraction_spark.operators.similarity import (
-        fit_pq_codebooks,
+        fit_pq_codebooks_local,
         pq_encode,
         pq_topk,
     )
@@ -138,7 +141,9 @@ def test_pq_encode_and_adc_match_independent_numpy(spark):
     x = rng.standard_normal((n, dim))
     pdf = pd.DataFrame({"vec_id": range(n), "embedding": [v.tolist() for v in x]})
     sdf = spark.createDataFrame(pdf)
-    books = fit_pq_codebooks(sdf, m_sub=m_sub, k_codes=k_codes, sample_rows=n)
+    path = str(tmp_path / "emb.parquet")
+    pdf.to_parquet(path)
+    books = fit_pq_codebooks_local(path, m_sub=m_sub, k_codes=k_codes, sample_rows=n)
     sub = dim // m_sub
 
     codes = (
@@ -226,16 +231,14 @@ def test_residual_ivfpq_recall_beats_or_matches_raw(spark):
 
 def test_residual_fit_is_deterministic_and_differs_from_raw(spark):
     from podcast_audio_feature_extraction_spark.operators.similarity import (
-        fit_ivf_centroids_local,
         fit_pq_codebooks_local,
         fit_residual_pq_codebooks_local,
     )
     import numpy as np
 
-    path = "/root/testdata/sf0.01/embeddings.parquet"
-    cents = fit_ivf_centroids_local(path, n_centroids=16, iters=8)
-    a = fit_residual_pq_codebooks_local(path, cents, m_sub=8, k_codes=16, iters=8)
-    b = fit_residual_pq_codebooks_local(path, cents, m_sub=8, k_codes=16, iters=8)
+    cents = fit_ivf_centroids_local(EMB_PATH, n_centroids=16, iters=8)
+    a = fit_residual_pq_codebooks_local(EMB_PATH, cents, m_sub=8, k_codes=16, iters=8)
+    b = fit_residual_pq_codebooks_local(EMB_PATH, cents, m_sub=8, k_codes=16, iters=8)
     np.testing.assert_array_equal(a, b)
-    raw = fit_pq_codebooks_local(path, m_sub=8, k_codes=16, iters=8)
+    raw = fit_pq_codebooks_local(EMB_PATH, m_sub=8, k_codes=16, iters=8)
     assert not np.array_equal(a, raw)

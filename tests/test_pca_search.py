@@ -4,23 +4,22 @@ import pyspark.sql.functions as F
 
 from podcast_audio_feature_extraction_spark.functions.pca import (
     apply_pca_whitener,
-    combine_embeddings,
-    fit_pca_whitener,
-    strided_downsample,
+    fit_pca_whitener_local,
 )
 from podcast_audio_feature_extraction_spark.operators.search import conv_dimension, search_segments
 from podcast_audio_feature_extraction_spark.operators.segments import build_segments
 
 
-def test_pca_whitening_decorrelates(spark):
+def test_pca_whitening_decorrelates(spark, tmp_path):
     rng = np.random.default_rng(5)
     # correlated 2-block data in 8 dims
     base = rng.normal(size=(800, 4))
     x = np.concatenate([base, base * 2.0 + rng.normal(scale=0.1, size=(800, 4))], axis=1)
-    df = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(len(x)), "embedding": [row.tolist() for row in x]})
-    )
-    params = fit_pca_whitener(df, sample_rows=800, clip=10.0)
+    pdf = pd.DataFrame({"vec_id": range(len(x)), "embedding": [row.tolist() for row in x]})
+    path = str(tmp_path / "emb.parquet")
+    pdf.to_parquet(path)
+    df = spark.createDataFrame(pdf)
+    params = fit_pca_whitener_local(path, sample_rows=800, clip=10.0)
     out = apply_pca_whitener(df, params).toPandas()
     y = np.stack([np.asarray(v) for v in out["whitened"]])
     cov = np.cov(y - y.mean(axis=0), rowvar=False, ddof=0)
@@ -28,19 +27,6 @@ def test_pca_whitening_decorrelates(spark):
     assert np.abs(off_diag).max() < 0.05  # whitened ~ identity covariance
     assert np.abs(np.diag(cov) - 1.0).max() < 0.05
     assert np.abs(y).max() <= 10.0
-
-
-def test_strided_downsample_and_combine(spark, transcripts_sdf):
-    down = strided_downsample(transcripts_sdf, every=5, max_idx=50)
-    pdf = down.toPandas()
-    assert (pdf["frame_idx"] % 5 == 0).all()
-    assert (pdf["frame_idx"] < 50).all()
-    with_vec = down.withColumn("whitened", F.array(F.col("frame_idx").cast("double")))
-    combined = combine_embeddings(with_vec).toPandas()
-    for _, r in combined.iterrows():
-        idxs = [v[0] for v in r["embeddings"]]
-        assert idxs == sorted(idxs)  # ordered per entity
-        assert r["n_frames"] == len(r["embeddings"])
 
 
 def test_search_scores_and_ranks(spark, transcripts_sdf):
@@ -178,24 +164,22 @@ def test_bm25_fused_frees_previous_checkpoint(spark, transcripts_sdf):
     assert n_after - n_before <= 1, (n_before, n_after)
 
 
-def test_whiten_component_col_matches_udf_path(spark):
-    """The oracle-checkable pure-SQL whitening fold must agree with the
-    production Arrow batch-matmul UDF (same params, different summation
+def test_whiten_component_col_matches_udf_path(spark, tmp_path):
+    """The pure-SQL whitening fold the queries run must agree with the
+    reference Arrow batch-matmul UDF (same params, different summation
     order -> compare to 1e-9 relative, not bitwise)."""
     import numpy as np
 
-    from podcast_audio_feature_extraction_spark.functions.pca import (
-        apply_pca_whitener,
-        fit_pca_whitener,
-        whiten_component_col,
-    )
+    from podcast_audio_feature_extraction_spark.functions.pca import whiten_component_col
 
     rng = np.random.default_rng(11)
     pdf = pd.DataFrame(
         {"vec_id": range(50), "embedding": [rng.standard_normal(8).tolist() for _ in range(50)]}
     )
+    path = str(tmp_path / "emb.parquet")
+    pdf.to_parquet(path)
     sdf = spark.createDataFrame(pdf)
-    params = fit_pca_whitener(sdf, sample_rows=50)
+    params = fit_pca_whitener_local(path, sample_rows=50)
     via_udf = (
         apply_pca_whitener(sdf, params)
         .select("vec_id", F.element_at("whitened", 1).alias("c0"))

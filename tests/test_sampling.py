@@ -3,7 +3,6 @@ import pyspark.sql.functions as F
 
 from podcast_audio_feature_extraction_spark.operators.sampling import (
     contamination_pairs,
-    decontaminate_exact,
     split_col,
 )
 
@@ -22,15 +21,6 @@ def test_split_deterministic_and_roughly_proportional(spark):
     # a different salt re-rolls the assignment
     c = df.select(split_col(F.col("doc_id"), fr, salt="other").alias("s")).toPandas()
     assert (a.sort_values("doc_id")["s"].to_numpy() != c["s"].to_numpy()).any()
-
-
-def test_decontaminate_exact_drops_benchmark_texts(spark):
-    corpus = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2, 3], "text": ["keep me", "leaked benchmark item", "also keep"]})
-    )
-    bench = spark.createDataFrame(pd.DataFrame({"doc_id": [100], "text": ["leaked benchmark item"]}))
-    got = decontaminate_exact(corpus, bench).toPandas()
-    assert set(got["doc_id"]) == {1, 3}
 
 
 def test_contamination_pairs_finds_near_dup_across_tables(spark):

@@ -3,72 +3,6 @@ import time
 import numpy as np
 import pyspark.sql.functions as F
 
-from podcast_audio_feature_extraction_spark.operators.sessionize import sessionize
-from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
-from podcast_audio_feature_extraction_spark.streaming.stateful import running_session_features
-
-GAP = 1800.0
-
-
-def _batch_reference(spark, transcripts_sdf):
-    """Batch twin: sessionize + running counts via window functions."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx").rowsBetween(Window.unboundedPreceding, 0)
-    tok = F.size(F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"), lambda x: x != ""))
-    return (
-        sessionize(transcripts_sdf, gap_s=GAP)
-        .withColumn("turns_so_far", F.count(F.lit(1)).over(w))
-        .withColumn("tokens_so_far", F.sum(tok).over(w))
-        .select("conv_id", "turn_idx", "ts", "session_id", "turns_so_far", "tokens_so_far")
-    )
-
-
-def test_stateful_stream_matches_batch(spark, transcripts_pdf, tmp_path):
-    """Feed the transcript in 3 time-ordered micro-batches; the stateful
-    fold's final outputs must equal the batch sessionize+running-counts."""
-    pdf = transcripts_pdf.sort_values("ts", kind="mergesort").reset_index(drop=True)
-    thirds = np.array_split(pdf, 3)
-    in_dir = tmp_path / "stream_in"
-    in_dir.mkdir()
-    for i, chunk in enumerate(thirds):
-        # distinct mtimes so the file source discovers them in time order
-        spark.createDataFrame(chunk.reset_index(drop=True), schema=TRANSCRIPT_SCHEMA).coalesce(1).write.parquet(
-            str(in_dir / f"batch_{i}")
-        )
-        time.sleep(1.1)
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir) + "/batch_*")
-    )
-    q = (
-        running_session_features(stream, gap_s=GAP)
-        .writeStream.format("memory")
-        .queryName("stateful_sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.table("stateful_sessions")
-        .toPandas()
-        .sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort")
-        .reset_index(drop=True)
-    )
-    sdf = spark.createDataFrame(transcripts_pdf, schema=TRANSCRIPT_SCHEMA)
-    want = (
-        _batch_reference(spark, sdf)
-        .toPandas()
-        .sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort")
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(want)
-    for c in ("session_id", "turns_so_far", "tokens_so_far"):
-        np.testing.assert_array_equal(got[c].to_numpy(), want[c].to_numpy(), err_msg=c)
-
 
 def test_stateful_asof_enrich_matches_batch_asof(spark, transcripts_pdf, tmp_path):
     """The O(1)-state streaming as-of over a tagged feature+query stream

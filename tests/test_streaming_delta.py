@@ -14,6 +14,7 @@ import pytest
 
 from podcast_audio_feature_extraction_spark.plans.backfill import (
     build_feature_table,
+    delta_rebuild_partitioned,
     write_conv_partitioned,
 )
 from podcast_audio_feature_extraction_spark.streaming.delta import (
@@ -177,7 +178,8 @@ def test_backfill_job_output_is_the_stream_feature_table(spark, transcripts_pdf,
 def test_bucket_count_mismatch_is_refused(spark, transcripts_pdf, tmp_path):
     """A layout table pinned to n_buckets=16 refuses every writer that
     brings another count — the stream, compaction, a re-bootstrap and the
-    resumable backfill — before it writes anything. Unrefused, a rebuild
+    resumable backfill — before it writes anything, and so does the
+    partitioned delta rebuild before it reads. Unrefused, a rebuild
     would read the wrong base rows and the dynamic overwrite would leave
     old-layout rows beside the new ones (conversations twice)."""
     import glob
@@ -188,7 +190,8 @@ def test_bucket_count_mismatch_is_refused(spark, transcripts_pdf, tmp_path):
     pdf, paths = _mk_base(spark, transcripts_pdf, tmp_path)
     batches = _delta_batches(pdf, n_batches=1)
     _stage_incoming(spark, paths, batches)
-    spark.createDataFrame(batches[0], schema=TRANSCRIPT_SCHEMA).write.parquet(f"{paths['log']}/batch=0")
+    delta = spark.createDataFrame(batches[0], schema=TRANSCRIPT_SCHEMA)
+    delta.write.parquet(f"{paths['log']}/batch=0")
     before = _canon(spark.read.parquet(paths["features"]))
 
     with pytest.raises(ValueError, match="n_buckets=16"):
@@ -199,6 +202,8 @@ def test_bucket_count_mismatch_is_refused(spark, transcripts_pdf, tmp_path):
         write_conv_partitioned(spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA), paths["base"], n_buckets=8)
     with pytest.raises(ValueError, match="n_buckets=16"):
         run_resumable(build_feature_table, spark.read.parquet(paths["base"]), paths["features"], n_buckets=8)
+    with pytest.raises(ValueError, match="n_buckets=16"):
+        delta_rebuild_partitioned(spark, paths["base"], delta, n_buckets=8)
 
     assert glob.glob(paths["log"] + "/batch=*") == [f"{paths['log']}/batch=0"]
     assert not os.path.exists(paths["ckpt"])

@@ -49,3 +49,40 @@ def test_benchmark_package_imports_resolve():
                     if not hasattr(module, a.name)
                 ]
     assert not missing, f"entry points import names the package lacks: {missing}"
+
+
+def test_every_api_name_has_a_caller_outside_tests():
+    """Every name the package exports through ``_API`` is used somewhere
+    a query, bench row or job runs: the package itself (the name's own
+    ``def`` excluded), ``bench.py``, ``__spark_entry__.py``, ``jobs/``,
+    ``tools/`` or ``perfbench/``. A name only tests call is test-only
+    product surface, which the project deletes."""
+    import ast
+
+    import podcast_audio_feature_extraction_spark as pkg
+
+    root = Path(__file__).resolve().parent.parent
+    sources = [
+        *sorted((root / "podcast_audio_feature_extraction_spark").rglob("*.py")),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+        *sorted((root / "jobs").glob("*.py")),
+        *sorted((root / "tools").glob("*.py")),
+        *sorted((root / "perfbench").glob("*.py")),
+    ]
+    used = set()
+
+    def visit(node, inside):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            inside = inside | {node.name}
+        elif isinstance(node, ast.Name) and node.id not in inside:
+            used.add(node.id)
+        elif isinstance(node, ast.Attribute) and node.attr not in inside:
+            used.add(node.attr)
+        for child in ast.iter_child_nodes(node):
+            visit(child, inside)
+
+    for path in sources:
+        visit(ast.parse(path.read_text()), frozenset())
+    uncalled = sorted(name for name in pkg._API if name not in used)
+    assert not uncalled, f"_API names with no caller outside tests/: {uncalled}"
