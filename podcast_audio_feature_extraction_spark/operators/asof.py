@@ -140,7 +140,6 @@ def asof_join(
             F.unix_micros(F.col("__ts").cast("timestamp")) - F.col("__rp.__rts")
         ) <= F.lit(int(tolerance_s * 1_000_000))
         out = out.withColumn("__rp", F.when(fresh, F.col("__rp")))
-    for c in value_cols:
-        out = out.withColumn(c, F.col(f"__rp.{c}"))
-    drop = ["__ts", "__side", "__rp"] + [f"__tie{i}" for i in range(len(right_tie_cols))]
-    return out.drop(*drop)
+    # backticks keep a left column name literal ("a.b" is no struct field)
+    kept = [F.col("`" + c.replace("`", "``") + "`") for c in left.columns]
+    return out.select(*kept, *[F.col("__rp")[c].alias(c) for c in value_cols])

@@ -21,11 +21,21 @@ bucket-level checkpointing over the engine's one table layout:
   manifest append happen per completed batch; a crash mid-batch re-runs
   only that batch).
 
-Scale note: each batch is ONE Spark job over ``filter(bucket IN batch)``
-— a full scan per batch, so ``batch_size`` trades checkpoint granularity
-against scan count (ceil(n_buckets/batch_size) scans worst case). On a
-real cluster the input would itself be stored in the conv_bucket layout
-so the filter prunes directories and each batch scans only its own data.
+Scale note: each batch is 3 Spark jobs over ``filter(conv_bucket IN
+batch)``, a full scan per batch, so ``batch_size`` trades checkpoint
+granularity against scan count (ceil(n_buckets/batch_size) scans worst
+case). On a real cluster the input would itself be stored in the
+conv_bucket layout so the filter prunes directories and each batch scans
+only its own data. The feature plan is derived once per run, over the
+whole source, and each batch filters it: building a plan costs hundreds
+of py4j round trips, paid once per run instead of between batches.
+
+Transform contract: a row of ``transform(df)`` depends only on rows of
+its own conversation (every window partitions by ``conv_id``). The
+bucket predicate then pushes through the transform to the scan, so a
+batch reads and computes only its buckets' rows, as if the source had
+been filtered first (plan-asserted). The same contract is what makes the
+bucketed output equal a full build.
 """
 
 from __future__ import annotations
@@ -108,8 +118,12 @@ def run_resumable(
 ) -> dict:
     """Execute ``transform(df) -> df`` bucket-by-bucket with resume.
 
-    ``transform`` gets the source rows of a batch of conv_id buckets and
-    returns rows that keep ``conv_id``. Output layout:
+    ``transform`` is called at most once per run, on the whole
+    ``source``, and only when a bucket is left to compute (its plan
+    build is timed in the run's ``wall_s``); each batch filters the
+    returned plan to its buckets. It must return rows that keep
+    ``conv_id`` and depend only on their own conversation (the module's
+    transform contract). Output layout:
     ``{out_dir}/conv_bucket={b}/part-*.parquet`` + the manifest — the
     table ``streaming.delta.stream_incremental_feature_build`` maintains
     as its ``features_path``. Returns the run's metrics dict (also
@@ -129,11 +143,12 @@ def run_resumable(
     }
     from pyspark.sql import Observation
 
-    bucket = bucket_col("conv_id", n_buckets)
+    plan = None
     for i in range(0, len(todo), batch_size):
         batch = todo[i : i + batch_size]
         t0 = time.perf_counter()
-        out = transform(source.filter(bucket.isin(batch))).withColumn("conv_bucket", bucket)
+        if plan is None:
+            plan = transform(source).withColumn("conv_bucket", bucket_col("conv_id", n_buckets))
         # per-bucket row counts ride along as observed metrics of the write
         # job itself — recomputing them with a separate groupBy/collect
         # (round-1 design) re-executed the whole transform, a 2x compute
@@ -141,11 +156,14 @@ def run_resumable(
         # shuffle: when every bucket of the batch is empty, AQE replaces
         # the empty shuffle's subtree, and an observation below it would
         # vanish (Observation.get then fails instead of reporting None).
-        # Sorting by bucket first meets the partitioned writer's required
+        # Hashing on the bucket alone puts each bucket in one task (one
+        # file per bucket) and lets AQE coalesce the small write stage;
+        # sorting by bucket first meets the partitioned writer's required
         # ordering, so the writer adds no second sort.
         obs = Observation(f"resume-batch-{i}")
         out = (
-            out.repartition(len(batch), "conv_bucket")
+            plan.filter(F.col("conv_bucket").isin(batch))
+            .repartition("conv_bucket")
             .sortWithinPartitions("conv_bucket", "conv_id")
             .observe(obs, *[F.sum((F.col("conv_bucket") == b).cast("long")).alias(f"b{b}") for b in batch])
         )

@@ -170,12 +170,10 @@ def asof_np(
     for key, lg in left.groupby(on, sort=True):
         rg = right[right[on] == key]
         lg = lg.sort_values(ts_col, kind="mergesort")
-        if rg.empty:
-            lg = lg.copy()
-            for c in value_cols:
-                lg[c] = None
-            outs.append(lg)
-            continue
+        # a key with no right rows goes through merge_asof too: its value
+        # columns come out all-NA with the right frame's dtypes (int ->
+        # float for NaN, as for any unmatched row), so pd.concat never
+        # meets an all-NA object column it would have to exclude
         rg = rg.sort_values(ts_col, kind="mergesort")
         outs.append(
             pd.merge_asof(

@@ -59,7 +59,6 @@ from podcast_audio_feature_extraction_spark.operators.resume import (
     pin_n_buckets,
 )
 from podcast_audio_feature_extraction_spark.plans.backfill import (
-    FEATURE_COLS,
     N_CONV_BUCKETS,
     build_feature_table,
     commit_rebuilt_partitions,
@@ -141,7 +140,7 @@ def _rebuild_batch(
     # the log side has no conv_bucket directory to prune: the same layout
     # expression, evaluated per row
     log = spark.read.schema(schema).parquet(log_path).filter(conv_bucket_col(n_buckets).isin(buckets))
-    rebuilt = build_feature_table(_merged_snapshot(base, log), **feature_kwargs).select(*FEATURE_COLS)
+    rebuilt = build_feature_table(_merged_snapshot(base, log), **feature_kwargs)
     commit_rebuilt_partitions(
         rebuilt.withColumn("conv_bucket", conv_bucket_col(n_buckets)), features_path
     )

@@ -121,7 +121,9 @@ def test_asof_null_value_on_newest_right_row_wins(spark):
     """A NULL value column on the newest matching right row must surface as
     NULL (pd.merge_asof semantics) — not silently fall back to a stale
     older right row's value (round-1 union-trick bug)."""
-    lpdf = pd.DataFrame({"conv_id": ["k", "k"], "ts": pd.to_datetime([100, 200], unit="s")})
+    lpdf = pd.DataFrame(
+        {"conv_id": ["k", "k"], "ts": pd.to_datetime([100, 200], unit="s"), "meta.src": ["a", "b"]}
+    )
     rpdf = pd.DataFrame(
         {
             "conv_id": ["k", "k"],
@@ -142,6 +144,7 @@ def test_asof_null_value_on_newest_right_row_wins(spark):
     assert got.loc[0, "feat"] == 1.0 and got.loc[0, "other"] == 10.0
     assert pd.isna(got.loc[1, "feat"])
     assert got.loc[1, "other"] == 20.0
+    assert list(got["meta.src"]) == ["a", "b"]  # a dotted left column name passes through
 
 
 def test_asof_tolerance_freshness_uses_matched_row(spark):

@@ -84,3 +84,42 @@ def test_flagship_zero_temporal_leakage(spark, transcripts_pdf):
     be = np.stack([np.asarray(v, dtype=np.float64) for v in base["embedding"]])
     fe = np.stack([np.asarray(v, dtype=np.float64) for v in with_fut["embedding"]])
     np.testing.assert_array_equal(be, fe)
+
+
+def test_session_turns_dataframe_call_site_capture_off(spark):
+    """get_spark turns PySpark's per-call call-site capture off: it walks
+    the Python stack on every DataFrame/Column call of a plan build."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_feature_plan_build_makes_at_most_1000_py4j_calls(spark, transcripts_sdf, monkeypatch):
+    """Building the feature plan is paid per backfill run and per delta
+    micro-batch; its py4j round trips are the driver cost (about 2,000
+    with call-site capture on, about 700 with it off)."""
+    import gc
+    import threading
+
+    import pyspark.sql.functions as F
+    from py4j.java_gateway import GatewayClient
+
+    from podcast_audio_feature_extraction_spark.plans.backfill import build_feature_table
+
+    src = transcripts_sdf.withColumn("val", F.lit(1.0))
+    build_feature_table(src)  # first build: one-off UDF and class set-up
+    calls = 0
+    send = GatewayClient.send_command
+    me = threading.get_ident()
+
+    def counting(self, *args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == me  # the build's own calls only
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    gc.collect()
+    gc.disable()  # a collection mid-build would add py4j detach calls
+    try:
+        build_feature_table(src)
+    finally:
+        gc.enable()
+    assert calls <= 1000

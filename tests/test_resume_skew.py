@@ -2,6 +2,7 @@ import json
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from podcast_audio_feature_extraction_spark.operators.resume import load_manifest, run_resumable
 from podcast_audio_feature_extraction_spark.plans.backfill import build_feature_table
@@ -88,6 +89,62 @@ def test_resume_executes_transform_once_per_batch(spark, transcripts_sdf, tmp_pa
     assert run["rows_out"] == transcripts_sdf.count()
     # each row crosses the UDF exactly once (small slack for task retries)
     assert acc.value == run["rows_out"]
+
+
+def test_resume_derives_the_plan_once_per_run(spark, transcripts_sdf, tmp_path):
+    """The transform builds one plan per run, which every batch filters;
+    a run with nothing left to compute builds none."""
+    calls = []
+
+    def counting_transform(df):
+        calls.append(df)
+        return _transform(df)
+
+    out = str(tmp_path / "plan_once")
+    run = run_resumable(counting_transform, transcripts_sdf, out, n_buckets=4, batch_size=2)
+    assert sorted(run["computed_buckets"]) == [0, 1, 2, 3] and len(calls) == 1
+    rerun = run_resumable(counting_transform, transcripts_sdf, out, n_buckets=4, batch_size=2)
+    assert rerun["computed_buckets"] == [] and len(calls) == 1
+
+
+@pytest.mark.parametrize("val_col", [None, "val"])
+def test_resume_batch_plan_equals_filtering_the_source_first(spark, transcripts_sdf, tmp_path, monkeypatch, val_col):
+    """Catalyst pushes a batch's bucket filter through the run's one plan
+    (windows on conv_id, the embedding UDF) to the source: the optimized
+    plan is the one of transforming the batch's rows alone. With ``val``
+    the plan carries the job's percentile/covariance windows too."""
+    import re
+
+    from podcast_audio_feature_extraction_spark.operators.resume import bucket_col
+
+    src = transcripts_sdf if val_col is None else transcripts_sdf.withColumn("val", (F.col("turn_idx") % 7).cast("double"))
+
+    def transform(df):
+        return build_feature_table(df, gap_s=1800.0, k=3, val_col=val_col)
+
+    written = []
+    observe = type(src).observe
+
+    def recording_observe(self, *args, **kwargs):
+        written.append(self)
+        return observe(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(src), "observe", recording_observe)
+    run_resumable(transform, src, str(tmp_path / "pushdown"), n_buckets=4, batch_size=2)
+    bucket = bucket_col("conv_id", 4)
+    filtered_first = (
+        transform(src.filter(bucket.isin([0, 1])))
+        .withColumn("conv_bucket", bucket)
+        .repartition("conv_bucket")
+        .sortWithinPartitions("conv_bucket", "conv_id")
+    )
+
+    def plan(df):
+        text = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"x_\d+", "x", re.sub(r"#\d+L?", "", text))
+
+    assert len(written) == 2
+    assert plan(written[0]) == plan(filtered_first)
 
 
 def test_write_features_zstd_sorted(spark, transcripts_sdf, tmp_path):

@@ -36,7 +36,8 @@ def test_stateful_asof_enrich_matches_batch_asof(spark, transcripts_pdf, tmp_pat
     )
     in_dir = tmp_path / "asof_stream_in"
     in_dir.mkdir()
-    for i, chunk in enumerate(np.array_split(tagged, 3)):
+    for i, rows in enumerate(np.array_split(np.arange(len(tagged)), 3)):
+        chunk = tagged.iloc[rows]
         spark.createDataFrame(chunk.reset_index(drop=True), schema=schema).coalesce(1).write.parquet(
             str(in_dir / f"batch_{i}")
         )
