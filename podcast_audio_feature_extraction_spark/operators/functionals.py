@@ -12,14 +12,17 @@ variation) — the families named in the eGeMAPS spec and visible in the
 reference's metric names (``*_stddevNorm``, ``slopeUV500-1500_amean``,
 /root/reference/src/search/metrics.py:36-54).
 
-Window assignment is the explicit shift-expand: each row is replicated
-once per hop offset and lands in the length/hop fixed-origin windows
-covering its ts — exactly what ``F.window(ts, length, hop)`` compiles to
-(Expand -> Filter -> Aggregate), but with the window start materialized as
-a real per-row attribute so per-row window-relative expressions (the
-slope's time axis) are expressible. One shuffle on (conv_id, win_start)
-with map-side partial aggregation — at 100 TB this is the cheapest
-possible plan: no self-join, no explode beyond the length/hop duplication
+One kernel computes every windowed functional: :func:`functional_grid`
+(any descriptor list x any subset of ``GRID_STATS``);
+:func:`window_functionals` is its one-descriptor view with fixed output
+names. Window assignment is the explicit shift-expand: each row is
+replicated once per hop offset and lands in the length/hop fixed-origin
+windows covering its ts — exactly what ``F.window(ts, length, hop)``
+compiles to (Expand -> Filter -> Aggregate), but with the window start
+materialized as a real per-row attribute so per-row window-relative
+expressions (the slope's time axis) are expressible. One shuffle of the
+raw expanded rows on (conv_id, win_start), then one aggregation where
+they land — no self-join, no explode beyond the length/hop duplication
 factor.
 
 Parity notes: population stddev (numpy ddof=0); `percentile(col, q)` is
@@ -40,116 +43,6 @@ def _dur_s(spec: str) -> int:
     num, unit = spec.split()
     mult = {"second": 1, "seconds": 1, "minute": 60, "minutes": 60}[unit]
     return int(num) * mult
-
-
-def window_functionals(
-    df: DataFrame,
-    length: str = "120 seconds",
-    hop: str = "60 seconds",
-    val_col: str = "val",
-    conv_col: str = "conv_id",
-    ts_col: str = "ts",
-    round_digits: int | None = 6,
-) -> DataFrame:
-    """Per (conv_id, sliding window) functional aggregates of ``val_col``.
-
-    ``round_digits`` rounds the float aggregates so cross-engine
-    comparisons (Spark partial-agg vs single-node oracle) are stable in
-    the last ulp; pass None for raw doubles.
-    """
-    length_s, hop_s = _dur_s(length), _dur_s(hop)
-    if length_s % hop_s:
-        raise ValueError("window length must be a multiple of hop")
-    n_shifts = length_s // hop_s
-
-    def _r(c):
-        return F.round(c, round_digits) if round_digits is not None else c
-
-    us = ts_micros(F.col(ts_col))
-    # same construction as the DuckDB twin: floor to the hop grid in
-    # seconds, shift back 0..n_shifts-1 hops
-    # EXACT integer micros: floor-div by the hop in micros (double
-    # division was provably safe at micro granularity but relied on an
-    # FP-error analysis; integer arithmetic needs none)
-    base_s = (us - F.pmod(us, F.lit(hop_s * 1_000_000))) / F.lit(1_000_000)
-    base_s = base_s.cast("long")
-    expanded = (
-        df.select(
-            F.col(conv_col),
-            F.col(val_col).cast("double").alias("__v"),
-            us.alias("__us"),
-            base_s.alias("__base_s"),
-            F.explode(F.array(*[F.lit(i * hop_s) for i in range(n_shifts)])).alias("__shift_s"),
-        )
-        .select("*", (F.col("__base_s") - F.col("__shift_s")).alias("__ws_s"))
-        .filter(
-            (F.col("__us") >= F.col("__ws_s") * F.lit(1_000_000))
-            & (F.col("__us") < (F.col("__ws_s") + F.lit(length_s)) * F.lit(1_000_000))
-        )
-        .withColumn("__x", (F.col("__us") - F.col("__ws_s") * F.lit(1_000_000)) / F.lit(1e6))
-    )
-    # Shuffle the RAW expanded rows to the group key before aggregating.
-    # (conv, window) cardinality is within ~2x of the row count for
-    # conversational data (mean inter-turn gap >> hop), so map-side
-    # partial aggregation reduces nothing while its per-group buffer (incl.
-    # the collect_list array) is far wider than the raw row — without this
-    # the Exchange carries serialized partial buffers ~10x the raw bytes
-    # (guide §2.3: shuffle fewer bytes; measured ~2x on the 88-col grid).
-    # The explicit hash partitioning satisfies the aggregation's required
-    # distribution, so both aggregation passes run where the rows land and
-    # no buffer-carrying Exchange is ever planned.
-    expanded = expanded.repartition(conv_col, "__ws_s")
-    v, x = F.col("__v"), F.col("__x")
-    mean = F.avg(v)
-    std = F.coalesce(F.stddev_pop(v), F.lit(0.0))
-    return (
-        expanded.groupBy(conv_col, "__ws_s")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            _r(mean).alias("val_mean"),
-            _r(std).alias("val_std"),
-            F.min(v).alias("val_min"),
-            F.max(v).alias("val_max"),
-            # ONE sorted-array buffer serves all three exact percentile
-            # points (each separate percentile(v, q) would buffer the
-            # window's values independently, ~3x cost; the sorted array
-            # additionally beats percentile's value->count hash map ~30%
-            # — see _exact_pct_col for the bit-parity contract)
-            F.sort_array(F.collect_list(v)).alias("__sorted"),
-            # + 0.0 normalizes IEEE -0.0 from rounding tiny negatives
-            (
-                _r(F.when(F.var_pop(x) > 0, F.covar_pop(x, v) / F.var_pop(x)).otherwise(F.lit(0.0)))
-                + F.lit(0.0)
-            ).alias("val_slope"),
-            (_r(F.when(mean != 0, std / mean).otherwise(F.lit(0.0))) + F.lit(0.0)).alias("val_cv"),
-        )
-        .withColumns(
-            {
-                "val_p20": _r(_exact_pct_col("__sorted", 0.2)),
-                "val_median": _r(_exact_pct_col("__sorted", 0.5)),
-                "val_p80": _r(_exact_pct_col("__sorted", 0.8)),
-            }
-        )
-        .select(
-            conv_col,
-            # cast to NTZ (session tz is pinned UTC): the driver parquet ts
-            # is NTZ and the DuckDB twin's make_timestamp is tz-naive — a
-            # tz-aware win_start would reach pandas as UTC-aware and
-            # mismatch the oracle's naive values
-            F.timestamp_seconds(F.col("__ws_s")).cast("timestamp_ntz").alias("win_start"),
-            F.timestamp_seconds(F.col("__ws_s") + F.lit(length_s)).cast("timestamp_ntz").alias("win_end"),
-            "n",
-            "val_mean",
-            "val_std",
-            "val_min",
-            "val_max",
-            "val_p20",
-            "val_median",
-            "val_p80",
-            "val_slope",
-            "val_cv",
-        )
-    )
 
 
 GRID_STATS = (
@@ -207,7 +100,7 @@ def functional_grid(
     hop: str = "60 seconds",
     conv_col: str = "conv_id",
     ts_col: str = "ts",
-    round_digits: int = 6,
+    round_digits: int | None = 6,
     approx_pct_accuracy: int | None = None,
 ) -> DataFrame:
     """The FULL configurable functional grid — the 88-column eGeMAPS table
@@ -228,6 +121,10 @@ def functional_grid(
     the plain sorted array beats by ~30% (measured, interleaved). Output
     columns are ``{col}_{stat}`` in (col-major) spec order.
 
+    ``round_digits`` rounds the float aggregates so cross-engine
+    comparisons (Spark partial-agg vs single-node oracle) are stable in
+    the last ulp; pass None for raw doubles.
+
     ``approx_pct_accuracy``: switch the percentile family to
     ``approx_percentile`` with that accuracy (e.g. 1000 => error
     <= 1/1000 of rank). Exact percentiles buffer every window value per
@@ -245,9 +142,11 @@ def functional_grid(
     n_shifts = length_s // hop_s
 
     def _r(c):
-        return F.round(c, round_digits)
+        return F.round(c, round_digits) if round_digits is not None else c
 
     us = ts_micros(F.col(ts_col))
+    # same construction as the DuckDB twins: floor to the hop grid in EXACT
+    # integer micros, shift back 0..n_shifts-1 hops
     base_s = ((us - F.pmod(us, F.lit(hop_s * 1_000_000))) / F.lit(1_000_000)).cast("long")
     expanded = (
         df.select(
@@ -267,12 +166,16 @@ def functional_grid(
         .withColumn("__x", (F.col("__us") - F.col("__ws_s") * F.lit(1_000_000)) / F.lit(1e6))
     )
 
-    # raw-row shuffle before the aggregation — same rationale as
-    # window_functionals: sparse windows make partial aggregation pure
-    # buffer inflation (115 partial slots incl. 8 array buffers per
-    # ~1-row group on the 88-col grid); shuffling the 10-column raw rows
-    # instead and aggregating once where they land measurably halves the
-    # row (plan: Exchange moves below the aggregation pair).
+    # Shuffle the RAW expanded rows to the group key before aggregating.
+    # (conv, window) cardinality is within ~2x of the row count for
+    # conversational data (mean inter-turn gap >> hop), so map-side
+    # partial aggregation reduces nothing while its per-group buffer (115
+    # partial slots incl. 8 array buffers on the 88-col grid) is far wider
+    # than the raw row; shuffling the raw rows instead and aggregating
+    # once where they land measurably halves the shuffle. The explicit
+    # hash partitioning satisfies the aggregation's required distribution,
+    # so the Exchange moves below the aggregation pair and no
+    # buffer-carrying Exchange is ever planned.
     expanded = expanded.repartition(conv_col, "__ws_s")
 
     pcts_wanted = [s for s in stats if s in _GRID_PCTS]
@@ -379,9 +282,39 @@ def functional_grid(
         out = out.withColumns(post)
     return out.select(
         conv_col,
+        # cast to NTZ (session tz is pinned UTC): the stored parquet ts is
+        # NTZ and the DuckDB twins' make_timestamp is tz-naive — a
+        # tz-aware win_start would reach pandas as UTC-aware and mismatch
+        # the oracle's naive values
         F.timestamp_seconds(F.col("__ws_s")).cast("timestamp_ntz").alias("win_start"),
         "n",
         *[f"{c}_{s}" for c in val_cols for s in stats],
+    )
+
+
+_WINDOW_STATS = ("mean", "std", "min", "max", "p20", "median", "p80", "slope", "cv")
+
+
+def window_functionals(
+    df: DataFrame,
+    length: str = "120 seconds",
+    hop: str = "60 seconds",
+    val_col: str = "val",
+    conv_col: str = "conv_id",
+    ts_col: str = "ts",
+    round_digits: int | None = 6,
+) -> DataFrame:
+    """Per (conv_id, sliding window) functional aggregates of ``val_col``:
+    the one-descriptor :func:`functional_grid` with a ``win_end`` column
+    and the outputs named ``val_*``."""
+    length_s = _dur_s(length)
+    grid = functional_grid(df, [val_col], _WINDOW_STATS, length, hop, conv_col, ts_col, round_digits)
+    return grid.select(
+        conv_col,
+        "win_start",
+        (F.col("win_start") + F.expr(f"INTERVAL {length_s} SECONDS")).alias("win_end"),
+        "n",
+        *[F.col(f"{val_col}_{s}").alias(f"val_{s}") for s in _WINDOW_STATS],
     )
 
 

@@ -93,32 +93,41 @@ def turn_features(
         F.sum("is_tool_use").over(trail).cast("int").alias("roll_tool_cnt"),
         F.sum("role_changed").over(trail).cast("int").alias("roll_role_changes"),
     ]
+    # each val aggregate is ONE hidden window column, and std/slope/cv are
+    # derived from them in the projection after the Window operator: Spark
+    # does not dedupe a window expression repeated across select items, so
+    # writing them inline would evaluate avg(val) 3 times and
+    # stddev_pop(val) / var_pop(__t_rel) twice per trailing frame
+    val_aggs: dict[str, Column] = {}
+    derived: list[Column] = []
     if val_col is not None and val_col in df.columns:
         v = F.col(val_col)
-        var_x = F.var_pop("__t_rel").over(trail)
-        mean_v = F.avg(val_col).over(trail)
-        roll_exprs += [
-            mean_v.alias("roll_val_mean"),
-            F.coalesce(F.stddev_pop(val_col).over(trail), F.lit(0.0)).alias("roll_val_std"),
-            F.min(val_col).over(trail).alias("roll_val_min"),
-            F.max(val_col).over(trail).alias("roll_val_max"),
+        val_aggs = {
+            "__roll_mean": F.avg(v),
+            "__roll_std": F.stddev_pop(v),
+            "__roll_min": F.min(v),
+            "__roll_max": F.max(v),
             # eGeMAPS breadth (conf.inc:8-11 / CLEF §4.1): percentiles,
             # linear slope over the frame, stddev-normalized mean (CoV).
             # One array-percentile buffers the frame once for both points.
-            F.percentile(v, F.array(F.lit(0.2), F.lit(0.8))).over(trail).alias("__roll_pcts"),
-            F.when(var_x > 0, F.covar_pop(F.col("__t_rel"), v).over(trail) / var_x)
-            .otherwise(F.lit(0.0))
-            .alias("roll_val_slope"),
-            F.when(mean_v != 0, F.stddev_pop(val_col).over(trail) / mean_v)
-            .otherwise(F.lit(0.0))
-            .alias("roll_val_cv"),
+            "__roll_pcts": F.percentile(v, F.array(F.lit(0.2), F.lit(0.8))),
+            "__roll_var_x": F.var_pop("__t_rel"),
+            "__roll_cov": F.covar_pop(F.col("__t_rel"), v),
+        }
+        mean_v, std_v, var_x = F.col("__roll_mean"), F.col("__roll_std"), F.col("__roll_var_x")
+        derived = [
+            mean_v.alias("roll_val_mean"),
+            F.coalesce(std_v, F.lit(0.0)).alias("roll_val_std"),
+            F.col("__roll_min").alias("roll_val_min"),
+            F.col("__roll_max").alias("roll_val_max"),
+            F.when(var_x > 0, F.col("__roll_cov") / var_x).otherwise(F.lit(0.0)).alias("roll_val_slope"),
+            F.when(mean_v != 0, std_v / mean_v).otherwise(F.lit(0.0)).alias("roll_val_cv"),
+            F.col("__roll_pcts")[0].alias("roll_val_p20"),
+            F.col("__roll_pcts")[1].alias("roll_val_p80"),
         ]
-    out = ctx.select("*", *roll_exprs)
-    if "__roll_pcts" in out.columns:
-        out = out.withColumns(
-            {"roll_val_p20": F.col("__roll_pcts")[0], "roll_val_p80": F.col("__roll_pcts")[1]}
-        ).drop("__roll_pcts")
-    return out.drop("__token_cnt_d", "__prev_us", "__conv_t0_us", "__t_rel")
+    out = ctx.select("*", *roll_exprs, *[e.over(trail).alias(n) for n, e in val_aggs.items()])
+    drop = {"__token_cnt_d", "__prev_us", "__conv_t0_us", "__t_rel", *val_aggs}
+    return out.select(*[c for c in out.columns if c not in drop], *derived)
 
 
 FUNCTIONAL_COLS = [

@@ -8,12 +8,19 @@ scoring expression over the segments table:
     score(seg, q) = sum over query terms of
         2.0 * tf(term, seg_words) + 1.0 * tf(term, conv_name)
 
-tf = term occurrence count (declarative: size(filter(tokens, = term))).
-That simple scorer keeps the reference's dataflow shape; :func:`bm25_topk`
-below is the full BM25 analog (Lucene idf, k1/b length normalization,
-best-fields max with the seg_words^2 boost). Both plan as score expr ->
-orderBy desc -> limit k = TakeOrderedAndProject (no global sort
-materialization).
+tf = term occurrence count (declarative: size(filter(tokens, = term)));
+one tokenizer (``_toks``) and one tf helper (:func:`term_freq`) serve
+every path. That simple scorer keeps the reference's dataflow shape.
+
+BM25 (Lucene idf, k1/b length normalization, best-fields max with the
+seg_words^2 boost) has ONE scorer, ``_bm25_rank``, and one inline stats
+aggregate, ``_bm25_stats``. :func:`bm25_topk` feeds them per-field token
+arrays of a segment table; :func:`bm25_topk_fused` feeds them per-window
+tf/dl sums straight from the transcript. The corpus statistics come from
+one of two sources: the inline aggregate, or the stored index
+(:func:`bm25_index` + :func:`bm25_stats_from_index`). Every scorer plans
+as score expr -> orderBy desc -> limit k = TakeOrderedAndProject (no
+global sort materialization).
 
 J3: seg_id splits back to conv_id (F3: split on '_') and joins the
 conversation dimension (broadcast — it is groupBy(conv_id) small).
@@ -31,12 +38,20 @@ from podcast_audio_feature_extraction_spark.functions.time import ts_micros as _
 _FUSED_SEG_CKPT: list = [None]
 
 
+def _toks(col: Column) -> Column:
+    """The one tokenizer: lower-cased whitespace split, empties dropped,
+    NULL text -> no tokens."""
+    return F.filter(F.split(F.lower(F.coalesce(col, F.lit(""))), r"\s+"), lambda x: x != "")
+
+
 def term_freq(tokens: Column, term: str) -> Column:
+    # NOTE: a 2-arg lambda would be called as (element, index) by the
+    # higher-order-function binding — close over the term instead
     return F.size(F.filter(tokens, lambda x: x == F.lit(term))).cast("int")
 
 
 def score_expr(text_col: Column, terms: list[str], weight: float = 1.0) -> Column:
-    toks = F.filter(F.split(F.lower(F.coalesce(text_col, F.lit(""))), r"\s+"), lambda x: x != "")
+    toks = _toks(text_col)
     s = F.lit(0)
     for t in terms:
         s = s + term_freq(toks, t.lower())
@@ -77,25 +92,6 @@ def conv_dimension(transcripts: DataFrame) -> DataFrame:
         .groupBy(F.col("conv_id").alias("dim_conv_id"))
         .agg(F.array_join(F.transform(ordered, lambda s: s["text"]), " ").alias("dim_text"))
     )
-
-
-def _toks(col: Column) -> Column:
-    return F.filter(F.split(F.lower(F.coalesce(col, F.lit(""))), r"\s+"), lambda x: x != "")
-
-
-def bm25_stats(seg_tokenized: DataFrame, terms: list[str], field_names: list[str]) -> DataFrame:
-    """One-pass corpus statistics (N, per-field avgdl, per-term df) as a
-    1-row DataFrame. In production this is computed once per index build
-    and STORED (the ES-index-stats analog) so each query is a single scan;
-    ``bm25_topk`` computes it inline when not supplied."""
-    aggs = [F.count(F.lit(1)).cast("double").alias("__n")]
-    for f in field_names:
-        aggs.append(F.avg(F.col(f"__dl_{f}")).alias(f"__avgdl_{f}"))
-        for i, t in enumerate(terms):
-            aggs.append(
-                F.sum(F.array_contains(F.col(f"__toks_{f}"), t).cast("int")).cast("double").alias(f"__df_{f}_{i}")
-            )
-    return seg_tokenized.agg(*aggs)
 
 
 def _prep_fields(
@@ -213,6 +209,53 @@ def bm25_stats_from_index(
     return mstats.crossJoin(tstats) if tstats is not None else mstats
 
 
+def _bm25_stats(seg: DataFrame, fields: list) -> DataFrame:
+    """Inline corpus statistics as a 1-row frame, ONE aggregate pass (map-
+    side partial): N, per-field avgdl and per-term df = the number of
+    documents with tf > 0. ``fields`` is :func:`_bm25_rank`'s list; the
+    stored-index source of the same frame is :func:`bm25_stats_from_index`."""
+    aggs = [F.count(F.lit(1)).cast("double").alias("__n")]
+    for name, _, dl, tfs in fields:
+        aggs.append(F.avg(dl).alias(f"__avgdl_{name}"))
+        for i, tf in enumerate(tfs):
+            aggs.append(F.sum((tf > 0).cast("int")).cast("double").alias(f"__df_{name}_{i}"))
+    return seg.agg(*aggs)
+
+
+def _bm25_rank(seg: DataFrame, fields: list, stats: DataFrame, k: int, k1: float, b: float) -> DataFrame:
+    """The one BM25 scorer. ``fields`` lists ``(name, boost, dl, [tf per
+    query term])`` with ``dl``/``tf`` double columns of ``seg``; ``stats``
+    is the 1-row ``__n`` / ``__avgdl_{name}`` / ``__df_{name}_{i}`` frame,
+    broadcast back via crossJoin. Per field, per term: ``idf(t) *
+    tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))`` with the Lucene idf ``ln(1 +
+    (N - df + 0.5)/(df + 0.5))``; field score = boost * the sum over query
+    terms, started at 0.0 (every term's share is >= 0, so scores stay
+    bit-identical, and an empty query scores 0 everywhere and ranks
+    nothing); document score = max over the boosted fields; top-k by
+    TakeOrderedAndProject."""
+    field_scores = []
+    for name, boost, dl, tfs in fields:
+        norm = dl / F.greatest(F.col(f"__avgdl_{name}"), F.lit(1e-9))
+        total = F.lit(0.0)
+        for i, tf in enumerate(tfs):
+            df = F.col(f"__df_{name}_{i}")
+            idf = F.log(F.lit(1.0) + (F.col("__n") - df + F.lit(0.5)) / (df + F.lit(0.5)))
+            total = total + F.when(
+                tf > 0,
+                idf * tf * F.lit(k1 + 1.0) / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * norm)),
+            ).otherwise(F.lit(0.0))
+        field_scores.append(F.lit(boost) * total)
+    best = field_scores[0] if len(field_scores) == 1 else F.greatest(*field_scores)
+    return (
+        seg.crossJoin(F.broadcast(stats))
+        .withColumn("bm25", F.round(best, 6))
+        .filter(F.col("bm25") > 0)
+        .orderBy(F.desc("bm25"), F.asc("seg_id"))
+        .limit(k)
+        .select("seg_id", "bm25")
+    )
+
+
 def bm25_topk(
     segments: DataFrame,
     query: str,
@@ -227,51 +270,24 @@ def bm25_topk(
     """In-engine BM25 top-k — the reference's Elasticsearch ``multi_match``
     (/root/reference/src/search/search.py:174-214: fields
     ``seg_words^2, epis_name, epis_desc``, default best_fields = max over
-    per-field scores after boost).
+    per-field scores after boost); the formula is :func:`_bm25_rank`'s.
 
-    Per field, per term: ``idf(t) * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))``
-    with the Lucene idf ``ln(1 + (N - df + 0.5)/(df + 0.5))``; field score =
-    sum over query terms; document score = max over boosted fields.
-
-    Scale shape: corpus statistics (N, avgdl, per-term df) come from ONE
-    aggregate pass (map-side partial) whose 1-row result is broadcast back
-    via crossJoin; scoring is a pure projection; the top-k is
-    TakeOrderedAndProject. No per-term join, no shuffle beyond the stats
-    agg — the same plan works at any corpus size.
-    """
+    ``stats`` is the 1-row corpus statistics frame from the stored index
+    (:func:`bm25_stats_from_index`); None computes it inline
+    (:func:`_bm25_stats`). Scale shape: the stats are ONE aggregate pass
+    whose 1-row result is broadcast back; scoring is a pure projection;
+    the top-k is TakeOrderedAndProject. No per-term join, no shuffle
+    beyond the stats agg — the same plan works at any corpus size. An
+    empty (or all-blank) query returns no rows."""
     terms = [t for t in query.lower().split() if t]
     seg, fields = _prep_fields(segments, conv_dim, words_boost, dim_boost)
-
+    fields = [
+        (f, boost, F.col(f"__dl_{f}"), [term_freq(F.col(f"__toks_{f}"), t).cast("double") for t in terms])
+        for f, boost in fields
+    ]
     if stats is None:
-        stats = bm25_stats(seg, terms, [f for f, _ in fields])
-    scored = seg.crossJoin(F.broadcast(stats))
-
-    field_scores = []
-    for f, boost in fields:
-        contribs = []
-        for i, t in enumerate(terms):
-            tf = F.size(F.filter(F.col(f"__toks_{f}"), lambda x: x == F.lit(t))).cast("double")
-            df = F.col(f"__df_{f}_{i}")
-            idf = F.log(F.lit(1.0) + (F.col("__n") - df + F.lit(0.5)) / (df + F.lit(0.5)))
-            norm = F.col(f"__dl_{f}") / F.greatest(F.col(f"__avgdl_{f}"), F.lit(1e-9))
-            contribs.append(
-                F.when(
-                    tf > 0,
-                    idf * tf * F.lit(k1 + 1.0) / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * norm)),
-                ).otherwise(F.lit(0.0))
-            )
-        total = contribs[0]
-        for c in contribs[1:]:
-            total = total + c
-        field_scores.append(F.lit(boost) * total)
-    best = field_scores[0] if len(field_scores) == 1 else F.greatest(*field_scores)
-    return (
-        scored.withColumn("bm25", F.round(best, 6))
-        .filter(F.col("bm25") > 0)
-        .orderBy(F.desc("bm25"), F.asc("seg_id"))
-        .limit(k)
-        .select("seg_id", "bm25")
-    )
+        stats = _bm25_stats(seg, fields)
+    return _bm25_rank(seg, fields, stats, k, k1, b)
 
 
 def bm25_topk_fused(
@@ -284,7 +300,6 @@ def bm25_topk_fused(
     dim_boost: float = 1.0,
     length: str = "120 seconds",
     hop: str = "60 seconds",
-    reuse_seg: bool = True,
 ) -> DataFrame:
     """BM25 top-k straight from the TRANSCRIPT — no segment text is ever
     materialized.
@@ -303,17 +318,14 @@ def bm25_topk_fused(
          and broadcast back ->
       4. scoring projection + TakeOrderedAndProject.
 
-    Scores are identical to ``bm25_topk(build_segments(t), q,
+    Steps 3-4 are :func:`bm25_topk`'s own stats aggregate and scorer, fed
+    the window sums under the field names ``seg_words``/``dim_text``, so
+    scores are identical to ``bm25_topk(build_segments(t), q,
     conv_dimension(t))`` (test-pinned). At 100 TB this is the plan you
     want when serving search without a stored segment table: the shuffle
     carries a handful of longs per (row, window) instead of the window's
     full text."""
     terms = [t for t in query.lower().split() if t]
-
-    def _tf(term: str) -> Column:
-        # NOTE: a 2-arg lambda would be called as (element, index) by the
-        # higher-order-function binding — close over the term instead
-        return F.size(F.filter(F.col("__toks"), lambda x: x == F.lit(term))).cast("double")
 
     # tokenize ONCE into a real column — per-term tf expressions over the
     # inline _toks(...) expression would re-split the text per term
@@ -322,7 +334,7 @@ def bm25_topk_fused(
         "ts",
         "turn_idx",
         F.size(F.col("__toks")).cast("double").alias("__ntok"),
-        *[_tf(t).alias(f"__tf{i}") for i, t in enumerate(terms)],
+        *[term_freq(F.col("__toks"), t).cast("double").alias(f"__tf{i}") for i, t in enumerate(terms)],
     )
     win = F.window(F.col("ts"), length, hop)
     seg = per_row.groupBy(F.col("conv_id"), win.alias("win")).agg(
@@ -353,50 +365,20 @@ def bm25_topk_fused(
     for i in range(len(terms)):
         seg = seg.withColumn(f"__tfd{i}", F.coalesce(F.col(f"__tfd{i}"), F.lit(0.0)))
 
-    if reuse_seg:
-        # stats AND scoring read the per-segment table; without this the
-        # whole upstream subtree (transcript derivation + window sums) runs
-        # twice — the same double-scan bm25_topk pays. The per-segment
-        # table is tiny (a few doubles per window), so caching it in the
-        # block manager is the production trade (set False to keep a
-        # single pure plan, e.g. for plan-shape tests). Lazy single-slot
-        # persist: no job at construction time, a previous call's
-        # still-held result recomputes from lineage instead of erroring,
-        # and repeated calls in one session can't accumulate storage
-        # (see checkpoint.swap_cached).
-        seg = _swap_cached(_FUSED_SEG_CKPT, seg)
-    stats_aggs = [F.count(F.lit(1)).cast("double").alias("__n")]
-    for f, pre in (("w", "__tfw"), ("d", "__tfd")):
-        stats_aggs.append(F.avg(F.col(f"__dl_{f}")).alias(f"__avgdl_{f}"))
-        for i in range(len(terms)):
-            stats_aggs.append(
-                F.sum((F.col(f"{pre}{i}") > 0).cast("int")).cast("double").alias(f"__df_{f}_{i}")
-            )
-    stats = seg.agg(*stats_aggs)
-    scored = seg.crossJoin(F.broadcast(stats))
-
-    def field_score(f: str, pre: str) -> Column:
-        total = None
-        for i in range(len(terms)):
-            tf = F.col(f"{pre}{i}")
-            df = F.col(f"__df_{f}_{i}")
-            idf = F.log(F.lit(1.0) + (F.col("__n") - df + F.lit(0.5)) / (df + F.lit(0.5)))
-            norm = F.col(f"__dl_{f}") / F.greatest(F.col(f"__avgdl_{f}"), F.lit(1e-9))
-            c = F.when(
-                tf > 0,
-                idf * tf * F.lit(k1 + 1.0) / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * norm)),
-            ).otherwise(F.lit(0.0))
-            total = c if total is None else total + c
-        return total
-
-    best = F.greatest(F.lit(words_boost) * field_score("w", "__tfw"), F.lit(dim_boost) * field_score("d", "__tfd"))
-    return (
-        scored.withColumn("bm25", F.round(best, 6))
-        .filter(F.col("bm25") > 0)
-        .orderBy(F.desc("bm25"), F.asc("seg_id"))
-        .limit(k)
-        .select("seg_id", "bm25")
-    )
+    # stats AND scoring read the per-segment table; without this the whole
+    # upstream subtree (transcript derivation + window sums) runs twice —
+    # the same double-scan bm25_topk pays. The per-segment table is tiny
+    # (a few doubles per window), so caching it in the block manager is
+    # the production trade. Lazy single-slot persist: no job at
+    # construction time, a previous call's still-held result recomputes
+    # from lineage instead of erroring, and repeated calls in one session
+    # can't accumulate storage (see checkpoint.swap_cached).
+    seg = _swap_cached(_FUSED_SEG_CKPT, seg)
+    fields = [
+        ("seg_words", words_boost, F.col("__dl_w"), [F.col(f"__tfw{i}") for i in range(len(terms))]),
+        ("dim_text", dim_boost, F.col("__dl_d"), [F.col(f"__tfd{i}") for i in range(len(terms))]),
+    ]
+    return _bm25_rank(seg, fields, _bm25_stats(seg, fields), k, k1, b)
 
 
 def _toks_sql(expr: str) -> str:

@@ -42,6 +42,24 @@ def _cosine_hoisted(q_vec: Column, c_vec: Column, q_norm: Column, c_norm: Column
     return F.round(dot_col(q_vec, c_vec) / (q_norm * c_norm), round_digits)
 
 
+def _cosine_topk(c: DataFrame, q: DataFrame, k: int, key: str | None) -> DataFrame:
+    """The one cosine top-k tail: ``c`` (c_id, c_vec[, key]) and the small
+    ``q`` (q_id, q_vec[, key]) each get their norm hoisted once per row,
+    ``q`` is broadcast and equi-joined on ``key`` (cross-joined when None),
+    self-matches drop, and each query keeps its ``k`` best by (cos desc,
+    c_id asc) — a bounded per-query window. Returns (q_id, c_id, cos, rk)."""
+    c = c.withColumn("__c_norm", norm_col(F.col("c_vec")))
+    q = q.withColumn("__q_norm", norm_col(F.col("q_vec")))
+    pairs = c.crossJoin(F.broadcast(q)) if key is None else c.join(F.broadcast(q), key)
+    scored = pairs.filter(F.col("c_id") != F.col("q_id")).select(
+        "q_id",
+        "c_id",
+        _cosine_hoisted(F.col("q_vec"), F.col("c_vec"), F.col("__q_norm"), F.col("__c_norm")).alias("cos"),
+    )
+    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
+    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+
+
 def brute_force_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -52,25 +70,9 @@ def brute_force_topk(
     """Exact cosine top-k per query vector (broadcast the small query side;
     the corpus side streams — one pass, no shuffle until the per-query
     top-k, which TakeOrderedAndProject keeps tiny)."""
-    q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    ).withColumn("__q_norm", norm_col(F.col("q_vec")))
-    c = emb.select(
-        F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
-    ).withColumn("__c_norm", norm_col(F.col("c_vec")))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("c_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "c_id",
-            _cosine_hoisted(
-                F.col("q_vec"), F.col("c_vec"), F.col("__q_norm"), F.col("__c_norm")
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+    c = emb.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"))
+    return _cosine_topk(c, q, k, None)
 
 
 def sign_bucket_col(vec_col_name: str, n_bits: int = 8) -> Column:
@@ -142,25 +144,9 @@ def lsh_topk(
         bucket = plane_bucket_col(vec_col, planes)
     else:
         bucket = sign_bucket_col(vec_col, n_bits)
-    q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"), bucket.alias("bucket")
-    ).withColumn("__q_norm", norm_col(F.col("q_vec")))
-    c = emb.select(
-        F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"), bucket.alias("bucket")
-    ).withColumn("__c_norm", norm_col(F.col("c_vec")))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("c_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "c_id",
-            _cosine_hoisted(
-                F.col("q_vec"), F.col("c_vec"), F.col("__q_norm"), F.col("__c_norm")
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"), bucket.alias("bucket"))
+    c = emb.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"), bucket.alias("bucket"))
+    return _cosine_topk(c, q, k, "bucket")
 
 
 def _ordered_sample(parquet_path: str, vec_col: str, id_col: str, sample_rows: int):
@@ -259,25 +245,13 @@ def ivf_topk(
         F.col(id_col).alias("c_id"),
         F.col(vec_col).alias("c_vec"),
         F.element_at(assign1(F.col(vec_col)), 1).alias("centroid_id"),
-    ).withColumn("__c_norm", norm_col(F.col("c_vec")))
+    )
     q = queries.select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_vec"),
         F.explode(probe(F.col(vec_col))).alias("centroid_id"),
-    ).withColumn("__q_norm", norm_col(F.col("q_vec")))
-    scored = (
-        c.join(F.broadcast(q), "centroid_id")
-        .filter(F.col("c_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "c_id",
-            _cosine_hoisted(
-                F.col("q_vec"), F.col("c_vec"), F.col("__q_norm"), F.col("__c_norm")
-            ).alias("cos"),
-        )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+    return _cosine_topk(c, q, k, "centroid_id")
 
 
 def _sub_dists(xs, book):
@@ -390,66 +364,52 @@ def fit_residual_pq_codebooks_local(
     return _fit_pq_books(r, m_sub, k_codes, iters, seed)
 
 
+def _pq_codes(x, books):
+    """(n, m_sub) int32 PQ codes of the (n, d) float64 rows ``x``: per
+    subspace, the index of the nearest codebook centroid — per-dim
+    ascending accumulation (oracle fold parity); argmin takes the FIRST
+    minimum = the lowest-code-id tie rule the twin's
+    list_position(dl, list_min(dl)) uses."""
+    import numpy as np
+
+    m_sub, _, sub = books.shape
+    if x.shape[1] != m_sub * sub:
+        raise ValueError(
+            f"pq_encode: vectors are {x.shape[1]}-dim but the codebooks were fit "
+            f"for {m_sub * sub} dims ({m_sub} subspaces x {sub}) — silently "
+            "truncating would corrupt every distance"
+        )
+    codes = np.empty((len(x), m_sub), dtype=np.int32)
+    for m in range(m_sub):
+        codes[:, m] = _sub_dists(x[:, m * sub : (m + 1) * sub], books[m]).argmin(axis=1)
+    return codes
+
+
 def pq_encode(
     emb: DataFrame,
     codebooks,
     vec_col: str = "embedding",
     out_col: str = "pq_code",
-    centroids=None,
-    centroid_col: str | None = None,
 ) -> DataFrame:
     """Attach the PQ code (array<int> of length m_sub) to every vector:
     per subspace, the index of the nearest codebook centroid. One
     Arrow-vectorized pass with the codebooks broadcast as a literal —
     this is the one-off encode job whose output IS the stored index.
-
-    With ``centroids`` + ``centroid_col`` set, encodes the RESIDUAL
-    x - centroids[centroid_col] instead of x (the IVF-PQ residual form;
-    the codebooks must then come from a residual fit)."""
+    (IVF-PQ's residual codes come from :func:`ivf_pq_topk`'s fused
+    assign+encode UDF.)"""
     import numpy as np
     from pyspark.sql.types import ArrayType, IntegerType
 
     books = np.asarray(codebooks, dtype=np.float64)  # (m, k, sub)
-    m_sub, _, sub = books.shape
-    if (centroids is None) != (centroid_col is None):
-        raise ValueError("pq_encode: centroids and centroid_col must be set together")
-    cent = None if centroids is None else np.asarray(centroids, dtype=np.float64)
-
-    def _codes_for(x):
-        if x.shape[1] != m_sub * sub:
-            raise ValueError(
-                f"pq_encode: vectors are {x.shape[1]}-dim but the codebooks were fit "
-                f"for {m_sub * sub} dims ({m_sub} subspaces x {sub}) — silently "
-                "truncating would corrupt every distance"
-            )
-        codes = np.empty((len(x), m_sub), dtype=np.int32)
-        for m in range(m_sub):
-            # per-dim ascending accumulation (oracle fold parity); argmin
-            # takes the FIRST minimum = the lowest-code-id tie rule the
-            # twin's list_position(dl, list_min(dl)) uses
-            codes[:, m] = _sub_dists(x[:, m * sub : (m + 1) * sub], books[m]).argmin(axis=1)
-        return pd.Series([row.tolist() for row in codes])
-
-    if cent is None:
-
-        @F.pandas_udf(ArrayType(IntegerType()))
-        def encode(vecs: pd.Series) -> pd.Series:
-            if len(vecs) == 0:
-                return pd.Series([], dtype=object)
-            return _codes_for(np.stack([np.asarray(v, dtype=np.float64) for v in vecs]))
-
-        return emb.withColumn(out_col, encode(F.col(vec_col)))
 
     @F.pandas_udf(ArrayType(IntegerType()))
-    def encode_res(vecs: pd.Series, cids: pd.Series) -> pd.Series:
+    def encode(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
-        x = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        # r_i = x_i - c_i FIRST, then (r_i - b_i)^2 — the SQL twin writes
-        # ((emb - cvec) - bks) with the same grouping
-        return _codes_for(x - cent[cids.to_numpy(dtype=np.int64)])
+        codes = _pq_codes(np.stack([np.asarray(v, dtype=np.float64) for v in vecs]), books)
+        return pd.Series([row.tolist() for row in codes])
 
-    return emb.withColumn(out_col, encode_res(F.col(vec_col), F.col(centroid_col)))
+    return emb.withColumn(out_col, encode(F.col(vec_col)))
 
 
 def _assign_encode_udf(centroids, codebooks, residual: bool):
@@ -465,7 +425,6 @@ def _assign_encode_udf(centroids, codebooks, residual: bool):
 
     cent = np.asarray(centroids, dtype=np.float64)
     books = np.asarray(codebooks, dtype=np.float64)
-    m_sub, _, sub = books.shape
 
     @F.pandas_udf(
         StructType(
@@ -481,17 +440,10 @@ def _assign_encode_udf(centroids, codebooks, residual: bool):
                 {"centroid_id": pd.Series([], dtype="int32"), "pq_code": pd.Series([], dtype=object)}
             )
         x = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        if x.shape[1] != m_sub * sub:
-            raise ValueError(
-                f"pq_encode: vectors are {x.shape[1]}-dim but the codebooks were fit "
-                f"for {m_sub * sub} dims ({m_sub} subspaces x {sub}) — silently "
-                "truncating would corrupt every distance"
-            )
         assign = np.argsort(_cent_dists(x, cent), axis=1, kind="stable")[:, 0]
-        enc_in = x - cent[assign] if residual else x
-        codes = np.empty((len(x), m_sub), dtype=np.int32)
-        for m in range(m_sub):
-            codes[:, m] = _sub_dists(enc_in[:, m * sub : (m + 1) * sub], books[m]).argmin(axis=1)
+        # r_i = x_i - c_i FIRST, then (r_i - b_i)^2 — the SQL twin writes
+        # ((emb - cvec) - bks) with the same grouping
+        codes = _pq_codes(x - cent[assign] if residual else x, books)
         return pd.DataFrame(
             {"centroid_id": assign.astype("int32"), "pq_code": [row.tolist() for row in codes]}
         )

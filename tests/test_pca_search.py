@@ -150,8 +150,33 @@ def test_bm25_fused_matches_segment_form(spark, transcripts_sdf):
         pd.testing.assert_frame_equal(fused, seg_form)
 
 
+def test_bm25_empty_query_returns_no_rows(spark, transcripts_sdf):
+    """An empty or all-blank query has one meaning on every BM25 path —
+    inline stats, stored-index stats and the fused transcript form: no
+    term scores, so no row ranks."""
+    from podcast_audio_feature_extraction_spark.operators.search import (
+        bm25_index,
+        bm25_stats_from_index,
+        bm25_topk,
+        bm25_topk_fused,
+    )
+
+    segs = build_segments(transcripts_sdf)
+    dim = conv_dimension(transcripts_sdf)
+    term_df, meta = bm25_index(segs, dim)
+    for q in ("", "   "):
+        stats = bm25_stats_from_index(term_df, meta, [], ["seg_words", "dim_text"])
+        for got in (
+            bm25_topk(segs, q, dim, k=10),
+            bm25_topk(segs, q, dim, k=10, stats=stats),
+            bm25_topk_fused(transcripts_sdf, q, k=10),
+        ):
+            assert got.columns == ["seg_id", "bm25"]
+            assert got.count() == 0, q
+
+
 def test_bm25_fused_frees_previous_checkpoint(spark, transcripts_sdf):
-    """Repeated bm25_topk_fused(reuse_seg=True) calls in one session must
+    """Repeated bm25_topk_fused calls in one session must
     not accumulate block-manager storage (unpersist is a no-op on
     localCheckpoint output; the operator frees its previous checkpoint)."""
     from podcast_audio_feature_extraction_spark.operators.search import bm25_topk_fused

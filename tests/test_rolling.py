@@ -59,3 +59,30 @@ def test_turn_features_single_exchange(spark, transcripts_sdf):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("Exchange") <= 1
+
+
+def test_trailing_window_evaluates_each_aggregate_once(spark, transcripts_sdf):
+    """roll_val_std/slope/cv are derived from the trailing frame's
+    aggregates in the projection after the Window operator: the trailing
+    Window node evaluates each aggregate once (a window expression repeated
+    across select items is evaluated again per frame), and the feature
+    pass still plans 2 Window operators."""
+    import re
+
+    import pyspark.sql.functions as F
+
+    df = transcripts_sdf.withColumn("val", F.col("turn_idx").cast("double") * 1.5)
+    plan = turn_features(df, k=K)._jdf.queryExecution().optimizedPlan().toString()
+    windows = [line for line in plan.splitlines() if "Window [" in line]
+    assert len(windows) == 2, plan
+    trail = [line for line in windows if "covar_pop(" in line]
+    assert len(trail) == 1, plan
+    counts = {
+        agg: len(re.findall(rf"(?<![a-z_]){agg}\(", trail[0]))
+        for agg in ("avg", "stddev_pop", "var_pop", "covar_pop", "percentile", "min", "max", "sum")
+    }
+    # token + val for avg/stddev_pop/min/max; tool + role changes for sum
+    assert counts == {
+        "avg": 2, "stddev_pop": 2, "var_pop": 1, "covar_pop": 1,
+        "percentile": 1, "min": 2, "max": 2, "sum": 2,
+    }, counts
