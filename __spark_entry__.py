@@ -15,6 +15,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from podcast_audio_feature_extraction_spark.functions.text import split_ws, tokens_col, tokens_sql
 from podcast_audio_feature_extraction_spark.operators.asof import asof_join
 from podcast_audio_feature_extraction_spark.operators.functionals import (
     window_functionals,
@@ -288,7 +289,7 @@ def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text quality scoring over documents (training-data pipeline op)."""
     _utc(spark)
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"), lambda x: x != "")
+    toks = tokens_col(F.col("text"))
     return d.select(
         "doc_id",
         "lang",
@@ -594,7 +595,7 @@ def q_doc_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from podcast_audio_feature_extraction_spark.operators.sampling import split_col
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"), lambda x: x != "")
+    toks = tokens_col(F.col("text"))
     return (
         d.select(
             split_col(F.col("doc_id"), {"train": 0.8, "val": 0.1, "test": 0.1}).alias("split"),
@@ -928,7 +929,7 @@ def q_search_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     term_df, meta = bm25_index(segs, dim)
     out = None
     for q in BM25_INDEXED_QUERIES:
-        terms = [x for x in q.lower().split() if x]
+        terms = split_ws(q.lower())
         stats = bm25_stats_from_index(term_df, meta, terms, ["seg_words", "dim_text"])
         r = bm25_topk(segs, q, dim, k=100, stats=stats).select(
             F.lit(q).alias("query"), "seg_id", "bm25"
@@ -1005,6 +1006,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
+    toks = tokens_sql("COALESCE(text, '')")
     turn_features_inner = f"""
         SELECT conv_id, turn_idx, ts, token_cnt, char_len, is_tool_use,
                prev_role, next_role, role_changed, gap_s,
@@ -1053,10 +1055,10 @@ def oracle_sql() -> dict[str, str]:
         "segments": _with_transcript(build_segments_sql(120, 60)),
         "interval_join": _with_transcript(_interval_fetch_sql()),
         "asof_backfill": _with_transcript(
-            """
+            f"""
             , r0 AS (
                 SELECT conv_id, ts, turn_idx AS feat_turn_idx,
-                       CAST(len(list_filter(regexp_split_to_array(COALESCE(text, ''), '\\s+'), x -> x <> '')) AS INT) AS feat_token_cnt,
+                       CAST(len({toks}) AS INT) AS feat_token_cnt,
                        row_number() OVER (PARTITION BY conv_id, ts ORDER BY turn_idx DESC) AS rn
                 FROM transcript WHERE role = 'assistant'
             ), r AS (SELECT conv_id, ts, feat_turn_idx, feat_token_cnt FROM r0 WHERE rn = 1),
@@ -1087,13 +1089,13 @@ def oracle_sql() -> dict[str, str]:
             SELECT 'anti' AS side, c_custkey, c_name FROM customer
             WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice > 300000)
         """,
-        "doc_stats": """
+        "doc_stats": f"""
             SELECT doc_id, lang,
-                   CAST(len(list_filter(regexp_split_to_array(COALESCE(text, ''), '\\s+'), x -> x <> '')) AS INT) AS n_tokens,
+                   CAST(len({toks}) AS INT) AS n_tokens,
                    CAST(length(COALESCE(text, '')) AS INT) AS n_chars_obs,
-                   CAST(len(list_distinct(list_filter(regexp_split_to_array(COALESCE(text, ''), '\\s+'), x -> x <> ''))) AS INT) AS n_unique_tokens,
-                   round(CAST(len(list_distinct(list_filter(regexp_split_to_array(COALESCE(text, ''), '\\s+'), x -> x <> ''))) AS DOUBLE)
-                         / greatest(len(list_filter(regexp_split_to_array(COALESCE(text, ''), '\\s+'), x -> x <> '')), 1), 6) AS ttr
+                   CAST(len(list_distinct({toks})) AS INT) AS n_unique_tokens,
+                   round(CAST(len(list_distinct({toks})) AS DOUBLE)
+                         / greatest(len({toks}), 1), 6) AS ttr
             FROM documents
         """,
         "dedup_exact": """
@@ -1265,7 +1267,7 @@ def _search_eval_sql() -> str:
     from podcast_audio_feature_extraction_spark.operators.evaluation import ranking_metrics_sql
 
     def tf(term: str) -> str:
-        toks = "list_filter(regexp_split_to_array(lower(COALESCE(seg_words,'')), '\\s+'), x -> x <> '')"
+        toks = tokens_sql("lower(COALESCE(seg_words,''))")
         return f"len(list_filter({toks}, x -> x = '{term}'))"
 
     topic_scores = " UNION ALL ".join(
@@ -1312,7 +1314,7 @@ def _bm25_indexed_sql() -> str:
 def _wf_multi_sql() -> str:
     from podcast_audio_feature_extraction_spark.operators.functionals import functional_grid_sql
 
-    toks = "list_filter(regexp_split_to_array(COALESCE(text,''), '\\s+'), x -> x <> '')"
+    toks = tokens_sql("COALESCE(text,'')")
     txt = "COALESCE(text, '')"
     tok_d = f"CAST(len({toks}) AS DOUBLE)"
     chr_d = f"CAST(length({txt}) AS DOUBLE)"
@@ -1413,7 +1415,7 @@ def _doc_split_sql() -> str:
     from podcast_audio_feature_extraction_spark.operators.sampling import split_sql
 
     case = split_sql("doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
-    toks = "list_filter(regexp_split_to_array(COALESCE(text,''), '\\s+'), x -> x <> '')"
+    toks = tokens_sql("COALESCE(text,'')")
     return f"""
         SELECT {case} AS split, count(*) AS n_docs,
                round(avg(CAST(len({toks}) AS INT)), 6) AS mean_tokens
@@ -1459,7 +1461,7 @@ def _ngram_jaccard_sql() -> str:
     from podcast_audio_feature_extraction_spark.operators.dedup import SHINGLE_K
 
     k = SHINGLE_K
-    toks = "list_filter(regexp_split_to_array(COALESCE(text,''), '\\s+'), x -> x <> '')"
+    toks = tokens_sql("COALESCE(text,'')")
     sh = (
         f"list_distinct(CASE WHEN len({toks}) >= {k} THEN list_transform(range(len({toks}) - {k - 1}), "
         f"i -> array_to_string({toks}[i+1:i+{k}], ' ')) ELSE [COALESCE(text,'')] END)"
@@ -1535,7 +1537,7 @@ def _pq_sql() -> str:
 def _tokenize_pad_sql() -> str:
     from podcast_audio_feature_extraction_spark.functions.text import tokenize_pad_sql
 
-    toks = "list_filter(regexp_split_to_array(COALESCE(text,''), '\\s+'), x -> x <> '')"
+    toks = tokens_sql("COALESCE(text,'')")
     return f"""
         SELECT doc_id,
                CAST(r.range AS INT) AS pos,
@@ -1573,7 +1575,7 @@ def _turn_embedding_sql(dim: int) -> str:
     idx = uint32_be(md5[0:4]) % dim; sign = +1 if md5 byte 4 is even;
     L2-normalize. md5 digests are identical across engines, so this is an
     independent cross-check of the Arrow pandas UDF."""
-    toks = "list_filter(regexp_split_to_array(COALESCE(text,''), '\\s+'), x -> x <> '')"
+    toks = tokens_sql("COALESCE(text,'')")
     # per token: bucket = CAST('0x'||substr(md5,1,8) AS BIGINT) % dim;
     # sign from byte 4 = hex chars 9..10
     contrib = (

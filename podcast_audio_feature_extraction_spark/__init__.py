@@ -69,7 +69,6 @@ _API = {
     "with_embedding": "functions.embedding",
     "flagship": "plans.backfill",
     "build_feature_table": "plans.backfill",
-    "build_feature_table_incremental": "plans.backfill",
     "backfill_features": "plans.backfill",
     "write_conv_partitioned": "plans.backfill",
     "delta_rebuild_partitioned": "plans.backfill",

@@ -1,11 +1,11 @@
-"""Deterministic hash-embedding (SURVEY.md §2.10 E5 analog).
+r"""Deterministic hash-embedding (SURVEY.md §2.10 E5 analog).
 
 Stands in for the reference's YAMNet per-window 1024-d embedding
 (/root/reference/src/features/YAMNetExtractor.py:43-44): a deterministic,
 library-free text embedding so parity is byte-checkable. Spec (shared with
 the numpy oracle, which reimplements it independently):
 
-    for each whitespace token t:
+    for each token t of [ \t\n\f\r]+ (functions/text.split_ws):
         h   = md5(utf8(t))
         idx = uint32_be(h[0:4]) % dim
         sgn = +1 if h[4] is even else -1
@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
+from podcast_audio_feature_extraction_spark.functions.text import split_ws
+
 DEFAULT_DIM = 64
 
 
@@ -42,14 +44,11 @@ def embed_text_np(text: str | None, dim: int = DEFAULT_DIM, _cache: dict | None 
     vec = np.zeros(dim, dtype=np.float64)
     if not text:
         return vec
-    for tok in text.split():
-        if _cache is not None:
-            slot = _cache.get(tok)
-            if slot is None:
-                slot = _token_slot(tok, dim)
-                _cache[tok] = slot
-        else:
-            slot = _token_slot(tok, dim)
+    cache = {} if _cache is None else _cache
+    for tok in split_ws(text):
+        slot = cache.get(tok)
+        if slot is None:
+            slot = cache[tok] = _token_slot(tok, dim)
         vec[slot[0]] += slot[1]
     n = np.linalg.norm(vec)
     if n > 0:

@@ -4,14 +4,57 @@ stopword / type-token ratios), BPE-ish token counting, and document
 fingerprinting (min-shingle-hash, i.e. winnowing with window = document).
 
 All native Spark SQL expressions with exact DuckDB twins — no Python in
-the hot path.
+the hot path. Also the engine's one definition of a token, one helper per
+dialect: :func:`tokens_col`, :func:`split_ws`, :func:`tokens_sql`.
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, functions as F
 
-from podcast_audio_feature_extraction_spark.operators.dedup import shingles_col, tokens_col
+# The token separator class. It is RE2's ``\s``, which every DuckDB twin
+# already means; Java's ``\s`` adds ``\v`` and Python's adds all Unicode
+# whitespace, so no tokenizer may use either escape.
+WS = r"[ \t\n\f\r]+"
+_WS_RE = re.compile(WS)
+_WS_CHARS = " \t\n\f\r"
+
+SHINGLE_K = 3
+
+
+def tokens_col(text_col: Column) -> Column:
+    """The tokens of a text column: split on :data:`WS`, empties dropped,
+    NULL text -> no tokens."""
+    return F.filter(F.split(F.coalesce(text_col, F.lit("")), WS), lambda x: x != "")
+
+
+def split_ws(text: str) -> list[str]:
+    """The tokens of a Python string, as :func:`tokens_col` splits them
+    (stripping first leaves no empty piece to filter out)."""
+    text = text.strip(_WS_CHARS)
+    return _WS_RE.split(text) if text else []
+
+
+def tokens_sql(expr: str) -> str:
+    """DuckDB twin of :func:`tokens_col` over a NULL-safe ``expr`` (RE2's
+    whitespace escape is exactly :data:`WS`)."""
+    return f"list_filter(regexp_split_to_array({expr}, '\\s+'), x -> x <> '')"
+
+
+def shingles_col(text_col: Column, k: int = SHINGLE_K) -> Column:
+    """Distinct k-token shingles; texts with < k tokens fall back to the
+    whole text as a single shingle."""
+    toks = tokens_col(text_col)
+    kgrams = F.transform(
+        F.sequence(F.lit(0), F.size(toks) - k),
+        lambda i: F.array_join(F.slice(toks, i + 1, k), " "),
+    )
+    return F.array_distinct(
+        F.when(F.size(toks) >= k, kgrams).otherwise(F.array(F.coalesce(text_col, F.lit(""))))
+    )
+
 
 # tiny per-language stopword lists (heuristic language ID)
 STOPWORDS = {
@@ -22,22 +65,21 @@ STOPWORDS = {
 }
 LANG_ORDER = ["en", "de", "fr", "es"]
 
-# BPE-ish pre-tokenizer: alnum runs or single non-alnum non-space chars
-BPE_PATTERN = r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"
-
-
-def lang_scores_cols(text_col: Column) -> dict[str, Column]:
-    toks = tokens_col(F.lower(text_col))
-    return {
-        lang: F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words]))).cast("int")
-        for lang, words in STOPWORDS.items()
-    }
+# BPE-ish pre-tokenizer: alnum runs or single non-alnum non-space chars.
+# This and URL_PATTERN keep their text verbatim in the DuckDB twins, so
+# Java reads a vertical tab as a space in them and RE2 does not.
+PUNCT_PATTERN = r"[^A-Za-z0-9\s]"
+BPE_PATTERN = rf"[A-Za-z0-9]+|{PUNCT_PATTERN}"
 
 
 def lang_guess_col(text_col: Column) -> Column:
     """argmax over stopword-overlap scores; ties resolved by LANG_ORDER;
     all-zero -> 'unknown'."""
-    scores = lang_scores_cols(text_col)
+    toks = tokens_col(F.lower(text_col))
+    scores = {
+        lang: F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words]))).cast("int")
+        for lang, words in STOPWORDS.items()
+    }
     best = F.greatest(*scores.values())
     guess = F.lit("unknown")
     for lang in reversed(LANG_ORDER):
@@ -46,7 +88,7 @@ def lang_guess_col(text_col: Column) -> Column:
 
 
 def lang_guess_sql(text_expr: str = "text") -> str:
-    toks = f"list_filter(regexp_split_to_array(lower(COALESCE({text_expr},'')), '\\s+'), x -> x <> '')"
+    toks = tokens_sql(f"lower(COALESCE({text_expr},''))")
     scores = {lang: f"len(list_intersect({toks}, [{', '.join(repr(w) for w in words)}]))" for lang, words in STOPWORDS.items()}
     best = "greatest(" + ", ".join(scores.values()) + ")"
     case = "CASE "
@@ -78,7 +120,7 @@ def quality_cols(text_col: Column, round_digits: int = 6) -> dict[str, Column]:
     safe_n = F.greatest(n, F.lit(1))
     chars = F.length(F.coalesce(text_col, F.lit("")))
     en_stop = F.size(F.array_intersect(F.transform(toks, F.lower), F.array(*[F.lit(w) for w in STOPWORDS["en"]])))
-    punct = F.size(F.regexp_extract_all(F.coalesce(text_col, F.lit("")), F.lit(r"[^A-Za-z0-9\s]"), 0))
+    punct = F.size(F.regexp_extract_all(F.coalesce(text_col, F.lit("")), F.lit(PUNCT_PATTERN), 0))
     # RAW (non-distinct) 3-gram list: repetition = 1 - distinct/total
     kgrams = F.when(
         n >= 3,
@@ -112,7 +154,7 @@ def quality_cols(text_col: Column, round_digits: int = 6) -> dict[str, Column]:
 
 
 def quality_sql(text_expr: str = "text", round_digits: int = 6) -> dict[str, str]:
-    toks = f"list_filter(regexp_split_to_array(COALESCE({text_expr},''), '\\s+'), x -> x <> '')"
+    toks = tokens_sql(f"COALESCE({text_expr},'')")
     n = f"len({toks})"
     safe_n = f"greatest({n}, 1)"
     chars = f"length(COALESCE({text_expr},''))"
@@ -127,10 +169,10 @@ def quality_sql(text_expr: str = "text", round_digits: int = 6) -> dict[str, str
         "mean_token_len": f"round(list_sum(list_transform({toks}, t -> CAST(length(t) AS DOUBLE))) / {safe_n}, {round_digits})",
         "stopword_ratio": f"round(CAST(len(list_intersect(list_transform({toks}, t -> lower(t)), {en})) AS DOUBLE) / {safe_n}, {round_digits})",
         "type_token_ratio": f"round(CAST(len(list_distinct({toks})) AS DOUBLE) / {safe_n}, {round_digits})",
-        "punct_ratio": f"round(CAST(len(regexp_extract_all(COALESCE({text_expr},''), '[^A-Za-z0-9\\s]')) AS DOUBLE) / greatest({chars}, 1), {round_digits})",
+        "punct_ratio": f"round(CAST(len(regexp_extract_all(COALESCE({text_expr},''), '{PUNCT_PATTERN}')) AS DOUBLE) / greatest({chars}, 1), {round_digits})",
         "rep_3gram_ratio": f"round(CASE WHEN len({kgrams}) > 0 THEN 1.0 - CAST(len(list_distinct({kgrams})) AS DOUBLE) / len({kgrams}) ELSE 0.0 END, {round_digits})",
-        "n_urls": f"CAST(len(regexp_extract_all(COALESCE({text_expr},''), 'https?://[^\\s]+')) AS INT)",
-        "n_emails": f"CAST(len(regexp_extract_all(COALESCE({text_expr},''), '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}')) AS INT)",
+        "n_urls": f"CAST(len(regexp_extract_all(COALESCE({text_expr},''), '{URL_PATTERN}')) AS INT)",
+        "n_emails": f"CAST(len(regexp_extract_all(COALESCE({text_expr},''), '{EMAIL_PATTERN}')) AS INT)",
     }
 
 
@@ -141,7 +183,7 @@ def fingerprint_col(text_col: Column, k: int = 3) -> Column:
 
 
 def fingerprint_sql(text_expr: str = "text", k: int = 3) -> str:
-    toks = f"list_filter(regexp_split_to_array(COALESCE({text_expr},''), '\\s+'), x -> x <> '')"
+    toks = tokens_sql(f"COALESCE({text_expr},'')")
     sh = (
         f"CASE WHEN len({toks}) >= {k} THEN list_transform(range(len({toks}) - {k - 1}), "
         f"i -> array_to_string({toks}[i+1:i+{k}], ' ')) ELSE [COALESCE({text_expr},'')] END"
@@ -149,24 +191,19 @@ def fingerprint_sql(text_expr: str = "text", k: int = 3) -> str:
     return f"list_aggregate(list_transform(list_distinct({sh}), s -> md5(s)), 'min')"
 
 
-def token_ids_col(text_col: Column, vocab_size: int = 32768) -> Column:
-    """Portable hash-vocabulary token ids: md5 prefix mod (vocab_size-1),
-    shifted by 1 so id 0 stays reserved as the pad token (the BERT-style
-    preprocessing shape, /root/reference/src/search/search.py:244-275)."""
-    toks = tokens_col(text_col)
-    return F.transform(
-        toks,
+def tokenize_pad_col(text_col: Column, max_len: int = 32, vocab_size: int = 32768) -> Column:
+    """F10: tokenize then pad with 0 / truncate to EXACTLY ``max_len`` ids
+    (reference pads/truncates to 512 for the rerank model). One expression:
+    append max_len pads, slice to max_len. Ids are a portable hash
+    vocabulary: md5 prefix mod (vocab_size-1), shifted by 1 so id 0 stays
+    reserved as the pad token (the BERT-style preprocessing shape of the
+    reference's src/search/search.py:244-275)."""
+    ids = F.transform(
+        tokens_col(text_col),
         lambda t: (F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long") % F.lit(vocab_size - 1) + 1).cast(
             "int"
         ),
     )
-
-
-def tokenize_pad_col(text_col: Column, max_len: int = 32, vocab_size: int = 32768) -> Column:
-    """F10: tokenize then pad with 0 / truncate to EXACTLY ``max_len`` ids
-    (reference pads/truncates to 512 for the rerank model). One expression:
-    append max_len pads, slice to max_len."""
-    ids = token_ids_col(text_col, vocab_size)
     return F.slice(F.concat(ids, F.array_repeat(F.lit(0), max_len)), 1, max_len)
 
 
@@ -181,7 +218,7 @@ def attention_mask_col(text_col: Column, max_len: int = 32) -> Column:
 
 def tokenize_pad_sql(text_expr: str = "text", max_len: int = 32, vocab_size: int = 32768) -> str:
     """DuckDB twin of :func:`tokenize_pad_col`."""
-    toks = f"list_filter(regexp_split_to_array(COALESCE({text_expr},''), '\\s+'), x -> x <> '')"
+    toks = tokens_sql(f"COALESCE({text_expr},'')")
     ids = (
         f"list_transform({toks}, t -> "
         f"CAST(CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % {vocab_size - 1} + 1 AS INT))"

@@ -5,10 +5,13 @@ self-join -> Jaccard verify), SimHash (60-bit, hamming-distance pairs),
 and n-gram Jaccard similarity. All hot paths are native Spark SQL
 expressions (md5 / higher-order array functions) — JVM-side, no Python.
 
-Portability contract with the DuckDB oracle: every hash is md5-hex (both
-engines produce identical digests); minhash = lexicographic MIN over hex
-strings; 60-bit integer hashes parse the first 15 md5 hex chars
-(Spark ``conv(h,16,10)``, DuckDB ``CAST('0x'||h AS BIGINT)``).
+Portability contract with the DuckDB oracle: tokens and shingles come
+from ``functions/text`` (``tokens_col``/``shingles_col``, twin
+``tokens_sql``), so both engines split on the same whitespace class;
+every hash is md5-hex (both engines produce identical digests);
+minhash = lexicographic MIN over hex strings; 60-bit integer hashes
+parse the first 15 md5 hex chars (Spark ``conv(h,16,10)``, DuckDB
+``CAST('0x'||h AS BIGINT)``).
 
 Scale notes: the LSH band self-join shuffles on band_key — banding bounds
 bucket sizes, and Jaccard verification touches only candidate pairs
@@ -24,25 +27,7 @@ from podcast_audio_feature_extraction_spark.checkpoint import (
     free_local_checkpoint as _free_local_checkpoint,
 )
 from podcast_audio_feature_extraction_spark.checkpoint import swap_cached as _swap_cached
-
-SHINGLE_K = 3
-
-
-def tokens_col(text_col: Column) -> Column:
-    return F.filter(F.split(F.coalesce(text_col, F.lit("")), r"\s+"), lambda x: x != "")
-
-
-def shingles_col(text_col: Column, k: int = SHINGLE_K) -> Column:
-    """Distinct k-token shingles; texts with < k tokens fall back to the
-    whole text as a single shingle."""
-    toks = tokens_col(text_col)
-    kgrams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - k),
-        lambda i: F.array_join(F.slice(toks, i + 1, k), " "),
-    )
-    return F.array_distinct(
-        F.when(F.size(toks) >= k, kgrams).otherwise(F.array(F.coalesce(text_col, F.lit(""))))
-    )
+from podcast_audio_feature_extraction_spark.functions.text import SHINGLE_K, shingles_col, tokens_col, tokens_sql
 
 
 # single-slot cache for minhash_lsh_pairs' shingle table (see
@@ -156,14 +141,15 @@ def minhash_lsh_pairs_sql(
     """DuckDB twin of :func:`minhash_lsh_pairs` (embed after WITH ... or
     standalone prefixed by WITH)."""
     n_bands = n_hashes // band_size
+    toks = tokens_sql("COALESCE(text,'')")
     return f"""
         , __docs AS (
             SELECT {id_col} AS doc_id,
                    list_distinct(
-                     CASE WHEN len(list_filter(regexp_split_to_array(COALESCE(text,''), '\\s+'), x -> x <> '')) >= {k}
+                     CASE WHEN len({toks}) >= {k}
                           THEN list_transform(
-                                 range(len(list_filter(regexp_split_to_array(COALESCE(text,''), '\\s+'), x -> x <> '')) - {k - 1}),
-                                 i -> array_to_string(list_filter(regexp_split_to_array(COALESCE(text,''), '\\s+'), x -> x <> '')[i+1:i+{k}], ' '))
+                                 range(len({toks}) - {k - 1}),
+                                 i -> array_to_string({toks}[i+1:i+{k}], ' '))
                           ELSE [COALESCE(text,'')] END) AS shingles
             FROM {src}
         ),
@@ -204,11 +190,14 @@ def simhash_table(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     single-projection form) would md5 every token once per bit —
     measured 8.4 s -> 0.35 s at sf0.01 (CollapseProject leaves the
     multi-referenced non-cheap alias un-inlined, verified via timing).
-    Spark-SQL expression strings because the PySpark shiftleft/shiftright
-    wrappers only take literal shift counts, not the lambda var ``j``."""
-    toks = f"filter(split(coalesce({text_col}, ''), '\\\\s+'), x -> x != '')"
-    hashes = f"transform({toks}, t -> cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint))"
-    pre = df.select(F.col(id_col).alias("doc_id"), F.expr(hashes).alias("__h"))
+    Tokens are :func:`~podcast_audio_feature_extraction_spark.functions.text.tokens_col`'s.
+    The fold is a Spark-SQL expression string because the PySpark
+    shiftleft/shiftright wrappers only take literal shift counts, not the
+    lambda var ``j``."""
+    hashes = F.transform(
+        tokens_col(F.col(text_col)), lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint")
+    )
+    pre = df.select(F.col(id_col).alias("doc_id"), hashes.alias("__h"))
     bit_j = (
         "CASE WHEN 2 * size(filter(__h, h -> (shiftright(h, j) & 1) = 1)) > size(__h) "
         "THEN cast(1 as bigint) ELSE cast(0 as bigint) END"
@@ -264,6 +253,7 @@ def simhash_sql(src: str = "documents", id_col: str = "doc_id", bits: int = 60) 
     """DuckDB twin of :func:`simhash_table` (fragment: `, __sh AS (...)` tail
     included by callers). Same two-step shape: hash array once in a
     subquery, bit fold over the materialized column."""
+    toks = tokens_sql("COALESCE(text,'')")
     return f"""
         SELECT doc_id,
                CAST(list_sum(list_transform(range({bits}), j ->
@@ -271,7 +261,7 @@ def simhash_sql(src: str = "documents", id_col: str = "doc_id", bits: int = 60) 
                         THEN (1::BIGINT << j) ELSE 0 END)) AS BIGINT) AS simhash
         FROM (
             SELECT {id_col} AS doc_id,
-                   list_transform(list_filter(regexp_split_to_array(COALESCE(text,''), '\\s+'), x -> x <> ''),
+                   list_transform({toks},
                                   t -> CAST('0x' || substr(md5(t), 1, 15) AS BIGINT)) AS h
             FROM {src}
         )

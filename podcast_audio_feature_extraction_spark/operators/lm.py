@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from podcast_audio_feature_extraction_spark.operators.dedup import tokens_col
+from podcast_audio_feature_extraction_spark.functions.text import tokens_col, tokens_sql
 
 
 def unigram_surprisal(
@@ -47,7 +47,7 @@ def unigram_surprisal(
 
 def unigram_surprisal_sql(src: str = "documents", id_col: str = "doc_id", round_digits: int = 6) -> str:
     """DuckDB twin (standalone WITH query)."""
-    toks = "list_filter(regexp_split_to_array(COALESCE(text,''), '\\s+'), x -> x <> '')"
+    toks = tokens_sql("COALESCE(text,'')")
     return f"""
         WITH __toks AS (SELECT {id_col} AS doc_id, unnest({toks}) AS tok FROM {src}),
         __freq AS (SELECT tok, count(*) AS cnt FROM __toks GROUP BY tok),

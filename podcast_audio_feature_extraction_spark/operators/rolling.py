@@ -20,12 +20,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from podcast_audio_feature_extraction_spark.functions.text import tokens_col, tokens_sql
 from podcast_audio_feature_extraction_spark.functions.time import ts_micros
 
 
 def token_count(col: Column) -> Column:
-    """Whitespace token count; empty/null text -> 0."""
-    return F.size(F.filter(F.split(F.coalesce(col, F.lit("")), r"\s+"), lambda x: x != "")).cast("int")
+    """Number of :func:`~podcast_audio_feature_extraction_spark.functions.text.tokens_col`
+    tokens; empty/null text -> 0."""
+    return F.size(tokens_col(col)).cast("int")
 
 
 def turn_features(
@@ -183,7 +185,7 @@ def turn_features_sql(k: int = 5, src: str = "transcript", with_val: bool = True
     return f"""
         WITH base AS (
             SELECT *,
-                CAST(len(list_filter(regexp_split_to_array(COALESCE(text, ''), '\\s+'), x -> x <> '')) AS INT) AS token_cnt,
+                CAST(len({tokens_sql("COALESCE(text, '')")}) AS INT) AS token_cnt,
                 CAST(length(COALESCE(text, '')) AS INT) AS char_len,
                 CAST(tool IS NOT NULL AS INT) AS is_tool_use,
                 (epoch_us(ts) - min(epoch_us(ts)) OVER (PARTITION BY conv_id)) / 1e6 AS t_rel

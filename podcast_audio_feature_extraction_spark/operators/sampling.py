@@ -17,12 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from podcast_audio_feature_extraction_spark.operators.dedup import (
-    band_keys_col,
-    jaccard_col,
-    minhash_col,
-    shingles_col,
-)
+from podcast_audio_feature_extraction_spark.functions.text import shingles_col, tokens_sql
+from podcast_audio_feature_extraction_spark.operators.dedup import band_keys_col, jaccard_col, minhash_col
 
 SPLIT_BUCKETS = 10_000
 
@@ -152,7 +148,7 @@ def contamination_pairs_sql(
     """DuckDB twin of :func:`contamination_pairs` over one source table
     split by two predicates (how the driver query derives its two sides)."""
     n_bands = n_hashes // band_size
-    toks = "list_filter(regexp_split_to_array(COALESCE(text,''), '\\s+'), x -> x <> '')"
+    toks = tokens_sql("COALESCE(text,'')")
     sh = (
         f"list_distinct(CASE WHEN len({toks}) >= {k} THEN list_transform(range(len({toks}) - {k - 1}), "
         f"i -> array_to_string({toks}[i+1:i+{k}], ' ')) ELSE [COALESCE(text,'')] END)"

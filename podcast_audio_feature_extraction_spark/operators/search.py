@@ -9,8 +9,10 @@ scoring expression over the segments table:
         2.0 * tf(term, seg_words) + 1.0 * tf(term, conv_name)
 
 tf = term occurrence count (declarative: size(filter(tokens, = term)));
-one tokenizer (``_toks``) and one tf helper (:func:`term_freq`) serve
-every path. That simple scorer keeps the reference's dataflow shape.
+one tokenizer (``_toks``, the lower-cased ``functions/text`` tokens) and
+one tf helper (:func:`term_freq`) serve every path, and every query
+string splits into terms with ``split_ws``, the same whitespace class.
+That simple scorer keeps the reference's dataflow shape.
 
 BM25 (Lucene idf, k1/b length normalization, best-fields max with the
 seg_words^2 boost) has ONE scorer, ``_bm25_rank``, and one inline stats
@@ -31,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from podcast_audio_feature_extraction_spark.checkpoint import swap_cached as _swap_cached
+from podcast_audio_feature_extraction_spark.functions.text import split_ws, tokens_col, tokens_sql
 from podcast_audio_feature_extraction_spark.functions.time import ts_micros as _ts_micros
 
 # single-slot cache for bm25_topk_fused's per-segment table (see
@@ -39,9 +42,10 @@ _FUSED_SEG_CKPT: list = [None]
 
 
 def _toks(col: Column) -> Column:
-    """The one tokenizer: lower-cased whitespace split, empties dropped,
-    NULL text -> no tokens."""
-    return F.filter(F.split(F.lower(F.coalesce(col, F.lit(""))), r"\s+"), lambda x: x != "")
+    """The one search tokenizer: the lower-cased text's
+    :func:`~podcast_audio_feature_extraction_spark.functions.text.tokens_col`
+    tokens (NULL text -> no tokens)."""
+    return tokens_col(F.lower(col))
 
 
 def term_freq(tokens: Column, term: str) -> Column:
@@ -68,7 +72,7 @@ def search_segments(
 ) -> DataFrame:
     """Top-k segments for a query string; optional conversation dimension
     joined via seg_id -> conv_id (J3) with its text scored at dim_weight."""
-    terms = [t for t in query.lower().split() if t]
+    terms = split_ws(query.lower())
     seg = segments.withColumn("conv_id_from_seg", F.split(F.col("seg_id"), "_")[0])
     score = score_expr(F.col("seg_words"), terms, words_weight)
     if conv_dim is not None:
@@ -279,7 +283,7 @@ def bm25_topk(
     the top-k is TakeOrderedAndProject. No per-term join, no shuffle
     beyond the stats agg — the same plan works at any corpus size. An
     empty (or all-blank) query returns no rows."""
-    terms = [t for t in query.lower().split() if t]
+    terms = split_ws(query.lower())
     seg, fields = _prep_fields(segments, conv_dim, words_boost, dim_boost)
     fields = [
         (f, boost, F.col(f"__dl_{f}"), [term_freq(F.col(f"__toks_{f}"), t).cast("double") for t in terms])
@@ -325,7 +329,7 @@ def bm25_topk_fused(
     want when serving search without a stored segment table: the shuffle
     carries a handful of longs per (row, window) instead of the window's
     full text."""
-    terms = [t for t in query.lower().split() if t]
+    terms = split_ws(query.lower())
 
     # tokenize ONCE into a real column — per-term tf expressions over the
     # inline _toks(...) expression would re-split the text per term
@@ -382,7 +386,23 @@ def bm25_topk_fused(
 
 
 def _toks_sql(expr: str) -> str:
-    return f"list_filter(regexp_split_to_array(lower(COALESCE({expr},'')), '\\s+'), x -> x <> '')"
+    return tokens_sql(f"lower(COALESCE({expr},''))")
+
+
+# the DuckDB twins' conversation dimension (:func:`conv_dimension`) and
+# tokenized two-field BM25 base (:func:`_prep_fields`)
+_CONV_DIM_SQL = """
+        , conv_dim AS (
+            SELECT conv_id AS dim_conv_id,
+                   string_agg(text, ' ' ORDER BY turn_idx) AS dim_text
+            FROM transcript WHERE turn_idx < 3 GROUP BY conv_id
+        ),"""
+_BM25_BASE_SQL = _CONV_DIM_SQL + f"""
+        __base AS (
+            SELECT s.seg_id, {_toks_sql("s.seg_words")} AS t0, {_toks_sql("d.dim_text")} AS t1
+            FROM segments s
+            LEFT JOIN conv_dim d ON string_split(s.seg_id, '_')[1] = d.dim_conv_id
+        ),"""
 
 
 def _field_score_sql(f: str, terms: list[str], k1: float, b: float) -> str:
@@ -415,7 +435,7 @@ def bm25_indexed_sql(
     blocks = []
     selects = []
     for qi, query in enumerate(queries):
-        terms = [t for t in query.lower().split() if t]
+        terms = split_ws(query.lower())
         df_cols = []
         for f in ("t0", "t1"):
             for i, t in enumerate(terms):
@@ -436,17 +456,7 @@ def bm25_indexed_sql(
         )
         selects.append(f"SELECT query, seg_id, bm25 FROM __top_q{qi}")
     return (
-        f"""
-        , conv_dim AS (
-            SELECT conv_id AS dim_conv_id,
-                   string_agg(text, ' ' ORDER BY turn_idx) AS dim_text
-            FROM transcript WHERE turn_idx < 3 GROUP BY conv_id
-        ),
-        __base AS (
-            SELECT s.seg_id, {_toks_sql("s.seg_words")} AS t0, {_toks_sql("d.dim_text")} AS t1
-            FROM segments s
-            LEFT JOIN conv_dim d ON string_split(s.seg_id, '_')[1] = d.dim_conv_id
-        ),
+        f"""{_BM25_BASE_SQL}
         __tdf AS (
             SELECT 't0' AS field, term, CAST(count(*) AS DOUBLE) AS df
             FROM (SELECT unnest(list_distinct(t0)) AS term FROM __base) GROUP BY term
@@ -475,9 +485,7 @@ def bm25_topk_sql(
 ) -> str:
     """DuckDB twin of :func:`bm25_topk` (embed after
     `WITH transcript AS (...), segments AS (...)`)."""
-    terms = [t for t in query.lower().split() if t]
-
-    toks = _toks_sql
+    terms = split_ws(query.lower())
 
     fields = [("t0", words_boost), ("t1", dim_boost)]
     stats_cols = ["CAST(count(*) AS DOUBLE) AS __n"]
@@ -489,17 +497,7 @@ def bm25_topk_sql(
     def field_score(f: str) -> str:
         return _field_score_sql(f, terms, k1, b)
 
-    return f"""
-        , conv_dim AS (
-            SELECT conv_id AS dim_conv_id,
-                   string_agg(text, ' ' ORDER BY turn_idx) AS dim_text
-            FROM transcript WHERE turn_idx < 3 GROUP BY conv_id
-        ),
-        __base AS (
-            SELECT s.seg_id, {toks("s.seg_words")} AS t0, {toks("d.dim_text")} AS t1
-            FROM segments s
-            LEFT JOIN conv_dim d ON string_split(s.seg_id, '_')[1] = d.dim_conv_id
-        ),
+    return f"""{_BM25_BASE_SQL}
         __stats AS (SELECT {", ".join(stats_cols)} FROM __base),
         __scored AS (
             SELECT seg_id,
@@ -515,20 +513,14 @@ def bm25_topk_sql(
 
 def search_segments_sql(query: str, k: int = 100, words_weight: float = 2.0, dim_weight: float = 1.0) -> str:
     """DuckDB twin (embed after `WITH transcript AS (...), segments AS (...)`)."""
-    terms = [t for t in query.lower().split() if t]
+    terms = split_ws(query.lower())
 
     def tf(expr: str, term: str) -> str:
-        toks = f"list_filter(regexp_split_to_array(lower(COALESCE({expr},'')), '\\s+'), x -> x <> '')"
-        return f"len(list_filter({toks}, x -> x = '{term}'))"
+        return f"len(list_filter({_toks_sql(expr)}, x -> x = '{term}'))"
 
     seg_score = " + ".join(tf("seg_words", t) for t in terms) or "0"
     dim_score = " + ".join(tf("dim_text", t) for t in terms) or "0"
-    return f"""
-        , conv_dim AS (
-            SELECT conv_id AS dim_conv_id,
-                   string_agg(text, ' ' ORDER BY turn_idx) AS dim_text
-            FROM transcript WHERE turn_idx < 3 GROUP BY conv_id
-        ),
+    return f"""{_CONV_DIM_SQL}
         scored AS (
             SELECT s.seg_id,
                    round({words_weight} * ({seg_score}) + {dim_weight} * (COALESCE({dim_score}, 0)), 6) AS es_score

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from podcast_audio_feature_extraction_spark.functions.text import tokens_col, tokens_sql
 from podcast_audio_feature_extraction_spark.functions.time import ts_micros
 
 
@@ -115,7 +116,7 @@ def build_segments(
             F.col("win.start").alias("win_start"),
             F.col("win.end").alias("win_end"),
             "seg_words",
-            F.size(F.filter(F.split(F.col("seg_words"), r"\s+"), lambda x: x != "")).cast("int").alias("seg_length"),
+            F.size(tokens_col(F.col("seg_words"))).cast("int").alias("seg_length"),
             "n_turns",
             "seg_speakers",
         )
@@ -132,7 +133,7 @@ def build_segments_sql(length_s: int = 120, hop_s: int = 60, src: str = "transcr
                win_start,
                win_start + INTERVAL {length_s} SECOND AS win_end,
                string_agg(text, ' ' ORDER BY ts, turn_idx) AS seg_words,
-               CAST(len(list_filter(regexp_split_to_array(string_agg(text, ' ' ORDER BY ts, turn_idx), '\\s+'), x -> x <> '')) AS INT) AS seg_length,
+               CAST(len({tokens_sql("string_agg(text, ' ' ORDER BY ts, turn_idx)")}) AS INT) AS seg_length,
                count(*) AS n_turns,
                count(DISTINCT role) AS seg_speakers
         FROM (

@@ -21,7 +21,9 @@ import re
 import numpy as np
 import pandas as pd
 
-_WS = re.compile(r"\s+")
+# spelled out, not imported: the oracle re-derives the engine's token
+# class (functions/text.WS) independently
+_WS = re.compile(r"[ \t\n\f\r]+")
 
 
 def _tokens(text) -> list[str]:

@@ -73,98 +73,6 @@ def backfill_features(frame: DataFrame, feature_table: DataFrame) -> DataFrame:
     )
 
 
-def build_feature_table_incremental(
-    transcripts: DataFrame,
-    new_turns: DataFrame,
-    stored_features: DataFrame,
-    gap_s: float = 1800.0,
-    k: int = 5,
-    embed_dim: int = 64,
-    val_col: str | None = "val",
-    collect_filter_threshold: int = 10_000,
-) -> DataFrame:
-    """Incremental (delta) feature build: when ``new_turns`` arrive,
-    recompute features ONLY for the conversations they touch and keep
-    every other conversation's stored rows verbatim.
-
-    The unit of incremental work is the CONVERSATION: session ids and
-    rolling/lag features depend on a conversation's whole history, so a
-    new turn can change its conversation's earlier feature rows
-    (session_len, lead context) but can never affect another
-    conversation. At 10^12-turn scale this is the difference between
-    re-aggregating the world and touching the ~10^-5 of it that moved:
-
-    - ``touched`` is the distinct conv_id set of the delta (small);
-    - the rebuild input is one broadcast LEFT-SEMI join (partition-pruned
-      further if the transcript table is partitioned/bucketed by conv_id);
-    - untouched rows come from the stored table via broadcast LEFT-ANTI —
-      a scan + filter, no shuffle of the big side.
-
-    Result is row-identical to a full :func:`build_feature_table` over
-    ``transcripts`` (test-pinned).
-
-    ``transcripts`` must already INCLUDE the new turns (it is the current
-    snapshot — e.g. the table after the delta's append commit).
-
-    ``collect_filter_threshold``: when the touched set is at most this
-    many conversations (the typical delta — it is the POINT of the
-    incremental path), the conv_id list is collected and applied as an
-    ``isin`` PREDICATE instead of a semi-join. A join cannot move below
-    the derivation's Window, but a deterministic predicate on the
-    window's own partition key pushes through it (plan-asserted), so
-    only the touched conversations' rows ever reach the feature shuffle
-    — and when the transcript is a STORED table whose conv_id is a real
-    column (the production deployment), the same predicate lands in the
-    parquet scan as `PushedFilters: In(conv_id, ...)` / partition
-    pruning. The kept side gets the complementary NOT-In pushed into
-    the stored table's scan. Set to 0 to force the pure-join form
-    (unbounded touched sets). Measured at sf0.1 (~1% touched):
-    full 2.05 s, join form 1.60 s, predicate form 1.29 s — the residual
-    floor is materializing the kept side's output rows, which a
-    partition-overwrite sink does not pay (that shape is
-    :func:`delta_rebuild_partitioned` + :func:`commit_rebuilt_partitions`).
-
-    NOTE: with ``collect_filter_threshold > 0`` this function runs an
-    EAGER bounded collect job (``touched.limit(threshold + 1).collect()``)
-    at plan-construction time, which also evaluates the ``new_turns``
-    subtree once here and once via the returned plan. Callers that need a
-    pure/lazy builder (plan-shape tooling, cheap new_turns recomputation
-    not guaranteed) should pass ``collect_filter_threshold=0``.
-    """
-    from pyspark.sql import functions as F
-
-    touched = new_turns.select("conv_id").distinct()
-    ids = None
-    if collect_filter_threshold > 0:
-        head = touched.limit(collect_filter_threshold + 1).collect()
-        if len(head) <= collect_filter_threshold:
-            # drop NULL keys from the In-list: a NULL conv_id matches
-            # nothing in the join form either (left_semi never matches
-            # NULL), and a None inside isin() would make NOT-In
-            # three-valued-NULL for EVERY row and silently empty the
-            # kept side
-            ids = [r["conv_id"] for r in head if r["conv_id"] is not None]
-    if ids is not None:
-        rebuild_src = transcripts.filter(F.col("conv_id").isin(ids))
-        # keep NULL-keyed stored rows (the anti join keeps them too):
-        # ~In is NULL, not TRUE, for a NULL key
-        kept = stored_features.filter(
-            ~F.col("conv_id").isin(ids) | F.col("conv_id").isNull()
-        ).select(*FEATURE_COLS)
-    else:
-        bt = F.broadcast(touched)
-        rebuild_src = transcripts.join(bt, "conv_id", "left_semi")
-        kept = stored_features.join(bt, "conv_id", "left_anti").select(*FEATURE_COLS)
-    rebuilt = build_feature_table(
-        rebuild_src,
-        gap_s=gap_s,
-        k=k,
-        embed_dim=embed_dim,
-        val_col=val_col,
-    )
-    return kept.unionByName(rebuilt)
-
-
 N_CONV_BUCKETS = 512
 
 
@@ -250,15 +158,14 @@ def delta_rebuild_partitioned(
     conversation are rebuilt too — identical rows, they land in the same
     overwritten partition).
 
-    The stored transcript must already include the new turns (same
-    snapshot contract as :func:`build_feature_table_incremental`).
+    The stored transcript must already include the new turns (it is the
+    current snapshot, e.g. the table after the delta's append commit).
     Returns the rebuilt feature rows WITH conv_bucket, ready for
-    :func:`commit_rebuilt_partitions`; unlike the In-predicate form this
-    path never reads — let alone materializes — the untouched ~99%.
+    :func:`commit_rebuilt_partitions`; the untouched buckets are never
+    read, let alone materialized.
 
     NULL-keyed delta rows touch nothing: a NULL conv_id belongs to no
-    conversation (:func:`touched_buckets` drops them — the same semantics
-    as the In-predicate/semi-join forms, where NULL matches no key).
+    conversation (:func:`touched_buckets` drops them).
 
     A stored transcript pinned to another ``n_buckets`` is refused before
     any read: its partitions hold other conversations' rows."""
@@ -276,9 +183,8 @@ def delta_rebuild_partitioned(
 def commit_rebuilt_partitions(rebuilt: DataFrame, features_path: str) -> None:
     """Dynamic partition overwrite: replaces exactly the conv_bucket
     partitions present in ``rebuilt``; every other partition's files are
-    untouched (no read, no rewrite) — this is why the incremental path's
-    cost tracks the touched fraction instead of the kept-side
-    materialization floor (build_feature_table_incremental's docstring).
+    untouched (no read, no rewrite), so the incremental path's cost
+    tracks the touched fraction: it never materializes the kept rows.
     The overwrite mode is a per-write option, never the session conf: a
     concurrent writer restoring a session-wide ``static`` mid-write would
     turn this commit into a delete of every partition."""

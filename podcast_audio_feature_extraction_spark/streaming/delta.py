@@ -30,11 +30,15 @@ IDEMPOTENT without a transactional table format:
   overwrite (idempotent); its plan shuffles on conv_id and conv_bucket
   only, so a micro-batch runs 4 Spark jobs in all.
 
-A crash at ANY point — between the log write, the feature commit, the
-manifest commit, or mid-compaction — re-runs to the identical end
-state: the key-preference merge collapses any turn that a partial
-compaction left in both tables, so nothing is ever double-counted. The
-manifest entry only short-circuits clean re-deliveries.
+A crash at a tested step boundary — after the log write, before the
+manifest commit, between compaction's base overwrite and its log delete
+— re-runs to the identical end state: the key-preference merge collapses
+any turn that a partial compaction left in both tables, so nothing is
+ever double-counted. The manifest entry only short-circuits clean
+re-deliveries. A crash INSIDE a dynamic-overwrite commit is open: Spark's
+``commitJob`` deletes, then renames, one partition at a time, so such a
+crash in compaction can lose ``base`` rows, their only copy (ROADMAP
+"A crash inside a partition commit must not lose the only copy").
 
 ``compact_transcript_log`` folds the log back into base (the LSM merge):
 run it on whatever cadence keeps the log small; rebuild results are

@@ -214,3 +214,24 @@ def test_asof_rejects_value_column_colliding_with_left_column(spark):
     )
     with pytest.raises(ValueError, match=r"\['feat'\]"):
         asof_join(lsdf, rsdf, value_cols=["feat"])
+
+
+def test_asof_np_key_without_right_rows_gives_float_nan():
+    """The oracle's as-of: a left key with no right rows yields NaN values,
+    and an int value column comes out float64 for every key, with no
+    pandas FutureWarning (whose fix would change the dtypes silently)."""
+    import warnings
+
+    import numpy as np
+
+    lpdf = pd.DataFrame(
+        {"conv_id": ["a", "a", "b"], "ts": pd.to_datetime([100, 200, 150], unit="s")}
+    )
+    rpdf = pd.DataFrame({"conv_id": ["a"], "ts": pd.to_datetime([50], unit="s"), "n": [7]})
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        got = asof_np(lpdf, rpdf, value_cols=["n"])
+    got = got.sort_values(["conv_id", "ts"]).reset_index(drop=True)
+    assert got["n"].dtype == np.float64
+    assert list(got["n"][:2]) == [7.0, 7.0]
+    assert np.isnan(got["n"][2])

@@ -4,106 +4,6 @@ import pyspark.sql.functions as F
 from podcast_audio_feature_extraction_spark.plans.backfill import build_feature_table
 
 
-def test_incremental_feature_build_matches_full_rebuild(spark, transcripts_pdf):
-    """Delta build: new turns arrive for a few conversations; rebuilding
-    only the touched conversations and keeping stored rows for the rest
-    must be row-identical to a full rebuild of the new snapshot."""
-    import numpy as np
-    import pandas as pd
-
-    from podcast_audio_feature_extraction_spark.plans.backfill import (
-        build_feature_table,
-        build_feature_table_incremental,
-    )
-
-    rng = np.random.default_rng(11)
-    pdf = transcripts_pdf.copy()
-    pdf["val"] = np.round(rng.uniform(0, 100, size=len(pdf)), 2)
-    base_sdf = spark.createDataFrame(pdf)
-    stored = build_feature_table(base_sdf).localCheckpoint()
-
-    # the delta: 2 extra turns appended to the first two conversations
-    convs = pdf["conv_id"].unique()[:2]
-    delta_rows = []
-    for c in convs:
-        sub = pdf[pdf["conv_id"] == c]
-        nxt = int(sub["turn_idx"].max()) + 1
-        last_ts = sub["ts"].max()
-        delta_rows.append(
-            (c, nxt, "user", "new turn text", None, last_ts + pd.Timedelta(seconds=5), 42.0)
-        )
-    delta_pdf = pd.DataFrame(
-        delta_rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts", "val"]
-    )
-    snapshot = spark.createDataFrame(pd.concat([pdf, delta_pdf], ignore_index=True))
-    delta_sdf = spark.createDataFrame(delta_pdf)
-
-    def canon(df):
-        return (
-            df.select(
-                "conv_id", "turn_idx", "ts", "session_id",
-                F.col("functionals").cast("string").alias("functionals"),
-                F.col("embedding").cast("string").alias("embedding"),
-            )
-            .toPandas()
-            .sort_values(["conv_id", "turn_idx"], kind="mergesort")
-            .reset_index(drop=True)
-        )
-
-    inc = canon(build_feature_table_incremental(snapshot, delta_sdf, stored))
-    full = canon(build_feature_table(snapshot))
-    import pandas as pd_mod
-
-    pd_mod.testing.assert_frame_equal(inc, full)
-
-
-def test_incremental_build_never_recomputes_untouched_side(spark, transcripts_sdf):
-    """Plan assertions for the delta build, BOTH pruning forms:
-
-    - feature computation (windows + the Arrow embedding UDF) appears
-      ONLY on the rebuilt (touched) side — if the pruning regressed, the
-      untouched side would re-run the feature subtree and the node
-      counts would double;
-    - default (small touched set): the collected conv_id list becomes an
-      In-PREDICATE that pushes through the derivation's Window, so only
-      touched rows reach the feature shuffle (a join cannot move below
-      the Window);
-    - collect_filter_threshold=0 (unbounded form): broadcast semi + anti
-      joins instead."""
-    from pyspark.sql import functions as F
-
-    from podcast_audio_feature_extraction_spark.plans.backfill import (
-        build_feature_table,
-        build_feature_table_incremental,
-    )
-
-    stored = build_feature_table(transcripts_sdf).localCheckpoint()
-    delta = transcripts_sdf.filter(F.crc32(F.col("conv_id")) % 7 == 0)
-
-    def counts(df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return plan.count("Window"), plan.count("ArrowEvalPython"), plan.count("BroadcastHashJoin"), plan
-
-    full_w, full_arrow, _, _ = counts(build_feature_table(transcripts_sdf))
-
-    inc_w, inc_arrow, inc_bcast, inc_plan = counts(
-        build_feature_table_incremental(transcripts_sdf, delta, stored)
-    )
-    assert inc_w == full_w, (inc_w, full_w)          # windows only on the rebuilt side
-    assert inc_arrow == full_arrow == 1              # ONE embedding UDF pass total
-    assert inc_bcast == 0                            # predicate form: no joins at all
-    # the In-predicate sits BELOW the Window (pushed through the
-    # derivation): the filter on the scan side precedes the first Window
-    assert " IN " in inc_plan or " INSET " in inc_plan.upper(), inc_plan[:500]
-    assert "Filter" in inc_plan, "expected a pushed Filter in the rebuilt subtree"
-
-    j_w, j_arrow, j_bcast, _ = counts(
-        build_feature_table_incremental(transcripts_sdf, delta, stored, collect_filter_threshold=0)
-    )
-    assert j_w == full_w and j_arrow == 1
-    assert j_bcast >= 2                              # broadcast semi (rebuild) + anti (kept)
-
-
 def test_conv_bucket_spark_matches_zlib(spark, transcripts_sdf):
     """touched_buckets computes buckets driver-side with zlib.crc32; the
     stored layout buckets with Spark's crc32 — same polynomial, pinned."""

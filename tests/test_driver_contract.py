@@ -72,3 +72,21 @@ def test_api_facade_resolves_every_name():
     assert len(eng._API) > 30
     for n in eng._API:
         assert callable(getattr(eng, n)), n
+
+
+def test_oracle_sql_text_is_frozen(monkeypatch):
+    """The DuckDB twins are the correctness reference, so a refactor of the
+    Spark side must not move a byte of them. The digest covers every
+    statement at the default oracle scale (sf0.01: the IVF/PQ/PCA twins
+    inline literals fitted from it)."""
+    import hashlib
+
+    import __spark_entry__ as e
+
+    monkeypatch.delenv("SPARK_GRAFT_ORACLE_SF", raising=False)
+    o = e.oracle_sql()
+    text = "\n".join(name + "\0" + o[name] for name in sorted(o))
+    assert (
+        hashlib.sha256(text.encode()).hexdigest()
+        == "f185694970b3aab81636ab19df184b9d46246baca748f24039708ab91e009790"
+    )
