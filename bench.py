@@ -470,10 +470,13 @@ def run_headline(sf_dir: str, cpus: str) -> tuple[dict, dict]:
     _add("feature_build_full", lambda: _materialize(build_feature_table(t)))
 
     # The transcript is a STORED table hive-partitioned by conv_bucket; the
-    # delta rebuild reads ONLY the touched partitions (directory pruning)
-    # and a dynamic partition overwrite would rewrite exactly those
-    # buckets — so the cost tracks the touched fraction, with no kept-side
-    # rows to materialize. Store once, untimed (single local disk ≠
+    # delta rebuild finds the touched buckets by the layout's one rule
+    # (operators/resume.touched_aggs, one job), reads ONLY those
+    # partitions through its one reader (read_buckets: directory pruning,
+    # the delta's schema, no inference) and its one writer
+    # (commit_rebuilt_partitions) would rewrite exactly those buckets — so
+    # the cost tracks the touched fraction, with no kept-side rows to
+    # materialize. Store once, untimed (single local disk ≠
     # cluster storage); both rows read the same stored table
     # and are INTERLEAVED so the ratio is phase-robust. The timed delta is
     # the rebuild compute (what the noop protocol measures everywhere);

@@ -72,7 +72,7 @@ _API = {
     "backfill_features": "plans.backfill",
     "write_conv_partitioned": "plans.backfill",
     "delta_rebuild_partitioned": "plans.backfill",
-    "commit_rebuilt_partitions": "plans.backfill",
+    "commit_rebuilt_partitions": "operators.resume",
     "touched_buckets": "plans.backfill",
     "stream_incremental_feature_build": "streaming.delta",
     "compact_transcript_log": "streaming.delta",

@@ -1,10 +1,11 @@
 """Per-partition checkpoint/resume with lineage metrics (SURVEY.md §2.2 P7,
-§2.1 S16/S17, §2.10 E2).
+§2.1 S16/S17, §2.10 E2), and the home of the engine's one table layout.
 
 Re-expresses the reference's skip-if-output-exists incremental recompute
 (/root/reference/src/features/FeatureExtractor.py:67-90) and its
 failed-URI retry list (/root/reference/src/search/index.py:125-160) as
-bucket-level checkpointing over the engine's one table layout:
+bucket-level checkpointing over the engine's one table layout, which this
+module owns whole:
 
 - work is bucketed by conv_id (:func:`bucket_col`, ``crc32(conv_id) %
   n_buckets``) into hive partitions ``conv_bucket={b}`` — the layout the
@@ -16,6 +17,10 @@ bucket-level checkpointing over the engine's one table layout:
   snapshot metadata (no Iceberg runtime jars in this sandbox; the commit
   unit and resume semantics are identical) — and pins ``n_buckets``
   (:func:`pin_n_buckets`), which every writer of the layout checks;
+- one writer (:func:`commit_rebuilt_partitions`, a dynamic overwrite of
+  the partitions a frame holds), one reader (:func:`read_buckets`) and one
+  touched-bucket rule (:func:`touched_aggs`) serve every user of the
+  layout: ``run_resumable``, ``plans.backfill`` and ``streaming.delta``;
 - resume = anti-join of the bucket work-list against the manifest: only
   missing buckets are recomputed, exactly-once per bucket (data land +
   manifest append happen per completed batch; a crash mid-batch re-runs
@@ -44,33 +49,26 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 MANIFEST_NAME = "_manifest.json"
 
 
-def write_features(
-    df: DataFrame,
-    path: str,
-    order_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    codec: str = "zstd",
-    mode: str = "overwrite",
-) -> None:
+def write_features(df: DataFrame, path: str) -> None:
     """Feature-table sink (S11-S13 analog of the reference's complevel-6
     HDF5): zstd-compressed parquet written in stable (conv_id, turn_idx)
     order within files (the T4 deterministic-order invariant, and what
     earns ts/key row-group pruning on later ranged reads)."""
-    df.sortWithinPartitions(*order_cols).write.option("compression", codec).mode(mode).parquet(path)
+    df.sortWithinPartitions("conv_id", "turn_idx").write.option("compression", "zstd").mode("overwrite").parquet(path)
 
 
 def bucket_col(key_col: str, n_buckets: int):
     """The table layout's bucket of a row: crc32 of the utf-8 key, mod
     ``n_buckets`` (Spark's crc32 is a non-negative bigint, so the remainder
-    is a valid bucket). crc32 is the same polynomial in Spark and Python's
-    zlib, so the driver can bucket conv_ids it has collected
-    (``plans.backfill.touched_buckets`` collects a delta's distinct
-    conv_ids in one bounded Spark job, then buckets them with zlib;
-    parity test-pinned)."""
+    is a valid bucket). The package computes every bucket with this
+    expression, in Spark; perfbench's ``corpus.conv_bucket`` is its only
+    driver-side twin (the same CRC-32 in Python; parity test-pinned)."""
     return (F.crc32(F.col(key_col).cast("string")) % n_buckets).cast("int")
 
 
@@ -90,14 +88,15 @@ def _commit_manifest(out_dir: str, manifest: dict) -> None:
     os.replace(tmp, path)  # atomic on POSIX
 
 
-def pin_n_buckets(manifest: dict, path: str, n_buckets: int) -> dict:
-    """Return ``manifest`` with ``n_buckets`` pinned; raise if the table at
-    ``path`` is already pinned to another count. The bucket count is part
-    of a layout table's identity: another modulus assigns conversations to
-    other buckets, so a rebuild would read the wrong base rows and a
-    dynamic overwrite would leave the old layout's rows beside the new
-    ones. Every writer of the layout pins before it writes and records the
-    pin with its manifest commit."""
+def pin_n_buckets(path: str, n_buckets: int) -> dict:
+    """The manifest of the table at ``path`` with ``n_buckets`` pinned;
+    raise if the table is already pinned to another count. The bucket
+    count is part of a layout table's identity: another modulus assigns
+    conversations to other buckets, so a rebuild would read the wrong base
+    rows and a dynamic overwrite would leave the old layout's rows beside
+    the new ones. Every writer of the layout pins before it writes and
+    records the pin with its manifest commit."""
+    manifest = load_manifest(path)
     pinned = manifest.get("n_buckets")
     if pinned is not None and pinned != n_buckets:
         raise ValueError(
@@ -106,6 +105,62 @@ def pin_n_buckets(manifest: dict, path: str, n_buckets: int) -> dict:
         )
     manifest["n_buckets"] = n_buckets
     return manifest
+
+
+def touched_aggs(n_buckets: int):
+    """The one touched-bucket rule of a conv_id-keyed frame: its row count
+    (``rows``) and the buckets it touches (``buckets``). collect_set skips
+    a NULL conv_id's NULL bucket, so such a row counts but touches
+    nothing."""
+    return F.count(F.lit(1)).alias("rows"), F.collect_set(bucket_col("conv_id", n_buckets)).alias("buckets")
+
+
+def read_buckets(spark: SparkSession, path: str, buckets: list[int], schema: T.StructType) -> DataFrame:
+    """The layout table's ``buckets`` partitions read with ``schema`` (no
+    inference job; the filter prunes directories), without the
+    ``conv_bucket`` column, or an empty frame on bootstrap: a missing
+    path, or a directory with no file yet. Every other read failure (a
+    corrupt footer, an IO or permission error) propagates: reading such a
+    table as empty would let the caller overwrite the touched buckets
+    with partial rows and lose the table's rows for good."""
+    read_schema = T.StructType(list(schema.fields) + [T.StructField("conv_bucket", T.IntegerType())])
+    try:
+        table = spark.read.schema(read_schema).parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return spark.createDataFrame([], schema)
+    return table.filter(F.col("conv_bucket").isin(buckets)).drop("conv_bucket")
+
+
+def commit_rebuilt_partitions(rebuilt: DataFrame, path: str, *metrics):
+    """The one writer of the layout: replaces exactly the ``conv_bucket``
+    partitions present in ``rebuilt`` (dynamic partition overwrite); every
+    other partition's files are untouched (no read, no rewrite), so an
+    incremental commit's cost tracks the touched fraction. ``rebuilt``
+    needs only a ``conv_bucket`` column, and ``path`` needs no manifest:
+    pinning and recording are the caller's.
+
+    Hashing on the bucket alone puts each bucket in one task (one file
+    per bucket) and lets AQE coalesce the small write stage; sorting by
+    bucket first meets the partitioned writer's required ordering, so the
+    writer adds no second sort. A frame with a ``conv_id`` is sorted by it
+    within the bucket, so the files keep conversations contiguous.
+
+    ``metrics`` (aggregate Columns) ride the write job as observed
+    metrics, returned as a Row (None when none are passed). The
+    observation sits ABOVE the shuffle: when every bucket is empty, AQE
+    replaces the empty shuffle's subtree, and an observation below it
+    would vanish. The overwrite mode is a per-write option, never the
+    session conf: a concurrent writer restoring a session-wide ``static``
+    mid-write would turn this commit into a delete of every partition."""
+    order = ["conv_bucket"] + (["conv_id"] if "conv_id" in rebuilt.columns else [])
+    out = rebuilt.repartition("conv_bucket").sortWithinPartitions(*order)
+    obs = Observation() if metrics else None
+    if obs:
+        out = out.observe(obs, *metrics)
+    out.write.partitionBy("conv_bucket").mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(path)
+    return obs.get if obs else None
 
 
 def run_resumable(
@@ -130,7 +185,7 @@ def run_resumable(
     appended to the manifest).
     """
     os.makedirs(out_dir, exist_ok=True)
-    manifest = pin_n_buckets(load_manifest(out_dir), out_dir, n_buckets)
+    manifest = pin_n_buckets(out_dir, n_buckets)
     done = set(int(b) for b in manifest["buckets"])
     todo = [b for b in range(n_buckets) if b not in done]
     run = {
@@ -141,8 +196,6 @@ def run_resumable(
         "rows_out": 0,
         "wall_s": 0.0,
     }
-    from pyspark.sql import Observation
-
     plan = None
     for i in range(0, len(todo), batch_size):
         batch = todo[i : i + batch_size]
@@ -152,31 +205,15 @@ def run_resumable(
         # per-bucket row counts ride along as observed metrics of the write
         # job itself — recomputing them with a separate groupBy/collect
         # (round-1 design) re-executed the whole transform, a 2x compute
-        # tax on every checkpointed batch. The observation sits ABOVE the
-        # shuffle: when every bucket of the batch is empty, AQE replaces
-        # the empty shuffle's subtree, and an observation below it would
-        # vanish (Observation.get then fails instead of reporting None).
-        # Hashing on the bucket alone puts each bucket in one task (one
-        # file per bucket) and lets AQE coalesce the small write stage;
-        # sorting by bucket first meets the partitioned writer's required
-        # ordering, so the writer adds no second sort.
-        obs = Observation(f"resume-batch-{i}")
-        out = (
-            plan.filter(F.col("conv_bucket").isin(batch))
-            .repartition("conv_bucket")
-            .sortWithinPartitions("conv_bucket", "conv_id")
-            .observe(obs, *[F.sum((F.col("conv_bucket") == b).cast("long")).alias(f"b{b}") for b in batch])
-        )
-        # land data first, then commit the manifest — a crash between the
-        # two re-runs the batch (idempotent: partition dirs are overwritten)
-        (
-            out.write.partitionBy("conv_bucket")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(out_dir)
+        # tax on every checkpointed batch. Data lands first, then the
+        # manifest commits — a crash between the two re-runs the batch
+        # (idempotent: partition dirs are overwritten)
+        metrics = commit_rebuilt_partitions(
+            plan.filter(F.col("conv_bucket").isin(batch)),
+            out_dir,
+            *[F.sum((F.col("conv_bucket") == b).cast("long")).alias(f"b{b}") for b in batch],
         )
         dt = time.perf_counter() - t0
-        metrics = obs.get
         for b in batch:
             n = int(metrics[f"b{b}"] or 0)  # None: the whole batch was empty
             manifest["buckets"][str(b)] = {

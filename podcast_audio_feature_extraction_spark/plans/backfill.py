@@ -18,15 +18,21 @@ across the remaining stages.
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import DataFrame
 
 from podcast_audio_feature_extraction_spark.functions.embedding import with_embedding
 from podcast_audio_feature_extraction_spark.operators.asof import asof_join
 from podcast_audio_feature_extraction_spark.operators.resume import (
+    MANIFEST_NAME,
     _commit_manifest,
     bucket_col,
-    load_manifest,
+    commit_rebuilt_partitions,
     pin_n_buckets,
+    read_buckets,
+    touched_aggs,
 )
 from podcast_audio_feature_extraction_spark.operators.rolling import assemble_functionals, turn_features
 from podcast_audio_feature_extraction_spark.operators.sessionize import sessionize
@@ -81,63 +87,40 @@ def conv_bucket_col(n_buckets: int = N_CONV_BUCKETS):
     return bucket_col("conv_id", n_buckets)
 
 
-def write_conv_partitioned(
-    df: DataFrame, path: str, n_buckets: int = N_CONV_BUCKETS, mode: str = "overwrite"
-) -> None:
-    """Store a conv_id-keyed table hive-partitioned by ``conv_bucket`` —
-    the production layout for incremental rebuilds: a delta touching c
-    conversations rewrites at most c partitions and the rebuild scan
-    reads only those directories (partition pruning, no file row-group
-    even opened for untouched buckets). ``n_buckets`` is pinned in the
-    table's manifest; a table pinned to another count is refused.
+def write_conv_partitioned(df: DataFrame, path: str, n_buckets: int = N_CONV_BUCKETS) -> None:
+    """Store a conv_id-keyed table as a NEW layout table at ``path``:
+    hive-partitioned by ``conv_bucket`` through the one writer
+    (:func:`commit_rebuilt_partitions`), ``n_buckets`` pinned in its
+    manifest — the production layout for incremental rebuilds: a delta
+    touching c conversations rewrites at most c partitions and the
+    rebuild scan reads only those directories (partition pruning, no file
+    row-group even opened for untouched buckets).
+
+    A path pinned to another count is refused first; then any path that
+    already holds a table (a manifest or a ``conv_bucket=`` partition).
+    Storing is not updating: the delta stream and compaction update a
+    layout table, and a re-store would drop what they recorded
+    (``delta_batches``) — store into a fresh path instead.
 
     Granularity trade: corpus_bytes / n_buckets is the rewrite
     amplification unit (a touched bucket is rebuilt whole). Pick
     n_buckets >> typical delta's conversation count but small enough
     that a bucket is still a healthy parquet file set (e.g. 100 TB /
-    8192 buckets = ~12 GB/bucket). repartition by bucket first so each
-    bucket is written by one task (one file per bucket, not
-    tasks x buckets tiny files)."""
-    pin_n_buckets(load_manifest(path), path, n_buckets)
-    (
-        df.withColumn("conv_bucket", conv_bucket_col(n_buckets))
-        .repartition("conv_bucket")
-        .write.partitionBy("conv_bucket")
-        .mode(mode)
-        .parquet(path)
-    )
-    # an overwrite replaced the old manifest along with the data
-    _commit_manifest(path, pin_n_buckets(load_manifest(path), path, n_buckets))
+    8192 buckets = ~12 GB/bucket)."""
+    manifest = pin_n_buckets(path, n_buckets)
+    if os.path.exists(os.path.join(path, MANIFEST_NAME)) or glob.glob(os.path.join(path, "conv_bucket=*")):
+        raise ValueError(f"{path} already holds a layout table — store into a fresh path")
+    commit_rebuilt_partitions(df.withColumn("conv_bucket", conv_bucket_col(n_buckets)), path)
+    _commit_manifest(path, manifest)
 
 
-def touched_buckets(new_turns: DataFrame, n_buckets: int = N_CONV_BUCKETS, max_collect: int = 100_000) -> list[int]:
-    """Distinct bucket ids the delta touches, computed driver-side with
-    zlib.crc32 (== Spark crc32; parity test-pinned). EAGER bounded
-    collect of the distinct conv_id set — raises if the delta touches
-    more than ``max_collect`` conversations (at that size rebuild the
-    table instead of enumerating partitions)."""
-    import zlib
-
-    from pyspark.sql import functions as F
-
-    # NULL keys are dropped from the RESULT anyway — filtering before the
-    # limit keeps a NULL row from spuriously tripping the max_collect
-    # bound when the delta has exactly max_collect real conversations
-    rows = (
-        new_turns.select("conv_id")
-        .filter(F.col("conv_id").isNotNull())
-        .distinct()
-        .limit(max_collect + 1)
-        .collect()
-    )
-    if len(rows) > max_collect:
-        raise ValueError(
-            f"delta touches > {max_collect} conversations — use a full rebuild "
-            "(partition enumeration no longer pays)"
-        )
-    return sorted(
-        {zlib.crc32(r["conv_id"].encode()) % n_buckets for r in rows if r["conv_id"] is not None}
-    )
+def touched_buckets(new_turns: DataFrame, n_buckets: int = N_CONV_BUCKETS) -> list[int]:
+    """The buckets a conv_id-keyed delta touches, sorted: the one
+    touched-bucket rule (``operators.resume.touched_aggs``) evaluated
+    EAGERLY with one ``select(...).first()``. The set has at most
+    ``n_buckets`` elements for a delta of any size; a NULL conv_id
+    touches none."""
+    return sorted(new_turns.select(*touched_aggs(n_buckets)).first()["buckets"])
 
 
 def delta_rebuild_partitioned(
@@ -152,16 +135,18 @@ def delta_rebuild_partitioned(
 ) -> DataFrame:
     """Production-shape delta build over a STORED transcript partitioned
     by conv_bucket (:func:`write_conv_partitioned`): the rebuild reads
-    ONLY the delta's touched partitions (PartitionFilters prune the
+    ONLY the delta's touched partitions, through the layout's one reader
+    (``operators.resume.read_buckets``: PartitionFilters prune the
     directory listing — plan-asserted) and recomputes every conversation
     in them (the bucket is the rewrite unit, so bucket-mates of a touched
     conversation are rebuilt too — identical rows, they land in the same
     overwritten partition).
 
     The stored transcript must already include the new turns (it is the
-    current snapshot, e.g. the table after the delta's append commit).
-    Returns the rebuilt feature rows WITH conv_bucket, ready for
-    :func:`commit_rebuilt_partitions`; the untouched buckets are never
+    current snapshot, e.g. the table after the delta's append commit), so
+    it is read with the delta's schema, as the stream reads its base with
+    the batch's. Returns the rebuilt feature rows WITH conv_bucket, ready
+    for :func:`commit_rebuilt_partitions`; the untouched buckets are never
     read, let alone materialized.
 
     NULL-keyed delta rows touch nothing: a NULL conv_id belongs to no
@@ -169,32 +154,10 @@ def delta_rebuild_partitioned(
 
     A stored transcript pinned to another ``n_buckets`` is refused before
     any read: its partitions hold other conversations' rows."""
-    from pyspark.sql import functions as F
-
-    pin_n_buckets(load_manifest(transcript_path), transcript_path, n_buckets)
-    buckets = touched_buckets(new_turns, n_buckets)
-    src = spark.read.parquet(transcript_path).filter(F.col("conv_bucket").isin(buckets))
-    rebuilt = build_feature_table(
-        src.drop("conv_bucket"), gap_s=gap_s, k=k, embed_dim=embed_dim, val_col=val_col
-    )
+    pin_n_buckets(transcript_path, n_buckets)
+    src = read_buckets(spark, transcript_path, touched_buckets(new_turns, n_buckets), new_turns.schema)
+    rebuilt = build_feature_table(src, gap_s=gap_s, k=k, embed_dim=embed_dim, val_col=val_col)
     return rebuilt.withColumn("conv_bucket", conv_bucket_col(n_buckets))
-
-
-def commit_rebuilt_partitions(rebuilt: DataFrame, features_path: str) -> None:
-    """Dynamic partition overwrite: replaces exactly the conv_bucket
-    partitions present in ``rebuilt``; every other partition's files are
-    untouched (no read, no rewrite), so the incremental path's cost
-    tracks the touched fraction: it never materializes the kept rows.
-    The overwrite mode is a per-write option, never the session conf: a
-    concurrent writer restoring a session-wide ``static`` mid-write would
-    turn this commit into a delete of every partition."""
-    (
-        rebuilt.repartition("conv_bucket")
-        .write.partitionBy("conv_bucket")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(features_path)
-    )
 
 
 def flagship(transcripts: DataFrame, gap_s: float = 1800.0, k: int = 5) -> DataFrame:

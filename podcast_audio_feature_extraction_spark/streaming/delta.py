@@ -3,11 +3,12 @@ drives the partitioned delta-rebuild loop end to end.
 
 It composes two pieces:
 
-- the engine's one table layout — hive partitions ``conv_bucket={b}``
-  with ``b = crc32(conv_id) % n_buckets`` (``operators.resume.bucket_col``)
-  and ``n_buckets`` pinned in the table's ``_manifest.json`` — with its
-  partition-pruned rebuild and dynamic-overwrite commit
-  (``plans.backfill.commit_rebuilt_partitions``), and
+- the engine's one table layout, all of it in ``operators.resume``:
+  hive partitions ``conv_bucket={b}`` with ``b = crc32(conv_id) %
+  n_buckets`` (``bucket_col``), ``n_buckets`` pinned in the table's
+  ``_manifest.json`` (``pin_n_buckets``), the one touched-bucket rule
+  (``touched_aggs``), the one reader (``read_buckets``) and the one
+  writer, a dynamic-overwrite commit (``commit_rebuilt_partitions``), and
 - the exactly-once foreachBatch idempotence pattern: Structured
   Streaming may re-deliver a micro-batch with the same batchId after a
   failure, so the sink records committed batchIds in the feature table's
@@ -22,13 +23,17 @@ IDEMPOTENT without a transactional table format:
 - ``features`` — the feature table in the same layout: the output
   directory of ``jobs/backfill_job.py`` (``run_resumable``) as-is;
 - ``log``   — per-batch directories ``batch=<id>/``, written once per
-  batch with its rows and touched buckets observed on the write (a
-  re-delivery overwrites them with the same bytes: no two-phase commit);
-- a rebuild reads base and log with the stream's schema, merges them
-  under a LOG-WINS-PER-(conv_id, turn_idx) rule (``_merged_snapshot``)
-  pruned to the touched buckets, and commits by dynamic partition
-  overwrite (idempotent); its plan shuffles on conv_id and conv_bucket
-  only, so a micro-batch runs 4 Spark jobs in all.
+  batch with the touched-bucket rule (its rows and touched buckets)
+  observed on the write (a re-delivery overwrites them with the same
+  bytes: no two-phase commit);
+- a rebuild reads base (the one reader) and log with the stream's
+  schema, merges them under a LOG-WINS-PER-(conv_id, turn_idx) rule
+  (``_merged_snapshot``) pruned to the touched buckets, and commits
+  through the one writer (idempotent); its plan shuffles on conv_id and
+  conv_bucket only, so a micro-batch runs 4 Spark jobs in all;
+- compaction evaluates the same rule over the log with one select,
+  reads base's touched buckets with the same reader and commits through
+  the same writer.
 
 A crash at a tested step boundary — after the log write, before the
 manifest commit, between compaction's base overwrite and its log delete
@@ -59,32 +64,16 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, ty
 
 from podcast_audio_feature_extraction_spark.operators.resume import (
     _commit_manifest,
-    load_manifest,
+    commit_rebuilt_partitions,
     pin_n_buckets,
+    read_buckets,
+    touched_aggs,
 )
 from podcast_audio_feature_extraction_spark.plans.backfill import (
     N_CONV_BUCKETS,
     build_feature_table,
-    commit_rebuilt_partitions,
     conv_bucket_col,
 )
-
-
-def _read_base(spark: SparkSession, base_path: str, buckets: list[int], schema: T.StructType) -> DataFrame:
-    """The base transcript's ``buckets`` partitions read with ``schema``,
-    or an empty frame on bootstrap: a missing path, or a directory with
-    no file yet. Every other read failure (a corrupt footer, an IO or
-    permission error) propagates: reading such a base as empty would let
-    the caller overwrite the touched buckets with log-only rows and lose
-    the base's rows for good."""
-    read_schema = T.StructType(list(schema.fields) + [T.StructField("conv_bucket", T.IntegerType())])
-    try:
-        base = spark.read.schema(read_schema).parquet(base_path)
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-        return spark.createDataFrame([], schema)
-    return base.filter(F.col("conv_bucket").isin(buckets)).drop("conv_bucket")
 
 
 def _merged_snapshot(base: DataFrame, log: DataFrame) -> DataFrame:
@@ -140,7 +129,7 @@ def _rebuild_batch(
     log-wins-per-key rule of :func:`_merged_snapshot`."""
     if not buckets:
         return 0
-    base = _read_base(spark, base_path, buckets, schema)
+    base = read_buckets(spark, base_path, buckets, schema)
     # the log side has no conv_bucket directory to prune: the same layout
     # expression, evaluated per row
     log = spark.read.schema(schema).parquet(log_path).filter(conv_bucket_col(n_buckets).isin(buckets))
@@ -166,11 +155,12 @@ def stream_incremental_feature_build(
     feature table current as new turns arrive.
 
     Per micro-batch: (1) land the batch in its own overwrite-idempotent
-    ``log/batch=<id>`` directory, observing its rows and touched buckets,
-    (2) rebuild ONLY those conv_bucket partitions (at most ``n_buckets``
-    for a batch of any size; a NULL conv_id touches none) from base ∪
-    log, (3) dynamic-partition-overwrite the feature table, (4) record
-    the batch in the feature manifest. Re-delivered batchIds short-circuit
+    ``log/batch=<id>`` directory, observing the touched-bucket rule (its
+    rows and touched buckets) on the write, (2) rebuild ONLY those
+    conv_bucket partitions (at most ``n_buckets`` for a batch of any
+    size; a NULL conv_id touches none) from base ∪ log, (3) commit them
+    to the feature table through the layout's one writer, (4) record the
+    batch in the feature manifest. Re-delivered batchIds short-circuit
     at (4)'s record; every earlier step is idempotent on its own.
 
     ``base_path`` is normally bootstrapped with
@@ -183,7 +173,7 @@ def stream_incremental_feature_build(
     """
     # refuse a layout pinned to another bucket count before anything runs
     for path in (base_path, features_path):
-        pin_n_buckets(load_manifest(path), path, n_buckets)
+        pin_n_buckets(path, n_buckets)
     # every batch reads base with the stream's schema; parquet fills a
     # column base lacks with NULL, so touched buckets would be rebuilt from
     # other columns than untouched ones keep: refuse that base once, here
@@ -202,14 +192,14 @@ def stream_incremental_feature_build(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        manifest = pin_n_buckets(load_manifest(features_path), features_path, n_buckets)
+        manifest = pin_n_buckets(features_path, n_buckets)
         done = manifest.setdefault("delta_batches", {})
         if str(batch_id) in done:
             return  # clean re-delivery: committed end-to-end already
-        obs = Observation()  # collect_set skips a NULL conv_id's NULL bucket
-        batch_df.observe(
-            obs, F.count(F.lit(1)).alias("rows"), F.collect_set(conv_bucket_col(n_buckets)).alias("buckets")
-        ).write.mode("overwrite").parquet(os.path.join(log_path, f"batch={batch_id}"))
+        obs = Observation()
+        batch_df.observe(obs, *touched_aggs(n_buckets)).write.mode("overwrite").parquet(
+            os.path.join(log_path, f"batch={batch_id}")
+        )
         seen = obs.get
         n_buckets_touched = _rebuild_batch(
             spark, sorted(seen["buckets"]), batch_df.schema, base_path, log_path, features_path, n_buckets,
@@ -241,8 +231,8 @@ def stream_incremental_feature_build(
 
 def compact_transcript_log(spark: SparkSession, base_path: str, log_path: str, n_buckets: int = N_CONV_BUCKETS) -> int:
     """LSM merge: fold every log batch into the base transcript's bucket
-    partitions (dynamic overwrite of touched buckets only) and clear the
-    log. Returns the number of log rows folded in. Feature results are
+    partitions (the layout's one writer: touched buckets only) and clear
+    the log. Returns the number of log rows folded in. Feature results are
     unaffected — the merged snapshot is key-identical before and after
     (test-pinned).
 
@@ -257,7 +247,7 @@ def compact_transcript_log(spark: SparkSession, base_path: str, log_path: str, n
     import glob
     import shutil
 
-    manifest = pin_n_buckets(load_manifest(base_path), base_path, n_buckets)
+    manifest = pin_n_buckets(base_path, n_buckets)
     if not glob.glob(os.path.join(log_path, "batch=*")):
         return 0
     # NULL conv_id touches nothing, as in the sink and the rebuild: folding
@@ -265,13 +255,11 @@ def compact_transcript_log(spark: SparkSession, base_path: str, log_path: str, n
     # that partition without reading it. Out-of-contract rows
     # (TRANSCRIPT_SCHEMA pins conv_id non-null) are dropped with their log.
     log = spark.read.parquet(log_path).filter(F.col("conv_id").isNotNull())
-    # row count and touched buckets in one job of at most n_buckets rows
-    per_bucket = log.groupBy(conv_bucket_col(n_buckets).alias("b")).count().collect()
-    if not per_bucket:
+    seen = log.select(*touched_aggs(n_buckets)).first()
+    if not seen["rows"]:
         return 0
-    n_rows, buckets = sum(r["count"] for r in per_bucket), sorted(r["b"] for r in per_bucket)
     # fresh pipeline: compaction CREATES the base from the log alone
-    base = _read_base(spark, base_path, buckets, log.drop("batch").schema)
+    base = read_buckets(spark, base_path, sorted(seen["buckets"]), log.drop("batch").schema)
     merged = _merged_snapshot(base, log).withColumn("conv_bucket", conv_bucket_col(n_buckets))
     commit_rebuilt_partitions(merged, base_path)
     _commit_manifest(base_path, manifest)
@@ -286,4 +274,4 @@ def compact_transcript_log(spark: SparkSession, base_path: str, log_path: str, n
 
         print(f"compact_transcript_log: {len(failed)} log dirs not deleted "
               f"(will be deduped by the merge and retried next compaction)", file=sys.stderr)
-    return n_rows
+    return seen["rows"]

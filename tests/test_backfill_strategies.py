@@ -5,8 +5,9 @@ from podcast_audio_feature_extraction_spark.plans.backfill import build_feature_
 
 
 def test_conv_bucket_spark_matches_zlib(spark, transcripts_sdf):
-    """touched_buckets computes buckets driver-side with zlib.crc32; the
-    stored layout buckets with Spark's crc32 — same polynomial, pinned."""
+    """The package buckets only in Spark (``bucket_col``); perfbench's
+    ``corpus.conv_bucket`` is the one driver-side twin, with zlib.crc32 —
+    same polynomial, pinned."""
     import zlib
 
     from podcast_audio_feature_extraction_spark.plans.backfill import conv_bucket_col
@@ -121,11 +122,7 @@ def test_partitioned_delta_prunes_partitions(spark, transcripts_pdf, tmp_path):
 
 def test_partitioned_delta_edge_cases(spark, transcripts_pdf, tmp_path):
     """Empty delta -> empty rebuild (no error, nothing to commit);
-    oversized touched set -> loud ValueError (full rebuild territory);
     NULL conv_id delta rows touch nothing."""
-    import pandas as pd
-    import pytest
-
     from podcast_audio_feature_extraction_spark.plans.backfill import (
         delta_rebuild_partitioned,
         touched_buckets,
@@ -140,9 +137,6 @@ def test_partitioned_delta_edge_cases(spark, transcripts_pdf, tmp_path):
     empty = sdf.filter("1 = 0")
     assert delta_rebuild_partitioned(spark, tdir, empty, n_buckets=16).count() == 0
 
-    with pytest.raises(ValueError, match="full rebuild"):
-        touched_buckets(sdf, n_buckets=16, max_collect=3)
-
     # TRANSCRIPT_SCHEMA pins conv_id non-nullable, so a NULL-keyed delta
     # needs an explicitly nullable schema (e.g. an upstream join output)
     null_key = spark.createDataFrame(
@@ -150,10 +144,50 @@ def test_partitioned_delta_edge_cases(spark, transcripts_pdf, tmp_path):
     )
     assert touched_buckets(null_key, n_buckets=16) == []
 
-    # r6 (ADVICE): a NULL row must not consume max_collect budget — a
-    # delta with exactly max_collect real conversations plus a NULL row
-    # must still enumerate, not raise
+    # beside real conversations a NULL row still touches nothing
     three_plus_null = spark.createDataFrame(
         [("a", 0), ("b", 0), ("c", 0), (None, 0)], "conv_id string, turn_idx int"
     )
-    assert len(touched_buckets(three_plus_null, n_buckets=16, max_collect=3)) <= 3
+    assert touched_buckets(three_plus_null, n_buckets=16) == touched_buckets(three_plus_null.dropna(), n_buckets=16)
+
+
+def test_write_conv_partitioned_refuses_an_existing_table(spark, transcripts_pdf, tmp_path):
+    """write_conv_partitioned stores a NEW table. Onto a path that holds a
+    table with the same bucket count (a manifest, here one the stream has
+    recorded batches in) or bare conv_bucket= partitions it raises, and
+    the table's files and manifest stay byte-identical: a re-store would
+    replace the rows and drop ``delta_batches``."""
+    import hashlib
+    import json
+    import os
+
+    import pytest
+
+    from podcast_audio_feature_extraction_spark.plans.backfill import write_conv_partitioned
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+
+    sdf = spark.createDataFrame(transcripts_pdf, schema=TRANSCRIPT_SCHEMA)
+    tdir = str(tmp_path / "transcript")
+    write_conv_partitioned(sdf, tdir, n_buckets=16)
+    mpath = os.path.join(tdir, "_manifest.json")
+    manifest = json.load(open(mpath))
+    manifest["delta_batches"] = {"0": {"rows": 2, "buckets": 1}}
+    json.dump(manifest, open(mpath, "w"))
+
+    def digest(root):
+        return {
+            os.path.relpath(os.path.join(d, f), root): hashlib.sha256(open(os.path.join(d, f), "rb").read()).hexdigest()
+            for d, _, files in os.walk(root)
+            for f in files
+        }
+
+    before = digest(tdir)
+    with pytest.raises(ValueError, match="already holds a layout table"):
+        write_conv_partitioned(sdf.limit(3), tdir, n_buckets=16)
+    assert digest(tdir) == before
+
+    bare = str(tmp_path / "bare")
+    os.makedirs(os.path.join(bare, "conv_bucket=0"))
+    with pytest.raises(ValueError, match="already holds a layout table"):
+        write_conv_partitioned(sdf, bare, n_buckets=16)
+    assert os.listdir(bare) == ["conv_bucket=0"]

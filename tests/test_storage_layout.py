@@ -62,3 +62,50 @@ def test_bucketed_tables_join_without_exchange(spark, transcripts_sdf, tmp_path)
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sql("DROP TABLE IF EXISTS t_bucketed")
         spark.sql("DROP TABLE IF EXISTS f_bucketed")
+
+
+def test_one_layout_path_source_scan():
+    """The conv_bucket layout is written one way: ``partitionOverwriteMode``
+    and ``partitionBy("conv_bucket")`` each appear once in the package,
+    ``bench.py``, ``__spark_entry__.py``, ``jobs/`` and ``tools/``, inside
+    ``operators/resume.commit_rebuilt_partitions`` (the one writer); no call
+    nests ``load_manifest(`` inside ``pin_n_buckets(`` (the pin loads the
+    manifest itself); and the package never buckets with ``zlib`` (every
+    bucket is ``bucket_col``, computed by Spark)."""
+    import ast
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    pkg = root / "podcast_audio_feature_extraction_spark"
+    sources = [
+        *sorted(pkg.rglob("*.py")),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+        *sorted((root / "jobs").rglob("*.py")),
+        *sorted((root / "tools").rglob("*.py")),
+    ]
+    layout_write = re.compile(r"""partitionOverwriteMode|partitionBy\(\s*["']conv_bucket["']\s*\)""")
+    called = lambda node: getattr(node.func, "id", getattr(node.func, "attr", None))
+    writes, bad = [], []
+    for path in sources:
+        rel, text = path.relative_to(root), path.read_text()
+        tree = ast.parse(text)
+        writer = [
+            n for n in tree.body
+            if isinstance(n, ast.FunctionDef) and n.name == "commit_rebuilt_partitions" and rel.name == "resume.py"
+        ]
+        inside = {i for n in writer for i in range(n.lineno, n.end_lineno + 1)}
+        for i, line in enumerate(text.splitlines(), 1):
+            for m in layout_write.finditer(line):
+                writes.append(m.group(0))
+                if i not in inside:
+                    bad.append(f"{rel}:{i}: layout write outside the one writer: {line.strip()}")
+            if "zlib" in line and path.is_relative_to(pkg):
+                bad.append(f"{rel}:{i}: zlib in the package: {line.strip()}")
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and called(node) == "pin_n_buckets":
+                if any(isinstance(n, ast.Call) and called(n) == "load_manifest" for n in ast.walk(node)):
+                    bad.append(f"{rel}:{node.lineno}: load_manifest( nested inside pin_n_buckets(")
+    assert not bad, bad
+    assert sorted(writes) == ['partitionBy("conv_bucket")', "partitionOverwriteMode"], writes

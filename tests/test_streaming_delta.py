@@ -304,6 +304,44 @@ def test_compaction_failed_log_delete_converges(spark, transcripts_pdf, tmp_path
     pd.testing.assert_frame_equal(base, want)
 
 
+@pytest.mark.xfail(strict=True, raises=AssertionError, reason="ROADMAP item 2")
+def test_compaction_crash_inside_partition_commit_keeps_base(spark, transcripts_pdf, tmp_path, monkeypatch):
+    """A crash INSIDE compaction's partition commit: Spark's ``commitJob``
+    deletes a touched base bucket's directory, then the process dies
+    before it renames the staged one into place. A compaction re-run must
+    end with the base of a run that never crashed. Today the deleted
+    directory held the only copy of that bucket's base rows, so they are
+    lost; a copy-on-write commit keeps them."""
+    import shutil
+
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+    from podcast_audio_feature_extraction_spark.streaming import delta
+
+    def staged(root):
+        pdf, paths = _mk_base(spark, transcripts_pdf, root)
+        for i, b in enumerate(_delta_batches(pdf)):
+            spark.createDataFrame(b, schema=TRANSCRIPT_SCHEMA).write.parquet(f"{paths['log']}/batch={i}")
+        return paths
+
+    clean, crashed = staged(tmp_path / "clean"), staged(tmp_path / "crashed")
+    compact_transcript_log(spark, clean["base"], clean["log"], n_buckets=N_BUCKETS)
+
+    def delete_then_crash(rebuilt, path, *metrics):
+        shutil.rmtree(f"{path}/conv_bucket={rebuilt.first()['conv_bucket']}")
+        raise OSError("injected crash between commitJob's delete and rename")
+
+    real = delta.commit_rebuilt_partitions
+    monkeypatch.setattr(delta, "commit_rebuilt_partitions", delete_then_crash)
+    with pytest.raises(OSError, match="injected crash"):
+        compact_transcript_log(spark, crashed["base"], crashed["log"], n_buckets=N_BUCKETS)
+    monkeypatch.setattr(delta, "commit_rebuilt_partitions", real)
+    compact_transcript_log(spark, crashed["base"], crashed["log"], n_buckets=N_BUCKETS)
+
+    pd.testing.assert_frame_equal(
+        _canon_transcript(spark.read.parquet(crashed["base"])), _canon_transcript(spark.read.parquet(clean["base"]))
+    )
+
+
 def _canon_transcript(df):
     return (
         df.select("conv_id", "turn_idx")
