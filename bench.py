@@ -473,7 +473,7 @@ def run_headline(sf_dir: str, cpus: str) -> tuple[dict, dict]:
     # delta rebuild finds the touched buckets by the layout's one rule
     # (operators/resume.touched_aggs, one job), reads ONLY those
     # partitions through its one reader (read_buckets: directory pruning,
-    # the delta's schema, no inference) and its one writer
+    # the manifest's pinned schema, no inference) and its one writer
     # (commit_rebuilt_partitions) would rewrite exactly those buckets — so
     # the cost tracks the touched fraction, with no kept-side rows to
     # materialize. Store once, untimed (single local disk ≠

@@ -15,10 +15,11 @@ are written into the manifest alongside the data, the local stand-in for
 Iceberg snapshot properties.
 
 The output is the engine's one table layout (``conv_bucket={b}``
-partitions, ``n_buckets`` pinned in ``_manifest.json``): it is the
-``features_path`` of ``streaming.delta.stream_incremental_feature_build``
-as-is, which then keeps it current (run the stream with the same
-``--n-buckets``; another count is refused).
+partitions, ``n_buckets`` and the schema pinned in ``_manifest.json``):
+it is the ``features_path`` of
+``streaming.delta.stream_incremental_feature_build`` as-is, which then
+keeps it current (run the stream with the same ``--n-buckets``; another
+count is refused).
 """
 
 from __future__ import annotations

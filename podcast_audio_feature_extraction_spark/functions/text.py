@@ -66,10 +66,17 @@ STOPWORDS = {
 LANG_ORDER = ["en", "de", "fr", "es"]
 
 # BPE-ish pre-tokenizer: alnum runs or single non-alnum non-space chars.
-# This and URL_PATTERN keep their text verbatim in the DuckDB twins, so
-# Java reads a vertical tab as a space in them and RE2 does not.
+# This and URL_PATTERN keep their text verbatim in the DuckDB twins; Spark
+# matches each through :func:`_extract_all`.
 PUNCT_PATTERN = r"[^A-Za-z0-9\s]"
 BPE_PATTERN = rf"[A-Za-z0-9]+|{PUNCT_PATTERN}"
+
+
+def _extract_all(text_col: Column, pattern: str) -> Column:
+    """The twins' ``regexp_extract_all(COALESCE(text, ''), pattern)`` in
+    Spark. Java's ``\\s`` adds ``\\v`` to RE2's, so each ``\\s`` of a twin
+    pattern (always inside a character class) is spelled as :data:`WS`'s."""
+    return F.regexp_extract_all(F.coalesce(text_col, F.lit("")), F.lit(pattern.replace(r"\s", _WS_CHARS)), 0)
 
 
 def lang_guess_col(text_col: Column) -> Column:
@@ -99,7 +106,7 @@ def lang_guess_sql(text_expr: str = "text") -> str:
 
 
 def bpe_token_count_col(text_col: Column) -> Column:
-    return F.size(F.regexp_extract_all(F.coalesce(text_col, F.lit("")), F.lit(BPE_PATTERN), 0)).cast("int")
+    return F.size(_extract_all(text_col, BPE_PATTERN)).cast("int")
 
 
 def bpe_token_count_sql(text_expr: str = "text") -> str:
@@ -120,7 +127,7 @@ def quality_cols(text_col: Column, round_digits: int = 6) -> dict[str, Column]:
     safe_n = F.greatest(n, F.lit(1))
     chars = F.length(F.coalesce(text_col, F.lit("")))
     en_stop = F.size(F.array_intersect(F.transform(toks, F.lower), F.array(*[F.lit(w) for w in STOPWORDS["en"]])))
-    punct = F.size(F.regexp_extract_all(F.coalesce(text_col, F.lit("")), F.lit(PUNCT_PATTERN), 0))
+    punct = F.size(_extract_all(text_col, PUNCT_PATTERN))
     # RAW (non-distinct) 3-gram list: repetition = 1 - distinct/total
     kgrams = F.when(
         n >= 3,
@@ -144,12 +151,8 @@ def quality_cols(text_col: Column, round_digits: int = 6) -> dict[str, Column]:
             ).otherwise(F.lit(0.0)),
             round_digits,
         ),
-        "n_urls": F.size(F.regexp_extract_all(F.coalesce(text_col, F.lit("")), F.lit(URL_PATTERN), 0)).cast(
-            "int"
-        ),
-        "n_emails": F.size(
-            F.regexp_extract_all(F.coalesce(text_col, F.lit("")), F.lit(EMAIL_PATTERN), 0)
-        ).cast("int"),
+        "n_urls": F.size(_extract_all(text_col, URL_PATTERN)).cast("int"),
+        "n_emails": F.size(_extract_all(text_col, EMAIL_PATTERN)).cast("int"),
     }
 
 

@@ -15,8 +15,10 @@ module owns whole:
 - a JSON manifest records completed buckets with lineage (input/output row
   counts, wall seconds, throughput) — the local stand-in for Iceberg
   snapshot metadata (no Iceberg runtime jars in this sandbox; the commit
-  unit and resume semantics are identical) — and pins ``n_buckets``
-  (:func:`pin_n_buckets`), which every writer of the layout checks;
+  unit and resume semantics are identical) — and is the one record of the
+  table's identity: ``n_buckets`` and the schema (:func:`pin_layout`),
+  which every writer of the layout checks and every read takes, so no
+  read of a layout table infers a schema;
 - one writer (:func:`commit_rebuilt_partitions`, a dynamic overwrite of
   the partitions a frame holds), one reader (:func:`read_buckets`) and one
   touched-bucket rule (:func:`touched_aggs`) serve every user of the
@@ -49,7 +51,6 @@ import json
 import os
 import time
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 MANIFEST_NAME = "_manifest.json"
@@ -81,6 +82,7 @@ def load_manifest(out_dir: str) -> dict:
 
 
 def _commit_manifest(out_dir: str, manifest: dict) -> None:
+    os.makedirs(out_dir, exist_ok=True)
     path = os.path.join(out_dir, MANIFEST_NAME)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
@@ -88,23 +90,45 @@ def _commit_manifest(out_dir: str, manifest: dict) -> None:
     os.replace(tmp, path)  # atomic on POSIX
 
 
-def pin_n_buckets(path: str, n_buckets: int) -> dict:
-    """The manifest of the table at ``path`` with ``n_buckets`` pinned;
-    raise if the table is already pinned to another count. The bucket
-    count is part of a layout table's identity: another modulus assigns
-    conversations to other buckets, so a rebuild would read the wrong base
-    rows and a dynamic overwrite would leave the old layout's rows beside
-    the new ones. Every writer of the layout pins before it writes and
-    records the pin with its manifest commit."""
+def pin_layout(path: str, n_buckets: int, schema: T.StructType | None) -> dict:
+    """The manifest of the table at ``path`` with its identity pinned:
+    ``n_buckets`` and ``schema`` without ``conv_bucket`` (``None`` checks
+    the count alone). Raises ``ValueError`` if the table is pinned to
+    another count, or to other (name, type) columns or column order
+    (nullability aside: file sources read every column as nullable):
+    a rebuild would read other conversations' buckets, or rebuild touched
+    buckets in other columns than untouched ones keep. Every writer pins
+    before it writes and commits the pin with its data; a value not
+    pinned yet is pinned by the next writer."""
     manifest = load_manifest(path)
-    pinned = manifest.get("n_buckets")
-    if pinned is not None and pinned != n_buckets:
+    pinned = manifest.setdefault("n_buckets", n_buckets)
+    if pinned != n_buckets:
         raise ValueError(
             f"manifest at {path} was written with n_buckets={pinned}; "
             f"got n_buckets={n_buckets} — use a fresh path to rebucket"
         )
-    manifest["n_buckets"] = n_buckets
+    if schema is not None:
+        schema = T.StructType([f for f in schema.fields if f.name != "conv_bucket"])
+        ident = lambda s: [(f.name, f.dataType.simpleString()) for f in s.fields]
+        want, got = ident(schema), ident(T.StructType.fromJson(manifest.setdefault("schema", schema.jsonValue())))
+        # a column whose type or presence differs; else one out of place
+        if bad := {n for n, _ in set(want) ^ set(got)} or {a for (a, _), (b, _) in zip(want, got) if a != b}:
+            raise ValueError(f"manifest at {path} pins other columns: {sorted(bad)} differ — use a fresh path")
     return manifest
+
+
+def record_pin(path: str, manifest: dict) -> None:
+    """Commit a :func:`pin_layout` result ahead of any data, if it is new."""
+    if manifest != load_manifest(path):
+        _commit_manifest(path, manifest)
+
+
+def pinned_schema(path: str) -> T.StructType:
+    """The schema pinned at ``path``; raises ``ValueError`` if none is: no
+    read of the layout infers one."""
+    if "schema" not in (manifest := load_manifest(path)):
+        raise ValueError(f"no schema pinned at {path} — re-store it, or start the stream on it")
+    return T.StructType.fromJson(manifest["schema"])
 
 
 def touched_aggs(n_buckets: int):
@@ -115,21 +139,16 @@ def touched_aggs(n_buckets: int):
     return F.count(F.lit(1)).alias("rows"), F.collect_set(bucket_col("conv_id", n_buckets)).alias("buckets")
 
 
-def read_buckets(spark: SparkSession, path: str, buckets: list[int], schema: T.StructType) -> DataFrame:
-    """The layout table's ``buckets`` partitions read with ``schema`` (no
-    inference job; the filter prunes directories), without the
-    ``conv_bucket`` column, or an empty frame on bootstrap: a missing
-    path, or a directory with no file yet. Every other read failure (a
-    corrupt footer, an IO or permission error) propagates: reading such a
-    table as empty would let the caller overwrite the touched buckets
-    with partial rows and lose the table's rows for good."""
-    read_schema = T.StructType(list(schema.fields) + [T.StructField("conv_bucket", T.IntegerType())])
-    try:
-        table = spark.read.schema(read_schema).parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-        return spark.createDataFrame([], schema)
+def read_buckets(spark: SparkSession, path: str, buckets: list[int]) -> DataFrame:
+    """The layout table's ``buckets`` partitions read with its pinned
+    schema (:func:`pinned_schema`: no inference job; the filter prunes
+    directories), without the ``conv_bucket`` column. A pinned table with
+    no file yet reads as empty; every read failure (a corrupt footer, an
+    IO or permission error) propagates: reading such a table as empty
+    would let the caller overwrite the touched buckets with partial rows
+    and lose the table's rows for good."""
+    read_schema = T.StructType(pinned_schema(path).fields + [T.StructField("conv_bucket", T.IntegerType())])
+    table = spark.read.schema(read_schema).parquet(path)
     return table.filter(F.col("conv_bucket").isin(buckets)).drop("conv_bucket")
 
 
@@ -184,8 +203,7 @@ def run_resumable(
     as its ``features_path``. Returns the run's metrics dict (also
     appended to the manifest).
     """
-    os.makedirs(out_dir, exist_ok=True)
-    manifest = pin_n_buckets(out_dir, n_buckets)
+    manifest = pin_layout(out_dir, n_buckets, None)
     done = set(int(b) for b in manifest["buckets"])
     todo = [b for b in range(n_buckets) if b not in done]
     run = {
@@ -201,7 +219,9 @@ def run_resumable(
         batch = todo[i : i + batch_size]
         t0 = time.perf_counter()
         if plan is None:
-            plan = transform(source).withColumn("conv_bucket", bucket_col("conv_id", n_buckets))
+            plan = transform(source)
+            manifest = pin_layout(out_dir, n_buckets, plan.schema)
+            plan = plan.withColumn("conv_bucket", bucket_col("conv_id", n_buckets))
         # per-bucket row counts ride along as observed metrics of the write
         # job itself — recomputing them with a separate groupBy/collect
         # (round-1 design) re-executed the whole transform, a 2x compute

@@ -30,7 +30,7 @@ from podcast_audio_feature_extraction_spark.operators.resume import (
     _commit_manifest,
     bucket_col,
     commit_rebuilt_partitions,
-    pin_n_buckets,
+    pin_layout,
     read_buckets,
     touched_aggs,
 )
@@ -90,14 +90,16 @@ def conv_bucket_col(n_buckets: int = N_CONV_BUCKETS):
 def write_conv_partitioned(df: DataFrame, path: str, n_buckets: int = N_CONV_BUCKETS) -> None:
     """Store a conv_id-keyed table as a NEW layout table at ``path``:
     hive-partitioned by ``conv_bucket`` through the one writer
-    (:func:`commit_rebuilt_partitions`), ``n_buckets`` pinned in its
-    manifest — the production layout for incremental rebuilds: a delta
-    touching c conversations rewrites at most c partitions and the
-    rebuild scan reads only those directories (partition pruning, no file
-    row-group even opened for untouched buckets).
+    (:func:`commit_rebuilt_partitions`), ``n_buckets`` and ``df``'s schema
+    pinned in its manifest — the production layout for incremental
+    rebuilds: a delta touching c conversations rewrites at most c
+    partitions and the rebuild scan reads only those directories
+    (partition pruning, no file row-group even opened for untouched
+    buckets).
 
-    A path pinned to another count is refused first; then any path that
-    already holds a table (a manifest or a ``conv_bucket=`` partition).
+    A path pinned to another count or schema is refused first; then any
+    path that already holds a table (a manifest or a ``conv_bucket=``
+    partition).
     Storing is not updating: the delta stream and compaction update a
     layout table, and a re-store would drop what they recorded
     (``delta_batches``) — store into a fresh path instead.
@@ -107,7 +109,7 @@ def write_conv_partitioned(df: DataFrame, path: str, n_buckets: int = N_CONV_BUC
     n_buckets >> typical delta's conversation count but small enough
     that a bucket is still a healthy parquet file set (e.g. 100 TB /
     8192 buckets = ~12 GB/bucket)."""
-    manifest = pin_n_buckets(path, n_buckets)
+    manifest = pin_layout(path, n_buckets, df.schema)
     if os.path.exists(os.path.join(path, MANIFEST_NAME)) or glob.glob(os.path.join(path, "conv_bucket=*")):
         raise ValueError(f"{path} already holds a layout table — store into a fresh path")
     commit_rebuilt_partitions(df.withColumn("conv_bucket", conv_bucket_col(n_buckets)), path)
@@ -143,19 +145,19 @@ def delta_rebuild_partitioned(
     overwritten partition).
 
     The stored transcript must already include the new turns (it is the
-    current snapshot, e.g. the table after the delta's append commit), so
-    it is read with the delta's schema, as the stream reads its base with
-    the batch's. Returns the rebuilt feature rows WITH conv_bucket, ready
-    for :func:`commit_rebuilt_partitions`; the untouched buckets are never
-    read, let alone materialized.
+    current snapshot, e.g. the table after the delta's append commit); it
+    is read with its pinned schema. Returns the rebuilt feature rows WITH
+    conv_bucket, ready for :func:`commit_rebuilt_partitions`; the
+    untouched buckets are never read, let alone materialized.
 
     NULL-keyed delta rows touch nothing: a NULL conv_id belongs to no
     conversation (:func:`touched_buckets` drops them).
 
-    A stored transcript pinned to another ``n_buckets`` is refused before
-    any read: its partitions hold other conversations' rows."""
-    pin_n_buckets(transcript_path, n_buckets)
-    src = read_buckets(spark, transcript_path, touched_buckets(new_turns, n_buckets), new_turns.schema)
+    A stored transcript pinned to another ``n_buckets``, or to no schema,
+    is refused before any read: its partitions hold other conversations'
+    rows."""
+    pin_layout(transcript_path, n_buckets, None)
+    src = read_buckets(spark, transcript_path, touched_buckets(new_turns, n_buckets))
     rebuilt = build_feature_table(src, gap_s=gap_s, k=k, embed_dim=embed_dim, val_col=val_col)
     return rebuilt.withColumn("conv_bucket", conv_bucket_col(n_buckets))
 

@@ -88,30 +88,3 @@ def generate_transcripts(
     )
     df["ts"] = df["ts"].dt.floor("us")
     return df
-
-
-def with_future_rows(pdf: pd.DataFrame, seed: int = 7, frac: float = 0.1) -> pd.DataFrame:
-    """Append 'future' rows after each conversation's max ts.
-
-    Used by the temporal-leakage property test (SURVEY.md §5.3): backfilled
-    vectors at (conv_id, ts) must be unchanged by rows with ts' > ts.
-    """
-    rng = np.random.default_rng(seed)
-    futures = []
-    for conv, g in pdf.groupby("conv_id", sort=True):
-        k = max(1, int(len(g) * frac))
-        base_ts = g["ts"].max()
-        idx0 = int(g["turn_idx"].max()) + 1
-        futures.append(
-            pd.DataFrame(
-                {
-                    "conv_id": conv,
-                    "turn_idx": np.arange(idx0, idx0 + k, dtype=np.int32),
-                    "role": _ROLES[rng.integers(0, len(_ROLES), size=k)],
-                    "text": ["future " + " ".join(_VOCAB[rng.integers(0, len(_VOCAB), size=3)]) for _ in range(k)],
-                    "tool": None,
-                    "ts": base_ts + pd.to_timedelta(rng.integers(1, 10_000, size=k).cumsum(), unit="s"),
-                }
-            )
-        )
-    return pd.concat([pdf] + futures, ignore_index=True)

@@ -5,10 +5,11 @@ It composes two pieces:
 
 - the engine's one table layout, all of it in ``operators.resume``:
   hive partitions ``conv_bucket={b}`` with ``b = crc32(conv_id) %
-  n_buckets`` (``bucket_col``), ``n_buckets`` pinned in the table's
-  ``_manifest.json`` (``pin_n_buckets``), the one touched-bucket rule
-  (``touched_aggs``), the one reader (``read_buckets``) and the one
-  writer, a dynamic-overwrite commit (``commit_rebuilt_partitions``), and
+  n_buckets`` (``bucket_col``), the table's identity (``n_buckets`` and
+  its schema) pinned in its ``_manifest.json`` (``pin_layout``), the one
+  touched-bucket rule (``touched_aggs``), the one reader
+  (``read_buckets``) and the one writer, a dynamic-overwrite commit
+  (``commit_rebuilt_partitions``), and
 - the exactly-once foreachBatch idempotence pattern: Structured
   Streaming may re-deliver a micro-batch with the same batchId after a
   failure, so the sink records committed batchIds in the feature table's
@@ -26,14 +27,16 @@ IDEMPOTENT without a transactional table format:
   batch with the touched-bucket rule (its rows and touched buckets)
   observed on the write (a re-delivery overwrites them with the same
   bytes: no two-phase commit);
-- a rebuild reads base (the one reader) and log with the stream's
-  schema, merges them under a LOG-WINS-PER-(conv_id, turn_idx) rule
-  (``_merged_snapshot``) pruned to the touched buckets, and commits
-  through the one writer (idempotent); its plan shuffles on conv_id and
+- the stream pins its schema into base and the log at start (refusing
+  either if pinned to another), so no read of base or the log infers a
+  schema: both are read with base's pinned one;
+- a rebuild reads base (the one reader) and log, merges them under a
+  LOG-WINS-PER-(conv_id, turn_idx) rule (``_merged_snapshot``) pruned
+  to the touched buckets, and commits through the one writer (idempotent); its plan shuffles on conv_id and
   conv_bucket only, so a micro-batch runs 4 Spark jobs in all;
 - compaction evaluates the same rule over the log with one select,
   reads base's touched buckets with the same reader and commits through
-  the same writer.
+  the same writer: 5 Spark jobs in all.
 
 A crash at a tested step boundary — after the log write, before the
 manifest commit, between compaction's base overwrite and its log delete
@@ -59,14 +62,15 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from podcast_audio_feature_extraction_spark.operators.resume import (
     _commit_manifest,
     commit_rebuilt_partitions,
-    pin_n_buckets,
+    pin_layout,
+    pinned_schema,
     read_buckets,
+    record_pin,
     touched_aggs,
 )
 from podcast_audio_feature_extraction_spark.plans.backfill import (
@@ -116,7 +120,6 @@ def _merged_snapshot(base: DataFrame, log: DataFrame) -> DataFrame:
 def _rebuild_batch(
     spark: SparkSession,
     buckets: list[int],
-    schema: T.StructType,
     base_path: str,
     log_path: str,
     features_path: str,
@@ -125,14 +128,14 @@ def _rebuild_batch(
 ) -> int:
     """Rebuild + commit the touched ``buckets``; returns their count.
     Snapshot = base (partition-pruned) merged with log (already includes
-    this batch's directory), both read with ``schema``, under the
-    log-wins-per-key rule of :func:`_merged_snapshot`."""
+    this batch's directory), both read with base's pinned schema, under
+    the log-wins-per-key rule of :func:`_merged_snapshot`."""
     if not buckets:
         return 0
-    base = read_buckets(spark, base_path, buckets, schema)
+    base = read_buckets(spark, base_path, buckets)
     # the log side has no conv_bucket directory to prune: the same layout
     # expression, evaluated per row
-    log = spark.read.schema(schema).parquet(log_path).filter(conv_bucket_col(n_buckets).isin(buckets))
+    log = spark.read.schema(pinned_schema(base_path)).parquet(log_path).filter(conv_bucket_col(n_buckets).isin(buckets))
     rebuilt = build_feature_table(_merged_snapshot(base, log), **feature_kwargs)
     commit_rebuilt_partitions(
         rebuilt.withColumn("conv_bucket", conv_bucket_col(n_buckets)), features_path
@@ -167,32 +170,22 @@ def stream_incremental_feature_build(
     :func:`write_conv_partitioned` and ``features_path`` with
     ``jobs/backfill_job.py`` before the stream starts; a missing or
     not-yet-written base is treated as empty (the first batches build
-    features from the log alone). Either table pinned to a bucket count
-    other than ``n_buckets``, or a base whose columns differ from the
-    stream's, raises ``ValueError`` here.
+    features from the log alone). The stream pins ``n_buckets`` and its
+    schema into base and the log (at bootstrap too), and the rebuilt
+    rows' schema into the feature table; a table pinned to another count
+    or other columns raises ``ValueError`` here, before any write.
     """
-    # refuse a layout pinned to another bucket count before anything runs
-    for path in (base_path, features_path):
-        pin_n_buckets(path, n_buckets)
-    # every batch reads base with the stream's schema; parquet fills a
-    # column base lacks with NULL, so touched buckets would be rebuilt from
-    # other columns than untouched ones keep: refuse that base once, here
-    try:
-        base_schema = new_turns_stream.sparkSession.read.parquet(base_path).schema
-    except AnalysisException as e:
-        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise  # only a missing or file-less base is "no base yet"
-    else:
-        fields = lambda s: {f.name: f.dataType for f in s.fields if f.name != "conv_bucket"}
-        want, got = fields(new_turns_stream.schema), fields(base_schema)
-        if bad := sorted(c for c in want.keys() | got.keys() if want.get(c) != got.get(c)):
-            raise ValueError(f"base at {base_path} and the stream differ in columns {bad}")
-    os.makedirs(log_path, exist_ok=True)
-    os.makedirs(features_path, exist_ok=True)
+    # every read of base and the log takes base's pinned schema: refuse
+    # drift once, here, then record the pins base and the log lack
+    features_schema = build_feature_table(new_turns_stream, **feature_kwargs).schema
+    pins = {p: pin_layout(p, n_buckets, new_turns_stream.schema) for p in (base_path, log_path)}
+    pin_layout(features_path, n_buckets, features_schema)
+    for path, manifest in pins.items():
+        record_pin(path, manifest)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        manifest = pin_n_buckets(features_path, n_buckets)
+        manifest = pin_layout(features_path, n_buckets, features_schema)
         done = manifest.setdefault("delta_batches", {})
         if str(batch_id) in done:
             return  # clean re-delivery: committed end-to-end already
@@ -202,7 +195,7 @@ def stream_incremental_feature_build(
         )
         seen = obs.get
         n_buckets_touched = _rebuild_batch(
-            spark, sorted(seen["buckets"]), batch_df.schema, base_path, log_path, features_path, n_buckets,
+            spark, sorted(seen["buckets"]), base_path, log_path, features_path, n_buckets,
             **feature_kwargs,
         )
         done[str(batch_id)] = {
@@ -243,26 +236,30 @@ def compact_transcript_log(spark: SparkSession, base_path: str, log_path: str, n
     converges, nothing is double-counted. Single-writer contract: run
     this from the stream's own sink thread or while the stream is
     stopped — it deletes log directories an in-flight rebuild could
-    otherwise be reading."""
+    otherwise be reading.
+
+    The log is read with base's pinned schema (plus its ``batch``
+    partition column); an unpinned base, or a base or log pinned to
+    another identity, raises ``ValueError`` before anything is written."""
     import glob
     import shutil
 
-    manifest = pin_n_buckets(base_path, n_buckets)
+    pin_layout(base_path, n_buckets, None)
+    pin_layout(log_path, n_buckets, pinned_schema(base_path))
     if not glob.glob(os.path.join(log_path, "batch=*")):
         return 0
     # NULL conv_id touches nothing, as in the sink and the rebuild: folding
     # NULL-keyed rows into base's __HIVE_DEFAULT_PARTITION__ would REPLACE
     # that partition without reading it. Out-of-contract rows
     # (TRANSCRIPT_SCHEMA pins conv_id non-null) are dropped with their log.
-    log = spark.read.parquet(log_path).filter(F.col("conv_id").isNotNull())
+    log = spark.read.schema(pinned_schema(base_path)).parquet(log_path).filter(F.col("conv_id").isNotNull())
     seen = log.select(*touched_aggs(n_buckets)).first()
     if not seen["rows"]:
         return 0
-    # fresh pipeline: compaction CREATES the base from the log alone
-    base = read_buckets(spark, base_path, sorted(seen["buckets"]), log.drop("batch").schema)
+    # fresh pipeline: compaction CREATES the base's files from the log alone
+    base = read_buckets(spark, base_path, sorted(seen["buckets"]))
     merged = _merged_snapshot(base, log).withColumn("conv_bucket", conv_bucket_col(n_buckets))
     commit_rebuilt_partitions(merged, base_path)
-    _commit_manifest(base_path, manifest)
     failed = []
     for d in glob.glob(os.path.join(log_path, "batch=*")):
         try:

@@ -52,17 +52,11 @@ ASOF_STATE_SCHEMA = T.StructType(
 )
 
 
-def _make_asof_fold(inclusive: bool, tolerance_s: float | None, ttl_ms: int | None = None):
+def _make_asof_fold(inclusive: bool, tolerance_s: float | None):
     tol_us = None if tolerance_s is None else int(tolerance_s * 1_000_000)
 
     def fold(key, pdfs: "Iterator[pd.DataFrame]", state: GroupState) -> "Iterator[pd.DataFrame]":
         (conv_id,) = key
-        if ttl_ms is not None and state.hasTimedOut:
-            # conversation idle past the TTL: drop its state (bounds total
-            # state over conversation cardinality; a late revival simply
-            # re-enriches from scratch, i.e. nulls until the next feature)
-            state.remove()
-            return
         if state.exists:
             feat_us, feat_idx, feats, last_us, last_idx = state.get
         else:
@@ -131,8 +125,6 @@ def _make_asof_fold(inclusive: bool, tolerance_s: float | None, ttl_ms: int | No
                     None if last_idx is None else int(last_idx),
                 )
             )
-            if ttl_ms is not None:
-                state.setTimeoutDuration(ttl_ms)
 
     return fold
 
@@ -141,7 +133,6 @@ def stateful_asof_enrich(
     tagged: DataFrame,
     inclusive: bool = True,
     tolerance_s: float | None = None,
-    state_ttl_s: float | None = None,
 ) -> DataFrame:
     """The engine's streaming as-of: ONE co-partitioned stream carries
     both feature rows (side='f': conv_id, turn_idx, ts, functionals) and
@@ -159,29 +150,17 @@ def stateful_asof_enrich(
     the batch operator. A NULL ts has the batch operator's meaning too: a
     feature row without a ts never enters state, and a query row without
     one is emitted with NULL features; neither moves the watermark.
-
-    ``state_ttl_s`` bounds state over conversation cardinality: a key
-    idle longer than the TTL (processing time) is evicted; a late revival
-    re-enriches from scratch (nulls until its next feature row). Leave
-    None for the strict keep-forever contract. NOTE: timeouts require a
-    processing-time-triggered CONTINUOUS query — under
-    ``trigger(availableNow=True)`` the timeout bookkeeping keeps the
-    query from terminating, so leave the TTL off for drain-style runs
-    (measured on Spark 4.1: the availableNow query hangs, it does not
-    error).
+    State is kept for every conversation seen (no timeout).
     """
-    ttl_ms = None if state_ttl_s is None else int(state_ttl_s * 1000)
     return (
         tagged.select("conv_id", "turn_idx", "ts", "side", "functionals")
         .groupBy("conv_id")
         .applyInPandasWithState(
-            _make_asof_fold(inclusive, tolerance_s, ttl_ms),
+            _make_asof_fold(inclusive, tolerance_s),
             outputStructType=ASOF_OUTPUT_SCHEMA,
             stateStructType=ASOF_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.NoTimeout if ttl_ms is None else GroupStateTimeout.ProcessingTimeTimeout
-            ),
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 

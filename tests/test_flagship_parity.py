@@ -14,9 +14,38 @@ from podcast_audio_feature_extraction_spark.functions.embedding import DEFAULT_D
 from podcast_audio_feature_extraction_spark.oracle import numpy_oracle as O
 from podcast_audio_feature_extraction_spark.plans.backfill import flagship
 from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
-from podcast_audio_feature_extraction_spark.sources.synthetic import with_future_rows
+from podcast_audio_feature_extraction_spark.sources import synthetic as S
 
 GAP, K = 1800.0, 5
+
+
+def with_future_rows(pdf: pd.DataFrame, seed: int = 7, frac: float = 0.1) -> pd.DataFrame:
+    """Append 'future' rows after each conversation's max ts: the
+    temporal-leakage property test's input (SURVEY.md §5.3), where
+    backfilled vectors at (conv_id, ts) must be unchanged by rows with
+    ts' > ts."""
+    rng = np.random.default_rng(seed)
+    futures = []
+    for conv, g in pdf.groupby("conv_id", sort=True):
+        k = max(1, int(len(g) * frac))
+        base_ts = g["ts"].max()
+        idx0 = int(g["turn_idx"].max()) + 1
+        futures.append(
+            pd.DataFrame(
+                {
+                    "conv_id": conv,
+                    "turn_idx": np.arange(idx0, idx0 + k, dtype=np.int32),
+                    "role": S._ROLES[rng.integers(0, len(S._ROLES), size=k)],
+                    "text": [
+                        "future " + " ".join(S._VOCAB[rng.integers(0, len(S._VOCAB), size=3)]) for _ in range(k)
+                    ],
+                    "tool": None,
+                    "ts": base_ts + pd.to_timedelta(rng.integers(1, 10_000, size=k).cumsum(), unit="s"),
+                }
+            )
+        )
+    return pd.concat([pdf] + futures, ignore_index=True)
+
 
 FUNCTIONAL_ORDER = [
     "token_cnt",

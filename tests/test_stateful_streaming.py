@@ -174,60 +174,16 @@ class FakeState:
 
     def __init__(self):
         self.exists = False
-        self.hasTimedOut = False
-        self.removed = False
         self.updated = None
-        self.timeout_ms = None
 
     @property
     def get(self):
         assert self.exists, "get on non-existent state"
         return self.updated
 
-    def remove(self):
-        self.removed = True
-
     def update(self, v):
         self.exists = True
         self.updated = v
-
-    def setTimeoutDuration(self, ms):
-        self.timeout_ms = ms
-
-
-def test_stateful_asof_ttl_fold_branches():
-    """The TTL fold branches, unit-tested against a fake GroupState (a
-    ProcessingTimeTimeout query only terminates under a processing-time
-    trigger, so the streaming-e2e form is exercised in continuous runs,
-    not under availableNow — see the operator docstring):
-    - a timed-out invocation removes state and emits nothing;
-    - a live batch sets the timeout duration after updating state."""
-    import pandas as pd
-
-    from podcast_audio_feature_extraction_spark.streaming.stateful import _make_asof_fold
-
-    fold = _make_asof_fold(True, None, ttl_ms=60_000)
-
-    timed_out = FakeState()
-    timed_out.hasTimedOut = True
-    assert list(fold(("c",), iter([]), timed_out)) == []
-    assert timed_out.removed
-
-    live = FakeState()
-    batch = pd.DataFrame(
-        {
-            "conv_id": ["c", "c"],
-            "turn_idx": [0, 1],
-            "ts": [pd.Timestamp(100, unit="s"), pd.Timestamp(130, unit="s")],
-            "side": ["f", "q"],
-            "functionals": [[3.0], None],
-        }
-    )
-    out = pd.concat(list(fold(("c",), iter([batch]), live)), ignore_index=True)
-    assert list(out["turn_idx"]) == [1] and list(out.loc[0, "functionals"]) == [3.0]
-    assert live.timeout_ms == 60_000
-    # state carries (feat..., watermark) — 5 fields
-    assert len(live.updated) == 5 and live.updated[3] == 130_000_000
 
 
 def test_stateful_asof_null_ts_never_enters_state():

@@ -69,9 +69,12 @@ def test_one_layout_path_source_scan():
     and ``partitionBy("conv_bucket")`` each appear once in the package,
     ``bench.py``, ``__spark_entry__.py``, ``jobs/`` and ``tools/``, inside
     ``operators/resume.commit_rebuilt_partitions`` (the one writer); no call
-    nests ``load_manifest(`` inside ``pin_n_buckets(`` (the pin loads the
-    manifest itself); and the package never buckets with ``zlib`` (every
-    bucket is ``bucket_col``, computed by Spark)."""
+    nests ``load_manifest(`` inside ``pin_layout(`` (the pin loads the
+    manifest itself); the package never buckets with ``zlib`` (every
+    bucket is ``bucket_col``, computed by Spark); and the schema of a
+    layout table or the log is never inferred: every ``.read...parquet(``
+    in the layout's modules chains a ``.schema(``, and no ``read_buckets(``
+    call passes a schema (it takes the manifest's)."""
     import ast
     import re
     from pathlib import Path
@@ -87,6 +90,17 @@ def test_one_layout_path_source_scan():
     ]
     layout_write = re.compile(r"""partitionOverwriteMode|partitionBy\(\s*["']conv_bucket["']\s*\)""")
     called = lambda node: getattr(node.func, "id", getattr(node.func, "attr", None))
+    layout_modules = {"operators/resume.py", "plans/backfill.py", "streaming/delta.py"}
+
+    def chain(node):
+        """Attribute names along a call chain, outermost first."""
+        names = []
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Attribute):
+                names.append(node.attr)
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return names
+
     writes, bad = [], []
     for path in sources:
         rel, text = path.relative_to(root), path.read_text()
@@ -103,9 +117,17 @@ def test_one_layout_path_source_scan():
                     bad.append(f"{rel}:{i}: layout write outside the one writer: {line.strip()}")
             if "zlib" in line and path.is_relative_to(pkg):
                 bad.append(f"{rel}:{i}: zlib in the package: {line.strip()}")
+        module = rel.relative_to("podcast_audio_feature_extraction_spark").as_posix() if path.is_relative_to(pkg) else None
         for node in ast.walk(tree):
-            if isinstance(node, ast.Call) and called(node) == "pin_n_buckets":
+            if isinstance(node, ast.Call) and called(node) == "pin_layout":
                 if any(isinstance(n, ast.Call) and called(n) == "load_manifest" for n in ast.walk(node)):
-                    bad.append(f"{rel}:{node.lineno}: load_manifest( nested inside pin_n_buckets(")
+                    bad.append(f"{rel}:{node.lineno}: load_manifest( nested inside pin_layout(")
+            if isinstance(node, ast.Call) and called(node) == "read_buckets":
+                if len(node.args) > 3 or node.keywords:
+                    bad.append(f"{rel}:{node.lineno}: read_buckets( given a schema (it reads the pinned one)")
+            if module in layout_modules and isinstance(node, ast.Call) and called(node) == "parquet":
+                names = chain(node.func)
+                if "read" in names and "schema" not in names:
+                    bad.append(f"{rel}:{node.lineno}: schema-inferring read: {ast.unparse(node)}")
     assert not bad, bad
     assert sorted(writes) == ['partitionBy("conv_bucket")', "partitionOverwriteMode"], writes

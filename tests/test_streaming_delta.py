@@ -304,7 +304,7 @@ def test_compaction_failed_log_delete_converges(spark, transcripts_pdf, tmp_path
     pd.testing.assert_frame_equal(base, want)
 
 
-@pytest.mark.xfail(strict=True, raises=AssertionError, reason="ROADMAP item 2")
+@pytest.mark.xfail(strict=True, raises=AssertionError, reason="ROADMAP item 3")
 def test_compaction_crash_inside_partition_commit_keeps_base(spark, transcripts_pdf, tmp_path, monkeypatch):
     """A crash INSIDE compaction's partition commit: Spark's ``commitJob``
     deletes a touched base bucket's directory, then the process dies
@@ -368,13 +368,13 @@ def test_stream_delta_redelivery_is_noop(spark, transcripts_pdf, tmp_path):
     bdir = f"{paths['log']}/batch=0"
     buckets = touched_buckets(bdf, N_BUCKETS)
     bdf.write.mode("overwrite").parquet(bdir)
-    _rebuild_batch(spark, buckets, bdf.schema, paths["base"], paths["log"], paths["features"], N_BUCKETS)
+    _rebuild_batch(spark, buckets, paths["base"], paths["log"], paths["features"], N_BUCKETS)
     want = _canon(spark.read.parquet(paths["features"]))
 
     # crash-replay: the SAME batch lands + rebuilds again (no manifest
     # short-circuit — the worst case) — every step must be idempotent.
     bdf.write.mode("overwrite").parquet(bdir)
-    _rebuild_batch(spark, buckets, bdf.schema, paths["base"], paths["log"], paths["features"], N_BUCKETS)
+    _rebuild_batch(spark, buckets, paths["base"], paths["log"], paths["features"], N_BUCKETS)
     got = _canon(spark.read.parquet(paths["features"]))
     pd.testing.assert_frame_equal(got, want)
 
@@ -394,7 +394,7 @@ def test_compaction_crash_replay_does_not_double_count(spark, transcripts_pdf, t
     bdir = f"{paths['log']}/batch=0"
     buckets = touched_buckets(bdf, N_BUCKETS)
     bdf.write.mode("overwrite").parquet(bdir)
-    _rebuild_batch(spark, buckets, bdf.schema, paths["base"], paths["log"], paths["features"], N_BUCKETS)
+    _rebuild_batch(spark, buckets, paths["base"], paths["log"], paths["features"], N_BUCKETS)
     want = _canon(spark.read.parquet(paths["features"]))
     snapshot_rows = len(pdf) + len(batch)
 
@@ -405,7 +405,7 @@ def test_compaction_crash_replay_does_not_double_count(spark, transcripts_pdf, t
     bdf.write.mode("overwrite").parquet(bdir)
 
     # a rebuild over the duplicated state must not double-count
-    _rebuild_batch(spark, buckets, bdf.schema, paths["base"], paths["log"], paths["features"], N_BUCKETS)
+    _rebuild_batch(spark, buckets, paths["base"], paths["log"], paths["features"], N_BUCKETS)
     got = _canon(spark.read.parquet(paths["features"]))
     pd.testing.assert_frame_equal(got, want)
 
@@ -475,9 +475,9 @@ def test_compaction_corrupt_base_raises_and_keeps_log(spark, transcripts_pdf, tm
     """A base that exists but cannot be read is not "no base yet": the
     compaction must raise and keep the log, instead of overwriting the
     touched buckets with log-only rows and deleting the log. With
-    ``corrupt_only`` the garbage file is the base's only file, so Spark
-    meets it while inferring the schema; otherwise it may meet it only
-    in the merge job."""
+    ``corrupt_only`` the garbage file is the base's only file beside its
+    manifest, so the read with the pinned schema meets it in the first
+    job that reads base; otherwise it may meet it only in the merge job."""
     import glob
     import shutil
 
@@ -490,7 +490,8 @@ def test_compaction_corrupt_base_raises_and_keeps_log(spark, transcripts_pdf, tm
     bdf.write.parquet(f"{paths['log']}/batch=0")
     bucket_dir = f"{paths['base']}/conv_bucket={touched_buckets(bdf, N_BUCKETS)[0]}"
     if corrupt_only:
-        shutil.rmtree(paths["base"])
+        for d in glob.glob(paths["base"] + "/conv_bucket=*"):
+            shutil.rmtree(d)
         os.makedirs(bucket_dir)
     with open(f"{bucket_dir}/part-00000-corrupt.snappy.parquet", "wb") as f:
         f.write(b"not a parquet file")
@@ -502,23 +503,79 @@ def test_compaction_corrupt_base_raises_and_keeps_log(spark, transcripts_pdf, tm
     assert sorted(glob.glob(paths["base"] + "/conv_bucket=*/*.parquet")) == base_files
 
 
+def _digest(*roots):
+    """sha256 of every file under ``roots``, keyed by path."""
+    import hashlib
+
+    return {
+        os.path.join(d, f): hashlib.sha256(open(os.path.join(d, f), "rb").read()).hexdigest()
+        for root in roots
+        for d, _, files in os.walk(root)
+        for f in files
+    }
+
+
+def test_compaction_unpinned_base_raises_and_keeps_log(spark, transcripts_pdf, tmp_path):
+    """A base whose manifest pins no schema (stored before schemas were
+    pinned, and no stream started on it since) cannot be read without
+    inference: compaction raises before it reads or writes anything, and
+    keeps the log."""
+    import glob
+    import json
+
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+
+    pdf, paths = _mk_base(spark, transcripts_pdf, tmp_path)
+    (batch,) = _delta_batches(pdf, n_batches=1)
+    spark.createDataFrame(batch, schema=TRANSCRIPT_SCHEMA).write.parquet(f"{paths['log']}/batch=0")
+    mpath = os.path.join(paths["base"], "_manifest.json")
+    manifest = json.load(open(mpath))
+    del manifest["schema"]
+    json.dump(manifest, open(mpath, "w"))
+    before = _digest(paths["base"], paths["log"])
+
+    with pytest.raises(ValueError, match="no schema pinned"):
+        compact_transcript_log(spark, paths["base"], paths["log"], n_buckets=N_BUCKETS)
+    assert glob.glob(paths["log"] + "/batch=*") == [f"{paths['log']}/batch=0"]
+    assert _digest(paths["base"], paths["log"]) == before
+
+
 def test_rebuild_bootstraps_from_missing_base(spark, transcripts_pdf, tmp_path):
-    """No base written yet (a fresh pipeline): the rebuild reads the base
-    as empty and builds the touched buckets from the log alone."""
+    """No base written yet (a fresh pipeline, base pinned by the stream's
+    start): the rebuild reads the base as empty and builds the touched
+    buckets from the log alone."""
     from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
     from podcast_audio_feature_extraction_spark.plans.backfill import touched_buckets
+    from podcast_audio_feature_extraction_spark.operators.resume import pin_layout, record_pin
     from podcast_audio_feature_extraction_spark.streaming.delta import _rebuild_batch
 
     (batch,) = _delta_batches(transcripts_pdf.assign(val=1.0), n_batches=1)
     bdf = spark.createDataFrame(batch, schema=TRANSCRIPT_SCHEMA)
-    log, features = str(tmp_path / "log"), str(tmp_path / "features")
+    base, log, features = (str(tmp_path / k) for k in ("base", "log", "features"))
+    record_pin(base, pin_layout(base, N_BUCKETS, bdf.schema))  # as the stream's start does
     bdf.write.parquet(f"{log}/batch=0")
-    n = _rebuild_batch(
-        spark, touched_buckets(bdf, N_BUCKETS), bdf.schema, str(tmp_path / "base"), log, features, N_BUCKETS
-    )
+    n = _rebuild_batch(spark, touched_buckets(bdf, N_BUCKETS), base, log, features, N_BUCKETS)
     assert n >= 1
     want = _canon(build_feature_table(bdf))
     pd.testing.assert_frame_equal(_canon(spark.read.parquet(features).drop("conv_bucket")), want)
+
+
+def test_stream_bootstraps_a_missing_base(spark, transcripts_pdf, tmp_path):
+    """A fresh pipeline has no base. The stream pins its own schema into
+    base at start, builds the first batch's features from the log alone,
+    and compaction then creates base's files from the log, read with
+    that pin."""
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+
+    paths = {k: str(tmp_path / k) for k in ("base", "log", "features", "ckpt", "incoming")}
+    (batch,) = _delta_batches(transcripts_pdf.assign(val=1.0), n_batches=1)
+    _stage_incoming(spark, paths, [batch])
+    _run_stream(spark, paths)
+
+    bdf = spark.createDataFrame(batch, schema=TRANSCRIPT_SCHEMA)
+    pd.testing.assert_frame_equal(_canon(spark.read.parquet(paths["features"])), _canon(build_feature_table(bdf)))
+    assert compact_transcript_log(spark, paths["base"], paths["log"], n_buckets=N_BUCKETS) == len(batch)
+    pd.testing.assert_frame_equal(_canon_transcript(spark.read.parquet(paths["base"])), _canon_transcript(bdf))
 
 
 def test_rebuild_bootstraps_from_empty_base_dir(spark, transcripts_pdf, tmp_path):
@@ -526,14 +583,16 @@ def test_rebuild_bootstraps_from_empty_base_dir(spark, transcripts_pdf, tmp_path
     like a missing one: the touched buckets are built from the log alone."""
     from podcast_audio_feature_extraction_spark.plans.backfill import touched_buckets
     from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+    from podcast_audio_feature_extraction_spark.operators.resume import pin_layout, record_pin
     from podcast_audio_feature_extraction_spark.streaming.delta import _rebuild_batch
 
     (batch,) = _delta_batches(transcripts_pdf.assign(val=1.0), n_batches=1)
     bdf = spark.createDataFrame(batch, schema=TRANSCRIPT_SCHEMA)
     base, log, features = (str(tmp_path / k) for k in ("base", "log", "features"))
     os.makedirs(base)
+    record_pin(base, pin_layout(base, N_BUCKETS, bdf.schema))  # as the stream's start does
     bdf.write.parquet(f"{log}/batch=0")
-    _rebuild_batch(spark, touched_buckets(bdf, N_BUCKETS), bdf.schema, base, log, features, N_BUCKETS)
+    _rebuild_batch(spark, touched_buckets(bdf, N_BUCKETS), base, log, features, N_BUCKETS)
     pd.testing.assert_frame_equal(_canon(spark.read.parquet(features)), _canon(build_feature_table(bdf)))
 
 
@@ -565,6 +624,60 @@ def test_stream_batch_runs_four_jobs(spark, transcripts_pdf, tmp_path):
 
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
     assert len(jobs) <= 4, sorted(jobs)
+
+
+def test_compaction_runs_five_jobs(spark, transcripts_pdf, tmp_path):
+    """A compaction costs one job for the touched-bucket rule over the log
+    and the rest for the merge and the one writer's commit. The log and
+    base are read with base's pinned schema, so no job infers one."""
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
+
+    pdf, paths = _mk_base(spark, transcripts_pdf, tmp_path)
+    for i, b in enumerate(_delta_batches(pdf, n_batches=3)):
+        spark.createDataFrame(b, schema=TRANSCRIPT_SCHEMA).write.parquet(f"{paths['log']}/batch={i}")
+    sc = spark.sparkContext
+    sc.setJobGroup("compaction-jobs", "compaction")
+    try:
+        compact_transcript_log(spark, paths["base"], paths["log"], n_buckets=N_BUCKETS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("compaction-jobs")
+    assert len(jobs) <= 5, sorted(jobs)
+
+
+def test_layout_pinned_with_another_schema_is_refused(spark, transcripts_pdf, tmp_path):
+    """Base is pinned with TRANSCRIPT_SCHEMA (no ``val``). The stream, a
+    compaction of a log that a ``val`` stream pinned, a re-store and the
+    resumable backfill each bring TRANSCRIPT_VAL_SCHEMA rows: each raises,
+    naming ``['val']``, before it writes anything, so every file under
+    base and the log, their manifests included, stays byte-identical."""
+    from podcast_audio_feature_extraction_spark.operators.resume import run_resumable
+    from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_VAL_SCHEMA
+
+    pdf, paths = _mk_base(spark, transcripts_pdf, tmp_path)
+    _stage_incoming(spark, paths, _delta_batches(pdf, n_batches=1))
+    val_rows = spark.createDataFrame(pdf, schema=TRANSCRIPT_VAL_SCHEMA)
+    # another pipeline's stream pins the log with val, then lands a batch
+    other = {k: str(tmp_path / "other" / k) for k in ("base", "features", "ckpt", "empty")}
+    os.makedirs(other["empty"])
+    stream_incremental_feature_build(
+        spark.readStream.schema(TRANSCRIPT_VAL_SCHEMA).parquet(other["empty"]),
+        other["base"], paths["log"], other["features"], other["ckpt"], n_buckets=N_BUCKETS,
+    ).awaitTermination()
+    val_rows.limit(3).write.parquet(f"{paths['log']}/batch=0")
+    before = _digest(paths["base"], paths["log"])
+
+    refusals = [
+        lambda: _run_stream(spark, paths, schema=TRANSCRIPT_VAL_SCHEMA),
+        lambda: compact_transcript_log(spark, paths["base"], paths["log"], n_buckets=N_BUCKETS),
+        lambda: write_conv_partitioned(val_rows, paths["base"], n_buckets=N_BUCKETS),
+        lambda: run_resumable(lambda df: df, val_rows, paths["base"], n_buckets=N_BUCKETS),
+    ]
+    for refused in refusals:
+        with pytest.raises(ValueError, match=r"\['val'\]"):
+            refused()
+        assert _digest(paths["base"], paths["log"]) == before
+    assert not os.path.exists(paths["ckpt"])
 
 
 def test_rebuild_plan_shuffles_on_conv_id_and_conv_bucket_only(spark, transcripts_pdf):

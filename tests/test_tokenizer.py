@@ -19,6 +19,12 @@ import pytest
 
 from podcast_audio_feature_extraction_spark.functions.embedding import _token_slot, with_embedding
 from podcast_audio_feature_extraction_spark.functions.text import (
+    URL_PATTERN,
+    _extract_all,
+    bpe_token_count_col,
+    bpe_token_count_sql,
+    quality_cols,
+    quality_sql,
     shingles_col,
     split_ws,
     tokens_col,
@@ -35,9 +41,12 @@ from podcast_audio_feature_extraction_spark.oracle.numpy_oracle import _tokens, 
 
 # not separators: vertical tab, NBSP, file separator, NEL, em space
 ODD = ["\x0b", "\xa0", "\x1c", "\x85", "\u2003"]
+# a vertical tab inside the regex twins' character classes (BPE, punct, URL)
+VT_PROBE = "a\x0bb http://x.io\x0bnext"
 PROBES = [f"alpha{c}beta gamma" for c in ODD] + [
     "alpha\tbeta\ngamma\fdelta\rgamma",
     " \t lead and trail \r\n",
+    VT_PROBE,
     "",
     None,
 ]
@@ -104,6 +113,31 @@ def test_duckdb_twin_splits_like_the_reference():
     got = con.sql(f"SELECT id, {toks} AS t FROM texts ORDER BY id").fetchall()
     for (_, toks), text in zip(got, PROBES):
         assert toks == _tokens(text), repr(text)
+
+
+def test_regex_twins_read_a_vertical_tab_as_re2_does(spark):
+    """The BPE count, the punctuation ratio and the URL match keep their
+    DuckDB text verbatim, where RE2's ``\\s`` excludes ``\\v``; Spark
+    spells each ``\\s`` as the WS class, so both engines take a vertical
+    tab for punctuation, not a space."""
+    con = duckdb.connect()
+    con.register("texts", pd.DataFrame({"text": [VT_PROBE]}))
+    duck = con.sql(
+        f"SELECT {bpe_token_count_sql('text')}, {quality_sql('text')['punct_ratio']}, "
+        f"regexp_extract_all(text, '{URL_PATTERN}') FROM texts"
+    ).fetchone()
+    text = F.col("text")
+    got = (
+        spark.createDataFrame([(VT_PROBE,)], "text string")
+        .select(
+            bpe_token_count_col(text),
+            quality_cols(text)["punct_ratio"],
+            _extract_all(text, URL_PATTERN),
+        )
+        .first()
+    )
+    assert tuple(duck) == (12, 0.3, ["http://x.io\x0bnext"])
+    assert tuple(got) == tuple(duck)
 
 
 def _bm25_ref(docs: dict[str, list[str]], terms: list[str], k1=1.2, b=0.75) -> dict[str, float]:
@@ -176,9 +210,11 @@ SCANNED = [
 ]
 # where a whitespace escape or the spelled-out class may appear: the
 # helpers themselves, the regex patterns whose text is shared verbatim
-# with their DuckDB twins, and the oracle's independent copy of the class
+# with their DuckDB twins (and the Spark helper that spells their escape),
+# and the oracle's independent copy of the class
 ALLOWED = {
     ("functions/text.py", "tokens_sql"),
+    ("functions/text.py", "_extract_all"),
     ("functions/text.py", "WS"),
     ("functions/text.py", "PUNCT_PATTERN"),
     ("functions/text.py", "BPE_PATTERN"),
