@@ -21,17 +21,15 @@ from podcast_audio_feature_extraction_spark.operators.functionals import (
     window_functionals,
     window_functionals_sql,
 )
-from podcast_audio_feature_extraction_spark.operators.rolling import token_count, turn_features
+from podcast_audio_feature_extraction_spark.operators.rolling import ROLL_K, token_count, turn_features
 from podcast_audio_feature_extraction_spark.operators.segments import build_segments, build_segments_sql
 from podcast_audio_feature_extraction_spark.operators.sessionize import (
+    GAP_S,
     session_bounds,
     session_relative_features,
     sessionize,
 )
 from podcast_audio_feature_extraction_spark.sources.events import TRANSCRIPT_SQL, load_transcript
-
-GAP_S = 1800.0
-ROLL_K = 5
 
 
 def _utc(spark: SparkSession) -> None:
@@ -155,7 +153,7 @@ def q_window_functionals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window functionals over `val` (A1/W1: 120s window, 60s hop)."""
     _utc(spark)
     t = load_transcript(spark, sf_dir)
-    return window_functionals(t, "120 seconds", "60 seconds")
+    return window_functionals(t)
 
 
 GRID_DESCRIPTORS = ["val", "tok", "chr", "tl", "wlen", "dgt", "upr", "pnc"]
@@ -1049,10 +1047,10 @@ def oracle_sql() -> dict[str, str]:
         ),
         "turn_embedding": _with_transcript(_turn_embedding_sql(dim=16)),
         "turn_features": _with_transcript(turn_features_inner),
-        "window_functionals": _with_transcript(window_functionals_sql(120, 60)),
+        "window_functionals": _with_transcript(window_functionals_sql()),
         "window_functionals_multi": _with_transcript(_wf_multi_sql()),
         "robust_scale": _with_transcript(_robust_scale_sql()),
-        "segments": _with_transcript(build_segments_sql(120, 60)),
+        "segments": _with_transcript(build_segments_sql()),
         "interval_join": _with_transcript(_interval_fetch_sql()),
         "asof_backfill": _with_transcript(
             f"""
@@ -1150,13 +1148,13 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY CUBE (l_returnflag, l_linestatus)
         """,
         "search_topk": _with_transcript(
-            f", segments AS ({build_segments_sql(120, 60)}) " + _search_sql()
+            f", segments AS ({build_segments_sql()}) " + _search_sql()
         ),
         "search_bm25": _with_transcript(
-            f", segments AS ({build_segments_sql(120, 60)}) " + _bm25_sql()
+            f", segments AS ({build_segments_sql()}) " + _bm25_sql()
         ),
         "search_bm25_indexed": _with_transcript(
-            f", segments AS ({build_segments_sql(120, 60)}) " + _bm25_indexed_sql()
+            f", segments AS ({build_segments_sql()}) " + _bm25_indexed_sql()
         ),
         "argmax_match": """
             SELECT label,
@@ -1165,7 +1163,7 @@ def oracle_sql() -> dict[str, str]:
             FROM embeddings GROUP BY label
         """,
         "search_eval": _with_transcript(
-            f", segments AS ({build_segments_sql(120, 60)}) " + _search_eval_sql()
+            f", segments AS ({build_segments_sql()}) " + _search_eval_sql()
         ),
         "tokenize_pad": _tokenize_pad_sql(),
         "shipping_priority": """
@@ -1330,7 +1328,7 @@ def _wf_multi_sql() -> str:
                    CAST(length({txt}) - length(regexp_replace({txt}, '[.,!?;:]', '', 'g')) AS DOUBLE) AS pnc
             FROM transcript
         ) """
-        + functional_grid_sql(GRID_DESCRIPTORS, stats=GRID_STATS, length_s=120, hop_s=60, src="__m")
+        + functional_grid_sql(GRID_DESCRIPTORS, stats=GRID_STATS, src="__m")
     )
 
 
@@ -1347,7 +1345,7 @@ def _robust_scale_sql() -> str:
 def _mood_scores_sql() -> str:
     from podcast_audio_feature_extraction_spark.operators.rerank import mood_scores_sql
 
-    return mood_scores_sql(120, 60, src="transcript")
+    return mood_scores_sql()
 
 
 def _rerank_moods_sql() -> str:
@@ -1631,4 +1629,4 @@ def entry(spark: SparkSession) -> DataFrame:
     from podcast_audio_feature_extraction_spark.plans.backfill import flagship
 
     t = load_transcript(spark, "/root/testdata/sf0.001")
-    return flagship(t, gap_s=GAP_S, k=ROLL_K)
+    return flagship(t)

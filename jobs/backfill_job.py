@@ -4,11 +4,13 @@
     spark-submit --py-files /tmp/engine.zip jobs/backfill_job.py \
         --input  /data/transcripts_parquet \
         --output /data/features \
-        --gap-seconds 1800 --window-k 5 --n-buckets 256 --batch-size 16
+        --n-buckets 256 --batch-size 16
 
 Reads the canonical transcript table (conv_id, turn_idx, role, text, tool,
 ts [, val]), builds the per-turn feature table (sessionize -> rolling
-functionals -> hash embedding), and lands it bucket-by-bucket with the
+functionals -> hash embedding; ``plans.backfill.build_feature_table``,
+the one definition the delta stream also builds, so the job takes no
+feature settings), and lands it bucket-by-bucket with the
 checkpoint manifest — rerunning after a failure resumes from the last
 committed bucket. Metrics (rows, wall_s, turns/sec per bucket and per run)
 are written into the manifest alongside the data, the local stand-in for
@@ -33,9 +35,6 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", required=True, help="transcript parquet path")
     p.add_argument("--output", required=True, help="feature table output dir")
-    p.add_argument("--gap-seconds", type=float, default=1800.0)
-    p.add_argument("--window-k", type=int, default=5)
-    p.add_argument("--embed-dim", type=int, default=64)
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--batch-size", type=int, default=8)
     p.add_argument("--master", default=None, help="override master (defaults to cluster conf)")
@@ -51,10 +50,7 @@ def main(argv: list[str] | None = None) -> int:
     val_col = "val" if "val" in transcripts.columns else None
 
     def transform(df):
-        return build_feature_table(
-            df, gap_s=args.gap_seconds, k=args.window_k,
-            embed_dim=args.embed_dim, val_col=val_col,
-        )
+        return build_feature_table(df, val_col=val_col)
 
     run = run_resumable(
         transform, transcripts, args.output,

@@ -29,7 +29,8 @@ from pyspark.sql.types import ArrayType, DoubleType
 
 from podcast_audio_feature_extraction_spark.functions.text import split_ws
 
-DEFAULT_DIM = 64
+# the embedding width of the feature table
+EMBED_DIM = 64
 
 
 def _token_slot(token: str, dim: int) -> tuple[int, float]:
@@ -39,7 +40,7 @@ def _token_slot(token: str, dim: int) -> tuple[int, float]:
     return idx, sgn
 
 
-def embed_text_np(text: str | None, dim: int = DEFAULT_DIM, _cache: dict | None = None) -> np.ndarray:
+def embed_text_np(text: str | None, dim: int = EMBED_DIM, _cache: dict | None = None) -> np.ndarray:
     """Engine-side single-text embedding (float64)."""
     vec = np.zeros(dim, dtype=np.float64)
     if not text:
@@ -56,7 +57,7 @@ def embed_text_np(text: str | None, dim: int = DEFAULT_DIM, _cache: dict | None 
     return vec
 
 
-def make_embed_udf(dim: int = DEFAULT_DIM):
+def make_embed_udf(dim: int = EMBED_DIM):
     """Arrow-vectorized pandas UDF: text column -> array<double> embedding."""
 
     @F.pandas_udf(ArrayType(DoubleType()))
@@ -67,5 +68,5 @@ def make_embed_udf(dim: int = DEFAULT_DIM):
     return embed
 
 
-def with_embedding(df, text_col: str = "text", out_col: str = "embedding", dim: int = DEFAULT_DIM):
-    return df.withColumn(out_col, make_embed_udf(dim)(F.col(text_col)))
+def with_embedding(df, dim: int = EMBED_DIM):
+    return df.withColumn("embedding", make_embed_udf(dim)(F.col("text")))

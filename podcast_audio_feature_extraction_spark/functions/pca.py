@@ -23,19 +23,13 @@ from pyspark.sql.types import ArrayType, DoubleType
 from podcast_audio_feature_extraction_spark.operators.similarity import _ordered_sample
 
 
-def fit_pca_whitener_local(
-    parquet_path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_rows: int = 10_000,
-    clip: float = 2.0,
-):
+def fit_pca_whitener_local(parquet_path: str, sample_rows: int = 10_000, clip: float = 2.0):
     """Fit mean + whitening matrix on the file's ordered sample (the
-    ``_local`` fits' one sample, keyed on ``id_col``; DuckDB+numpy, no
+    ``_local`` fits' one sample, keyed on ``vec_id``; DuckDB+numpy, no
     Spark). The same file and arguments give bit-identical params on every
     call, so a Spark query and its DuckDB twin fitting from the same file
     inline the same literals."""
-    x = _ordered_sample(parquet_path, vec_col, id_col, sample_rows)
+    x = _ordered_sample(parquet_path, sample_rows)
     mean = x.mean(axis=0)
     cov = np.cov(x - mean, rowvar=False, ddof=0)
     evals, evecs = np.linalg.eigh(cov)
@@ -85,9 +79,10 @@ def whiten_component_sql(vec_expr: str, params: dict, j: int) -> str:
     return f"least(greatest({y}, {dlit(-clip)}), {dlit(clip)})"
 
 
-def apply_pca_whitener(df: DataFrame, params: dict, vec_col: str = "embedding", out_col: str = "whitened") -> DataFrame:
-    """Executor-side whitening: broadcast params, batch matmul per Arrow
-    batch, clip to [-clip, clip] (VGGishExtractor.py postprocess shape).
+def apply_pca_whitener(df: DataFrame, params: dict) -> DataFrame:
+    """Executor-side whitening of ``embedding`` into ``whitened``:
+    broadcast params, batch matmul per Arrow batch, clip to [-clip, clip]
+    (VGGishExtractor.py postprocess shape).
     No query runs it: it is the independent reference that
     :func:`whiten_component_col` is checked against (a BLAS matmul, not
     the sequential fold)."""
@@ -106,5 +101,5 @@ def apply_pca_whitener(df: DataFrame, params: dict, vec_col: str = "embedding", 
         y = np.clip((x - mean) @ mat.T, -clip, clip)
         return pd.Series(list(y))
 
-    return df.withColumn(out_col, whiten(F.col(vec_col)))
+    return df.withColumn("whitened", whiten(F.col("embedding")))
 

@@ -1,6 +1,10 @@
-"""SQL-literal formatting shared by the DuckDB oracle twins."""
+"""Formatting shared by the Spark operators and their DuckDB oracle twins."""
 
 from __future__ import annotations
+
+# float results are rounded to this many digits in BOTH dialects: the two
+# engines accumulate in different orders, identical only to ~1e-12
+ROUND_DIGITS = 6
 
 
 def dlit(v) -> str:

@@ -14,6 +14,8 @@ import re
 
 from pyspark.sql import Column, functions as F
 
+from podcast_audio_feature_extraction_spark.functions.sqlfmt import ROUND_DIGITS
+
 # The token separator class. It is RE2's ``\s``, which every DuckDB twin
 # already means; Java's ``\s`` adds ``\v`` and Python's adds all Unicode
 # whitespace, so no tokenizer may use either escape.
@@ -22,6 +24,8 @@ _WS_RE = re.compile(WS)
 _WS_CHARS = " \t\n\f\r"
 
 SHINGLE_K = 3
+# the hash vocabulary of tokenize_pad: ids 1..VOCAB_SIZE-1, 0 is the pad
+VOCAB_SIZE = 32768
 
 
 def tokens_col(text_col: Column) -> Column:
@@ -117,7 +121,7 @@ URL_PATTERN = r"https?://[^\s]+"
 EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 
 
-def quality_cols(text_col: Column, round_digits: int = 6) -> dict[str, Column]:
+def quality_cols(text_col: Column) -> dict[str, Column]:
     """Quality-scoring features: token/char counts, mean token length,
     stopword ratio (en), type-token ratio, punctuation ratio, 3-gram
     repetition ratio (C4-style boilerplate signal), URL/email counts
@@ -138,25 +142,25 @@ def quality_cols(text_col: Column, round_digits: int = 6) -> dict[str, Column]:
         "n_tokens": n.cast("int"),
         "n_chars": chars.cast("int"),
         "mean_token_len": F.round(
-            F.aggregate(toks, F.lit(0.0), lambda acc, t: acc + F.length(t)) / safe_n, round_digits
+            F.aggregate(toks, F.lit(0.0), lambda acc, t: acc + F.length(t)) / safe_n, ROUND_DIGITS
         ),
-        "stopword_ratio": F.round(en_stop / safe_n.cast("double"), round_digits),
-        "type_token_ratio": F.round(F.size(F.array_distinct(toks)) / safe_n.cast("double"), round_digits),
-        "punct_ratio": F.round(punct / F.greatest(chars, F.lit(1)).cast("double"), round_digits),
+        "stopword_ratio": F.round(en_stop / safe_n.cast("double"), ROUND_DIGITS),
+        "type_token_ratio": F.round(F.size(F.array_distinct(toks)) / safe_n.cast("double"), ROUND_DIGITS),
+        "punct_ratio": F.round(punct / F.greatest(chars, F.lit(1)).cast("double"), ROUND_DIGITS),
         # a doc with no possible trigram is NOT boilerplate: ratio 0, not 1
         "rep_3gram_ratio": F.round(
             F.when(
                 n_k > 0,
                 F.lit(1.0) - F.size(F.array_distinct(kgrams)) / n_k.cast("double"),
             ).otherwise(F.lit(0.0)),
-            round_digits,
+            ROUND_DIGITS,
         ),
         "n_urls": F.size(_extract_all(text_col, URL_PATTERN)).cast("int"),
         "n_emails": F.size(_extract_all(text_col, EMAIL_PATTERN)).cast("int"),
     }
 
 
-def quality_sql(text_expr: str = "text", round_digits: int = 6) -> dict[str, str]:
+def quality_sql(text_expr: str = "text") -> dict[str, str]:
     toks = tokens_sql(f"COALESCE({text_expr},'')")
     n = f"len({toks})"
     safe_n = f"greatest({n}, 1)"
@@ -169,23 +173,25 @@ def quality_sql(text_expr: str = "text", round_digits: int = 6) -> dict[str, str
     return {
         "n_tokens": f"CAST({n} AS INT)",
         "n_chars": f"CAST({chars} AS INT)",
-        "mean_token_len": f"round(list_sum(list_transform({toks}, t -> CAST(length(t) AS DOUBLE))) / {safe_n}, {round_digits})",
-        "stopword_ratio": f"round(CAST(len(list_intersect(list_transform({toks}, t -> lower(t)), {en})) AS DOUBLE) / {safe_n}, {round_digits})",
-        "type_token_ratio": f"round(CAST(len(list_distinct({toks})) AS DOUBLE) / {safe_n}, {round_digits})",
-        "punct_ratio": f"round(CAST(len(regexp_extract_all(COALESCE({text_expr},''), '{PUNCT_PATTERN}')) AS DOUBLE) / greatest({chars}, 1), {round_digits})",
-        "rep_3gram_ratio": f"round(CASE WHEN len({kgrams}) > 0 THEN 1.0 - CAST(len(list_distinct({kgrams})) AS DOUBLE) / len({kgrams}) ELSE 0.0 END, {round_digits})",
+        "mean_token_len": f"round(list_sum(list_transform({toks}, t -> CAST(length(t) AS DOUBLE))) / {safe_n}, {ROUND_DIGITS})",
+        "stopword_ratio": f"round(CAST(len(list_intersect(list_transform({toks}, t -> lower(t)), {en})) AS DOUBLE) / {safe_n}, {ROUND_DIGITS})",
+        "type_token_ratio": f"round(CAST(len(list_distinct({toks})) AS DOUBLE) / {safe_n}, {ROUND_DIGITS})",
+        "punct_ratio": f"round(CAST(len(regexp_extract_all(COALESCE({text_expr},''), '{PUNCT_PATTERN}')) AS DOUBLE) / greatest({chars}, 1), {ROUND_DIGITS})",
+        "rep_3gram_ratio": f"round(CASE WHEN len({kgrams}) > 0 THEN 1.0 - CAST(len(list_distinct({kgrams})) AS DOUBLE) / len({kgrams}) ELSE 0.0 END, {ROUND_DIGITS})",
         "n_urls": f"CAST(len(regexp_extract_all(COALESCE({text_expr},''), '{URL_PATTERN}')) AS INT)",
         "n_emails": f"CAST(len(regexp_extract_all(COALESCE({text_expr},''), '{EMAIL_PATTERN}')) AS INT)",
     }
 
 
-def fingerprint_col(text_col: Column, k: int = 3) -> Column:
-    """Document fingerprint: min md5 over k-token shingles (winnowing with
-    a document-wide window — stable under shingle reordering)."""
-    return F.array_min(F.transform(shingles_col(text_col, k), F.md5))
+def fingerprint_col(text_col: Column) -> Column:
+    """Document fingerprint: min md5 over SHINGLE_K-token shingles
+    (winnowing with a document-wide window — stable under shingle
+    reordering)."""
+    return F.array_min(F.transform(shingles_col(text_col), F.md5))
 
 
-def fingerprint_sql(text_expr: str = "text", k: int = 3) -> str:
+def fingerprint_sql(text_expr: str = "text") -> str:
+    k = SHINGLE_K
     toks = tokens_sql(f"COALESCE({text_expr},'')")
     sh = (
         f"CASE WHEN len({toks}) >= {k} THEN list_transform(range(len({toks}) - {k - 1}), "
@@ -194,16 +200,16 @@ def fingerprint_sql(text_expr: str = "text", k: int = 3) -> str:
     return f"list_aggregate(list_transform(list_distinct({sh}), s -> md5(s)), 'min')"
 
 
-def tokenize_pad_col(text_col: Column, max_len: int = 32, vocab_size: int = 32768) -> Column:
+def tokenize_pad_col(text_col: Column, max_len: int = 32) -> Column:
     """F10: tokenize then pad with 0 / truncate to EXACTLY ``max_len`` ids
     (reference pads/truncates to 512 for the rerank model). One expression:
     append max_len pads, slice to max_len. Ids are a portable hash
-    vocabulary: md5 prefix mod (vocab_size-1), shifted by 1 so id 0 stays
+    vocabulary: md5 prefix mod (VOCAB_SIZE-1), shifted by 1 so id 0 stays
     reserved as the pad token (the BERT-style preprocessing shape of the
     reference's src/search/search.py:244-275)."""
     ids = F.transform(
         tokens_col(text_col),
-        lambda t: (F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long") % F.lit(vocab_size - 1) + 1).cast(
+        lambda t: (F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long") % F.lit(VOCAB_SIZE - 1) + 1).cast(
             "int"
         ),
     )
@@ -219,12 +225,12 @@ def attention_mask_col(text_col: Column, max_len: int = 32) -> Column:
     )
 
 
-def tokenize_pad_sql(text_expr: str = "text", max_len: int = 32, vocab_size: int = 32768) -> str:
+def tokenize_pad_sql(text_expr: str = "text", max_len: int = 32) -> str:
     """DuckDB twin of :func:`tokenize_pad_col`."""
     toks = tokens_sql(f"COALESCE({text_expr},'')")
     ids = (
         f"list_transform({toks}, t -> "
-        f"CAST(CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % {vocab_size - 1} + 1 AS INT))"
+        f"CAST(CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % {VOCAB_SIZE - 1} + 1 AS INT))"
     )
     pads = f"list_transform(range({max_len}), i -> 0)"
     return f"({ids} || {pads})[1:{max_len}]"

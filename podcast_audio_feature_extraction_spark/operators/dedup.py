@@ -27,7 +27,14 @@ from podcast_audio_feature_extraction_spark.checkpoint import (
     free_local_checkpoint as _free_local_checkpoint,
 )
 from podcast_audio_feature_extraction_spark.checkpoint import swap_cached as _swap_cached
+from podcast_audio_feature_extraction_spark.functions.sqlfmt import ROUND_DIGITS
 from podcast_audio_feature_extraction_spark.functions.text import SHINGLE_K, shingles_col, tokens_col, tokens_sql
+
+# the one banding scheme: N_HASHES minhashes cut into bands of BAND_SIZE
+N_HASHES, BAND_SIZE = 12, 3
+N_BANDS = N_HASHES // BAND_SIZE
+# SimHash fingerprint width: 60 bits = the first 15 md5 hex chars
+SIMHASH_BITS = 60
 
 
 # single-slot cache for minhash_lsh_pairs' shingle table (see
@@ -35,43 +42,40 @@ from podcast_audio_feature_extraction_spark.functions.text import SHINGLE_K, shi
 _MINHASH_CKPT: list = [None]
 
 
-def minhash_col(shingles: Column, n_hashes: int = 12) -> Column:
-    """n_hashes permutations approximated by seed-prefixed md5; the
+def minhash_col(shingles: Column) -> Column:
+    """N_HASHES permutations approximated by seed-prefixed md5; the
     lexicographic min over hex digests is a valid uniform minhash."""
     return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
+        F.sequence(F.lit(0), F.lit(N_HASHES - 1)),
         lambda i: F.array_min(F.transform(shingles, lambda s: F.md5(F.concat(i.cast("string"), F.lit(":"), s)))),
     )
 
 
-def band_keys_col(minhashes: Column, n_bands: int, band_size: int) -> Column:
+def band_keys_col(minhashes: Column) -> Column:
     """LSH band keys: md5 over each band's '|'-joined minhashes. THE single
     definition of the banding scheme — self-join, block-reroute and
     cross-table contamination candidates are only comparable because every
     site builds band keys through this one expression."""
     return F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
-        lambda b: F.md5(F.array_join(F.slice(minhashes, b * band_size + 1, band_size), "|")),
+        F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
+        lambda b: F.md5(F.array_join(F.slice(minhashes, b * BAND_SIZE + 1, BAND_SIZE), "|")),
     )
 
 
-def jaccard_col(a: Column, b: Column, round_digits: int = 6) -> Column:
+def jaccard_col(a: Column, b: Column) -> Column:
     return F.round(
-        F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b)).cast("double"), round_digits
+        F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b)).cast("double"), ROUND_DIGITS
     )
 
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 12,
-    band_size: int = 3,
     jaccard_threshold: float = 0.2,
     max_bucket: int | None = 2000,
     reuse_table: bool = True,
 ) -> DataFrame:
-    """Candidate pairs via LSH banding, verified by exact shingle Jaccard.
+    """Candidate pairs of (doc_id, text) rows via LSH banding, verified by
+    exact shingle Jaccard.
 
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b, distinct.
 
@@ -86,24 +90,22 @@ def minhash_lsh_pairs(
 
     ``reuse_table`` caches the (doc_id, shingles, minhashes) table so
     the band self-join computes the md5-heavy shingle+minhash subtree
-    (n_hashes+1 md5 passes over every token) ONCE instead of once per
+    (N_HASHES+1 md5 passes over every token) ONCE instead of once per
     join side — the stored shingle-table shape a cluster deployment
     would use. Lazy single-slot persist (checkpoint.swap_cached): no job
     at construction time, a previous call's still-held result degrades
     to recomputation rather than erroring, block-manager growth
     bounded."""
-    n_bands = n_hashes // band_size
-    docs = df.select(
-        F.col(id_col).alias("doc_id"),
-        shingles_col(F.col(text_col)).alias("shingles"),
-    ).withColumn("minhashes", minhash_col(F.col("shingles"), n_hashes))
+    docs = df.select("doc_id", shingles_col(F.col("text")).alias("shingles")).withColumn(
+        "minhashes", minhash_col(F.col("shingles"))
+    )
     if reuse_table:
         docs = _swap_cached(_MINHASH_CKPT, docs)
 
     bands = docs.select(
         "doc_id",
         "shingles",
-        F.posexplode(band_keys_col(F.col("minhashes"), n_bands, band_size)).alias("band_idx", "band_key"),
+        F.posexplode(band_keys_col(F.col("minhashes"))).alias("band_idx", "band_key"),
     )
     if max_bucket is not None:
         from pyspark.sql.window import Window
@@ -130,21 +132,14 @@ def minhash_lsh_pairs(
     )
 
 
-def minhash_lsh_pairs_sql(
-    src: str = "documents",
-    id_col: str = "doc_id",
-    n_hashes: int = 12,
-    band_size: int = 3,
-    jaccard_threshold: float = 0.2,
-    k: int = SHINGLE_K,
-) -> str:
+def minhash_lsh_pairs_sql(src: str = "documents", jaccard_threshold: float = 0.2) -> str:
     """DuckDB twin of :func:`minhash_lsh_pairs` (embed after WITH ... or
     standalone prefixed by WITH)."""
-    n_bands = n_hashes // band_size
+    k = SHINGLE_K
     toks = tokens_sql("COALESCE(text,'')")
     return f"""
         , __docs AS (
-            SELECT {id_col} AS doc_id,
+            SELECT doc_id AS doc_id,
                    list_distinct(
                      CASE WHEN len({toks}) >= {k}
                           THEN list_transform(
@@ -155,14 +150,14 @@ def minhash_lsh_pairs_sql(
         ),
         __mh AS (
             SELECT doc_id, shingles,
-                   list_transform(range({n_hashes}),
+                   list_transform(range({N_HASHES}),
                        i -> list_aggregate(list_transform(shingles, s -> md5(i::VARCHAR || ':' || s)), 'min')) AS minhashes
             FROM __docs
         ),
         __bands AS (
             SELECT doc_id, shingles, b.range AS band_idx,
-                   md5(array_to_string(minhashes[b.range * {band_size} + 1 : b.range * {band_size} + {band_size}], '|')) AS band_key
-            FROM __mh CROSS JOIN range({n_bands}) b
+                   md5(array_to_string(minhashes[b.range * {BAND_SIZE} + 1 : b.range * {BAND_SIZE} + {BAND_SIZE}], '|')) AS band_key
+            FROM __mh CROSS JOIN range({N_BANDS}) b
         ),
         __cand AS (
             SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -180,8 +175,8 @@ def minhash_lsh_pairs_sql(
     """
 
 
-def simhash_table(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 60) -> DataFrame:
-    """SimHash fingerprint per row: bit j set iff the majority of token
+def simhash_table(df: DataFrame) -> DataFrame:
+    """SimHash fingerprint per (doc_id, text) row: bit j set iff the majority of token
     hashes have bit j set (strictly more set than unset).
 
     Two-projection form: the per-token 60-bit hash ARRAY is computed
@@ -195,9 +190,9 @@ def simhash_table(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     shiftleft/shiftright wrappers only take literal shift counts, not the
     lambda var ``j``."""
     hashes = F.transform(
-        tokens_col(F.col(text_col)), lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint")
+        tokens_col(F.col("text")), lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint")
     )
-    pre = df.select(F.col(id_col).alias("doc_id"), hashes.alias("__h"))
+    pre = df.select("doc_id", hashes.alias("__h"))
     bit_j = (
         "CASE WHEN 2 * size(filter(__h, h -> (shiftright(h, j) & 1) = 1)) > size(__h) "
         "THEN cast(1 as bigint) ELSE cast(0 as bigint) END"
@@ -205,7 +200,7 @@ def simhash_table(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     return pre.select(
         "doc_id",
         F.expr(
-            f"aggregate(sequence(0, {bits - 1}), cast(0 as bigint), (acc, j) -> acc + shiftleft({bit_j}, j))"
+            f"aggregate(sequence(0, {SIMHASH_BITS - 1}), cast(0 as bigint), (acc, j) -> acc + shiftleft({bit_j}, j))"
         ).alias("simhash"),
     )
 
@@ -217,8 +212,6 @@ _SIMHASH_CKPT: list = [None]
 
 def simhash_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 24,
     prefix_bits: int = 12,
     reuse_table: bool = True,
@@ -233,9 +226,7 @@ def simhash_pairs(
     more than twice — measured 7.0 s -> 0.17 s at sf0.01). On a cluster
     this is the stored-fingerprint-table shape. Lazy single-slot persist
     (checkpoint.swap_cached) — see :func:`minhash_lsh_pairs`."""
-    sh = simhash_table(df, id_col, text_col).withColumn(
-        "bucket", F.shiftright(F.col("simhash"), 60 - prefix_bits)
-    )
+    sh = simhash_table(df).withColumn("bucket", F.shiftright(F.col("simhash"), SIMHASH_BITS - prefix_bits))
     if reuse_table:
         sh = _swap_cached(_SIMHASH_CKPT, sh)
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"), "bucket")
@@ -249,18 +240,18 @@ def simhash_pairs(
     )
 
 
-def simhash_sql(src: str = "documents", id_col: str = "doc_id", bits: int = 60) -> str:
+def simhash_sql(src: str = "documents") -> str:
     """DuckDB twin of :func:`simhash_table` (fragment: `, __sh AS (...)` tail
     included by callers). Same two-step shape: hash array once in a
     subquery, bit fold over the materialized column."""
     toks = tokens_sql("COALESCE(text,'')")
     return f"""
         SELECT doc_id,
-               CAST(list_sum(list_transform(range({bits}), j ->
+               CAST(list_sum(list_transform(range({SIMHASH_BITS}), j ->
                    CASE WHEN 2 * len(list_filter(h, x -> (x >> j) & 1 = 1)) > len(h)
                         THEN (1::BIGINT << j) ELSE 0 END)) AS BIGINT) AS simhash
         FROM (
-            SELECT {id_col} AS doc_id,
+            SELECT doc_id AS doc_id,
                    list_transform({toks},
                                   t -> CAST('0x' || substr(md5(t), 1, 15) AS BIGINT)) AS h
             FROM {src}
@@ -268,19 +259,13 @@ def simhash_sql(src: str = "documents", id_col: str = "doc_id", bits: int = 60) 
     """
 
 
-def simhash_pairs_sql(
-    src: str = "documents",
-    id_col: str = "doc_id",
-    max_hamming: int = 24,
-    prefix_bits: int = 12,
-    bits: int = 60,
-) -> str:
+def simhash_pairs_sql(src: str = "documents", max_hamming: int = 24, prefix_bits: int = 12) -> str:
     """DuckDB twin of :func:`simhash_pairs` — same prefix-bucket blocking
     (the 100 TB path: equi-join on the top bits, hamming verify only on
     bucket collisions)."""
     return f"""
-        WITH __sh AS ({simhash_sql(src, id_col, bits)}),
-        __b AS (SELECT doc_id, simhash, simhash >> {bits - prefix_bits} AS bucket FROM __sh)
+        WITH __sh AS ({simhash_sql(src)}),
+        __b AS (SELECT doc_id, simhash, simhash >> {SIMHASH_BITS - prefix_bits} AS bucket FROM __sh)
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
         FROM __b a JOIN __b b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
@@ -288,12 +273,7 @@ def simhash_pairs_sql(
     """
 
 
-def dedup_clusters(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iters: int = 20,
-) -> DataFrame:
+def dedup_clusters(docs: DataFrame, pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Connected components over near-dup pairs -> one keeper per cluster.
 
     The last mile of every dedup pipeline: pair lists (from minhash/simhash
@@ -311,7 +291,7 @@ def dedup_clusters(
     e = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionByName(
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     ).distinct()
-    labels = docs.select(F.col(id_col).alias("node")).distinct().withColumn("label", F.col("node"))
+    labels = docs.select(F.col("doc_id").alias("node")).distinct().withColumn("label", F.col("node"))
     e = e.localCheckpoint()  # edges reused every round: cut the re-read
     labels = labels.localCheckpoint()
     prev_checkpoint = None
@@ -352,13 +332,13 @@ def dedup_clusters(
             "(a near-dup chain longer than max_iters hops exists) — raise max_iters"
         )
     return labels.select(
-        F.col("node").alias(id_col),
+        F.col("node").alias("doc_id"),
         F.col("label").alias("cluster_id"),
         (F.col("node") == F.col("label")).cast("int").alias("is_keeper"),
     )
 
 
-def dedup_clusters_sql(pairs_cte: str, docs_cte: str = "documents", id_col: str = "doc_id") -> str:
+def dedup_clusters_sql(pairs_cte: str, docs_cte: str = "documents") -> str:
     """DuckDB twin: connected components via a recursive min-label closure
     (UNION dedup guarantees termination), embedded after a WITH clause that
     defines ``pairs_cte`` with (doc_a, doc_b)."""
@@ -369,47 +349,45 @@ def dedup_clusters_sql(pairs_cte: str, docs_cte: str = "documents", id_col: str 
         ),
         __reach AS (
             WITH RECURSIVE r(node, reach) AS (
-                SELECT {id_col}, {id_col} FROM {docs_cte}
+                SELECT doc_id, doc_id FROM {docs_cte}
                 UNION
                 SELECT r.node, e.dst FROM r JOIN __edges e ON e.src = r.reach
             )
             SELECT node, min(reach) AS cluster_id FROM r GROUP BY node
         )
-        SELECT node AS {id_col}, cluster_id,
+        SELECT node AS doc_id, cluster_id,
                CAST(node = cluster_id AS INT) AS is_keeper
         FROM __reach
     """
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Exact dedup: groups by content hash, keeps the min id."""
-    return df.groupBy(F.md5(F.col(text_col)).alias("content_hash")).agg(
-        F.min(id_col).alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies")
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Exact dedup: groups by content hash of ``text``, keeps the min
+    ``doc_id``."""
+    return df.groupBy(F.md5(F.col("text")).alias("content_hash")).agg(
+        F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies")
     )
 
 
-def _block_all_pairs(docs: DataFrame, round_digits: int) -> DataFrame:
+def _block_all_pairs(docs: DataFrame) -> DataFrame:
     a = docs.select("grp", F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = docs.select("grp", F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     return (
         a.join(b, "grp")
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("grp", "doc_a", "doc_b", jaccard_col(F.col("sh_a"), F.col("sh_b"), round_digits).alias("jaccard"))
+        .select("grp", "doc_a", "doc_b", jaccard_col(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
     )
 
 
-def _block_lsh_pairs(
-    docs: DataFrame, round_digits: int, n_hashes: int = 12, band_size: int = 3
-) -> DataFrame:
+def _block_lsh_pairs(docs: DataFrame) -> DataFrame:
     """Within-group pairs via minhash-LSH banding — candidates only, exact
     Jaccard verified on collisions. The reroute target for blocks too big
     to all-pairs."""
-    n_bands = n_hashes // band_size
-    bands = docs.withColumn("minhashes", minhash_col(F.col("sh"), n_hashes)).select(
+    bands = docs.withColumn("minhashes", minhash_col(F.col("sh"))).select(
         "grp",
         "doc_id",
         "sh",
-        F.posexplode(band_keys_col(F.col("minhashes"), n_bands, band_size)).alias("band_idx", "band_key"),
+        F.posexplode(band_keys_col(F.col("minhashes"))).alias("band_idx", "band_key"),
     )
     a = bands.select("grp", F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"), "band_idx", "band_key")
     b = bands.select("grp", F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"), "band_idx", "band_key")
@@ -417,21 +395,14 @@ def _block_lsh_pairs(
         a.join(b, ["grp", "band_idx", "band_key"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .dropDuplicates(["grp", "doc_a", "doc_b"])
-        .select("grp", "doc_a", "doc_b", jaccard_col(F.col("sh_a"), F.col("sh_b"), round_digits).alias("jaccard"))
+        .select("grp", "doc_a", "doc_b", jaccard_col(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = SHINGLE_K,
-    round_digits: int = 6,
-    max_block: int | None = 2000,
-) -> DataFrame:
-    """n-gram Jaccard pairs within a blocking group (J2-style blocked
-    theta join; blocking keeps the pair count bounded).
+def ngram_jaccard_pairs(df: DataFrame, max_block: int | None = 2000) -> DataFrame:
+    """n-gram Jaccard pairs of (source, doc_id, text) rows within a
+    ``source`` blocking group (J2-style blocked theta join; blocking keeps
+    the pair count bounded).
 
     ``max_block`` (DEFAULT 2000 — scale-safe) bounds the quadratic
     exposure: a block of B docs costs B^2/2 pairs, so at 100x data a
@@ -442,14 +413,12 @@ def ngram_jaccard_pairs(
     bands w.h.p.), only the hopeless low-similarity tail of a huge block
     is skipped. Pass ``max_block=None`` EXPLICITLY for all-pairs
     everywhere (exact; CI-parity scale only)."""
-    docs = df.select(
-        F.col(group_col).alias("grp"), F.col(id_col).alias("doc_id"), shingles_col(F.col(text_col), k).alias("sh")
-    )
+    docs = df.select(F.col("source").alias("grp"), "doc_id", shingles_col(F.col("text")).alias("sh"))
     if max_block is None:
-        return _block_all_pairs(docs, round_digits)
+        return _block_all_pairs(docs)
     from pyspark.sql.window import Window
 
     sized = docs.withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy("grp")))
     small = sized.filter(F.col("__n") <= max_block).drop("__n")
     big = sized.filter(F.col("__n") > max_block).drop("__n")
-    return _block_all_pairs(small, round_digits).unionByName(_block_lsh_pairs(big, round_digits))
+    return _block_all_pairs(small).unionByName(_block_lsh_pairs(big))

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from podcast_audio_feature_extraction_spark.functions.sqlfmt import ROUND_DIGITS
+
 
 def argmax_match_count(scores: Column, target_idx: int, slice_start: int, slice_len: int) -> Column:
     """A3: group-count of rows where scores[target_idx] equals the max of
@@ -23,12 +25,7 @@ def argmax_match_count(scores: Column, target_idx: int, slice_start: int, slice_
     return F.sum(is_match.cast("int")).cast("int")
 
 
-def ranking_metrics(
-    results: DataFrame,
-    qrels: DataFrame,
-    k: int = 10,
-    round_digits: int = 6,
-) -> DataFrame:
+def ranking_metrics(results: DataFrame, qrels: DataFrame, k: int = 10) -> DataFrame:
     """Per-topic P@k / recall@k / MRR@k.
 
     results: (topic_id, seg_id, rk) ranked 1-based; qrels:
@@ -54,19 +51,19 @@ def ranking_metrics(
             "topic_id",
             F.coalesce(F.col("hits"), F.lit(0)).cast("int").alias("hits"),
             "n_rel",
-            F.round(F.coalesce(F.col("hits"), F.lit(0)) / F.lit(float(k)), round_digits).alias("p_at_k"),
-            F.round(F.coalesce(F.col("hits"), F.lit(0)) / F.col("n_rel").cast("double"), round_digits).alias(
+            F.round(F.coalesce(F.col("hits"), F.lit(0)) / F.lit(float(k)), ROUND_DIGITS).alias("p_at_k"),
+            F.round(F.coalesce(F.col("hits"), F.lit(0)) / F.col("n_rel").cast("double"), ROUND_DIGITS).alias(
                 "recall_at_k"
             ),
             F.round(
-                F.coalesce(F.lit(1.0) / F.col("first_rel_rank").cast("double"), F.lit(0.0)), round_digits
+                F.coalesce(F.lit(1.0) / F.col("first_rel_rank").cast("double"), F.lit(0.0)), ROUND_DIGITS
             ).alias("mrr_at_k"),
-            F.round(F.coalesce(F.col("__dcg"), F.lit(0.0)) / idcg, round_digits).alias("ndcg_at_k"),
+            F.round(F.coalesce(F.col("__dcg"), F.lit(0.0)) / idcg, ROUND_DIGITS).alias("ndcg_at_k"),
         )
     )
 
 
-def ranking_metrics_sql(results_cte: str, qrels_cte: str, k: int = 10, round_digits: int = 6) -> str:
+def ranking_metrics_sql(results_cte: str, qrels_cte: str, k: int = 10) -> str:
     """DuckDB twin (fragment; embed after a WITH with the named CTEs)."""
     return f"""
         , __rel AS (SELECT topic_id, seg_id FROM {qrels_cte} WHERE grade > 0),
@@ -81,12 +78,12 @@ def ranking_metrics_sql(results_cte: str, qrels_cte: str, k: int = 10, round_dig
         SELECT n.topic_id,
                CAST(COALESCE(h.hits, 0) AS INT) AS hits,
                n.n_rel,
-               round(COALESCE(h.hits, 0) / {float(k)}, {round_digits}) AS p_at_k,
-               round(COALESCE(h.hits, 0) / CAST(n.n_rel AS DOUBLE), {round_digits}) AS recall_at_k,
-               round(COALESCE(1.0 / CAST(h.first_rel_rank AS DOUBLE), 0.0), {round_digits}) AS mrr_at_k,
+               round(COALESCE(h.hits, 0) / {float(k)}, {ROUND_DIGITS}) AS p_at_k,
+               round(COALESCE(h.hits, 0) / CAST(n.n_rel AS DOUBLE), {ROUND_DIGITS}) AS recall_at_k,
+               round(COALESCE(1.0 / CAST(h.first_rel_rank AS DOUBLE), 0.0), {ROUND_DIGITS}) AS mrr_at_k,
                round(COALESCE(h.dcg, 0.0) / list_reduce(
                    list_transform(range(1, least(n.n_rel, {k}) + 1),
                                   i -> 1.0 / log2(CAST(i AS DOUBLE) + 1)),
-                   (a, b) -> a + b), {round_digits}) AS ndcg_at_k
+                   (a, b) -> a + b), {ROUND_DIGITS}) AS ndcg_at_k
         FROM __nrel n LEFT JOIN __hits h USING (topic_id)
     """

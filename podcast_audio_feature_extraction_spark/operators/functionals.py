@@ -35,7 +35,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from podcast_audio_feature_extraction_spark.functions.sqlfmt import ROUND_DIGITS
 from podcast_audio_feature_extraction_spark.functions.time import ts_micros
+from podcast_audio_feature_extraction_spark.operators.segments import SEG_HOP, SEG_HOP_S, SEG_LENGTH, SEG_LENGTH_S
 
 
 def _dur_s(spec: str) -> int:
@@ -96,11 +98,9 @@ def functional_grid(
     df: DataFrame,
     val_cols: list[str],
     stats: tuple[str, ...] = ("mean", "std", "min", "max", "median", "p20", "p80", "cv"),
-    length: str = "120 seconds",
-    hop: str = "60 seconds",
-    conv_col: str = "conv_id",
-    ts_col: str = "ts",
-    round_digits: int | None = 6,
+    length: str = SEG_LENGTH,
+    hop: str = SEG_HOP,
+    round_digits: int | None = ROUND_DIGITS,
     approx_pct_accuracy: int | None = None,
 ) -> DataFrame:
     """The FULL configurable functional grid — the 88-column eGeMAPS table
@@ -144,13 +144,13 @@ def functional_grid(
     def _r(c):
         return F.round(c, round_digits) if round_digits is not None else c
 
-    us = ts_micros(F.col(ts_col))
+    us = ts_micros(F.col("ts"))
     # same construction as the DuckDB twins: floor to the hop grid in EXACT
     # integer micros, shift back 0..n_shifts-1 hops
     base_s = ((us - F.pmod(us, F.lit(hop_s * 1_000_000))) / F.lit(1_000_000)).cast("long")
     expanded = (
         df.select(
-            F.col(conv_col),
+            F.col("conv_id"),
             *[F.col(c).cast("double").alias(c) for c in val_cols],
             us.alias("__us"),
             base_s.alias("__base_s"),
@@ -176,7 +176,7 @@ def functional_grid(
     # hash partitioning satisfies the aggregation's required distribution,
     # so the Exchange moves below the aggregation pair and no
     # buffer-carrying Exchange is ever planned.
-    expanded = expanded.repartition(conv_col, "__ws_s")
+    expanded = expanded.repartition("conv_id", "__ws_s")
 
     pcts_wanted = [s for s in stats if s in _GRID_PCTS]
     # prange (the eGeMAPS pctlrange0-2 analog) reads p20/p80 from the same
@@ -277,11 +277,11 @@ def functional_grid(
                         + F.lit(0.0)
                     ).alias(f"{c}_kurt")
                 )
-    out = expanded.groupBy(conv_col, "__ws_s").agg(*aggs)
+    out = expanded.groupBy("conv_id", "__ws_s").agg(*aggs)
     if post:
         out = out.withColumns(post)
     return out.select(
-        conv_col,
+        "conv_id",
         # cast to NTZ (session tz is pinned UTC): the stored parquet ts is
         # NTZ and the DuckDB twins' make_timestamp is tz-naive — a
         # tz-aware win_start would reach pandas as UTC-aware and mismatch
@@ -297,43 +297,36 @@ _WINDOW_STATS = ("mean", "std", "min", "max", "p20", "median", "p80", "slope", "
 
 def window_functionals(
     df: DataFrame,
-    length: str = "120 seconds",
-    hop: str = "60 seconds",
-    val_col: str = "val",
-    conv_col: str = "conv_id",
-    ts_col: str = "ts",
-    round_digits: int | None = 6,
+    length: str = SEG_LENGTH,
+    hop: str = SEG_HOP,
+    round_digits: int | None = ROUND_DIGITS,
 ) -> DataFrame:
-    """Per (conv_id, sliding window) functional aggregates of ``val_col``:
-    the one-descriptor :func:`functional_grid` with a ``win_end`` column
-    and the outputs named ``val_*``."""
+    """Per (conv_id, sliding window) functional aggregates of ``val``:
+    the one-descriptor :func:`functional_grid` with a ``win_end`` column."""
     length_s = _dur_s(length)
-    grid = functional_grid(df, [val_col], _WINDOW_STATS, length, hop, conv_col, ts_col, round_digits)
+    grid = functional_grid(df, ["val"], _WINDOW_STATS, length, hop, round_digits)
     return grid.select(
-        conv_col,
+        "conv_id",
         "win_start",
         (F.col("win_start") + F.expr(f"INTERVAL {length_s} SECONDS")).alias("win_end"),
         "n",
-        *[F.col(f"{val_col}_{s}").alias(f"val_{s}") for s in _WINDOW_STATS],
+        *[f"val_{s}" for s in _WINDOW_STATS],
     )
 
 
 def functional_grid_sql(
     val_cols: list[str],
     stats: tuple[str, ...] = ("mean", "std", "min", "max", "median", "p20", "p80", "cv"),
-    length_s: int = 120,
-    hop_s: int = 60,
     src: str = "transcript",
-    round_digits: int = 6,
 ) -> str:
-    """DuckDB twin of :func:`functional_grid`, generated from the SAME
-    (val_cols x stats) spec so the two dialects cannot drift."""
-    n_shifts = length_s // hop_s
-    shifts = ", ".join(f"({i * hop_s})" for i in range(n_shifts))
+    """DuckDB twin of :func:`functional_grid` over the segment windows,
+    generated from the SAME (val_cols x stats) spec so the two dialects
+    cannot drift."""
+    shifts = ", ".join(f"({i * SEG_HOP_S})" for i in range(SEG_LENGTH_S // SEG_HOP_S))
     cols = []
     for c in val_cols:
         for s in stats:
-            r = f"round({{}}, {round_digits})"
+            r = f"round({{}}, {ROUND_DIGITS})"
             if s == "mean":
                 cols.append(r.format(f"avg({c})") + f" + 0.0 AS {c}_mean")
             elif s == "std":
@@ -347,12 +340,12 @@ def functional_grid_sql(
             elif s == "cv":
                 cols.append(
                     f"round(CASE WHEN avg({c}) <> 0 THEN COALESCE(stddev_pop({c}), 0.0) / avg({c}) "
-                    f"ELSE 0.0 END, {round_digits}) + 0.0 AS {c}_cv"
+                    f"ELSE 0.0 END, {ROUND_DIGITS}) + 0.0 AS {c}_cv"
                 )
             elif s == "slope":
                 cols.append(
                     f"round(CASE WHEN var_pop(x) > 0 THEN covar_pop(x, {c}) / var_pop(x) "
-                    f"ELSE 0.0 END, {round_digits}) + 0.0 AS {c}_slope"
+                    f"ELSE 0.0 END, {ROUND_DIGITS}) + 0.0 AS {c}_slope"
                 )
             elif s == "range":
                 cols.append(r.format(f"max({c}) - min({c})") + f" AS {c}_range")
@@ -369,7 +362,7 @@ def functional_grid_sql(
                     m3c = f"({m3r} - 3.0*{m1}*{m2r} + 2.0*{m1}*{m1}*{m1})"
                     cols.append(
                         f"round(CASE WHEN {var} > 1e-10 * {m2r} THEN {m3c} / pow({var}, 1.5) "
-                        f"ELSE 0.0 END, {round_digits}) + 0.0 AS {c}_skew"
+                        f"ELSE 0.0 END, {ROUND_DIGITS}) + 0.0 AS {c}_skew"
                     )
                 else:
                     m4c = (
@@ -378,7 +371,7 @@ def functional_grid_sql(
                     )
                     cols.append(
                         f"round(CASE WHEN {var} > 1e-10 * {m2r} THEN {m4c} / ({var}*{var}) - 3.0 "
-                        f"ELSE 0.0 END, {round_digits}) + 0.0 AS {c}_kurt"
+                        f"ELSE 0.0 END, {ROUND_DIGITS}) + 0.0 AS {c}_kurt"
                     )
     body = ",\n               ".join(cols)
     return f"""
@@ -387,26 +380,21 @@ def functional_grid_sql(
                count(*) AS n,
                {body}
         FROM (
-            SELECT t0.*, (epoch_us(ts) // ({hop_s} * 1000000)) * {hop_s} - off.o AS ws_s,
-                   (epoch_us(ts) - ((epoch_us(ts) // ({hop_s} * 1000000)) * {hop_s} - off.o) * 1000000) / 1e6 AS x
+            SELECT t0.*, (epoch_us(ts) // ({SEG_HOP_S} * 1000000)) * {SEG_HOP_S} - off.o AS ws_s,
+                   (epoch_us(ts) - ((epoch_us(ts) // ({SEG_HOP_S} * 1000000)) * {SEG_HOP_S} - off.o) * 1000000) / 1e6 AS x
             FROM {src} t0 CROSS JOIN (VALUES {shifts}) AS off(o)
         )
         WHERE epoch_us(ts) >= ws_s * 1000000
-          AND epoch_us(ts) <  (ws_s + {length_s}) * 1000000
+          AND epoch_us(ts) <  (ws_s + {SEG_LENGTH_S}) * 1000000
         GROUP BY conv_id, ws_s
     """
 
 
-def robust_scale(
-    df: DataFrame,
-    val_col: str = "val",
-    by: str = "conv_id",
-    out_col: str = "val_scaled",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Per-entity robust scaling: (val - median) / IQR — the outlier-proof
-    normalization the eGeMAPS '*_stddevNorm' family approximates, computed
-    per conversation so a loud entity cannot dominate the corpus scale.
+def robust_scale(df: DataFrame) -> DataFrame:
+    """Per-conversation robust scaling of ``val`` into ``val_scaled``:
+    (val - median) / IQR — the outlier-proof normalization the eGeMAPS
+    '*_stddevNorm' family approximates, computed per conversation so a
+    loud entity cannot dominate the corpus scale.
 
     ONE whole-partition window pass (percentile over the entity frame):
     single shuffle on the entity key, no join back. Zero-IQR entities
@@ -414,79 +402,67 @@ def robust_scale(
     the cross-engine gate."""
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(by)
-    v = F.col(val_col).cast("double")
+    w = Window.partitionBy("conv_id")
+    v = F.col("val").cast("double")
     pct = F.percentile(v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))).over(w)
     df = df.withColumn("__pct", pct)
     iqr = F.col("__pct")[2] - F.col("__pct")[0]
     scaled = F.when(iqr > 0, (v - F.col("__pct")[1]) / iqr).otherwise(F.lit(0.0))
-    return df.withColumn(out_col, F.round(scaled, round_digits) + F.lit(0.0)).drop("__pct")
+    return df.withColumn("val_scaled", F.round(scaled, ROUND_DIGITS) + F.lit(0.0)).drop("__pct")
 
 
-def robust_scale_sql(
-    src: str = "transcript",
-    val_col: str = "val",
-    by: str = "conv_id",
-    out_col: str = "val_scaled",
-    round_digits: int = 6,
-) -> str:
+def robust_scale_sql(src: str = "transcript") -> str:
     """DuckDB twin of :func:`robust_scale` (fragment: full SELECT)."""
     return f"""
         SELECT * EXCLUDE (__p25, __p50, __p75),
                round(CASE WHEN (__p75 - __p25) > 0
-                          THEN ({val_col} - __p50) / (__p75 - __p25)
-                          ELSE 0.0 END, {round_digits}) + 0.0 AS {out_col}
+                          THEN (val - __p50) / (__p75 - __p25)
+                          ELSE 0.0 END, {ROUND_DIGITS}) + 0.0 AS val_scaled
         FROM (
             SELECT t.*,
-                   quantile_cont({val_col}, 0.25) OVER (PARTITION BY {by}) AS __p25,
-                   quantile_cont({val_col}, 0.50) OVER (PARTITION BY {by}) AS __p50,
-                   quantile_cont({val_col}, 0.75) OVER (PARTITION BY {by}) AS __p75
+                   quantile_cont(val, 0.25) OVER (PARTITION BY conv_id) AS __p25,
+                   quantile_cont(val, 0.50) OVER (PARTITION BY conv_id) AS __p50,
+                   quantile_cont(val, 0.75) OVER (PARTITION BY conv_id) AS __p75
             FROM {src} t
         )
     """
 
 
-def window_functionals_sql(
-    length_s: int = 120,
-    hop_s: int = 60,
-    src: str = "transcript",
-    round_digits: int = 6,
-) -> str:
-    """DuckDB twin. Spark's shift-expand assigns each row to the
-    length/hop fixed-origin windows covering its ts; for length=2*hop that
-    is exactly the two shifted tumbling buckets below."""
-    n_shifts = length_s // hop_s
-    shifts = ", ".join(f"({i * hop_s})" for i in range(n_shifts))
+def window_functionals_sql() -> str:
+    """DuckDB twin over the segment windows. Spark's shift-expand assigns
+    each row to the length/hop fixed-origin windows covering its ts; for
+    length=2*hop that is exactly the two shifted tumbling buckets below."""
+    shifts = ", ".join(f"({i * SEG_HOP_S})" for i in range(SEG_LENGTH_S // SEG_HOP_S))
     # inline subquery (not a CTE) so the fragment can be embedded after a
     # WITH clause; make_timestamp builds TIMESTAMP (ntz) from micros with
     # no session-timezone dependence
     return f"""
         SELECT conv_id,
                win_start,
-               win_start + INTERVAL {length_s} SECOND AS win_end,
+               win_start + INTERVAL {SEG_LENGTH_S} SECOND AS win_end,
                count(*) AS n,
-               round(avg(val), {round_digits}) AS val_mean,
-               round(COALESCE(stddev_pop(val), 0.0), {round_digits}) AS val_std,
+               round(avg(val), {ROUND_DIGITS}) AS val_mean,
+               round(COALESCE(stddev_pop(val), 0.0), {ROUND_DIGITS}) AS val_std,
                min(val) AS val_min,
                max(val) AS val_max,
-               round(quantile_cont(val, 0.2), {round_digits}) AS val_p20,
-               round(quantile_cont(val, 0.5), {round_digits}) AS val_median,
-               round(quantile_cont(val, 0.8), {round_digits}) AS val_p80,
+               round(quantile_cont(val, 0.2), {ROUND_DIGITS}) AS val_p20,
+               round(quantile_cont(val, 0.5), {ROUND_DIGITS}) AS val_median,
+               round(quantile_cont(val, 0.8), {ROUND_DIGITS}) AS val_p80,
                round(CASE WHEN var_pop(x) > 0 THEN covar_pop(x, val) / var_pop(x)
-                          ELSE 0.0 END, {round_digits}) + 0.0 AS val_slope,
+                          ELSE 0.0 END, {ROUND_DIGITS}) + 0.0 AS val_slope,
                round(CASE WHEN avg(val) <> 0
                           THEN COALESCE(stddev_pop(val), 0.0) / avg(val)
-                          ELSE 0.0 END, {round_digits}) + 0.0 AS val_cv
+                          ELSE 0.0 END, {ROUND_DIGITS}) + 0.0 AS val_cv
         FROM (
             SELECT t.*,
                    make_timestamp(ws_s * 1000000) AS win_start,
                    (epoch_us(ts) - ws_s * 1000000) / 1e6 AS x
             FROM (
-                SELECT t0.*, (epoch_us(ts) // ({hop_s} * 1000000)) * {hop_s} - off.o AS ws_s
-                FROM {src} t0 CROSS JOIN (VALUES {shifts}) AS off(o)
+                SELECT t0.*, (epoch_us(ts) // ({SEG_HOP_S} * 1000000)) * {SEG_HOP_S} - off.o AS ws_s
+                FROM transcript t0 CROSS JOIN (VALUES {shifts}) AS off(o)
             ) t
         )
         WHERE epoch_us(ts) >= epoch_us(win_start)
-          AND epoch_us(ts) <  epoch_us(win_start) + {length_s} * 1000000
+          AND epoch_us(ts) <  epoch_us(win_start) + {SEG_LENGTH_S} * 1000000
         GROUP BY conv_id, win_start
     """

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from podcast_audio_feature_extraction_spark.functions.sqlfmt import ROUND_DIGITS
 from podcast_audio_feature_extraction_spark.functions.time import ts_micros
 
 
@@ -36,12 +37,11 @@ def interval_join(
     intervals: DataFrame,
     on: str | list[str] = "conv_id",
     ts_col: str = "ts",
-    start_col: str = "start",
-    end_col: str = "end",
     bucket_s: int = 60,
 ) -> DataFrame:
-    """Inner join of ``points`` to every interval containing their ts
-    (start-inclusive, end-exclusive). Returns point columns + interval
+    """Inner join of ``points`` to every interval of ``intervals``
+    (``start``, ``end``) containing their ts (start-inclusive,
+    end-exclusive). Returns point columns + interval
     columns (key columns once).
 
     Intervals with ``end <= start`` are empty by definition and dropped.
@@ -49,8 +49,8 @@ def interval_join(
     keys = [on] if isinstance(on, str) else list(on)
     bucket_us = bucket_s * 1_000_000
 
-    s_us = ts_micros(F.col(start_col))
-    e_us = ts_micros(F.col(end_col))
+    s_us = ts_micros(F.col("start"))
+    e_us = ts_micros(F.col("end"))
     iv = (
         intervals.filter(e_us > s_us)
         .withColumn("__s_us", s_us)
@@ -76,27 +76,22 @@ def interval_join(
     return joined.drop("__cell", "__p_us", "__s_us", "__e_us")
 
 
-def interval_fetch_sql(
-    src: str = "transcript",
-    cand_role: str = "assistant",
-    point_role: str = "user",
-    length_s: int = 90,
-    round_digits: int = 6,
-) -> str:
-    """DuckDB twin of the driver's interval-join query (plain range join —
-    the oracle engine may nested-loop it; the Spark side must not)."""
+def interval_fetch_sql(src: str = "transcript", length_s: int = 90) -> str:
+    """DuckDB twin of the driver's interval-join query: assistant turns
+    fetch the user turns of their slice (plain range join — the oracle
+    engine may nested-loop it; the Spark side must not)."""
     return f"""
         , __cand AS (
             SELECT conv_id, turn_idx AS cand_idx, epoch_us(ts) AS s_us
-            FROM {src} WHERE role = '{cand_role}'
+            FROM {src} WHERE role = 'assistant'
         ),
         __pts AS (
-            SELECT conv_id, epoch_us(ts) AS p_us, val FROM {src} WHERE role = '{point_role}'
+            SELECT conv_id, epoch_us(ts) AS p_us, val FROM {src} WHERE role = 'user'
         ),
         __agg AS (
             SELECT c.conv_id, c.cand_idx,
                    CAST(count(p.p_us) AS INT) AS n_pts,
-                   round(avg(p.val), {round_digits}) AS avg_val
+                   round(avg(p.val), {ROUND_DIGITS}) AS avg_val
             FROM __cand c LEFT JOIN __pts p
               ON p.conv_id = c.conv_id
              AND p.p_us >= c.s_us

@@ -23,7 +23,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from podcast_audio_feature_extraction_spark.functions.sqlfmt import ROUND_DIGITS
 from podcast_audio_feature_extraction_spark.functions.time import ts_micros
+from podcast_audio_feature_extraction_spark.operators.segments import SEG_HOP, SEG_HOP_S, SEG_LENGTH, SEG_LENGTH_S
 
 
 def threshold_count(col: Column, thr: float) -> Column:
@@ -32,20 +34,15 @@ def threshold_count(col: Column, thr: float) -> Column:
     return F.sum((col > F.lit(thr)).cast("int")).cast("int")
 
 
-def mood_scores(
-    df: DataFrame,
-    length: str = "120 seconds",
-    hop: str = "60 seconds",
-    val_col: str = "val",
-    round_digits: int = 6,
-) -> DataFrame:
+def mood_scores(df: DataFrame) -> DataFrame:
     """Per-segment score table (analog of search_df, search.py:112-162):
-    one groupBy pass computes es/rerank scores plus all A2-A5 mood features."""
-    win = F.window(F.col("ts"), length, hop)
-    v = F.col(val_col)
+    one groupBy pass over the segment windows computes es/rerank scores
+    plus all A2-A5 mood features of ``val``."""
+    win = F.window(F.col("ts"), SEG_LENGTH, SEG_HOP)
+    v = F.col("val")
 
     def _r(c):
-        return F.round(c, round_digits)
+        return F.round(c, ROUND_DIGITS)
 
     seg = df.groupBy(F.col("conv_id"), win.alias("w")).agg(
         F.count(F.lit(1)).cast("int").alias("es_score"),
@@ -69,26 +66,25 @@ def mood_scores(
     ).drop("w", "conv_id")
 
 
-def mood_scores_sql(length_s: int = 120, hop_s: int = 60, src: str = "transcript", round_digits: int = 6) -> str:
+def mood_scores_sql() -> str:
     """DuckDB twin of :func:`mood_scores`."""
-    n_shifts = length_s // hop_s
-    shifts = ", ".join(f"({i * hop_s})" for i in range(n_shifts))
+    shifts = ", ".join(f"({i * SEG_HOP_S})" for i in range(SEG_LENGTH_S // SEG_HOP_S))
     return f"""
         SELECT conv_id || '_' || CAST(CAST(epoch_us(win_start) / 1e6 AS BIGINT) AS VARCHAR) AS seg_id,
                CAST(count(*) AS INT) AS es_score,
-               round(avg(val) - 30.0, {round_digits}) AS rerank_score,
+               round(avg(val) - 30.0, {ROUND_DIGITS}) AS rerank_score,
                CAST(sum(CAST(val > 40.0 AS INT)) AS INT) AS laughter_freq,
                CAST(sum(CAST(val > 10.0 AS INT)) AS INT) AS music_freq,
                CAST(sum(CAST(val < 5.0 AS INT)) AS INT) AS narration_freq,
-               round(max(val) / 60.0, {round_digits}) AS yamnet_funny,
-               round(COALESCE(stddev_pop(val), 0.0) / 3.0 + 12.0 * max(val) / 80.0, {round_digits}) AS opensmile_debate,
-               round(2.0 * avg(val) / 13.7, {round_digits}) AS opensmile_disapproval
+               round(max(val) / 60.0, {ROUND_DIGITS}) AS yamnet_funny,
+               round(COALESCE(stddev_pop(val), 0.0) / 3.0 + 12.0 * max(val) / 80.0, {ROUND_DIGITS}) AS opensmile_debate,
+               round(2.0 * avg(val) / 13.7, {ROUND_DIGITS}) AS opensmile_disapproval
         FROM (
-            SELECT t.*, make_timestamp(((epoch_us(ts) // ({hop_s} * 1000000)) * {hop_s} - off.o) * 1000000) AS win_start
-            FROM {src} t CROSS JOIN (VALUES {shifts}) AS off(o)
+            SELECT t.*, make_timestamp(((epoch_us(ts) // ({SEG_HOP_S} * 1000000)) * {SEG_HOP_S} - off.o) * 1000000) AS win_start
+            FROM transcript t CROSS JOIN (VALUES {shifts}) AS off(o)
         )
         WHERE epoch_us(ts) >= epoch_us(win_start)
-          AND epoch_us(ts) <  epoch_us(win_start) + {length_s} * 1000000
+          AND epoch_us(ts) <  epoch_us(win_start) + {SEG_LENGTH_S} * 1000000
         GROUP BY conv_id, win_start
     """
 
@@ -151,12 +147,10 @@ def rerank_mood(scores: DataFrame, mood: str, num: int = 10) -> DataFrame:
     return accepted.unionByName(fallback)
 
 
-DEFAULT_MOODS = ("entertaining", "subjective", "discussion")
+MOODS = ("entertaining", "subjective", "discussion")
 
 
-def rerank_moods(
-    scores: DataFrame, moods: tuple[str, ...] = DEFAULT_MOODS, num: int = 10
-) -> DataFrame:
+def rerank_moods(scores: DataFrame, num: int = 10) -> DataFrame:
     """All mood reranks in one result, tagged by a `mood` column.
 
     Each branch is the same bounded plan as :func:`rerank_mood` (literal
@@ -166,7 +160,7 @@ def rerank_moods(
     point all branches at a stored scores table.
     """
     out = None
-    for mood in moods:
+    for mood in MOODS:
         d = rerank_mood(scores, mood, num=num).select(
             F.lit(mood).alias("mood"), "seg_id", "rerank_score", "pri", "rk"
         )
@@ -174,13 +168,11 @@ def rerank_moods(
     return out
 
 
-def rerank_moods_sql(
-    scores_sql: str, moods: tuple[str, ...] = DEFAULT_MOODS, num: int = 10
-) -> str:
+def rerank_moods_sql(scores_sql: str, num: int = 10) -> str:
     """DuckDB twin of :func:`rerank_moods` (embed after a WITH clause)."""
     ctes = [f", scores AS ({scores_sql})"]
     selects = []
-    for mood in moods:
+    for mood in MOODS:
         pred = mood_predicate_sql(mood)
         ctes.append(
             f""",

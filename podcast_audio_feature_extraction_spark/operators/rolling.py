@@ -30,14 +30,12 @@ def token_count(col: Column) -> Column:
     return F.size(tokens_col(col)).cast("int")
 
 
-def turn_features(
-    df: DataFrame,
-    k: int = 5,
-    conv_col: str = "conv_id",
-    ts_col: str = "ts",
-    tie_col: str = "turn_idx",
-    val_col: str | None = "val",
-) -> DataFrame:
+# the trailing frame of the rolling functionals: the current turn and the
+# ROLL_K turns before it
+ROLL_K = 5
+
+
+def turn_features(df: DataFrame, k: int = ROLL_K, val_col: str | None = "val") -> DataFrame:
     """Per-turn feature columns.
 
     Adds scalar descriptors (token/char counts, tool flag), lag/lead
@@ -45,7 +43,7 @@ def turn_features(
     rolling functionals (mean / population-std / min / max of token count,
     tool-use count, optional numeric ``val_col`` functionals).
     """
-    order = Window.partitionBy(conv_col).orderBy(ts_col, tie_col)
+    order = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
     trail = order.rowsBetween(-k, 0)
 
     # stage 0: plain projections (no window), with an explicit double copy
@@ -75,15 +73,15 @@ def turn_features(
         "*",
         F.lag("role").over(order).alias("prev_role"),
         F.lead("role").over(order).alias("next_role"),
-        F.lag(ts_micros(ts_col)).over(order).alias("__prev_us"),
-        F.first(ts_micros(ts_col), ignorenulls=True).over(run).alias("__conv_t0_us"),
+        F.lag(ts_micros("ts")).over(order).alias("__prev_us"),
+        F.first(ts_micros("ts"), ignorenulls=True).over(run).alias("__conv_t0_us"),
     ).select(
         "*",
         F.when(F.col("prev_role").isNull(), F.lit(1))
         .otherwise((F.col("role") != F.col("prev_role")).cast("int"))
         .alias("role_changed"),
-        F.coalesce((ts_micros(ts_col) - F.col("__prev_us")) / F.lit(1e6), F.lit(0.0)).alias("gap_s"),
-        ((ts_micros(ts_col) - F.col("__conv_t0_us")) / F.lit(1e6)).alias("__t_rel"),
+        F.coalesce((ts_micros("ts") - F.col("__prev_us")) / F.lit(1e6), F.lit(0.0)).alias("gap_s"),
+        ((ts_micros("ts") - F.col("__conv_t0_us")) / F.lit(1e6)).alias("__t_rel"),
     )
 
     # stage 2: ONE window pass for every trailing-frame functional
@@ -155,15 +153,15 @@ FUNCTIONAL_COLS = [
 ]
 
 
-def assemble_functionals(df: DataFrame, cols: list[str] | None = None, out_col: str = "functionals") -> DataFrame:
+def assemble_functionals(df: DataFrame) -> DataFrame:
     """Pack the per-turn functional columns into one array<double> vector
     (analog of the reference's 88-column functional row,
     /root/reference/src/features/OpenSmileExtractor.py:47-53)."""
-    cols = cols or [c for c in FUNCTIONAL_COLS if c in df.columns]
-    return df.withColumn(out_col, F.array(*[F.col(c).cast("double") for c in cols]))
+    cols = [c for c in FUNCTIONAL_COLS if c in df.columns]
+    return df.withColumn("functionals", F.array(*[F.col(c).cast("double") for c in cols]))
 
 
-def turn_features_sql(k: int = 5, src: str = "transcript", with_val: bool = True) -> str:
+def turn_features_sql(k: int = ROLL_K, src: str = "transcript", with_val: bool = True) -> str:
     """DuckDB twin of :func:`turn_features` (oracle cross-check)."""
     val_part = (
         """,

@@ -17,13 +17,21 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from podcast_audio_feature_extraction_spark.functions.text import shingles_col, tokens_sql
-from podcast_audio_feature_extraction_spark.operators.dedup import band_keys_col, jaccard_col, minhash_col
+from podcast_audio_feature_extraction_spark.functions.text import SHINGLE_K, shingles_col, tokens_sql
+from podcast_audio_feature_extraction_spark.operators.dedup import (
+    BAND_SIZE,
+    N_BANDS,
+    N_HASHES,
+    band_keys_col,
+    jaccard_col,
+    minhash_col,
+)
 
 SPLIT_BUCKETS = 10_000
+SPLIT_SALT, SAMPLE_SALT = "split", "sample"
 
 
-def split_col(id_col: Column, fractions: dict[str, float], salt: str = "split") -> Column:
+def split_col(id_col: Column, fractions: dict[str, float], salt: str = SPLIT_SALT) -> Column:
     """Deterministic split label from cumulative hash-bucket ranges.
 
     ``fractions`` maps label -> fraction (must sum to ~1; the last label
@@ -47,10 +55,10 @@ def split_col(id_col: Column, fractions: dict[str, float], salt: str = "split") 
     return expr
 
 
-def split_sql(id_expr: str, fractions: dict[str, float], salt: str = "split") -> str:
-    """DuckDB twin of :func:`split_col` (same md5 bucket math)."""
+def split_sql(id_expr: str, fractions: dict[str, float]) -> str:
+    """DuckDB twin of :func:`split_col` (same md5 bucket math, default salt)."""
     bucket = (
-        f"CAST('0x' || substr(md5('{salt}:' || CAST({id_expr} AS VARCHAR)), 1, 8) AS BIGINT) % {SPLIT_BUCKETS}"
+        f"CAST('0x' || substr(md5('{SPLIT_SALT}:' || CAST({id_expr} AS VARCHAR)), 1, 8) AS BIGINT) % {SPLIT_BUCKETS}"
     )
     labels = list(fractions)
     case = "CASE "
@@ -66,59 +74,45 @@ def stratified_sample(
     df: DataFrame,
     group_col: str = "source",
     n_per_group: int = 5,
-    id_col: str = "doc_id",
-    salt: str = "sample",
+    salt: str = SAMPLE_SALT,
 ) -> DataFrame:
     """Deterministic n-per-group sample: rank rows inside each group by a
-    salted id hash (uniform, reproducible, engine-portable) and keep the
+    salted ``doc_id`` hash (uniform, reproducible, engine-portable) and keep the
     first n. The distributed form of stratified subsampling — one shuffle
     on the group key, no driver-side sampling state."""
     from pyspark.sql.window import Window
 
-    h = F.md5(F.concat(F.lit(salt), F.lit(":"), F.col(id_col).cast("string")))
-    w = Window.partitionBy(group_col).orderBy(h, F.col(id_col))
+    h = F.md5(F.concat(F.lit(salt), F.lit(":"), F.col("doc_id").cast("string")))
+    w = Window.partitionBy(group_col).orderBy(h, F.col("doc_id"))
     return df.withColumn("__rk", F.row_number().over(w)).filter(F.col("__rk") <= n_per_group).drop("__rk")
 
 
-def stratified_sample_sql(
-    src: str = "documents",
-    group_col: str = "source",
-    n_per_group: int = 5,
-    id_col: str = "doc_id",
-    salt: str = "sample",
-) -> str:
-    """DuckDB twin of :func:`stratified_sample` (same salted-hash order)."""
-    h = f"md5('{salt}:' || CAST({id_col} AS VARCHAR))"
+def stratified_sample_sql(src: str = "documents", group_col: str = "source", n_per_group: int = 5) -> str:
+    """DuckDB twin of :func:`stratified_sample` (same salted-hash order,
+    default salt)."""
+    h = f"md5('{SAMPLE_SALT}:' || CAST(doc_id AS VARCHAR))"
     return f"""
         SELECT * EXCLUDE (__rk) FROM (
-            SELECT *, row_number() OVER (PARTITION BY {group_col} ORDER BY {h}, {id_col}) AS __rk
+            SELECT *, row_number() OVER (PARTITION BY {group_col} ORDER BY {h}, doc_id) AS __rk
             FROM {src}
         ) WHERE __rk <= {n_per_group}
     """
 
 
-def contamination_pairs(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 12,
-    band_size: int = 3,
-    jaccard_threshold: float = 0.5,
-) -> DataFrame:
-    """(corpus_id, bench_id, jaccard) for near-duplicate contamination:
-    minhash-LSH band collisions across the two tables, exact Jaccard on
-    candidates. Returns distinct pairs above the threshold."""
-    n_bands = n_hashes // band_size
+def contamination_pairs(corpus: DataFrame, benchmark: DataFrame, jaccard_threshold: float = 0.5) -> DataFrame:
+    """(corpus_id, bench_id, jaccard) for near-duplicate contamination
+    between two (doc_id, text) tables: minhash-LSH band collisions across
+    the two, exact Jaccard on candidates. Returns distinct pairs above the
+    threshold."""
 
     def bands(df: DataFrame, out_id: str, out_sh: str) -> DataFrame:
         docs = df.select(
-            F.col(id_col).alias(out_id), shingles_col(F.col(text_col)).alias(out_sh)
-        ).withColumn("__mh", minhash_col(F.col(out_sh), n_hashes))
+            F.col("doc_id").alias(out_id), shingles_col(F.col("text")).alias(out_sh)
+        ).withColumn("__mh", minhash_col(F.col(out_sh)))
         return docs.select(
             out_id,
             out_sh,
-            F.posexplode(band_keys_col(F.col("__mh"), n_bands, band_size)).alias("band_idx", "band_key"),
+            F.posexplode(band_keys_col(F.col("__mh"))).alias("band_idx", "band_key"),
         )
 
     c = bands(corpus, "corpus_id", "sh_c")
@@ -135,19 +129,10 @@ def contamination_pairs(
     )
 
 
-def contamination_pairs_sql(
-    corpus_pred: str,
-    bench_pred: str,
-    src: str = "documents",
-    id_col: str = "doc_id",
-    n_hashes: int = 12,
-    band_size: int = 3,
-    jaccard_threshold: float = 0.5,
-    k: int = 3,
-) -> str:
-    """DuckDB twin of :func:`contamination_pairs` over one source table
+def contamination_pairs_sql(corpus_pred: str, bench_pred: str, jaccard_threshold: float = 0.5) -> str:
+    """DuckDB twin of :func:`contamination_pairs` over the documents table
     split by two predicates (how the driver query derives its two sides)."""
-    n_bands = n_hashes // band_size
+    k = SHINGLE_K
     toks = tokens_sql("COALESCE(text,'')")
     sh = (
         f"list_distinct(CASE WHEN len({toks}) >= {k} THEN list_transform(range(len({toks}) - {k - 1}), "
@@ -155,16 +140,16 @@ def contamination_pairs_sql(
     )
     return f"""
         , __sh AS (
-            SELECT {id_col} AS doc_id, {sh} AS sh,
-                   list_transform(range({n_hashes}),
+            SELECT doc_id AS doc_id, {sh} AS sh,
+                   list_transform(range({N_HASHES}),
                        i -> list_aggregate(list_transform({sh}, s -> md5(i::VARCHAR || ':' || s)), 'min')) AS mh,
                    {corpus_pred} AS is_corpus, {bench_pred} AS is_bench
-            FROM {src}
+            FROM documents
         ),
         __bands AS (
             SELECT doc_id, sh, is_corpus, is_bench, b.range AS band_idx,
-                   md5(array_to_string(mh[b.range * {band_size} + 1 : b.range * {band_size} + {band_size}], '|')) AS band_key
-            FROM __sh CROSS JOIN range({n_bands}) b
+                   md5(array_to_string(mh[b.range * {BAND_SIZE} + 1 : b.range * {BAND_SIZE} + {BAND_SIZE}], '|')) AS band_key
+            FROM __sh CROSS JOIN range({N_BANDS}) b
         ),
         __cand AS (
             SELECT DISTINCT c.doc_id AS corpus_id, b.doc_id AS bench_id,

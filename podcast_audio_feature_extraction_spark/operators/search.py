@@ -35,6 +35,12 @@ from pyspark.sql import Column, DataFrame, functions as F
 from podcast_audio_feature_extraction_spark.checkpoint import swap_cached as _swap_cached
 from podcast_audio_feature_extraction_spark.functions.text import split_ws, tokens_col, tokens_sql
 from podcast_audio_feature_extraction_spark.functions.time import ts_micros as _ts_micros
+from podcast_audio_feature_extraction_spark.operators.segments import SEG_HOP, SEG_LENGTH
+
+# the reference's field boosts (search.py:174-214: ``seg_words^2``; the
+# conversation dimension unboosted) and Lucene's BM25 defaults
+WORDS_BOOST, DIM_BOOST = 2.0, 1.0
+BM25_K1, BM25_B = 1.2, 0.75
 
 # single-slot cache for bm25_topk_fused's per-segment table (see
 # checkpoint.swap_cached for the lifecycle)
@@ -67,17 +73,15 @@ def search_segments(
     query: str,
     conv_dim: DataFrame | None = None,
     k: int = 100,
-    words_weight: float = 2.0,
-    dim_weight: float = 1.0,
 ) -> DataFrame:
     """Top-k segments for a query string; optional conversation dimension
-    joined via seg_id -> conv_id (J3) with its text scored at dim_weight."""
+    joined via seg_id -> conv_id (J3) with its text scored at DIM_BOOST."""
     terms = split_ws(query.lower())
     seg = segments.withColumn("conv_id_from_seg", F.split(F.col("seg_id"), "_")[0])
-    score = score_expr(F.col("seg_words"), terms, words_weight)
+    score = score_expr(F.col("seg_words"), terms, WORDS_BOOST)
     if conv_dim is not None:
         seg = seg.join(F.broadcast(conv_dim), seg.conv_id_from_seg == conv_dim.dim_conv_id, "left")
-        score = score + score_expr(F.col("dim_text"), terms, dim_weight)
+        score = score + score_expr(F.col("dim_text"), terms, DIM_BOOST)
     return (
         seg.withColumn("es_score", F.round(score, 6))
         .filter(F.col("es_score") > 0)
@@ -98,19 +102,14 @@ def conv_dimension(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def _prep_fields(
-    segments: DataFrame,
-    conv_dim: DataFrame | None,
-    words_boost: float,
-    dim_boost: float,
-) -> tuple[DataFrame, list[tuple[str, float]]]:
+def _prep_fields(segments: DataFrame, conv_dim: DataFrame | None) -> tuple[DataFrame, list[tuple[str, float]]]:
     """Shared field prep: attach the conversation dimension (J3), tokenize
     each scored field into __toks_f, record its length as __dl_f."""
     seg = segments.withColumn("conv_id_from_seg", F.split(F.col("seg_id"), "_")[0])
-    fields = [("seg_words", words_boost)]
+    fields = [("seg_words", WORDS_BOOST)]
     if conv_dim is not None:
         seg = seg.join(F.broadcast(conv_dim), seg.conv_id_from_seg == conv_dim.dim_conv_id, "left")
-        fields.append(("dim_text", dim_boost))
+        fields.append(("dim_text", DIM_BOOST))
     for f, _ in fields:
         seg = seg.withColumn(f"__toks_{f}", _toks(F.col(f))).withColumn(
             f"__dl_{f}", F.size(F.col(f"__toks_{f}")).cast("double")
@@ -118,12 +117,7 @@ def _prep_fields(
     return seg, fields
 
 
-def bm25_index(
-    segments: DataFrame,
-    conv_dim: DataFrame | None = None,
-    words_boost: float = 2.0,
-    dim_boost: float = 1.0,
-) -> tuple[DataFrame, DataFrame]:
+def bm25_index(segments: DataFrame, conv_dim: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
     """Build-ONCE inverted index statistics — the analog of the reference's
     prebuilt Elasticsearch index (/root/reference/src/search/search.py:174-214
     queries index-resident df/avgdl; it never re-aggregates the corpus).
@@ -141,7 +135,7 @@ def bm25_index(
     tables (broadcast of the FILTERED slice) instead of re-scanning the
     corpus: per-query cost drops from 2 full scans to 1 (scoring only).
     """
-    seg, fields = _prep_fields(segments, conv_dim, words_boost, dim_boost)
+    seg, fields = _prep_fields(segments, conv_dim)
 
     # term_df in ONE corpus scan: tag each field's distinct tokens with its
     # field name, concat, explode once, count (a per-field loop of
@@ -226,14 +220,14 @@ def _bm25_stats(seg: DataFrame, fields: list) -> DataFrame:
     return seg.agg(*aggs)
 
 
-def _bm25_rank(seg: DataFrame, fields: list, stats: DataFrame, k: int, k1: float, b: float) -> DataFrame:
+def _bm25_rank(seg: DataFrame, fields: list, stats: DataFrame, k: int) -> DataFrame:
     """The one BM25 scorer. ``fields`` lists ``(name, boost, dl, [tf per
     query term])`` with ``dl``/``tf`` double columns of ``seg``; ``stats``
     is the 1-row ``__n`` / ``__avgdl_{name}`` / ``__df_{name}_{i}`` frame,
     broadcast back via crossJoin. Per field, per term: ``idf(t) *
-    tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))`` with the Lucene idf ``ln(1 +
-    (N - df + 0.5)/(df + 0.5))``; field score = boost * the sum over query
-    terms, started at 0.0 (every term's share is >= 0, so scores stay
+    tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))`` with k1 = ``BM25_K1``, b =
+    ``BM25_B`` and the Lucene idf ``ln(1 + (N - df + 0.5)/(df + 0.5))``;
+    field score = boost * the sum over query terms, started at 0.0 (every term's share is >= 0, so scores stay
     bit-identical, and an empty query scores 0 everywhere and ranks
     nothing); document score = max over the boosted fields; top-k by
     TakeOrderedAndProject."""
@@ -246,7 +240,8 @@ def _bm25_rank(seg: DataFrame, fields: list, stats: DataFrame, k: int, k1: float
             idf = F.log(F.lit(1.0) + (F.col("__n") - df + F.lit(0.5)) / (df + F.lit(0.5)))
             total = total + F.when(
                 tf > 0,
-                idf * tf * F.lit(k1 + 1.0) / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * norm)),
+                idf * tf * F.lit(BM25_K1 + 1.0)
+                / (tf + F.lit(BM25_K1) * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * norm)),
             ).otherwise(F.lit(0.0))
         field_scores.append(F.lit(boost) * total)
     best = field_scores[0] if len(field_scores) == 1 else F.greatest(*field_scores)
@@ -265,10 +260,6 @@ def bm25_topk(
     query: str,
     conv_dim: DataFrame | None = None,
     k: int = 100,
-    k1: float = 1.2,
-    b: float = 0.75,
-    words_boost: float = 2.0,
-    dim_boost: float = 1.0,
     stats: DataFrame | None = None,
 ) -> DataFrame:
     """In-engine BM25 top-k — the reference's Elasticsearch ``multi_match``
@@ -284,27 +275,17 @@ def bm25_topk(
     beyond the stats agg — the same plan works at any corpus size. An
     empty (or all-blank) query returns no rows."""
     terms = split_ws(query.lower())
-    seg, fields = _prep_fields(segments, conv_dim, words_boost, dim_boost)
+    seg, fields = _prep_fields(segments, conv_dim)
     fields = [
         (f, boost, F.col(f"__dl_{f}"), [term_freq(F.col(f"__toks_{f}"), t).cast("double") for t in terms])
         for f, boost in fields
     ]
     if stats is None:
         stats = _bm25_stats(seg, fields)
-    return _bm25_rank(seg, fields, stats, k, k1, b)
+    return _bm25_rank(seg, fields, stats, k)
 
 
-def bm25_topk_fused(
-    transcripts: DataFrame,
-    query: str,
-    k: int = 100,
-    k1: float = 1.2,
-    b: float = 0.75,
-    words_boost: float = 2.0,
-    dim_boost: float = 1.0,
-    length: str = "120 seconds",
-    hop: str = "60 seconds",
-) -> DataFrame:
+def bm25_topk_fused(transcripts: DataFrame, query: str, k: int = 100) -> DataFrame:
     """BM25 top-k straight from the TRANSCRIPT — no segment text is ever
     materialized.
 
@@ -340,7 +321,7 @@ def bm25_topk_fused(
         F.size(F.col("__toks")).cast("double").alias("__ntok"),
         *[term_freq(F.col("__toks"), t).cast("double").alias(f"__tf{i}") for i, t in enumerate(terms)],
     )
-    win = F.window(F.col("ts"), length, hop)
+    win = F.window(F.col("ts"), SEG_LENGTH, SEG_HOP)
     seg = per_row.groupBy(F.col("conv_id"), win.alias("win")).agg(
         F.sum("__ntok").alias("__dl_w"),
         *[F.sum(f"__tf{i}").alias(f"__tfw{i}") for i in range(len(terms))],
@@ -379,10 +360,10 @@ def bm25_topk_fused(
     # can't accumulate storage (see checkpoint.swap_cached).
     seg = _swap_cached(_FUSED_SEG_CKPT, seg)
     fields = [
-        ("seg_words", words_boost, F.col("__dl_w"), [F.col(f"__tfw{i}") for i in range(len(terms))]),
-        ("dim_text", dim_boost, F.col("__dl_d"), [F.col(f"__tfd{i}") for i in range(len(terms))]),
+        ("seg_words", WORDS_BOOST, F.col("__dl_w"), [F.col(f"__tfw{i}") for i in range(len(terms))]),
+        ("dim_text", DIM_BOOST, F.col("__dl_d"), [F.col(f"__tfd{i}") for i in range(len(terms))]),
     ]
-    return _bm25_rank(seg, fields, _bm25_stats(seg, fields), k, k1, b)
+    return _bm25_rank(seg, fields, _bm25_stats(seg, fields), k)
 
 
 def _toks_sql(expr: str) -> str:
@@ -405,7 +386,7 @@ _BM25_BASE_SQL = _CONV_DIM_SQL + f"""
         ),"""
 
 
-def _field_score_sql(f: str, terms: list[str], k1: float, b: float) -> str:
+def _field_score_sql(f: str, terms: list[str]) -> str:
     parts = []
     for i, t in enumerate(terms):
         tf = f"CAST(len(list_filter({f}, x -> x = '{t}')) AS DOUBLE)"
@@ -413,20 +394,13 @@ def _field_score_sql(f: str, terms: list[str], k1: float, b: float) -> str:
         idf = f"ln(1.0 + (__n - {df} + 0.5) / ({df} + 0.5))"
         norm = f"CAST(len({f}) AS DOUBLE) / greatest(__avgdl_{f}, 1e-9)"
         parts.append(
-            f"CASE WHEN {tf} > 0 THEN {idf} * {tf} * {k1 + 1.0} / "
-            f"({tf} + {k1} * ({1.0 - b} + {b} * {norm})) ELSE 0.0 END"
+            f"CASE WHEN {tf} > 0 THEN {idf} * {tf} * {BM25_K1 + 1.0} / "
+            f"({tf} + {BM25_K1} * ({1.0 - BM25_B} + {BM25_B} * {norm})) ELSE 0.0 END"
         )
     return " + ".join(parts)
 
 
-def bm25_indexed_sql(
-    queries: list[str],
-    k: int = 100,
-    k1: float = 1.2,
-    b: float = 0.75,
-    words_boost: float = 2.0,
-    dim_boost: float = 1.0,
-) -> str:
+def bm25_indexed_sql(queries: list[str], k: int = 100) -> str:
     """DuckDB twin of the STORED-index path: build (term, df) + field-meta
     CTEs once, then score EVERY query in ``queries`` against the same
     index tables (embed after `WITH transcript AS (...), segments AS (...)`).
@@ -448,8 +422,8 @@ def bm25_indexed_sql(
         __stats_q{qi} AS (SELECT __n, __avgdl_t0, __avgdl_t1, {", ".join(df_cols)} FROM __meta),
         __top_q{qi} AS (
             SELECT '{query}' AS query, seg_id,
-                   round(greatest({words_boost} * ({_field_score_sql("t0", terms, k1, b)}),
-                                  {dim_boost} * ({_field_score_sql("t1", terms, k1, b)})), 6) AS bm25
+                   round(greatest({WORDS_BOOST} * ({_field_score_sql("t0", terms)}),
+                                  {DIM_BOOST} * ({_field_score_sql("t1", terms)})), 6) AS bm25
             FROM __base CROSS JOIN __stats_q{qi}
             QUALIFY bm25 > 0 AND row_number() OVER (ORDER BY bm25 DESC, seg_id ASC) <= {k}
         )"""
@@ -475,34 +449,23 @@ def bm25_indexed_sql(
     )
 
 
-def bm25_topk_sql(
-    query: str,
-    k: int = 100,
-    k1: float = 1.2,
-    b: float = 0.75,
-    words_boost: float = 2.0,
-    dim_boost: float = 1.0,
-) -> str:
+def bm25_topk_sql(query: str, k: int = 100) -> str:
     """DuckDB twin of :func:`bm25_topk` (embed after
     `WITH transcript AS (...), segments AS (...)`)."""
     terms = split_ws(query.lower())
 
-    fields = [("t0", words_boost), ("t1", dim_boost)]
     stats_cols = ["CAST(count(*) AS DOUBLE) AS __n"]
-    for f, _ in fields:
+    for f in ("t0", "t1"):
         stats_cols.append(f"avg(len({f})) AS __avgdl_{f}")
         for i, t in enumerate(terms):
             stats_cols.append(f"CAST(sum(CAST(list_contains({f}, '{t}') AS INT)) AS DOUBLE) AS __df_{f}_{i}")
-
-    def field_score(f: str) -> str:
-        return _field_score_sql(f, terms, k1, b)
 
     return f"""{_BM25_BASE_SQL}
         __stats AS (SELECT {", ".join(stats_cols)} FROM __base),
         __scored AS (
             SELECT seg_id,
-                   round(greatest({words_boost} * ({field_score("t0")}),
-                                  {dim_boost} * ({field_score("t1")})), 6) AS bm25
+                   round(greatest({WORDS_BOOST} * ({_field_score_sql("t0", terms)}),
+                                  {DIM_BOOST} * ({_field_score_sql("t1", terms)})), 6) AS bm25
             FROM __base CROSS JOIN __stats
         )
         SELECT seg_id, bm25 FROM __scored
@@ -511,7 +474,7 @@ def bm25_topk_sql(
     """
 
 
-def search_segments_sql(query: str, k: int = 100, words_weight: float = 2.0, dim_weight: float = 1.0) -> str:
+def search_segments_sql(query: str, k: int = 100) -> str:
     """DuckDB twin (embed after `WITH transcript AS (...), segments AS (...)`)."""
     terms = split_ws(query.lower())
 
@@ -523,7 +486,7 @@ def search_segments_sql(query: str, k: int = 100, words_weight: float = 2.0, dim
     return f"""{_CONV_DIM_SQL}
         scored AS (
             SELECT s.seg_id,
-                   round({words_weight} * ({seg_score}) + {dim_weight} * (COALESCE({dim_score}, 0)), 6) AS es_score
+                   round({WORDS_BOOST} * ({seg_score}) + {DIM_BOOST} * (COALESCE({dim_score}, 0)), 6) AS es_score
             FROM segments s
             LEFT JOIN conv_dim d ON string_split(s.seg_id, '_')[1] = d.dim_conv_id
         )

@@ -22,32 +22,16 @@ from podcast_audio_feature_extraction_spark.functions.text import tokens_col, to
 from podcast_audio_feature_extraction_spark.functions.time import ts_micros
 
 
-def build_segments(
-    df: DataFrame,
-    length: str = "120 seconds",
-    hop: str = "60 seconds",
-    conv_col: str = "conv_id",
-    ts_col: str = "ts",
-    exact_speakers: bool = True,
-    skew_salts: int | None = None,
-) -> DataFrame:
-    """``exact_speakers=True`` (default) counts speakers exactly via
-    ``size(collect_set(role))`` — a single-pass aggregate whose state is
-    the distinct role set (bounded by the role vocabulary).
-    ``exact_speakers=False`` switches to approx_count_distinct (HLL,
-    constant state) for corpora whose per-window speaker cardinality is
-    itself huge; for the reference's use (a boolean-ish mood feature)
-    either is fine."""
-    win = F.window(F.col(ts_col), length, hop)
-    if skew_salts and not exact_speakers:
-        # the salted branch merges per-salt role SETS (array_distinct over
-        # flattened partials) — necessarily exact; HLL sketches can't be
-        # merged through collect_list. Silently computing the more
-        # expensive exact plan would hide the config conflict.
-        raise ValueError(
-            "build_segments: exact_speakers=False is not supported with skew_salts "
-            "(salt partials merge role sets exactly); drop one of the two flags"
-        )
+# the reference's segment window (index.py:79-81): 120 s long, stepped 60 s
+SEG_LENGTH_S, SEG_HOP_S = 120, 60
+SEG_LENGTH, SEG_HOP = f"{SEG_LENGTH_S} seconds", f"{SEG_HOP_S} seconds"
+
+
+def build_segments(df: DataFrame, skew_salts: int | None = None) -> DataFrame:
+    """Speakers are counted exactly via ``size(collect_set(role))`` — a
+    single-pass aggregate whose state is the distinct role set (bounded
+    by the role vocabulary)."""
+    win = F.window(F.col("ts"), SEG_LENGTH, SEG_HOP)
     if skew_salts:
         # Viral-conversation guard: collect_list is holistic, so a hot
         # (conv, window) group's whole text buffer lands on one reducer.
@@ -60,17 +44,17 @@ def build_segments(
         # turn_idx, so re-runs are reproducible (unlike rand()).
         salt = F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(skew_salts)).cast("int")
         partial = (
-            df.groupBy(F.col(conv_col), win.alias("win"), salt.alias("salt"))
+            df.groupBy(F.col("conv_id"), win.alias("win"), salt.alias("salt"))
             .agg(
                 F.collect_list(
-                    F.struct(F.col(ts_col).alias("ts"), F.col("turn_idx"), F.col("text"))
+                    F.struct(F.col("ts").alias("ts"), F.col("turn_idx"), F.col("text"))
                 ).alias("__items"),
                 F.count(F.lit(1)).alias("__n"),
                 F.collect_set("role").alias("__roles"),
             )
         )
         ordered = F.sort_array(F.flatten(F.collect_list("__items")))
-        grouped = partial.groupBy(conv_col, "win").agg(
+        grouped = partial.groupBy("conv_id", "win").agg(
             F.array_join(F.transform(ordered, lambda s: s["text"]), " ").alias("seg_words"),
             F.sum("__n").alias("n_turns"),
             F.size(F.array_distinct(F.flatten(F.collect_list("__roles")))).cast("long").alias(
@@ -79,7 +63,7 @@ def build_segments(
         )
     else:
         ordered = F.sort_array(
-            F.collect_list(F.struct(F.col(ts_col).alias("ts"), F.col("turn_idx"), F.col("text")))
+            F.collect_list(F.struct(F.col("ts").alias("ts"), F.col("turn_idx"), F.col("text")))
         )
         # exact speakers via size(collect_set): identical to
         # count(DISTINCT role) (both skip NULLs), but a single-pass
@@ -90,18 +74,14 @@ def build_segments(
         # (measured ~25% off the segments row). collect_set's per-group
         # state is the distinct role set — bounded by the role vocabulary,
         # scale-safe.
-        speakers = (
-            F.size(F.collect_set("role")).cast("long")
-            if exact_speakers
-            else F.approx_count_distinct("role")
-        )
+        speakers = F.size(F.collect_set("role")).cast("long")
         # NOTE: unlike the numeric functional grid, this aggregation keeps
         # map-side partial aggregation: for a HOT (conv, window) group the
         # partial collect is the parallelism (32 map tasks build text
         # buffers concurrently; the reducer merges buffers instead of
         # collecting 3M raw rows serially — measured 2.5x on the viral
         # burst bench when partials were removed).
-        grouped = df.groupBy(F.col(conv_col), win.alias("win")).agg(
+        grouped = df.groupBy(F.col("conv_id"), win.alias("win")).agg(
             F.array_join(F.transform(ordered, lambda s: s["text"]), " ").alias("seg_words"),
             F.count(F.lit(1)).alias("n_turns"),
             speakers.alias("seg_speakers"),
@@ -110,9 +90,9 @@ def build_segments(
         grouped
         .select(
             F.concat_ws(
-                "_", F.col(conv_col), (ts_micros(F.col("win.start")) / F.lit(1_000_000)).cast("long").cast("string")
+                "_", F.col("conv_id"), (ts_micros(F.col("win.start")) / F.lit(1_000_000)).cast("long").cast("string")
             ).alias("seg_id"),
-            conv_col,
+            "conv_id",
             F.col("win.start").alias("win_start"),
             F.col("win.end").alias("win_end"),
             "seg_words",
@@ -123,24 +103,23 @@ def build_segments(
     )
 
 
-def build_segments_sql(length_s: int = 120, hop_s: int = 60, src: str = "transcript") -> str:
+def build_segments_sql() -> str:
     """DuckDB twin of :func:`build_segments`."""
-    n_shifts = length_s // hop_s
-    shifts = ", ".join(f"({i * hop_s})" for i in range(n_shifts))
+    shifts = ", ".join(f"({i * SEG_HOP_S})" for i in range(SEG_LENGTH_S // SEG_HOP_S))
     return f"""
         SELECT conv_id || '_' || CAST(CAST(epoch_us(win_start) / 1e6 AS BIGINT) AS VARCHAR) AS seg_id,
                conv_id,
                win_start,
-               win_start + INTERVAL {length_s} SECOND AS win_end,
+               win_start + INTERVAL {SEG_LENGTH_S} SECOND AS win_end,
                string_agg(text, ' ' ORDER BY ts, turn_idx) AS seg_words,
                CAST(len({tokens_sql("string_agg(text, ' ' ORDER BY ts, turn_idx)")}) AS INT) AS seg_length,
                count(*) AS n_turns,
                count(DISTINCT role) AS seg_speakers
         FROM (
-            SELECT t.*, make_timestamp(((epoch_us(ts) // ({hop_s} * 1000000)) * {hop_s} - off.o) * 1000000) AS win_start
-            FROM {src} t CROSS JOIN (VALUES {shifts}) AS off(o)
+            SELECT t.*, make_timestamp(((epoch_us(ts) // ({SEG_HOP_S} * 1000000)) * {SEG_HOP_S} - off.o) * 1000000) AS win_start
+            FROM transcript t CROSS JOIN (VALUES {shifts}) AS off(o)
         )
         WHERE epoch_us(ts) >= epoch_us(win_start)
-          AND epoch_us(ts) <  epoch_us(win_start) + {length_s} * 1000000
+          AND epoch_us(ts) <  epoch_us(win_start) + {SEG_LENGTH_S} * 1000000
         GROUP BY conv_id, win_start
     """

@@ -21,58 +21,43 @@ from pyspark.sql.window import Window
 
 from podcast_audio_feature_extraction_spark.functions.time import ts_micros
 
+# the session cutoff: a gap of more than 30 minutes starts a new session
+GAP_S = 1800.0
 
-def sessionize(
-    df: DataFrame,
-    gap_s: float = 1800.0,
-    conv_col: str = "conv_id",
-    ts_col: str = "ts",
-    tie_col: str = "turn_idx",
-    out_col: str = "session_id",
-) -> DataFrame:
+
+def sessionize(df: DataFrame, gap_s: float = GAP_S) -> DataFrame:
     """Add ``session_id`` (0-based per conversation).
 
     A new session starts when the gap to the previous turn is strictly
     greater than ``gap_s`` seconds. Ties in ``ts`` are broken by
-    ``tie_col`` so the ordering (and therefore the ids) is deterministic.
+    ``turn_idx`` so the ordering (and therefore the ids) is deterministic.
     """
-    w = Window.partitionBy(conv_col).orderBy(ts_col, tie_col)
+    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
     # integer microseconds: exact arithmetic (casting timestamp to double
     # loses precision at epoch magnitude — ~1e-7 s error, enough to flip a
     # gap comparison at the cutoff boundary)
-    gap = (ts_micros(ts_col) - ts_micros(F.lag(F.col(ts_col)).over(w))) / F.lit(1e6)
+    gap = (ts_micros("ts") - ts_micros(F.lag(F.col("ts")).over(w))) / F.lit(1e6)
     is_new = F.when(gap > F.lit(gap_s), 1).otherwise(0)
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return df.withColumn(out_col, F.sum(is_new).over(run).cast("int"))
+    return df.withColumn("session_id", F.sum(is_new).over(run).cast("int"))
 
 
-def session_bounds(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    ts_col: str = "ts",
-    session_col: str = "session_id",
-) -> DataFrame:
+def session_bounds(df: DataFrame) -> DataFrame:
     """Per-session summary: bounds, turn count, distinct roles.
 
     Pure groupBy-agg — partial aggregation (map-side combine) is automatic,
     so this scales linearly with input and shuffles only one row per session.
     """
-    return df.groupBy(conv_col, session_col).agg(
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
+    return df.groupBy("conv_id", "session_id").agg(
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
         F.count(F.lit(1)).alias("n_turns"),
         F.count_distinct("role").alias("n_roles"),
-        ((ts_micros(F.max(ts_col)) - ts_micros(F.min(ts_col))) / F.lit(1e6)).alias("duration_s"),
+        ((ts_micros(F.max("ts")) - ts_micros(F.min("ts"))) / F.lit(1e6)).alias("duration_s"),
     )
 
 
-def session_relative_features(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    ts_col: str = "ts",
-    tie_col: str = "turn_idx",
-    session_col: str = "session_id",
-) -> DataFrame:
+def session_relative_features(df: DataFrame) -> DataFrame:
     """Session-relative per-turn features (requires ``sessionize`` first):
 
     - turn_in_session: 0-based position within the session
@@ -81,13 +66,13 @@ def session_relative_features(
       same (conv, session) partitioning as the other two)
     - is_session_start / is_session_end flags
     """
-    w = Window.partitionBy(conv_col, session_col).orderBy(ts_col, tie_col)
-    full = Window.partitionBy(conv_col, session_col)
+    w = Window.partitionBy("conv_id", "session_id").orderBy("ts", "turn_idx")
+    full = Window.partitionBy("conv_id", "session_id")
     return (
         df.withColumn("turn_in_session", (F.row_number().over(w) - 1).cast("int"))
         .withColumn(
             "time_in_session_s",
-            (ts_micros(ts_col) - F.min(ts_micros(ts_col)).over(full)) / F.lit(1e6),
+            (ts_micros("ts") - F.min(ts_micros("ts")).over(full)) / F.lit(1e6),
         )
         .withColumn("session_len", F.count(F.lit(1)).over(full).cast("int"))
         .withColumn("is_session_start", (F.col("turn_in_session") == 0).cast("int"))
@@ -112,10 +97,7 @@ def session_relative_sql(src: str) -> str:
     """
 
 
-def sessionize_sql(
-    gap_s: float = 1800.0,
-    src: str = "transcript",
-) -> str:
+def sessionize_sql(gap_s: float = GAP_S, src: str = "transcript") -> str:
     """DuckDB-dialect twin of :func:`sessionize` (oracle cross-check).
 
     Two levels because SQL window calls cannot nest (lag inside sum)."""

@@ -16,7 +16,17 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from podcast_audio_feature_extraction_spark.functions.sqlfmt import ROUND_DIGITS
 from podcast_audio_feature_extraction_spark.functions.sqlfmt import dlit as _dlit
+
+# the query vectors of every DuckDB twin (the Spark queries filter the same)
+QUERY_PRED = "vec_id < 5"
+# every seeded model artifact: k-means initial picks, random hyperplanes
+SEED = 42
+# rows of the ordered sample the ``_local`` fits draw
+FIT_SAMPLE_ROWS = 20_000
+# int8-style quantization: [QUANT_LO, QUANT_HI] onto QUANT_LEVELS codes
+QUANT_LO, QUANT_HI, QUANT_LEVELS = -1.0, 1.0, 256
 
 
 def dot_col(a: Column, b: Column) -> Column:
@@ -28,18 +38,17 @@ def norm_col(a: Column) -> Column:
     return F.sqrt(dot_col(a, a))
 
 
-def cosine_col(a: Column, b: Column, round_digits: int = 6) -> Column:
-    return F.round(dot_col(a, b) / (norm_col(a) * norm_col(b)), round_digits)
+def cosine_col(a: Column, b: Column) -> Column:
+    return F.round(dot_col(a, b) / (norm_col(a) * norm_col(b)), ROUND_DIGITS)
 
 
-def _cosine_hoisted(q_vec: Column, c_vec: Column, q_norm: Column, c_norm: Column,
-                    round_digits: int = 6) -> Column:
+def _cosine_hoisted(q_vec: Column, c_vec: Column, q_norm: Column, c_norm: Column) -> Column:
     """cosine_col with the two norms read from pre-computed columns —
     BIT-IDENTICAL values (same expressions, same q*c product order), but
     each side's norm fold runs once per ROW instead of once per candidate
     PAIR (a corpus vector is a candidate for every query probing its
     bucket, so the per-pair form re-folds the same norm ~n_q times)."""
-    return F.round(dot_col(q_vec, c_vec) / (q_norm * c_norm), round_digits)
+    return F.round(dot_col(q_vec, c_vec) / (q_norm * c_norm), ROUND_DIGITS)
 
 
 def _cosine_topk(c: DataFrame, q: DataFrame, k: int, key: str | None) -> DataFrame:
@@ -64,14 +73,12 @@ def brute_force_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k per query vector (broadcast the small query side;
     the corpus side streams — one pass, no shuffle until the per-query
     top-k, which TakeOrderedAndProject keeps tiny)."""
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    c = emb.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"))
+    q = queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
+    c = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
     return _cosine_topk(c, q, k, None)
 
 
@@ -85,14 +92,14 @@ def sign_bucket_col(vec_col_name: str, n_bits: int = 8) -> Column:
     )
 
 
-def random_planes(n_bits: int, dim: int, seed: int = 42):
+def random_planes(n_bits: int, dim: int):
     """Random-hyperplane matrix for proper cosine-LSH (the scale-grade
     alternative to axis-aligned sign buckets). A deterministic literal —
     broadcast into the Spark expression AND inlined into the DuckDB twin,
     so the bucketing is engine-independent."""
     import numpy as np
 
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(SEED)
     return rng.standard_normal((n_bits, dim))
 
 
@@ -129,8 +136,6 @@ def lsh_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_bits: int = 8,
     planes=None,
 ) -> DataFrame:
@@ -141,17 +146,17 @@ def lsh_topk(
     the bucketing from axis-aligned sign bits to proper random-hyperplane
     cosine-LSH; the plan shape is identical (the matrix is a literal)."""
     if planes is not None:
-        bucket = plane_bucket_col(vec_col, planes)
+        bucket = plane_bucket_col("embedding", planes)
     else:
-        bucket = sign_bucket_col(vec_col, n_bits)
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"), bucket.alias("bucket"))
-    c = emb.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"), bucket.alias("bucket"))
+        bucket = sign_bucket_col("embedding", n_bits)
+    q = queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"), bucket.alias("bucket"))
+    c = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"), bucket.alias("bucket"))
     return _cosine_topk(c, q, k, "bucket")
 
 
-def _ordered_sample(parquet_path: str, vec_col: str, id_col: str, sample_rows: int):
+def _ordered_sample(parquet_path: str, sample_rows: int):
     """The one sample every ``_local`` fit draws: the first ``sample_rows``
-    vectors of a parquet file in ``id_col`` order, read with DuckDB (no
+    embeddings of a parquet file in ``vec_id`` order, read with DuckDB (no
     Spark) and stacked into an (n, d) float64 matrix. An ordered limit on
     a unique id is the same rows on every run, so a fit is a pure
     function of the file — which is how a Spark query and its DuckDB twin
@@ -161,9 +166,9 @@ def _ordered_sample(parquet_path: str, vec_col: str, id_col: str, sample_rows: i
 
     with duckdb.connect() as con:
         pdf = con.execute(
-            f"SELECT {id_col}, {vec_col} FROM '{parquet_path}' ORDER BY {id_col} LIMIT {sample_rows}"
+            f"SELECT vec_id, embedding FROM '{parquet_path}' ORDER BY vec_id LIMIT {sample_rows}"
         ).fetchdf()
-    return np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    return np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
 
 
 def _kmeans_core(x, n_centroids: int, iters: int, seed: int):
@@ -187,11 +192,8 @@ def _kmeans_core(x, n_centroids: int, iters: int, seed: int):
 def fit_ivf_centroids_local(
     parquet_path: str,
     n_centroids: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_rows: int = 20_000,
+    sample_rows: int = FIT_SAMPLE_ROWS,
     iters: int = 8,
-    seed: int = 42,
 ):
     """The IVF coarse quantizer: k-means on the file's ordered sample
     (:func:`_ordered_sample`; DuckDB+numpy, no Spark). Fitting is
@@ -200,8 +202,8 @@ def fit_ivf_centroids_local(
     every call, which is how the IVF query and its DuckDB twin share the
     quantizer as plain literals (assignment and probe are then ordinary
     SQL)."""
-    x = _ordered_sample(parquet_path, vec_col, id_col, sample_rows)
-    return _kmeans_core(x, n_centroids, iters, seed)
+    x = _ordered_sample(parquet_path, sample_rows)
+    return _kmeans_core(x, n_centroids, iters, SEED)
 
 
 def _nearest_centroids_udf(centroids, nprobe: int):
@@ -231,8 +233,6 @@ def ivf_topk(
     centroids,
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors are bucketed by nearest
     centroid (one pass, broadcast centroid matrix); each query probes its
@@ -242,14 +242,14 @@ def ivf_topk(
     assign1 = _nearest_centroids_udf(centroids, 1)
     probe = _nearest_centroids_udf(centroids, nprobe)
     c = emb.select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.element_at(assign1(F.col(vec_col)), 1).alias("centroid_id"),
+        F.col("vec_id").alias("c_id"),
+        F.col("embedding").alias("c_vec"),
+        F.element_at(assign1(F.col("embedding")), 1).alias("centroid_id"),
     )
     q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(probe(F.col(vec_col))).alias("centroid_id"),
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_vec"),
+        F.explode(probe(F.col("embedding"))).alias("centroid_id"),
     )
     return _cosine_topk(c, q, k, "centroid_id")
 
@@ -319,11 +319,8 @@ def fit_pq_codebooks_local(
     parquet_path: str,
     m_sub: int = 8,
     k_codes: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_rows: int = 20_000,
+    sample_rows: int = FIT_SAMPLE_ROWS,
     iters: int = 8,
-    seed: int = 42,
 ):
     """Product-quantization codebooks (Jégou et al., IEEE TPAMI 2011 —
     public method): split the d-dim space into ``m_sub`` contiguous
@@ -337,8 +334,8 @@ def fit_pq_codebooks_local(
     The same file and arguments give bit-identical codebooks on every
     call, which is how the PQ query and its DuckDB twin share them as
     plain literals (encode + ADC scoring are then ordinary SQL)."""
-    x = _ordered_sample(parquet_path, vec_col, id_col, sample_rows)
-    return _fit_pq_books(x, m_sub, k_codes, iters, seed)
+    x = _ordered_sample(parquet_path, sample_rows)
+    return _fit_pq_books(x, m_sub, k_codes, iters, SEED)
 
 
 def fit_residual_pq_codebooks_local(
@@ -346,11 +343,7 @@ def fit_residual_pq_codebooks_local(
     centroids,
     m_sub: int = 8,
     k_codes: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_rows: int = 20_000,
     iters: int = 8,
-    seed: int = 42,
 ):
     """RESIDUAL PQ codebooks (the standard billion-scale IVF-PQ form,
     Jégou et al. 2011 §IV): codebooks are fitted on x - nearest_centroid
@@ -359,9 +352,9 @@ def fit_residual_pq_codebooks_local(
     quantization at the same code budget. Same ordered sample and the same
     determinism as :func:`fit_pq_codebooks_local` (bit-identical literals
     for the SQL twin)."""
-    x = _ordered_sample(parquet_path, vec_col, id_col, sample_rows)
+    x = _ordered_sample(parquet_path, FIT_SAMPLE_ROWS)
     r, _ = _residualize(x, centroids)
-    return _fit_pq_books(r, m_sub, k_codes, iters, seed)
+    return _fit_pq_books(r, m_sub, k_codes, iters, SEED)
 
 
 def _pq_codes(x, books):
@@ -385,13 +378,9 @@ def _pq_codes(x, books):
     return codes
 
 
-def pq_encode(
-    emb: DataFrame,
-    codebooks,
-    vec_col: str = "embedding",
-    out_col: str = "pq_code",
-) -> DataFrame:
-    """Attach the PQ code (array<int> of length m_sub) to every vector:
+def pq_encode(emb: DataFrame, codebooks) -> DataFrame:
+    """Attach the PQ code ``pq_code`` (array<int> of length m_sub) to every
+    ``embedding``:
     per subspace, the index of the nearest codebook centroid. One
     Arrow-vectorized pass with the codebooks broadcast as a literal —
     this is the one-off encode job whose output IS the stored index.
@@ -409,7 +398,7 @@ def pq_encode(
         codes = _pq_codes(np.stack([np.asarray(v, dtype=np.float64) for v in vecs]), books)
         return pd.Series([row.tolist() for row in codes])
 
-    return emb.withColumn(out_col, encode(F.col(vec_col)))
+    return emb.withColumn("pq_code", encode(F.col("embedding")))
 
 
 def _assign_encode_udf(centroids, codebooks, residual: bool):
@@ -456,9 +445,6 @@ def pq_topk(
     queries: DataFrame,
     codebooks,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_col: str = "pq_code",
 ) -> DataFrame:
     """ADC (asymmetric distance computation) top-k over PQ codes: per
     query, a (m_sub x k_codes) lookup table of exact subspace distances to
@@ -475,11 +461,11 @@ def pq_topk(
 
     books = np.asarray(codebooks, dtype=np.float64)
     m_sub, k_codes, sub = books.shape
-    qpdf = queries.select(id_col, vec_col).toPandas()
+    qpdf = queries.select("vec_id", "embedding").toPandas()
     if len(qpdf) == 0:
         raise ValueError("pq_topk: empty query set")
-    q_ids = qpdf[id_col].tolist()
-    qx = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]])
+    q_ids = qpdf["vec_id"].tolist()
+    qx = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf["embedding"]])
     # (n_q, m_sub, k_codes) exact subspace distances: the ADC LUTs
     # (per-dim ascending accumulation — oracle fold parity)
     luts = np.stack(
@@ -489,8 +475,8 @@ def pq_topk(
 
     out_schema = StructType(
         [
-            StructField("q_id", corpus_codes.schema[id_col].dataType),
-            StructField("c_id", corpus_codes.schema[id_col].dataType),
+            StructField("q_id", corpus_codes.schema["vec_id"].dataType),
+            StructField("c_id", corpus_codes.schema["vec_id"].dataType),
             StructField("adc_dist", DoubleType()),
         ]
     )
@@ -499,18 +485,18 @@ def pq_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            codes = np.stack([np.asarray(c, dtype=np.int64) for c in pdf[code_col]])
+            codes = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["pq_code"]])
             # dist[q, row] = sum_m luts[q, m, codes[row, m]]
             dist = np.zeros((len(q_ids), len(codes)))
             for m in range(m_sub):
                 dist += luts[:, m, :][:, codes[:, m]]
             for qi, q_id in enumerate(q_ids):
                 yield pd.DataFrame(
-                    {"q_id": q_id, "c_id": pdf[id_col].to_numpy(), "adc_dist": dist[qi]}
+                    {"q_id": q_id, "c_id": pdf["vec_id"].to_numpy(), "adc_dist": dist[qi]}
                 )
 
     scored = (
-        corpus_codes.select(id_col, code_col)
+        corpus_codes.select("vec_id", "pq_code")
         .mapInPandas(score, schema=out_schema)
         .filter(F.col("c_id") != F.col("q_id"))
         .withColumn("adc_dist", F.round(F.col("adc_dist"), 9))
@@ -526,8 +512,6 @@ def ivf_pq_topk(
     codebooks,
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     residual: bool = False,
 ) -> DataFrame:
     """IVF-PQ: the standard billion-scale ANN composition — IVF centroid
@@ -560,16 +544,16 @@ def ivf_pq_topk(
     # deterministic; the flag only forbids the optimizer to duplicate or
     # reorder it.
     fused = _assign_encode_udf(cent, books, residual).asNondeterministic()
-    corpus = emb.select(F.col(id_col), fused(F.col(vec_col)).alias("__ae")).select(
-        id_col,
+    corpus = emb.select(F.col("vec_id"), fused(F.col("embedding")).alias("__ae")).select(
+        "vec_id",
         F.col("__ae.centroid_id").alias("centroid_id"),
         F.col("__ae.pq_code").alias("pq_code"),
     )
 
-    qpdf = queries.select(id_col, vec_col).toPandas()
+    qpdf = queries.select("vec_id", "embedding").toPandas()
     if len(qpdf) == 0:
         raise ValueError("ivf_pq_topk: empty query set")
-    qx = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]])
+    qx = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf["embedding"]])
     # probe assignment computed driver-side in numpy from the SAME qpdf
     # snapshot the LUTs come from — a second Spark evaluation of `queries`
     # could return different rows for non-deterministic inputs and pair a
@@ -597,7 +581,7 @@ def ivf_pq_topk(
     lut_rows = [
         # .item() strips numpy scalar wrappers (createDataFrame rejects them)
         (
-            qpdf[id_col].iloc[i].item() if hasattr(qpdf[id_col].iloc[i], "item") else qpdf[id_col].iloc[i],
+            qpdf["vec_id"].iloc[i].item() if hasattr(qpdf["vec_id"].iloc[i], "item") else qpdf["vec_id"].iloc[i],
             [float(v) for v in luts_at(i, j).ravel()],
             int(probes[i][j]),
         )
@@ -607,7 +591,7 @@ def ivf_pq_topk(
     spark = emb.sparkSession
     q = spark.createDataFrame(
         lut_rows,
-        schema=f"q_id {emb.schema[id_col].dataType.simpleString()}, lut array<double>, centroid_id int",
+        schema=f"q_id {emb.schema['vec_id'].dataType.simpleString()}, lut array<double>, centroid_id int",
     )
     # ADC over the pruned candidates: dist = sum_m lut[m * k_codes + code[m]]
     code_sum = F.aggregate(
@@ -621,49 +605,43 @@ def ivf_pq_topk(
     )
     scored = (
         corpus.join(F.broadcast(q), "centroid_id")
-        .filter(F.col(id_col) != F.col("q_id"))
-        .select("q_id", F.col(id_col).alias("c_id"), F.round(code_sum, 9).alias("adc_dist"))
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select("q_id", F.col("vec_id").alias("c_id"), F.round(code_sum, 9).alias("adc_dist"))
     )
     w = Window.partitionBy("q_id").orderBy(F.asc("adc_dist"), F.asc("c_id"))
     return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
 
 
-def quantize_col(vec: Column, lo: float = -1.0, hi: float = 1.0, levels: int = 256) -> Column:
+def quantize_col(vec: Column) -> Column:
     """int8-style embedding quantization (storage path: 4-8x smaller
     feature tables, the float16-HDF5 analog of the reference's sinks).
     floor(x*scale + 0.5) keeps the rounding rule identical across engines
     (plain round() half-up vs half-even varies)."""
-    scale = (levels - 1) / (hi - lo)
+    scale = (QUANT_LEVELS - 1) / (QUANT_HI - QUANT_LO)
     return F.transform(
         vec.cast("array<double>"),
         lambda x: F.least(
-            F.greatest(F.floor((x - F.lit(lo)) * F.lit(scale) + F.lit(0.5)), F.lit(0)), F.lit(levels - 1)
+            F.greatest(F.floor((x - F.lit(QUANT_LO)) * F.lit(scale) + F.lit(0.5)), F.lit(0)), F.lit(QUANT_LEVELS - 1)
         ).cast("int"),
     )
 
 
-def dequantize_col(qvec: Column, lo: float = -1.0, hi: float = 1.0, levels: int = 256) -> Column:
-    step = (hi - lo) / (levels - 1)
-    return F.transform(qvec, lambda q: q.cast("double") * F.lit(step) + F.lit(lo))
+def dequantize_col(qvec: Column) -> Column:
+    step = (QUANT_HI - QUANT_LO) / (QUANT_LEVELS - 1)
+    return F.transform(qvec, lambda q: q.cast("double") * F.lit(step) + F.lit(QUANT_LO))
 
 
-def quantize_roundtrip_sql(
-    dim: int,
-    lo: float = -1.0,
-    hi: float = 1.0,
-    levels: int = 256,
-    src: str = "embeddings",
-    extra_exprs: dict[str, str] | None = None,
-) -> str:
+def quantize_roundtrip_sql(dim: int, src: str = "embeddings", extra_exprs: dict[str, str] | None = None) -> str:
     """DuckDB twin of the quantize->dequantize error query (scalar outputs:
     per-vector max abs error + mse). ``extra_exprs`` appends additional
     ``expr AS name`` columns (e.g. the PCA-whitened components)."""
-    scale = (levels - 1) / (hi - lo)
-    step = (hi - lo) / (levels - 1)
+    scale = (QUANT_LEVELS - 1) / (QUANT_HI - QUANT_LO)
+    step = (QUANT_HI - QUANT_LO) / (QUANT_LEVELS - 1)
     q = (
-        f"least(greatest(floor((CAST(embedding[i+1] AS DOUBLE) - {lo}) * {scale} + 0.5), 0), {levels - 1})"
+        f"least(greatest(floor((CAST(embedding[i+1] AS DOUBLE) - {QUANT_LO}) * {scale} + 0.5), 0), "
+        f"{QUANT_LEVELS - 1})"
     )
-    err = f"abs(({q} * {step} + {lo}) - CAST(embedding[i+1] AS DOUBLE))"
+    err = f"abs(({q} * {step} + {QUANT_LO}) - CAST(embedding[i+1] AS DOUBLE))"
     errs = f"list_transform(range({dim}), i -> {err})"
     extra = "".join(
         f",\n               {expr} AS {name}" for name, expr in (extra_exprs or {}).items()
@@ -679,8 +657,6 @@ def quantize_roundtrip_sql(
 def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_bits: int = 4,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (dedup mode): (a, b, cos) with
@@ -692,8 +668,8 @@ def embedding_near_dup_pairs(
     Pass n_bits=0 EXPLICITLY for the exact all-pairs mode (quadratic
     crossJoin — CI-parity scale only; a 100 TB caller should never reach
     it by accident)."""
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
+    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("v_a"))
+    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("v_b"))
     if n_bits > 0:
         a = a.withColumn("bucket", sign_bucket_col("v_a", n_bits))
         b = b.withColumn("bucket", sign_bucket_col("v_b", n_bits))
@@ -707,11 +683,11 @@ def embedding_near_dup_pairs(
     )
 
 
-def embedding_near_dup_sql(dim: int, threshold: float = 0.95, src: str = "embeddings") -> str:
+def embedding_near_dup_sql(dim: int, threshold: float = 0.95) -> str:
     cos = _cos_sql("a.embedding", "b.embedding", dim)
     return f"""
         SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cos
-        FROM {src} a JOIN {src} b ON a.vec_id < b.vec_id
+        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
         WHERE {cos} >= {threshold}
     """
 
@@ -723,13 +699,13 @@ def _bucket_sql(n_bits: int) -> str:
     )
 
 
-def embedding_near_dup_lsh_sql(dim: int, threshold: float = 0.95, src: str = "embeddings", n_bits: int = 4) -> str:
+def embedding_near_dup_lsh_sql(dim: int, threshold: float = 0.95, n_bits: int = 4) -> str:
     """DuckDB twin of :func:`embedding_near_dup_pairs` with ``n_bits > 0``
     — the bucketed (100 TB) mode: candidates restricted to sign-bucket
     collisions, an equi-join instead of the quadratic cross join."""
     cos = _cos_sql("a.embedding", "b.embedding", dim)
     return f"""
-        WITH __b AS (SELECT vec_id, embedding, {_bucket_sql(n_bits)} AS bucket FROM {src})
+        WITH __b AS (SELECT vec_id, embedding, {_bucket_sql(n_bits)} AS bucket FROM embeddings)
         SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cos
         FROM __b a JOIN __b b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
         WHERE {cos} >= {threshold}
@@ -742,7 +718,6 @@ def ivf_topk_sql(
     k: int = 10,
     nprobe: int = 4,
     src: str = "embeddings",
-    query_pred: str = "vec_id < 5",
 ) -> str:
     """DuckDB twin of :func:`ivf_topk` with the fitted centroids embedded
     as LITERALS (full float64 round-trip via %.17g): given a fixed
@@ -777,7 +752,7 @@ def ivf_topk_sql(
                 SELECT e.vec_id, e.embedding, c.cid,
                        row_number() OVER (PARTITION BY e.vec_id ORDER BY {dist("e.embedding")} ASC, c.cid ASC) AS rn
                 FROM {src} e CROSS JOIN __cent c
-                WHERE {query_pred.replace("vec_id", "e.vec_id")}
+                WHERE {QUERY_PRED.replace("vec_id", "e.vec_id")}
             ) WHERE rn <= {nprobe}
         ),
         __scored AS (
@@ -796,7 +771,6 @@ def pq_topk_sql(
     dim: int,
     k: int = 10,
     src: str = "embeddings",
-    query_pred: str = "vec_id < 5",
 ) -> str:
     """DuckDB twin of :func:`pq_encode` + :func:`pq_topk` with the fitted
     codebooks embedded as a nested DOUBLE[][][] LITERAL (full float64
@@ -845,7 +819,7 @@ def pq_topk_sql(
             SELECT vec_id AS c_id, {code_expr} AS codes
             FROM {src} CROSS JOIN __bk
         ),
-        __q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM {src} WHERE {query_pred}),
+        __q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM {src} WHERE {QUERY_PRED}),
         __scored AS (
             SELECT q.q_id, c.c_id, round({adc}, 9) AS adc_dist
             FROM __codes c CROSS JOIN __q q CROSS JOIN __bk
@@ -865,7 +839,6 @@ def ivf_pq_topk_sql(
     k: int = 10,
     nprobe: int = 2,
     src: str = "embeddings",
-    query_pred: str = "vec_id < 5",
     residual: bool = False,
 ) -> str:
     """DuckDB twin of :func:`ivf_pq_topk` — the composed prune-then-ADC
@@ -953,7 +926,7 @@ def ivf_pq_topk_sql(
                 SELECT e.vec_id, e.embedding, c.cid, c.cvec,
                        row_number() OVER (PARTITION BY e.vec_id ORDER BY {cdist("e.embedding")} ASC, c.cid ASC) AS rn
                 FROM {src} e CROSS JOIN __ipq_cent c
-                WHERE {query_pred.replace("vec_id", "e.vec_id")}
+                WHERE {QUERY_PRED.replace("vec_id", "e.vec_id")}
             ) WHERE rn <= {nprobe}
         ),
         __ipq_scored AS (
@@ -978,10 +951,10 @@ def _cos_sql(a: str, b: str, dim: int) -> str:
     return f"round({dot(a, b)} / (sqrt({dot(a, a)}) * sqrt({dot(b, b)})), 6)"
 
 
-def brute_force_topk_sql(dim: int, k: int = 10, src: str = "embeddings", query_pred: str = "vec_id < 5") -> str:
+def brute_force_topk_sql(dim: int, k: int = 10, src: str = "embeddings") -> str:
     """DuckDB twin of :func:`brute_force_topk` (fragment, embed after WITH)."""
     return f"""
-        , __q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM {src} WHERE {query_pred}),
+        , __q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM {src} WHERE {QUERY_PRED}),
         __scored AS (
             SELECT q.q_id, c.vec_id AS c_id, {_cos_sql("q.q_vec", "c.embedding", dim)} AS cos
             FROM {src} c CROSS JOIN __q q WHERE c.vec_id <> q.q_id
@@ -993,15 +966,7 @@ def brute_force_topk_sql(dim: int, k: int = 10, src: str = "embeddings", query_p
     """
 
 
-def _lsh_parts(
-    dim: int,
-    k: int,
-    src: str,
-    query_pred: str,
-    n_bits: int,
-    planes,
-    prefix: str = "",
-) -> tuple[str, str]:
+def _lsh_parts(dim: int, k: int, src: str, n_bits: int, planes, prefix: str = "") -> tuple[str, str]:
     """(CTE fragment without leading comma, final SELECT) for one LSH
     variant; ``prefix`` uniquifies CTE names so two variants can share a
     WITH clause (the tagged-union oracle)."""
@@ -1014,7 +979,7 @@ def _lsh_parts(
         )
     p = prefix
     ctes = f"""
-        __{p}qb AS (SELECT vec_id AS q_id, embedding AS q_vec, {bucket} AS bucket FROM {src} WHERE {query_pred}),
+        __{p}qb AS (SELECT vec_id AS q_id, embedding AS q_vec, {bucket} AS bucket FROM {src} WHERE {QUERY_PRED}),
         __{p}cb AS (SELECT vec_id AS c_id, embedding AS c_vec, {bucket} AS bucket FROM {src}),
         __{p}scored AS (
             SELECT q.q_id, c.c_id, {_cos_sql("q.q_vec", "c.c_vec", dim)} AS cos
@@ -1029,15 +994,9 @@ def _lsh_parts(
     return ctes, sel
 
 
-def lsh_topk_sql(
-    dim: int,
-    k: int = 10,
-    src: str = "embeddings",
-    query_pred: str = "vec_id < 5",
-    n_bits: int = 8,
-    planes=None,
-) -> str:
-    ctes, sel = _lsh_parts(dim, k, src, query_pred, n_bits, planes)
+def lsh_topk_sql(dim: int, k: int = 10, src: str = "embeddings", n_bits: int = 8) -> str:
+    """DuckDB twin of :func:`lsh_topk` in its axis-aligned sign-bit mode."""
+    ctes, sel = _lsh_parts(dim, k, src, n_bits, None)
     return ", " + ctes + " " + sel
 
 
@@ -1045,15 +1004,14 @@ def lsh_topk_union_sql(
     dim: int,
     k: int = 10,
     src: str = "embeddings",
-    query_pred: str = "vec_id < 5",
     n_bits: int = 8,
     planes=None,
 ) -> str:
     """Tagged-union twin of BOTH sign-LSH modes in one result frame:
     mode='axis' (leading-dim sign bits) UNION ALL mode='rand' (random
     hyperplanes) — the one-driver-slot form of the ann_lsh family."""
-    a_ctes, a_sel = _lsh_parts(dim, k, src, query_pred, n_bits, None, prefix="ax_")
-    r_ctes, r_sel = _lsh_parts(dim, k, src, query_pred, n_bits, planes, prefix="rd_")
+    a_ctes, a_sel = _lsh_parts(dim, k, src, n_bits, None, prefix="ax_")
+    r_ctes, r_sel = _lsh_parts(dim, k, src, n_bits, planes, prefix="rd_")
     return (
         f", {a_ctes}, {r_ctes} "
         f"SELECT 'axis' AS mode, * FROM ({a_sel}) "

@@ -40,18 +40,18 @@ from podcast_audio_feature_extraction_spark.operators.sessionize import sessioni
 FEATURE_COLS = ["conv_id", "turn_idx", "ts", "session_id", "functionals", "embedding"]
 
 
-def build_feature_table(
-    transcripts: DataFrame,
-    gap_s: float = 1800.0,
-    k: int = 5,
-    embed_dim: int = 64,
-    val_col: str | None = "val",
-) -> DataFrame:
-    """transcripts -> per-turn feature table (the backfill right side)."""
-    df = sessionize(transcripts, gap_s=gap_s)
-    df = turn_features(df, k=k, val_col=val_col)
+def build_feature_table(transcripts: DataFrame, val_col: str | None = "val") -> DataFrame:
+    """transcripts -> per-turn feature table (the backfill right side).
+
+    The table's one definition: the session cutoff ``GAP_S``, the rolling
+    frame ``ROLL_K`` and the embedding width ``EMBED_DIM``, so the
+    backfill job and the delta stream cannot write rows of two
+    definitions into one table. Only ``val_col`` varies, and it shows in
+    the table's pinned schema."""
+    df = sessionize(transcripts)
+    df = turn_features(df, val_col=val_col)
     df = assemble_functionals(df)
-    df = with_embedding(df, dim=embed_dim)
+    df = with_embedding(df)
     return df.select(*FEATURE_COLS)
 
 
@@ -130,9 +130,6 @@ def delta_rebuild_partitioned(
     transcript_path: str,
     new_turns: DataFrame,
     n_buckets: int = N_CONV_BUCKETS,
-    gap_s: float = 1800.0,
-    k: int = 5,
-    embed_dim: int = 64,
     val_col: str | None = "val",
 ) -> DataFrame:
     """Production-shape delta build over a STORED transcript partitioned
@@ -158,17 +155,17 @@ def delta_rebuild_partitioned(
     rows."""
     pin_layout(transcript_path, n_buckets, None)
     src = read_buckets(spark, transcript_path, touched_buckets(new_turns, n_buckets))
-    rebuilt = build_feature_table(src, gap_s=gap_s, k=k, embed_dim=embed_dim, val_col=val_col)
+    rebuilt = build_feature_table(src, val_col=val_col)
     return rebuilt.withColumn("conv_bucket", conv_bucket_col(n_buckets))
 
 
-def flagship(transcripts: DataFrame, gap_s: float = 1800.0, k: int = 5) -> DataFrame:
+def flagship(transcripts: DataFrame) -> DataFrame:
     """End-to-end single-plan form: build features then backfill them onto
     the turns frame itself (every turn gets the feature vector visible at
     its own ts). The feature table is referenced once, so the plan has no
     recomputation. The production shape stores the feature table first
     (``jobs/backfill_job.py``) and runs ``backfill_features`` over the
     stored table, as ``bench.py --flagship-only`` times it."""
-    feats = build_feature_table(transcripts, gap_s=gap_s, k=k)
+    feats = build_feature_table(transcripts)
     frame = transcripts.select("conv_id", "turn_idx", "role", "text", "ts")
     return backfill_features(frame, feats)

@@ -13,6 +13,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from podcast_audio_feature_extraction_spark.operators.sessionize import GAP_S
+
 _VOCAB = np.array(
     "the a to of and in is it you that he was for on are as with his they i "
     "at be this have from or one had by word but not what all were we when "
@@ -32,7 +34,6 @@ def generate_transcripts(
     n_convs: int = 20,
     mean_turns: int = 25,
     seed: int = 42,
-    session_gap_s: float = 1800.0,
     zipf_a: float = 1.6,
     max_turns: int = 2000,
 ) -> pd.DataFrame:
@@ -40,9 +41,10 @@ def generate_transcripts(
 
     Deterministic for a given (n_convs, mean_turns, seed). Conversation
     lengths follow a truncated Zipf so a few conversations are 10-100x the
-    median (skew-handling tests). ~10% of gaps exceed ``session_gap_s`` so
-    sessionization splits; ~3% of consecutive turns share an identical ts
-    (tie-break-by-turn_idx tests).
+    median (skew-handling tests), capped at ``max_turns`` (perfbench
+    reads the cap from this signature). ~10% of gaps exceed the session
+    cutoff ``GAP_S`` so sessionization splits; ~3% of consecutive turns
+    share an identical ts (tie-break-by-turn_idx tests).
     """
     rng = np.random.default_rng(seed)
     lengths = np.minimum(rng.zipf(zipf_a, size=n_convs) * mean_turns // 2 + 2, max_turns)
@@ -53,7 +55,7 @@ def generate_transcripts(
         start = float(rng.integers(0, 90 * 24 * 3600))
         gaps = rng.exponential(60.0, size=n)
         long_mask = rng.random(n) < 0.10
-        gaps[long_mask] += session_gap_s * (1.0 + rng.random(long_mask.sum()) * 3.0)
+        gaps[long_mask] += GAP_S * (1.0 + rng.random(long_mask.sum()) * 3.0)
         dup_mask = rng.random(n) < 0.03
         gaps[dup_mask] = 0.0
         gaps[0] = 0.0

@@ -124,7 +124,7 @@ def _rebuild_batch(
     log_path: str,
     features_path: str,
     n_buckets: int,
-    **feature_kwargs,
+    val_col: str | None = "val",
 ) -> int:
     """Rebuild + commit the touched ``buckets``; returns their count.
     Snapshot = base (partition-pruned) merged with log (already includes
@@ -136,7 +136,7 @@ def _rebuild_batch(
     # the log side has no conv_bucket directory to prune: the same layout
     # expression, evaluated per row
     log = spark.read.schema(pinned_schema(base_path)).parquet(log_path).filter(conv_bucket_col(n_buckets).isin(buckets))
-    rebuilt = build_feature_table(_merged_snapshot(base, log), **feature_kwargs)
+    rebuilt = build_feature_table(_merged_snapshot(base, log), val_col=val_col)
     commit_rebuilt_partitions(
         rebuilt.withColumn("conv_bucket", conv_bucket_col(n_buckets)), features_path
     )
@@ -152,7 +152,7 @@ def stream_incremental_feature_build(
     n_buckets: int = N_CONV_BUCKETS,
     query_name: str = "delta-build-stream",
     trigger_available_now: bool = True,
-    **feature_kwargs,
+    val_col: str | None = "val",
 ):
     """Start (and return) the streaming query that keeps the partitioned
     feature table current as new turns arrive.
@@ -177,7 +177,7 @@ def stream_incremental_feature_build(
     """
     # every read of base and the log takes base's pinned schema: refuse
     # drift once, here, then record the pins base and the log lack
-    features_schema = build_feature_table(new_turns_stream, **feature_kwargs).schema
+    features_schema = build_feature_table(new_turns_stream, val_col=val_col).schema
     pins = {p: pin_layout(p, n_buckets, new_turns_stream.schema) for p in (base_path, log_path)}
     pin_layout(features_path, n_buckets, features_schema)
     for path, manifest in pins.items():
@@ -195,8 +195,7 @@ def stream_incremental_feature_build(
         )
         seen = obs.get
         n_buckets_touched = _rebuild_batch(
-            spark, sorted(seen["buckets"]), base_path, log_path, features_path, n_buckets,
-            **feature_kwargs,
+            spark, sorted(seen["buckets"]), base_path, log_path, features_path, n_buckets, val_col
         )
         done[str(batch_id)] = {
             "rows": seen["rows"],

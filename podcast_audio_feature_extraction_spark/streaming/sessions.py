@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from podcast_audio_feature_extraction_spark.operators.segments import SEG_HOP, SEG_LENGTH
 from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_VAL_SCHEMA
 
 
@@ -28,25 +29,18 @@ def read_transcript_stream(spark: SparkSession, path: str, max_files_per_trigger
     )
 
 
-def sliding_window_functionals_stream(
-    df: DataFrame,
-    length: str = "120 seconds",
-    hop: str = "60 seconds",
-    watermark: str = "10 minutes",
-    val_col: str = "val",
-    conv_col: str = "conv_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming variant of the A1 windowed functionals with bounded state.
+def sliding_window_functionals_stream(df: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+    """Streaming variant of the A1 windowed functionals of ``val`` over
+    the segment windows, with bounded state.
 
     Emits the incrementally-mergeable subset (count/mean/pop-std/min/max —
     constant state per open window); the exact percentiles/slope of the
     batch ``window_functionals`` need the window's full value buffer and
     belong to the batch/backfill path."""
-    v = F.col(val_col).cast("double")
+    v = F.col("val").cast("double")
     return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(F.col(conv_col), F.window(F.col(ts_col), length, hop).alias("win"))
+        df.withWatermark("ts", watermark)
+        .groupBy(F.col("conv_id"), F.window(F.col("ts"), SEG_LENGTH, SEG_HOP).alias("win"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.avg(v).alias("val_mean"),
@@ -55,7 +49,7 @@ def sliding_window_functionals_stream(
             F.max(v).alias("val_max"),
         )
         .select(
-            conv_col,
+            "conv_id",
             F.col("win.start").alias("win_start"),
             "n",
             "val_mean",

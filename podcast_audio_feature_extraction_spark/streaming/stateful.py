@@ -52,7 +52,7 @@ ASOF_STATE_SCHEMA = T.StructType(
 )
 
 
-def _make_asof_fold(inclusive: bool, tolerance_s: float | None):
+def _make_asof_fold(tolerance_s: float | None):
     tol_us = None if tolerance_s is None else int(tolerance_s * 1_000_000)
 
     def fold(key, pdfs: "Iterator[pd.DataFrame]", state: GroupState) -> "Iterator[pd.DataFrame]":
@@ -68,9 +68,10 @@ def _make_asof_fold(inclusive: bool, tolerance_s: float | None):
         chunks = [p for p in pdfs if len(p)]
         if chunks:
             pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-            # feature rows sort BEFORE query rows at equal (ts, turn_idx)
-            # iff inclusive (the batch union-trick's side ordering)
-            side_rank = pdf["side"].map({"f": 0 if inclusive else 1, "q": 1 if inclusive else 0})
+            # feature rows sort BEFORE query rows at equal (ts, turn_idx):
+            # a feature AT a query's ts is visible (the batch union-trick's
+            # inclusive side ordering)
+            side_rank = pdf["side"].map({"f": 0, "q": 1})
             pdf = (
                 pdf.assign(__sr=side_rank)
                 .sort_values(["ts", "turn_idx", "__sr"], kind="mergesort")
@@ -129,11 +130,7 @@ def _make_asof_fold(inclusive: bool, tolerance_s: float | None):
     return fold
 
 
-def stateful_asof_enrich(
-    tagged: DataFrame,
-    inclusive: bool = True,
-    tolerance_s: float | None = None,
-) -> DataFrame:
+def stateful_asof_enrich(tagged: DataFrame, tolerance_s: float | None = None) -> DataFrame:
     """The engine's streaming as-of: ONE co-partitioned stream carries
     both feature rows (side='f': conv_id, turn_idx, ts, functionals) and
     query/turn rows (side='q'); per conv_id the state holds ONLY the
@@ -156,7 +153,7 @@ def stateful_asof_enrich(
         tagged.select("conv_id", "turn_idx", "ts", "side", "functionals")
         .groupBy("conv_id")
         .applyInPandasWithState(
-            _make_asof_fold(inclusive, tolerance_s),
+            _make_asof_fold(tolerance_s),
             outputStructType=ASOF_OUTPUT_SCHEMA,
             stateStructType=ASOF_STATE_SCHEMA,
             outputMode="append",

@@ -10,13 +10,13 @@
 import numpy as np
 import pandas as pd
 
-from podcast_audio_feature_extraction_spark.functions.embedding import DEFAULT_DIM
+from podcast_audio_feature_extraction_spark.functions.embedding import EMBED_DIM
+from podcast_audio_feature_extraction_spark.operators.rolling import ROLL_K
+from podcast_audio_feature_extraction_spark.operators.sessionize import GAP_S
 from podcast_audio_feature_extraction_spark.oracle import numpy_oracle as O
 from podcast_audio_feature_extraction_spark.plans.backfill import flagship
 from podcast_audio_feature_extraction_spark.schema import TRANSCRIPT_SCHEMA
 from podcast_audio_feature_extraction_spark.sources import synthetic as S
-
-GAP, K = 1800.0, 5
 
 
 def with_future_rows(pdf: pd.DataFrame, seed: int = 7, frac: float = 0.1) -> pd.DataFrame:
@@ -63,9 +63,9 @@ FUNCTIONAL_ORDER = [
 
 
 def _oracle_flagship(pdf: pd.DataFrame) -> pd.DataFrame:
-    feats = O.turn_features_np(O.sessionize_np(pdf, gap_s=GAP), k=K, val_col=None)
+    feats = O.turn_features_np(O.sessionize_np(pdf, gap_s=GAP_S), k=ROLL_K, val_col=None)
     feats["functionals"] = [np.array([r[c] for c in FUNCTIONAL_ORDER], dtype=np.float64) for _, r in feats.iterrows()]
-    feats["embedding"] = [O.embed_text_oracle(t, dim=DEFAULT_DIM) for t in feats["text"]]
+    feats["embedding"] = [O.embed_text_oracle(t, dim=EMBED_DIM) for t in feats["text"]]
     return feats
 
 
@@ -74,7 +74,7 @@ def _sorted(df):
 
 
 def test_flagship_allclose_to_oracle(spark, transcripts_sdf, transcripts_pdf):
-    got = _sorted(flagship(transcripts_sdf, gap_s=GAP, k=K).toPandas())
+    got = _sorted(flagship(transcripts_sdf).toPandas())
     want = _sorted(_oracle_flagship(transcripts_pdf))
     assert len(got) == len(want)
     # per-turn text byte-equality under stable (conv_id, turn_idx) ordering
@@ -99,8 +99,8 @@ def test_flagship_zero_temporal_leakage(spark, transcripts_pdf):
     fut_pdf = with_future_rows(transcripts_pdf, seed=7, frac=0.15)
     fut_sdf = spark.createDataFrame(fut_pdf, schema=TRANSCRIPT_SCHEMA)
 
-    base = _sorted(flagship(base_sdf, gap_s=GAP, k=K).toPandas())
-    with_fut = flagship(fut_sdf, gap_s=GAP, k=K).toPandas()
+    base = _sorted(flagship(base_sdf).toPandas())
+    with_fut = flagship(fut_sdf).toPandas()
     # restrict to the original rows
     orig_keys = set(zip(base["conv_id"], base["turn_idx"]))
     with_fut = _sorted(

@@ -74,20 +74,25 @@ def test_segments_exact_speakers_single_pass(spark, transcripts_sdf):
     # r6: exact speakers moved from count(DISTINCT role) to
     # size(collect_set(role)) — identical values, but single-pass: no
     # 2-phase Expand (which duplicated every text row) and no extra
-    # Exchange over the approx form.
-    exact_plan = build_segments(transcripts_sdf)._jdf.queryExecution().executedPlan().toString()
-    approx_plan = (
-        build_segments(transcripts_sdf, exact_speakers=False)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert exact_plan.count("Exchange") == approx_plan.count("Exchange")
-    # exactly ONE Expand each: the sliding time-window replication.
+    # Exchange. The counts are the plan's when the approx_count_distinct
+    # variant was deleted, which planned the same ones.
+    plan = build_segments(transcripts_sdf)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1
+    # exactly ONE Expand: the sliding time-window replication.
     # count_distinct's 2-phase aggregation would add a second one.
-    assert exact_plan.count("Expand") == approx_plan.count("Expand")
-    # values: low-cardinality role column -> exact == HLL here
-    a = build_segments(transcripts_sdf, exact_speakers=False).toPandas()
+    assert plan.count("Expand") == 1
+    # values: the single-pass count equals count(DISTINCT role)
+    win = F.window("ts", "120 seconds", "60 seconds")
+    want = (
+        transcripts_sdf.groupBy("conv_id", win.alias("win"))
+        .agg(F.count_distinct("role").alias("n"))
+        .select(F.concat_ws("_", "conv_id", F.unix_timestamp("win.start").cast("string")).alias("seg_id"), "n")
+        .toPandas()
+    )
     e = build_segments(transcripts_sdf).toPandas()
-    m = a.sort_values("seg_id").reset_index(drop=True), e.sort_values("seg_id").reset_index(drop=True)
-    assert (m[0]["seg_speakers"].to_numpy() == m[1]["seg_speakers"].to_numpy()).all()
+    m = want.sort_values("seg_id").reset_index(drop=True), e.sort_values("seg_id").reset_index(drop=True)
+    assert (m[0]["seg_id"].to_numpy() == m[1]["seg_id"].to_numpy()).all()
+    assert (m[0]["n"].to_numpy() == m[1]["seg_speakers"].to_numpy()).all()
 
 
 def test_robust_scale_known_values(spark):

@@ -9,7 +9,7 @@ from podcast_audio_feature_extraction_spark.plans.backfill import build_feature_
 
 
 def _transform(df):
-    return build_feature_table(df, gap_s=1800.0, k=3, val_col=None)
+    return build_feature_table(df, val_col=None)
 
 
 def test_resume_skips_completed_buckets(spark, transcripts_sdf, tmp_path):
@@ -120,7 +120,7 @@ def test_resume_batch_plan_equals_filtering_the_source_first(spark, transcripts_
     src = transcripts_sdf if val_col is None else transcripts_sdf.withColumn("val", (F.col("turn_idx") % 7).cast("double"))
 
     def transform(df):
-        return build_feature_table(df, gap_s=1800.0, k=3, val_col=val_col)
+        return build_feature_table(df, val_col=val_col)
 
     written = []
     observe = type(src).observe
@@ -212,15 +212,3 @@ def test_build_segments_salted_matches_unsalted(spark):
     import pandas as pd
 
     pd.testing.assert_frame_equal(salted, plain, check_dtype=False)
-
-
-def test_build_segments_rejects_approx_speakers_with_salts(spark, transcripts_sdf):
-    """exact_speakers=False + skew_salts is a config conflict (salt
-    partials merge role sets exactly) — must fail loud, not silently plan
-    the more expensive exact form."""
-    import pytest
-
-    from podcast_audio_feature_extraction_spark.operators.segments import build_segments
-
-    with pytest.raises(ValueError, match="exact_speakers"):
-        build_segments(transcripts_sdf, exact_speakers=False, skew_salts=8)

@@ -195,7 +195,7 @@ def test_stateful_asof_null_ts_never_enters_state():
 
     from podcast_audio_feature_extraction_spark.streaming.stateful import _make_asof_fold
 
-    fold = _make_asof_fold(True, None)
+    fold = _make_asof_fold(None)
     state = FakeState()
     b0 = pd.DataFrame(
         {

@@ -21,12 +21,17 @@ def test_every_test_module_imports():
 
 
 def test_benchmark_package_imports_resolve():
-    """Every name an entry point imports from the package must exist:
-    perfbench, ``bench.py``, ``__spark_entry__.py``, ``jobs/`` and
-    ``tools/`` are not test modules, and most of their imports sit inside
-    functions, so a deleted or renamed name would break them while the
-    suite stays green."""
+    """Every name an entry point imports from the package must exist, and
+    every call an entry point makes to such a name must bind to its
+    signature: perfbench, ``bench.py``, ``__spark_entry__.py``, ``jobs/``
+    and ``tools/`` are not test modules, and most of their imports sit
+    inside functions, so a deleted or renamed name or keyword would break
+    them while the suite stays green (for perfbench, only as a failed
+    benchmark run). A call's positional count and keyword names go
+    through ``inspect.signature(fn).bind``; a call that forwards
+    ``*args`` or ``**kwargs`` is skipped."""
     import ast
+    import inspect
 
     root = Path(__file__).resolve().parent.parent
     entry_points = [
@@ -36,19 +41,41 @@ def test_benchmark_package_imports_resolve():
         *sorted((root / "jobs").glob("*.py")),
         *sorted((root / "tools").glob("*.py")),
     ]
-    missing = []
+    missing, unbound = [], []
     for path in entry_points:
-        for node in ast.walk(ast.parse(path.read_text())):
+        tree = ast.parse(path.read_text())
+        imported = {}
+        for node in ast.walk(tree):
             if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
                 "podcast_audio_feature_extraction_spark"
             ):
                 module = importlib.import_module(node.module)
-                missing += [
-                    f"{path.relative_to(root)}: {node.module}.{a.name}"
-                    for a in node.names
-                    if not hasattr(module, a.name)
-                ]
+                for a in node.names:
+                    try:  # a name of the module, or one of its submodules
+                        obj = getattr(module, a.name, None) or importlib.import_module(f"{node.module}.{a.name}")
+                    except ImportError:
+                        missing.append(f"{path.relative_to(root)}: {node.module}.{a.name}")
+                    else:
+                        imported[a.asname or a.name] = obj
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Name):
+                fn = imported.get(f.id)
+            elif isinstance(f, ast.Attribute) and inspect.ismodule(imported.get(getattr(f.value, "id", None))):
+                fn = getattr(imported[f.value.id], f.attr, None)
+            else:
+                continue
+            forwards = any(isinstance(a, ast.Starred) for a in node.args) or any(k.arg is None for k in node.keywords)
+            if not inspect.isfunction(fn) or forwards:
+                continue
+            try:
+                inspect.signature(fn).bind(*node.args, **{k.arg: None for k in node.keywords})
+            except TypeError as e:
+                unbound.append(f"{path.relative_to(root)}:{node.lineno}: {ast.unparse(f)}: {e}")
     assert not missing, f"entry points import names the package lacks: {missing}"
+    assert not unbound, f"entry-point calls that do not bind to the package's signatures: {unbound}"
 
 
 def test_every_api_name_has_a_caller_outside_tests():
